@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 
 from kafka_delta_ingest_spark.config import (
@@ -74,18 +75,14 @@ def build_parser() -> argparse.ArgumentParser:
                           "Spark substitute for the reference's held-open "
                           "file-size management")
     ing.add_argument("--log_format",
-                     choices=("kdi", "delta", "iceberg", "hudi",
-                              "hudi_mor"),
-                     default="kdi",
-                     help="destination table format: 'kdi' (the "
-                          "engine's own Delta-protocol log, full "
-                          "DML/OPTIMIZE surface), 'delta' (a STANDARD "
-                          "_delta_log any Delta reader consumes), "
-                          "'iceberg' (an Apache Iceberg v2 table; "
-                          "exactly-once offsets in snapshot summaries), "
-                          "'hudi' (CoW inserts), or 'hudi_mor' "
-                          "(MERGE_ON_READ; with --record_key every "
-                          "batch streams as an UPSERT)")
+                     choices=("delta", "iceberg", "hudi", "hudi_mor"),
+                     default="delta",
+                     help="destination table format; this command "
+                          "reads the schema from the table, so it "
+                          "starts only with 'delta' (a standard "
+                          "_delta_log, the default). 'iceberg', 'hudi' "
+                          "and 'hudi_mor' (with --record_key, UPSERT "
+                          "streaming) are IngestJob destinations")
     ing.add_argument("--record_key", default=None,
                      help="Hudi recordkey.field: the column Hudi "
                           "destinations key records on (enables "
@@ -96,7 +93,9 @@ def build_parser() -> argparse.ArgumentParser:
                      help="Optional table to write unprocessable entities to")
     ing.add_argument("--dlq_transform", action="append", default=[])
     ing.add_argument("--checkpoints", "-c", action="store_true",
-                     help="Write checkpoints on every 10th commit")
+                     help="Accepted for compatibility with the reference; "
+                          "checkpoints are always written, every 10th "
+                          "commit")
     ing.add_argument("--kafka_setting", "-K", action="append", default=[])
     ing.add_argument("--statsd_endpoint", "-s", default=None)
     ing.add_argument("--json", dest="json_registry", default=None,
@@ -188,7 +187,7 @@ def build_parser() -> argparse.ArgumentParser:
 
     tab = sub.add_parser(
         "table",
-        help="Admin operations on a Delta-style table (DESCRIBE HISTORY, "
+        help="Admin operations on a _kdi_log table (DESCRIBE HISTORY, "
              "COUNT, OPTIMIZE, VACUUM, RESTORE, DELETE, UPDATE, CDF)",
     )
     tab.add_argument("location", help="Table root directory")
@@ -302,11 +301,22 @@ def run_convert(args: argparse.Namespace) -> int:
 
 def run_table(args: argparse.Namespace) -> int:
     """The admin surface over the jar-free sink — each action is one
-    call on :class:`DeltaLikeTable`, printed in a parse-friendly form."""
+    call on :class:`DeltaLikeTable`, printed in a parse-friendly form.
+    A standard ``_delta_log`` table (what ``ingest`` writes) is refused:
+    read as a ``_kdi_log`` it has no live files, so ``vacuum`` would
+    delete all its data."""
     from kafka_delta_ingest_spark.session import get_spark
-    from kafka_delta_ingest_spark.sinks.delta_like import DeltaLikeTable
+    from kafka_delta_ingest_spark.sinks.delta_like import LOG_DIR, DeltaLikeTable
 
-    t = DeltaLikeTable(args.location)
+    loc = args.location
+    if os.path.isdir(os.path.join(loc, "_delta_log")) and not os.path.isdir(
+        os.path.join(loc, LOG_DIR)
+    ):
+        raise SystemExit(
+            f"{loc} is a standard Delta table (_delta_log); `table` "
+            f"administers {LOG_DIR} tables only"
+        )
+    t = DeltaLikeTable(loc)
     preds = _parse_preds(args.where)
 
     if args.action == "count":
@@ -381,8 +391,6 @@ def run_table(args: argparse.Namespace) -> int:
 
 
 def options_from_args(args: argparse.Namespace) -> IngestOptions:
-    import os
-
     avro_schema_json: str | None = None
     soe_schemas: dict[int, str] | None = None
     schema_registry_url: str | None = None
@@ -450,7 +458,6 @@ def options_from_args(args: argparse.Namespace) -> IngestOptions:
         ends_at_latest_offsets=args.ends_at_latest_offsets,
         kafka_settings=parse_kafka_settings(args.kafka_setting),
         kafka_brokers=args.kafka,
-        checkpoints=args.checkpoints,
         statsd_endpoint=args.statsd_endpoint,
         avro_schema_json=avro_schema_json,
         soe_schemas=soe_schemas,
@@ -711,6 +718,34 @@ def run_extract_web(args: argparse.Namespace) -> int:
     return 0
 
 
+def prepare_ingest(opts: IngestOptions):
+    """Everything ``ingest`` does before the stream starts: open the
+    destination, read its schema, seed ``--seek_offsets`` into its txn
+    ledger, and build the job on that same sink. Only ``delta`` tables
+    declare a schema (Hudi keeps none; Iceberg reports one only after
+    an evolution), so other formats are refused up front."""
+    from kafka_delta_ingest_spark.ingest import IngestJob
+    from kafka_delta_ingest_spark.offsets import write_offsets_to_table
+    from kafka_delta_ingest_spark.sinks.base import open_sink
+
+    if opts.log_format != "delta":
+        raise SystemExit(
+            f"ingest reads its schema from the table, so it needs "
+            f"--log_format delta; stream into {opts.log_format} through "
+            "IngestJob(opts, schema)"
+        )
+    sink = open_sink(opts)
+    schema = sink.table_schema()
+    if schema is None:
+        raise SystemExit(
+            f"table {opts.table_uri} has no schema; create it first "
+            "(the destination schema drives decoding — SURVEY §1.2)"
+        )
+    if opts.seek_offsets:
+        write_offsets_to_table(sink, opts.app_id, opts.seek_offsets)
+    return IngestJob(opts, schema, sink=sink)
+
+
 def main(argv: list[str] | None = None) -> int:
     args = build_parser().parse_args(argv)
     if args.command == "curate":
@@ -723,23 +758,10 @@ def main(argv: list[str] | None = None) -> int:
         return run_table(args)
     opts = options_from_args(args)
 
-    from kafka_delta_ingest_spark.ingest import IngestJob
-    from kafka_delta_ingest_spark.offsets import write_offsets_to_table
     from kafka_delta_ingest_spark.session import get_spark
-    from kafka_delta_ingest_spark.sinks.delta_like import DeltaLikeTable
 
     spark = get_spark(app_name=f"kdi-{opts.app_id}")
-    table = DeltaLikeTable(opts.table_uri)
-    schema = table.table_schema()
-    if schema is None:
-        raise SystemExit(
-            f"table {opts.table_uri} has no schema; create it first "
-            "(the destination schema drives decoding — SURVEY §1.2)"
-        )
-    if opts.seek_offsets:
-        write_offsets_to_table(table, opts.app_id, opts.seek_offsets)
-
-    job = IngestJob(opts, schema)
+    job = prepare_ingest(opts)
     ckpt = args.checkpoint_dir or f"{opts.table_uri}/_kdi_checkpoints/{opts.app_id}"
     query = job.run_stream(spark, ckpt)
     query.awaitTermination()

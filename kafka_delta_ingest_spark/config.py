@@ -51,8 +51,6 @@ class IngestOptions:
     # Pass-through kafka client settings (reference -K key=value).
     kafka_settings: dict[str, str] = field(default_factory=dict)
     kafka_brokers: str = "localhost:9092"
-    # Write Delta checkpoints (native in delta/our log: every 10 commits).
-    checkpoints: bool = True
     # statsd endpoint (observability parity; optional).
     statsd_endpoint: str | None = None
     # Avro reader schema JSON (AVRO / AVRO_SCHEMA_REGISTRY); None for
@@ -78,17 +76,16 @@ class IngestOptions:
     # files toward min_bytes_per_file after every N ingest commits,
     # inside the same streaming loop.
     auto_optimize_interval: int = 0
-    # Transaction-log layout for the destination table. "kdi" = the
-    # engine's own _kdi_log (full DML/CDF/OPTIMIZE surface);
-    # "delta" = a STANDARD _delta_log (delta_standard.DeltaStandardSink)
-    # consumable by delta-rs / delta-spark / any protocol-conformant
-    # reader — the reference daemon's interop property
-    # (src/delta_helpers.rs:15-40). The exactly-once txn ledger works
-    # identically on both.
-    # "hudi" = CoW insert destination; "hudi_mor" = MERGE_ON_READ —
-    # with record_key set, every batch streams as an UPSERT
-    # (DeltaStreamer's continuous upsert operation).
-    log_format: str = "kdi"
+    # Destination table format, opened by sinks.base.open_sink. "delta"
+    # = a STANDARD _delta_log (delta_standard.DeltaStandardSink) that
+    # delta-rs / delta-spark / any protocol-conformant reader consumes —
+    # the reference daemon's interop property (src/delta_helpers.rs:15-40);
+    # "iceberg" = an Iceberg v2 table (offsets in snapshot summaries);
+    # "hudi" = CoW inserts; "hudi_mor" = MERGE_ON_READ — with record_key
+    # set, every batch streams as an UPSERT (DeltaStreamer's continuous
+    # upsert operation). The exactly-once txn ledger works identically
+    # on all four. Dead letters always go to a standard Delta table.
+    log_format: str = "delta"
     # hoodie.datasource.write.recordkey.field analog: the column
     # Hudi destinations key records on (enables MoR upsert streaming;
     # unset = synthetic seqno keys, append-only ingest)

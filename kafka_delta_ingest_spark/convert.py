@@ -322,7 +322,7 @@ def _executor_delta_adds(spark, paths: list[str]) -> list[dict]:
     """Delta add-action dicts (absolute paths, footer stats JSON) for
     an existing parquet file set — stats computed EXECUTOR-side via
     mapInPandas; the driver collects only the log-sized result."""
-    from kafka_delta_ingest_spark.sinks.delta_like import _parquet_stats
+    from kafka_delta_ingest_spark.sinks.base import _parquet_stats
 
     n_slices = max(1, min(len(paths), 256))
     flist = spark.createDataFrame(

@@ -8,8 +8,8 @@ DataFrame split inside the sink stage:
   base64-encoded raw payload; transform/coercion/write failures carry
   the message JSON text.
 * Factory semantics (src/dead_letters.rs:145-219): default is a no-op
-  sink; a table location enables a second append alongside the data
-  table; a logging mode warns.
+  sink; a table location enables a second append, to a standard Delta
+  table, alongside the data table.
 * ``dlq_transforms`` (src/dead_letters.rs:240-316): the same transform
   compiler runs over the DLQ rows (e.g. deriving a ``date`` partition
   from the failure timestamp).
@@ -22,6 +22,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.types import StringType, StructField, StructType, TimestampType
 
+from kafka_delta_ingest_spark.delta_standard import DeltaStandardSink
 from kafka_delta_ingest_spark.transforms import Transformer
 
 DEAD_LETTER_SCHEMA = StructType(
@@ -59,34 +60,19 @@ def dead_letter_columns(
 
 @dataclass
 class DeadLetterQueue:
-    """noop / delta-table / logging DLQ (src/dead_letters.rs:145-219)."""
+    """noop / Delta-table DLQ (src/dead_letters.rs:145-219)."""
 
     table_location: str | None = None
     dlq_transforms: dict[str, str] = field(default_factory=dict)
-    log_only: bool = False
-    partition_by: list[str] | None = None
 
-    def write(self, dlq_df: DataFrame, sink_writer=None) -> int:
+    def write(self, dlq_df: DataFrame) -> int:
         """Write dead letters; returns the count routed (for metrics)."""
-        if self.table_location is None and not self.log_only:
+        if self.table_location is None:
             return 0  # noop DLQ: dead letters are dropped (default)
         out = dlq_df
         if self.dlq_transforms:
             out = Transformer(self.dlq_transforms).apply(out)
-        if self.log_only:
-            n = out.count()
-            if n:
-                for row in out.select("error").limit(20).collect():
-                    print(f"[dead-letter] {row.error}")
-            return n
-        if sink_writer is not None:
-            return sink_writer(out, self.table_location, self.partition_by)
-        # Delta-style synchronous append commit (reference insert_all,
-        # src/dead_letters.rs:240-316 + src/writer.rs:577-601) — the DLQ
-        # table gets the same txn-log/stats treatment as the data table.
-        from kafka_delta_ingest_spark.sinks.delta_like import DeltaLikeTable
-
-        result = DeltaLikeTable(self.table_location).write_batch(
-            out, partition_by=self.partition_by, operation="WRITE"
-        )
-        return result.num_records
+        # Synchronous append to a standard Delta table (reference
+        # insert_all, src/dead_letters.rs:240-316 + src/writer.rs:577-601)
+        # through the same sink as the data table.
+        return DeltaStandardSink(self.table_location).write_batch(out).num_records

@@ -1,9 +1,10 @@
-"""Standard-layout Delta Lake table READER — jar-free, from the public
-Delta transaction protocol (github.com/delta-io/delta PROTOCOL.md).
+"""Standard-layout Delta Lake tables — jar-free, from the public Delta
+transaction protocol (github.com/delta-io/delta PROTOCOL.md).
 
-The repo's sink (sinks/delta_like.py) WRITES Delta-protocol actions
-into its own ``_kdi_log``; this module READS tables that real Delta
-writers (delta-spark, delta-rs, the reference ingest daemon itself —
+:class:`DeltaStandardWriter` writes ``_delta_log/`` tables, and
+:class:`DeltaStandardSink` is the default ingest and DLQ destination.
+The reader consumes tables that real Delta writers (delta-spark,
+delta-rs, the reference ingest daemon itself —
 src/delta_helpers.rs:15-40) produced under ``_delta_log/``:
 
 * log replay: ``%020d.json`` JSON-lines commits, starting from the
@@ -42,6 +43,15 @@ import glob
 import json
 import os
 import urllib.parse
+
+from kafka_delta_ingest_spark.sinks.base import (
+    CommitResult,
+    ConstraintViolation,
+    _parquet_stats,
+    already_applied,
+    promote_staging,
+    zorder_value,
+)
 
 _LOG = "_delta_log"
 
@@ -1524,7 +1534,7 @@ class DeltaStandardWriter:
         read_files: set[str] | None = None,
         conflict_on_any_change: bool = False,
         txn: dict[str, int] | None = None,
-    ) -> int:
+    ) -> int | None:
         """Claim the next version via O_CREAT|O_EXCL and write the
         payload — with the reference's optimistic-concurrency CONFLICT
         CHECK (src/lib.rs:948-1024): when the action set was derived
@@ -1540,8 +1550,8 @@ class DeltaStandardWriter:
           appends of NEW files rebase silently (WriteSerializable);
         * ``txn``: if an intervening commit already carried every
           appId at-or-beyond its version (another worker won the
-          race with the SAME batch), the commit is SKIPPED and the
-          current version returned — exactly-once under races.
+          race with the SAME batch), the commit is SKIPPED and None
+          returned — exactly-once under races.
 
         Blind appends (no read_version) retry unconditionally: they
         are serializable against anything by construction.
@@ -1562,15 +1572,10 @@ class DeltaStandardWriter:
                 checked_through is not None
                 and version > checked_through + 1
             ):
-                if txn:
-                    stored = self._py_replay(
-                        target=version - 1
-                    )["txn"]
-                    if all(
-                        app in stored and stored[app] >= ver
-                        for app, ver in txn.items()
-                    ):
-                        return version - 1  # replay — racer won
+                if txn and already_applied(
+                    self._py_replay(target=version - 1)["txn"], txn
+                ):
+                    return None  # replay — a racer committed this txn
                 self._raise_on_conflict(
                     checked_through + 1, version - 1,
                     read_files, conflict_on_any_change,
@@ -1634,6 +1639,18 @@ class DeltaStandardWriter:
         txn: dict[str, int] | None = None,
     ) -> int:
         """Write ``df`` as one atomic Delta commit; returns the version.
+        See :meth:`write_adds`."""
+        return self.write_adds(df, mode, partition_by, txn)[0]
+
+    def write_adds(
+        self,
+        df,
+        mode: str = "append",
+        partition_by: list[str] | None = None,
+        txn: dict[str, int] | None = None,
+    ) -> tuple[int, list[dict]]:
+        """Write ``df`` as one atomic Delta commit; returns the version
+        and the add actions it committed (none when nothing landed).
 
         ``mode="append"`` adds files; ``mode="overwrite"`` additionally
         removes every previously-live file in the same commit.
@@ -1645,14 +1662,8 @@ class DeltaStandardWriter:
         the current version returned — idempotent replay, the
         reference's exactly-once mechanism (src/offsets.rs:36-102,
         src/lib.rs:1087-1100) on the standard log layout."""
-        import shutil
         import time
         import uuid
-
-        from kafka_delta_ingest_spark.sinks.delta_like import (
-            _parquet_stats,
-            _parse_partition_values,
-        )
 
         if mode not in ("append", "overwrite"):
             raise ValueError(f"unsupported mode {mode!r}")
@@ -1661,13 +1672,8 @@ class DeltaStandardWriter:
         # conflict/replay checks then cover EVERY commit that lands
         # before ours, incl. a racer bootstrapping the same first batch
         state = self._py_replay(target=read_v)
-        if txn:
-            stored = state["txn"]
-            if all(
-                app in stored and stored[app] >= ver
-                for app, ver in txn.items()
-            ):
-                return read_v  # replay — already applied
+        if already_applied(state["txn"], txn):
+            return read_v, []  # replay — already applied
         if state["meta"] is not None:
             df = self._conform_frame(df, state["meta"])
             self._enforce_constraints(df, state["meta"])
@@ -1684,7 +1690,7 @@ class DeltaStandardWriter:
         now_ms = int(time.time() * 1000)
         adds = self._stage_adds(df, partition_by, now_ms)
         if not adds and mode == "append":
-            return self.latest_version()  # empty append never commits
+            return self.latest_version(), []  # empty appends never commit
 
         actions: list[dict] = [
             {
@@ -1755,9 +1761,11 @@ class DeltaStandardWriter:
             conflict_on_any_change=(mode == "overwrite"),
             txn=txn or None,
         )
+        if version is None:
+            return self.latest_version(), []
         if version > 0 and version % self.checkpoint_every == 0:
             self._write_checkpoint(version)
-        return version
+        return version, adds
 
     def _stage_adds(
         self, df, partition_by: list[str] | None, now_ms: int
@@ -1768,51 +1776,17 @@ class DeltaStandardWriter:
         footer-derived stats. Shared by write / update_where / merge —
         the data path is always one Spark job; only metadata is
         driver-side."""
-        import shutil
         import uuid
-
-        from kafka_delta_ingest_spark.sinks.delta_like import (
-            _parquet_stats,
-            _parse_partition_values,
-        )
 
         staging = os.path.join(self.root, f"_staging-{uuid.uuid4().hex}")
         writer = df.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(staging)
-
-        adds = []
-        for dirpath, _dirs, files in os.walk(staging):
-            rel = os.path.relpath(dirpath, staging)
-            rel_dir = "" if rel == "." else rel
-            for fname in files:
-                if not fname.endswith(".parquet"):
-                    continue
-                src = os.path.join(dirpath, fname)
-                stats = _parquet_stats(src)
-                if stats["numRecords"] == 0:
-                    continue  # stats-less empty adds defeat pruning
-                dest_dir = os.path.join(self.root, rel_dir)
-                os.makedirs(dest_dir, exist_ok=True)
-                shutil.move(src, os.path.join(dest_dir, fname))
-                rel_path = (
-                    os.path.join(rel_dir, fname) if rel_dir else fname
-                )
-                adds.append(
-                    {
-                        "path": rel_path.replace(os.sep, "/"),
-                        "partitionValues": _parse_partition_values(rel_dir),
-                        "size": os.path.getsize(
-                            os.path.join(dest_dir, fname)
-                        ),
-                        "modificationTime": now_ms,
-                        "dataChange": True,
-                        "stats": json.dumps(stats),
-                    }
-                )
-        shutil.rmtree(staging, ignore_errors=True)
-        return adds
+        return [
+            {**a, "dataChange": True, "stats": json.dumps(a["stats"])}
+            for a in promote_staging(staging, self.root, now_ms)
+        ]
 
     def _stage_cdc(self, df) -> tuple[list[dict], list[str]]:
         """Write CDF change rows (must carry ``_change_type``) as
@@ -2040,10 +2014,6 @@ class DeltaStandardWriter:
 
         from pyspark.sql import functions as F
 
-        from kafka_delta_ingest_spark.sinks.delta_like import (
-            ConstraintViolation,
-        )
-
         read_v = self.latest_version()
         state = self._py_replay(target=read_v if read_v >= 0 else None)
         meta = state["meta"]
@@ -2117,10 +2087,6 @@ class DeltaStandardWriter:
         filter over the frame, short-circuited at the first hit),
         then the violated names identified on the sample row."""
         from pyspark.sql import functions as F
-
-        from kafka_delta_ingest_spark.sinks.delta_like import (
-            ConstraintViolation,
-        )
 
         cons = self.constraints(meta)
         if not cons:
@@ -2377,13 +2343,8 @@ class DeltaStandardWriter:
         state = self._py_replay(target=read_v if read_v >= 0 else None)
         if state["meta"] is None:
             raise ValueError("merge into an empty table")
-        if txn:
-            stored = state["txn"]
-            if all(
-                app in stored and stored[app] >= ver
-                for app, ver in txn.items()
-            ):
-                return read_v  # replay — this merge already applied
+        if already_applied(state["txn"], txn):
+            return read_v  # replay — this merge already applied
         schema_cols = [
             f["name"]
             for f in json.loads(state["meta"]["schemaString"])["fields"]
@@ -2581,6 +2542,8 @@ class DeltaStandardWriter:
                 except OSError:
                     pass
             raise
+        if version is None:
+            return self.latest_version()  # a racer merged this txn
         if version > 0 and version % self.checkpoint_every == 0:
             self._write_checkpoint(version)
         return version
@@ -2796,7 +2759,7 @@ class DeltaStandardWriter:
         ``zorder_by`` (delta-spark's OPTIMIZE ... ZORDER BY on the
         standard log): EVERY live file rewrites; rows range-partition
         on the Morton interleave of the columns' normalized ranks
-        (sinks.delta_like.zorder_value) into ~target-sized files, each
+        (sinks.base.zorder_value) into ~target-sized files, each
         sorted within — every output file then carries a narrow
         min/max window on EVERY clustered column in its add-action
         stats, so any protocol reader's data skipping prunes on all of
@@ -2809,11 +2772,6 @@ class DeltaStandardWriter:
         import uuid
 
         from pyspark.sql import functions as F
-
-        from kafka_delta_ingest_spark.sinks.delta_like import (
-            _parquet_stats,
-            zorder_value,
-        )
 
         read_v = self.latest_version()
         state = self._py_replay(target=read_v if read_v >= 0 else None)
@@ -3099,21 +3057,13 @@ class DeltaStandardWriter:
 
 
 class DeltaStandardSink:
-    """``DeltaLikeTable``-surface adapter over
-    :class:`DeltaStandardWriter`, so ``IngestJob`` (ingest.py) can
-    stream INTO a standard ``_delta_log`` table
-    (``IngestOptions.log_format == "delta"``) — the reference daemon's
-    whole value proposition (Kafka → a Delta table any reader
-    consumes, README.adoc:3-5) reproduced end-to-end.
-
-    Surface implemented (exactly what the ingest loop touches):
-    ``snapshot()["txn"/"version"/"metaData"]`` (ledger floors, replay
-    detection, offset bootstrap), ``table_schema()`` (runtime schema
-    adoption), ``write_batch(df, partition_by, txn)`` (append +
-    exactly-once txn actions, empty-batch suppression), ``_commit``
-    (raw txn-action commits for --seek_offsets bootstrap), ``read``,
-    and ``optimize`` (the writer's bin-packing compaction, so
-    ``--auto_optimize_interval`` works identically on both layouts).
+    """The :class:`~kafka_delta_ingest_spark.sinks.base.Sink` over
+    :class:`DeltaStandardWriter`: the default ingest destination
+    (``IngestOptions.log_format == "delta"``) and the DLQ table. The
+    output is a standard ``_delta_log`` table any Delta reader
+    consumes — the reference daemon's whole value proposition (Kafka →
+    a Delta table, README.adoc:3-5), with the exactly-once ledger in
+    the protocol's own ``txn`` actions (src/delta_helpers.rs:15-40).
     """
 
     def __init__(self, path: str):
@@ -3138,34 +3088,34 @@ class DeltaStandardSink:
             json.loads(st["meta"]["schemaString"])
         )
 
-    def write_batch(self, df, partition_by=None, txn=None,
-                    operation: str = "STREAMING UPDATE"):
-        from kafka_delta_ingest_spark.sinks.delta_like import CommitResult
-
-        before = self.w.latest_version()
-        version = self.w.write(
+    def write_batch(self, df, partition_by=None, txn=None) -> CommitResult:
+        version, adds = self.w.write_adds(
             df, mode="append", partition_by=partition_by or None,
             txn=txn or {},
         )
-        if version == before:
+        if not adds:
             # replay-skip (txn already stored) or empty batch
             return CommitResult(version, 0, 0, skipped=True)
-        n_files = n_records = 0
-        body = self.w.store.read_bytes(
-            os.path.join(self.w.log, f"{version:020d}.json")
-        ).decode()
-        for line in body.splitlines():
-                act = json.loads(line)
-                if "add" in act:
-                    n_files += 1
-                    stats = act["add"].get("stats")
-                    if isinstance(stats, str):
-                        stats = json.loads(stats)
-                    n_records += (stats or {}).get("numRecords", 0)
-        return CommitResult(version, n_files, n_records)
+        return CommitResult(
+            version,
+            len(adds),
+            sum(json.loads(a["stats"])["numRecords"] for a in adds),
+            num_bytes=sum(a["size"] for a in adds),
+        )
 
-    def _commit(self, actions: list[dict]) -> int:
-        return self.w._atomic_commit(actions)
+    def commit_offsets(self, txn: dict[str, int]) -> int:
+        """Ledger entries alone, as ``txn`` actions (the reference's
+        ``write_offsets_to_delta``, src/offsets.rs:52-101)."""
+        import time
+
+        now_ms = int(time.time() * 1000)
+        return self.w._atomic_commit(
+            [{"commitInfo": {"operation": "SET TRANSACTION",
+                             "operationParameters": {},
+                             "timestamp": now_ms}}]
+            + [{"txn": {"appId": a, "version": v, "lastUpdated": now_ms}}
+               for a, v in sorted(txn.items())]
+        )
 
     def read(self, spark, as_of=None):
         return read_delta(spark, self.path, version=as_of)

@@ -81,6 +81,12 @@ import uuid
 from typing import Callable
 
 from kafka_delta_ingest_spark.io import metadata_df, overlap
+from kafka_delta_ingest_spark.sinks.base import (
+    CommitResult,
+    already_applied,
+    decode_offsets,
+    encode_offsets,
+)
 
 _INSTANT_RE = re.compile(r"^(\d{14,17})\.(\w+)$")
 
@@ -91,6 +97,13 @@ META_COLS = [
     "_hoodie_partition_path",
     "_hoodie_file_name",
 ]
+
+
+def _stats_bytes(stats_by_part: dict[str, list[dict]]) -> int:
+    """Bytes written, from a commit's ``partitionToWriteStats``."""
+    return sum(
+        st["fileSizeInBytes"] for lst in stats_by_part.values() for st in lst
+    )
 
 
 def _hoodie_dir(table_path: str) -> str:
@@ -1528,11 +1541,7 @@ class HudiCowWriter:
             # since the caller's pre-check (``ledger_observed_instant``
             # is the latest instant that pre-check saw) — keeps the
             # re-check O(1) on the no-race fast path
-            stored = self.stored_extra_metadata()
-            if all(
-                k in stored and int(stored[k]) >= int(v)
-                for k, v in skip_if_stored.items()
-            ):
+            if already_applied(self.stored_extra_metadata(), skip_if_stored):
                 os.remove(
                     os.path.join(
                         hoodie, f"{instant}.{self.ACTION}.requested"
@@ -1597,6 +1606,7 @@ class HudiCowWriter:
             os.path.join(hoodie, f"{instant}.{self.ACTION}"),
             json.dumps(meta).encode(),
         )
+        self.last_commit_bytes = _stats_bytes(stats)
         return instant, n_files, n_records
 
     def _live_bootstrap_fids(self) -> set[str]:
@@ -2486,11 +2496,7 @@ class HudiMorWriter(HudiCowWriter):
         if skip_if_stored and self.latest_instant() != (
             ledger_observed_instant
         ):
-            stored = self.stored_extra_metadata()
-            if all(
-                k in stored and int(stored[k]) >= int(v)
-                for k, v in skip_if_stored.items()
-            ):
+            if already_applied(self.stored_extra_metadata(), skip_if_stored):
                 os.remove(
                     os.path.join(
                         hoodie, f"{instant}.{self.ACTION}.requested"
@@ -2639,6 +2645,7 @@ class HudiMorWriter(HudiCowWriter):
         n_records = sum(
             st["numWrites"] for lst in stats.values() for st in lst
         )
+        self.last_commit_bytes = _stats_bytes(stats)
         return instant, len(log_stats), n_ins_files, n_records
 
     def delete_log_batch(self, df, extra_metadata: dict | None = None):
@@ -2993,10 +3000,10 @@ class HudiMorWriter(HudiCowWriter):
 
 
 class HudiSink:
-    """``DeltaLikeTable``-surface adapter over :class:`HudiCowWriter`
-    so ``IngestJob`` streams INTO an Apache Hudi table
-    (``IngestOptions.log_format == "hudi"``) — the fourth destination
-    next to kdi-Delta, standard Delta, and Iceberg, making every
+    """The :class:`~kafka_delta_ingest_spark.sinks.base.Sink` over
+    :class:`HudiCowWriter`, so ``IngestJob`` streams INTO an Apache
+    Hudi table (``IngestOptions.log_format == "hudi"``) — the third
+    destination next to standard Delta and Iceberg, making every
     table format the engine READS also a write target. Exactly-once:
     per-Kafka-partition offsets ride in the completed commit's
     ``extraMetadata`` (``kdi.offsets.<appId>`` keys — the slot Hudi's
@@ -3041,10 +3048,7 @@ class HudiSink:
         latest = self._writer().latest_instant()
         if self._txn_cache is not None and self._txn_cache[0] == latest:
             return dict(self._txn_cache[1])
-        out = {}
-        for k, v in self._writer().stored_extra_metadata().items():
-            if k.startswith("kdi.offsets."):
-                out[k[len("kdi.offsets."):]] = int(v)
+        out = decode_offsets(self._writer().stored_extra_metadata())
         self._txn_cache = (latest, dict(out))
         return out
 
@@ -3061,20 +3065,14 @@ class HudiSink:
     def table_schema(self):
         return None  # schema evolution flows from the caller's schema
 
-    def write_batch(self, df, partition_by=None, txn=None,
-                    operation: str = "STREAMING UPDATE"):
-        from kafka_delta_ingest_spark.sinks.delta_like import CommitResult
-
+    def write_batch(self, df, partition_by=None, txn=None) -> CommitResult:
         txn = dict(txn or {})
-        stored = self._stored_txn()
-        if txn and all(
-            a in stored and stored[a] >= v for a, v in txn.items()
-        ):
+        if already_applied(self._stored_txn(), txn):
             return CommitResult(
                 self.snapshot()["version"], 0, 0, skipped=True
             )
         w = self._writer(partition_by)
-        offsets = {f"kdi.offsets.{a}": str(v) for a, v in txn.items()}
+        offsets = encode_offsets(txn)
         observed = (
             self._txn_cache[0] if self._txn_cache is not None
             else w.latest_instant()
@@ -3104,16 +3102,13 @@ class HudiSink:
             return CommitResult(
                 self.snapshot()["version"], 0, 0, skipped=True
             )
-        return CommitResult(instant, n_files, n_records)
+        return CommitResult(
+            instant, n_files, n_records, num_bytes=w.last_commit_bytes
+        )
 
-    def _commit(self, actions: list[dict]) -> str:
+    def commit_offsets(self, txn: dict[str, int]) -> str:
         """--seek_offsets bootstrap: an empty commit whose
         extraMetadata carries the offsets."""
-        txn = {
-            a["txn"]["appId"]: a["txn"]["version"]
-            for a in actions
-            if "txn" in a
-        }
         w = self._writer()
         hoodie = os.path.join(self.path, ".hoodie")
         instant = w._claim_instant("commit")
@@ -3123,9 +3118,7 @@ class HudiSink:
         meta = {
             "partitionToWriteStats": {},
             "operationType": "SET_OFFSETS",
-            "extraMetadata": {
-                f"kdi.offsets.{a}": str(v) for a, v in txn.items()
-            },
+            "extraMetadata": encode_offsets(txn),
         }
         w.store.put_atomic(
             os.path.join(hoodie, f"{instant}.commit"),

@@ -50,6 +50,13 @@ import os
 from typing import Callable
 
 from kafka_delta_ingest_spark.avro_python import read_container
+from kafka_delta_ingest_spark.sinks.base import (
+    CommitResult,
+    _parse_partition_values,
+    already_applied,
+    decode_offsets,
+    encode_offsets,
+)
 
 
 def _norm_path(p: str) -> str:
@@ -1543,21 +1550,6 @@ class IcebergWriter:
         return self._commit_snapshot([(new_files, 0)], "append", ts_ms,
                                      attempts, summary=summary)
 
-    def summary_value(self, key: str) -> str | None:
-        """Latest snapshot-summary value for ``key`` (walking
-        snapshots newest-first) — the read side of the exactly-once
-        bookkeeping channel."""
-        _, meta = self._current()
-        for s in sorted(
-            (meta or {}).get("snapshots", []),
-            key=lambda s: s["timestamp-ms"],
-            reverse=True,
-        ):
-            v = (s.get("summary") or {}).get(key)
-            if v is not None:
-                return v
-        return None
-
     def _write_data_files(self, df) -> list[dict]:
         """Spark-write ``df`` to staging and promote under ``data/``
         (hive directory layout when partitioned); returns content=0
@@ -1577,10 +1569,6 @@ class IcebergWriter:
         import pyarrow.parquet as pq
 
         from pyspark.sql import functions as F
-
-        from kafka_delta_ingest_spark.sinks.delta_like import (
-            _parse_partition_values,
-        )
 
         _, cur_meta = self._current()
         if cur_meta is not None:
@@ -2560,9 +2548,9 @@ def _iceberg_type_to_spark(t):
 
 
 class IcebergSink:
-    """``DeltaLikeTable``-surface adapter over :class:`IcebergWriter`
-    so ``IngestJob`` can stream INTO an Apache Iceberg table
-    (``IngestOptions.log_format == "iceberg"``) with exactly-once
+    """The :class:`~kafka_delta_ingest_spark.sinks.base.Sink` over
+    :class:`IcebergWriter`, so ``IngestJob`` can stream INTO an Apache
+    Iceberg table (``IngestOptions.log_format == "iceberg"``) with exactly-once
     semantics — per-Kafka-partition offsets ride in the snapshot
     SUMMARY (``kdi.offsets.<appId>`` keys), the same bookkeeping
     channel the Flink Iceberg connector uses for its committed
@@ -2643,9 +2631,7 @@ class IcebergSink:
             (meta or {}).get("snapshots", []),
             key=lambda s: s["timestamp-ms"],
         ):
-            for k, v in (s.get("summary") or {}).items():
-                if k.startswith("kdi.offsets."):
-                    out[k[len("kdi.offsets."):]] = int(v)
+            out.update(decode_offsets(s.get("summary") or {}))
         return out
 
     def snapshot(self) -> dict:
@@ -2684,10 +2670,7 @@ class IcebergSink:
         """ALTER TABLE ADD COLUMNS passthrough (metadata-only)."""
         return self.w.evolve_schema(schema)
 
-    def write_batch(self, df, partition_by=None, txn=None,
-                    operation: str = "STREAMING UPDATE"):
-        from kafka_delta_ingest_spark.sinks.delta_like import CommitResult
-
+    def write_batch(self, df, partition_by=None, txn=None) -> CommitResult:
         partition_by = list(partition_by or [])
         _, cur_meta = self.w._current()
         if cur_meta is not None:
@@ -2707,10 +2690,7 @@ class IcebergSink:
                 )
         self.w.partition_by = partition_by
         txn = dict(txn or {})
-        stored = self._stored_txn()
-        if txn and all(
-            a in stored and stored[a] >= v for a, v in txn.items()
-        ):
+        if already_applied(self._stored_txn(), txn):
             return CommitResult(
                 self.snapshot()["version"], 0, 0, skipped=True
             )
@@ -2726,24 +2706,23 @@ class IcebergSink:
 
         snap_id = self.w._commit_snapshot(
             [(new_files, 0)], "append", int(time.time() * 1000), 100,
-            summary={f"kdi.offsets.{a}": str(v) for a, v in txn.items()},
+            summary=encode_offsets(txn),
         )
-        n = sum(f["record_count"] for f in new_files)
-        return CommitResult(snap_id, len(new_files), n)
+        return CommitResult(
+            snap_id,
+            len(new_files),
+            sum(f["record_count"] for f in new_files),
+            num_bytes=sum(f["file_size_in_bytes"] for f in new_files),
+        )
 
-    def _commit(self, actions: list[dict]) -> int:
-        """--seek_offsets bootstrap: translate the txn actions into an
-        empty snapshot whose summary carries the offsets."""
+    def commit_offsets(self, txn: dict[str, int]) -> int:
+        """--seek_offsets bootstrap: an empty snapshot whose summary
+        carries the offsets."""
         import time
 
-        txn = {
-            a["txn"]["appId"]: a["txn"]["version"]
-            for a in actions
-            if "txn" in a
-        }
         return self.w._commit_snapshot(
             [], "set-offsets", int(time.time() * 1000), 100,
-            summary={f"kdi.offsets.{a}": str(v) for a, v in txn.items()},
+            summary=encode_offsets(txn),
         )
 
     def read(self, spark, as_of=None):

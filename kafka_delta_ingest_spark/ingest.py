@@ -20,7 +20,8 @@ expressions):
    replacement for the reference's row-level parquet quarantine
    (src/writer.rs:618-639): conformance is decided by predicates
    *before* the write, so good rows never pay for bad ones.
-6. append + txn commit (sinks.DeltaLikeTable; real Delta when available)
+6. append + txn commit through the destination's sink (sinks.base:
+   a standard ``_delta_log`` by default, or Iceberg / Hudi)
 """
 
 from __future__ import annotations
@@ -34,7 +35,7 @@ from kafka_delta_ingest_spark.config import IngestOptions, MessageFormat
 from kafka_delta_ingest_spark.coercions import apply_coercions
 from kafka_delta_ingest_spark.dead_letters import DeadLetterQueue, dead_letter_columns
 from kafka_delta_ingest_spark.serialization import json_payload_to_struct
-from kafka_delta_ingest_spark.sinks.delta_like import DeltaLikeTable
+from kafka_delta_ingest_spark.sinks.base import Sink, open_sink
 from kafka_delta_ingest_spark.transforms import Transformer
 
 # Reserved names for Kafka metadata carried alongside the flattened
@@ -67,10 +68,12 @@ class BatchMetrics:
 
 
 class IngestJob:
-    def __init__(self, opts: IngestOptions, target_schema: StructType):
+    def __init__(self, opts: IngestOptions, target_schema: StructType,
+                 sink: Sink | None = None):
         self.opts = opts
-        # Destination-driven schema (SURVEY §1.2): in real Delta mode this
-        # is read from the table; here callers pass the table schema.
+        # Destination-driven schema (SURVEY §1.2): callers pass the table
+        # schema (the CLI reads it from the destination, cli.prepare_ingest,
+        # and hands over the sink it opened to do so).
         self.target_schema = target_schema
         self.transformer = Transformer(
             opts.transforms,
@@ -82,44 +85,12 @@ class IngestJob:
                 "timestamp_type": META["timestamp_type"],
             },
         )
-        fmt = getattr(opts, "log_format", "kdi")
-        if fmt == "delta":
-            # standard _delta_log destination: any Delta reader can
-            # consume the output (reference src/delta_helpers.rs:15-40)
-            from kafka_delta_ingest_spark.delta_standard import (
-                DeltaStandardSink,
-            )
-
-            self.table = DeltaStandardSink(opts.table_uri)
-        elif fmt == "iceberg":
-            # Apache Iceberg destination: exactly-once offsets ride in
-            # the snapshot summary (the Flink-connector bookkeeping
-            # channel)
-            from kafka_delta_ingest_spark.iceberg import IcebergSink
-
-            self.table = IcebergSink(
-                opts.table_uri, target_schema,
-                partition_by=getattr(opts, "partition_by", None),
-            )
-        elif fmt in ("hudi", "hudi_mor"):
-            # Apache Hudi destination: exactly-once offsets ride in
-            # commit extraMetadata (DeltaStreamer's checkpoint slot).
-            # "hudi_mor" + record_key streams every batch as an
-            # UPSERT (DeltaStreamer's continuous upsert operation):
-            # existing keys append log blocks, new keys base-insert.
-            from kafka_delta_ingest_spark.hudi import HudiSink
-
-            self.table = HudiSink(
-                opts.table_uri,
-                mor=(fmt == "hudi_mor"),
-                record_key=getattr(opts, "record_key", None),
-            )
-        else:
-            self.table = DeltaLikeTable(opts.table_uri)
+        self.table = (
+            sink if sink is not None else open_sink(opts, target_schema)
+        )
         self.dlq = DeadLetterQueue(
             table_location=opts.dlq_table_location,
             dlq_transforms=opts.dlq_transforms,
-            partition_by=None,
         )
         self.metrics_history: list[BatchMetrics] = []
         # Job-local counter for auto-OPTIMIZE cadence. Gating on the
@@ -383,6 +354,7 @@ class IngestJob:
             m.version = result.version
             m.skipped = result.skipped
             m.delta_write_num_records = result.num_records
+            m.delta_add_file_size = result.num_bytes
             # One aggregate splits the DLQ by cause: rows that never
             # parsed (deserialization) vs rows that parsed but failed
             # schema coercion — the reference keeps these counters
@@ -432,12 +404,6 @@ class IngestJob:
             return m
         finally:
             planned.unpersist()
-
-    @staticmethod
-    def dlq_count(dlq: DataFrame) -> int:
-        """Count dead letters (the per-cause split in process_batch
-        supersedes this in the hot path; kept for tests/tools)."""
-        return dlq.count()
 
     def run_batch(self, raw: DataFrame) -> BatchMetrics:
         """One-shot ingest of a static DataFrame (the reference's

@@ -17,9 +17,7 @@ cross-engine ledger in the table log consistent with that seek.
 
 from __future__ import annotations
 
-import time
-
-from kafka_delta_ingest_spark.sinks.delta_like import DeltaLikeTable
+from kafka_delta_ingest_spark.sinks.base import Sink
 
 
 class InconsistentStoredOffsets(RuntimeError):
@@ -33,7 +31,7 @@ def txn_app_id_for_partition(app_id: str, partition: int) -> str:
 
 
 def write_offsets_to_table(
-    table: DeltaLikeTable, app_id: str, offsets: dict[int, int]
+    table: Sink, app_id: str, offsets: dict[int, int]
 ) -> bool:
     """Seed seek offsets into the txn ledger; True if a commit was made.
 
@@ -45,17 +43,7 @@ def write_offsets_to_table(
 
     if not any(app in stored for app in mapped):
         # Safe: nothing stored for these partitions → commit txn actions.
-        actions = [
-            {
-                "commitInfo": {
-                    "operation": "SET TRANSACTION",
-                    "timestamp": int(time.time() * 1000),
-                    "operationParameters": {"app_id": app_id},
-                }
-            }
-        ]
-        actions += [{"txn": {"appId": a, "version": v}} for a, v in mapped.items()]
-        table._commit(actions)
+        table.commit_offsets(mapped)
         return True
 
     conflicts = [

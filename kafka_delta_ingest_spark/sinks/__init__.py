@@ -1,3 +1,1 @@
-from kafka_delta_ingest_spark.sinks.delta_like import DeltaLikeTable
-
-__all__ = ["DeltaLikeTable"]
+"""Destination-table sinks; the shared contract is in :mod:`.base`."""

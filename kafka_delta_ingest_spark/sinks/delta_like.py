@@ -4,10 +4,9 @@ The reference commits parquet files to a Delta table together with
 per-Kafka-partition ``txn`` offset actions for end-to-end exactly-once
 (reference src/delta_helpers.rs:15-40, src/lib.rs:966-1024). On a
 cluster with the delta-spark package installed, Spark's Delta sink with
-``txnAppId``/``txnVersion`` gives all of this natively — see
-``delta_available()``. This module provides the same *semantics* without
-the Delta jars (the test container has none): an append-only JSON action
-log over a partitioned parquet directory, mirroring the Delta protocol's
+``txnAppId``/``txnVersion`` gives all of this natively. This module
+provides the same *semantics* without the Delta jars: an append-only
+JSON action log over a partitioned parquet directory, mirroring the Delta protocol's
 shape:
 
 * versioned commits ``_kdi_log/<%020d>.json`` — JSON-lines of
@@ -40,22 +39,21 @@ import re
 import shutil
 import time
 import uuid
-from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+
+from kafka_delta_ingest_spark.sinks.base import (
+    CommitResult,
+    ConstraintViolation,
+    _parquet_stats,
+    already_applied,
+    promote_staging,
+    zorder_value,
+)
 
 LOG_DIR = "_kdi_log"
 CHECKPOINT_EVERY = 10  # reference src/delta_helpers.rs:46
 MAX_COMMIT_ATTEMPTS = 100_000  # reference uses 10M (src/lib.rs:74-75)
-
-
-def delta_available() -> bool:
-    try:
-        import delta  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
 
 
 class CommitConflict(RuntimeError):
@@ -71,22 +69,6 @@ class ConcurrentDeleteDelete(CommitConflict):
     would re-add rows the other writer deleted (silent row resurrection)
     or double-apply a compaction. The caller must re-read the new
     snapshot and recompute."""
-
-
-class ConstraintViolation(RuntimeError):
-    """A write contained rows failing a table CHECK constraint.
-
-    Mirrors Delta's InvariantViolationException: the whole transaction
-    fails — no partial data lands. SQL CHECK semantics: a row violates
-    only when the expression is FALSE; NULL/UNKNOWN satisfies."""
-
-
-@dataclass
-class CommitResult:
-    version: int
-    num_files: int
-    num_records: int
-    skipped: bool = False
 
 
 def _bloom_canon(v) -> str:
@@ -166,64 +148,6 @@ def _bloom_pass(
     for r in out.collect():  # one row per (file, column) — driver-scalar
         blooms.setdefault(r.file, {})[r.col] = {"m": m, "k": k, "b64": r.b64}
     return blooms
-
-
-def zorder_value(df: DataFrame, cols: list[str]):
-    """Morton (Z-order) key over numeric/timestamp/date columns.
-
-    Two passes: a driver-scalar stats action collects per-column
-    min/max, then every value is normalized to a ``bits``-wide integer
-    rank and the ranks are bit-interleaved — pure shift/mask
-    expressions, whole-stage codegen. Sorting by the interleaved key
-    gives every output file a narrow min/max window on EVERY clustered
-    column simultaneously, unlike a lexicographic sort which only
-    bounds the leading column (Delta's ZORDER BY does the same thing
-    on range-partition ids; OPTIMIZE ... ZORDER BY in delta-spark).
-
-    Nulls normalize to rank 0 (sorted first, like Delta). Raises for
-    column types with no numeric order — hash-bucketing a string gives
-    interleave bits no range locality, so silently accepting one would
-    quietly disable skipping on the other columns too.
-    """
-    from pyspark.sql import functions as F
-
-    for c in cols:
-        t = dict(df.dtypes)[c]
-        if not (
-            t in ("tinyint", "smallint", "int", "bigint", "float", "double", "date")
-            or t.startswith(("decimal", "timestamp"))
-        ):
-            raise ValueError(f"zorder_value: column {c!r} has unordered type {t}")
-    bits = min(16, 63 // len(cols))
-    top = (1 << bits) - 1
-    stats = df.agg(
-        *[
-            a
-            for c in cols
-            for a in (
-                F.min(F.col(c).cast("double")).alias(f"_mn_{c}"),
-                F.max(F.col(c).cast("double")).alias(f"_mx_{c}"),
-            )
-        ]
-    ).collect()[0]
-    ranks = []
-    for c in cols:
-        mn, mx = stats[f"_mn_{c}"], stats[f"_mx_{c}"]
-        if mn is None or mx is None or mx <= mn:
-            ranks.append(F.lit(0).cast("long"))
-            continue
-        scaled = (
-            (F.coalesce(F.col(c).cast("double"), F.lit(mn)) - F.lit(mn))
-            * F.lit(top / (mx - mn))
-        ).cast("long")
-        ranks.append(F.least(F.greatest(scaled, F.lit(0)), F.lit(top)))
-    z = F.lit(0).cast("long")
-    for i in range(bits):
-        for ci, r in enumerate(ranks):
-            z = z.bitwiseOR(
-                F.shiftleft(F.shiftright(r, i).bitwiseAND(F.lit(1)), i * len(cols) + ci)
-            )
-    return z
 
 
 class DeltaLikeTable:
@@ -845,12 +769,8 @@ class DeltaLikeTable:
         """
         txn = txn or {}
         snap = self.snapshot()
-        if txn:
-            stored = snap["txn"]
-            if all(
-                app in stored and stored[app] >= ver for app, ver in txn.items()
-            ):
-                return CommitResult(snap["version"], 0, 0, skipped=True)
+        if already_applied(snap["txn"], txn):
+            return CommitResult(snap["version"], 0, 0, skipped=True)
         if partition_by is None and snap["metaData"]:
             # Inherit the table's declared partitioning (Delta writers
             # always do) — a layout-mixing unpartitioned append into a
@@ -869,8 +789,7 @@ class DeltaLikeTable:
             writer = writer.partitionBy(*[cm.get(c, c) for c in partition_by])
         writer.parquet(staging)
 
-        adds = self._promote_staging(staging, partition_by or [])
-        shutil.rmtree(staging, ignore_errors=True)
+        adds = promote_staging(staging, self.path, int(time.time() * 1000))
         if not adds:
             return CommitResult(self.latest_version(), 0, 0, skipped=True)
 
@@ -901,39 +820,10 @@ class DeltaLikeTable:
         if version % CHECKPOINT_EVERY == 0 and version > 0:
             self._checkpoint(version)
         n_records = sum(a["stats"]["numRecords"] for a in adds)
-        return CommitResult(version, len(adds), n_records)
-
-    def _promote_staging(self, staging: str, partition_by: list[str]) -> list[dict]:
-        """Move staged parquet files under the table root; collect stats."""
-        adds = []
-        for dirpath, _dirs, files in os.walk(staging):
-            rel = os.path.relpath(dirpath, staging)
-            for fname in files:
-                if not fname.endswith(".parquet"):
-                    continue
-                rel_dir = "" if rel == "." else rel
-                dest_dir = os.path.join(self.path, rel_dir)
-                os.makedirs(dest_dir, exist_ok=True)
-                src = os.path.join(dirpath, fname)
-                dest = os.path.join(dest_dir, fname)
-                stats = _parquet_stats(src)
-                if stats["numRecords"] == 0:
-                    # Zero-row part files (e.g. a DELETE that drained a
-                    # whole file) are never promoted: a stats-less empty
-                    # add would defeat every later pruning pass.
-                    continue
-                partition_values = _parse_partition_values(rel_dir)
-                shutil.move(src, dest)
-                adds.append(
-                    {
-                        "path": os.path.join(rel_dir, fname) if rel_dir else fname,
-                        "partitionValues": partition_values,
-                        "size": os.path.getsize(dest),
-                        "modificationTime": int(time.time() * 1000),
-                        "stats": stats,
-                    }
-                )
-        return adds
+        return CommitResult(
+            version, len(adds), n_records,
+            num_bytes=sum(a["size"] for a in adds),
+        )
 
     def _commit(
         self,
@@ -1193,7 +1083,7 @@ class DeltaLikeTable:
             )
         else:
             blooms = {}
-        adds = self._promote_staging(staging, partition_by)
+        adds = promote_staging(staging, self.path, int(time.time() * 1000))
         for a in adds:
             b = blooms.get(os.path.basename(a["path"]))
             if b:
@@ -1203,7 +1093,6 @@ class DeltaLikeTable:
                 # a later incremental pass skips files carrying an
                 # identical tag.
                 a["clusteredBy"] = cluster_tag
-        shutil.rmtree(staging, ignore_errors=True)
         removed = {f["path"] for f in small}
         actions = [
             {
@@ -2604,8 +2493,7 @@ class DeltaLikeTable:
         if partition_by:
             writer = writer.partitionBy(*[cm.get(c, c) for c in partition_by])
         writer.parquet(staging)
-        adds = self._promote_staging(staging, partition_by)
-        shutil.rmtree(staging, ignore_errors=True)
+        adds = promote_staging(staging, self.path, int(time.time() * 1000))
 
         cdc_actions: list[dict] = []
         if self._cdf_enabled(snap):
@@ -2689,8 +2577,7 @@ class DeltaLikeTable:
         if partition_by:
             writer = writer.partitionBy(*[cm.get(c, c) for c in partition_by])
         writer.parquet(staging)
-        adds = self._promote_staging(staging, partition_by)
-        shutil.rmtree(staging, ignore_errors=True)
+        adds = promote_staging(staging, self.path, int(time.time() * 1000))
         actions: list[dict] = [
             {
                 "commitInfo": {
@@ -3157,79 +3044,3 @@ def _file_all_matching(f: dict, predicates: list[tuple]) -> bool:
         ):
             return False
     return True
-
-
-def _parse_partition_values(rel_dir: str) -> dict[str, str | None]:
-    """Directory segments → partition values. Spark percent-escapes
-    special characters in partition directory names (':' → '%3A',
-    Hive's escapePathName); the add action must store the UNESCAPED
-    value or every predicate probe and every Spark-read value (which
-    Spark unescapes) would mismatch the stored window — silently
-    excluding matching files."""
-    from urllib.parse import unquote
-
-    values: dict[str, str | None] = {}
-    for seg in rel_dir.split(os.sep):
-        if "=" in seg:
-            k, v = seg.split("=", 1)
-            values[unquote(k)] = (
-                None if v == "__HIVE_DEFAULT_PARTITION__" else unquote(v)
-            )
-    return values
-
-
-def _parquet_stats(path: str) -> dict:
-    """numRecords / minValues / maxValues / nullCount from the footer.
-
-    Parity with the reference's add-action stats
-    (src/writer.rs:657-1076): top-level primitive columns only, min/max
-    for bool/int/long/float/double/string.
-    """
-    import pyarrow.parquet as pq
-
-    md = pq.ParquetFile(path).metadata
-    num_records = md.num_rows
-    mins: dict = {}
-    maxs: dict = {}
-    nulls: dict = {}
-    for rg in range(md.num_row_groups):
-        for ci in range(md.num_columns):
-            col = md.row_group(rg).column(ci)
-            name = col.path_in_schema
-            if "." in name:  # skip nested leaves (arrays etc.)
-                continue
-            st = col.statistics
-            if st is None:
-                continue
-            if st.null_count is not None:
-                nulls[name] = nulls.get(name, 0) + st.null_count
-            if st.has_min_max:
-                mn, mx = _json_safe(st.min), _json_safe(st.max)
-                if name not in mins or (mn is not None and mn < mins[name]):
-                    mins[name] = mn
-                if name not in maxs or (mx is not None and mx > maxs[name]):
-                    maxs[name] = mx
-    return {
-        "numRecords": num_records,
-        "minValues": mins,
-        "maxValues": maxs,
-        "nullCount": nulls,
-    }
-
-
-def _json_safe(v):
-    import decimal
-
-    if isinstance(v, bytes):
-        try:
-            return v.decode("utf-8")
-        except UnicodeDecodeError:
-            return v.hex()
-    if hasattr(v, "isoformat"):
-        return v.isoformat()
-    if isinstance(v, decimal.Decimal):
-        # decimal stats serialize as plain numeric strings (the
-        # delta-spark convention); without this a DECIMAL column made
-        # every stats-carrying write crash on json.dumps
-        return str(v)
-    return v

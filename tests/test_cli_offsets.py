@@ -2,6 +2,7 @@
 seek-offset ledger semantics (reference src/offsets.rs:159-236)."""
 
 import json
+import os
 
 import pytest
 from pyspark.sql.types import LongType, StringType, StructField, StructType
@@ -11,13 +12,18 @@ from kafka_delta_ingest_spark.cli import (
     options_from_args,
     parse_seek_offsets,
     parse_transform_args,
+    prepare_ingest,
 )
 from kafka_delta_ingest_spark.config import AutoOffsetReset, MessageFormat
+from kafka_delta_ingest_spark.delta_standard import (
+    DeltaStandardSink,
+    DeltaStandardWriter,
+    read_delta,
+)
 from kafka_delta_ingest_spark.offsets import (
     InconsistentStoredOffsets,
     write_offsets_to_table,
 )
-from kafka_delta_ingest_spark.sinks.delta_like import DeltaLikeTable
 
 
 def _parse(argv):
@@ -58,8 +64,11 @@ def test_cli_full_option_surface():
     assert opts.kafka_settings == {"security.protocol": "SASL_SSL"}
     assert opts.statsd_endpoint == "localhost:8125"
     assert opts.ends_at_latest_offsets is True
-    assert opts.checkpoints is True
+    # -c/--checkpoints still parses (reference command lines keep
+    # working); checkpoints are always written, so no option carries it
+    assert build_parser().parse_args(["ingest", "t", "/x", "-c"]).checkpoints
     assert opts.message_format == MessageFormat.JSON
+    assert opts.log_format == "delta"
 
 
 def test_cli_format_flags(tmp_path):
@@ -82,19 +91,18 @@ def test_transform_parse_rejects_garbage():
 
 def test_seek_offsets_ledger_semantics(tmp_path):
     """reference write_offsets_to_delta_test (src/offsets.rs:159-236)."""
-    table = DeltaLikeTable(str(tmp_path / "t"))
+    table = DeltaStandardSink(str(tmp_path / "t"))
 
     # fresh table → offsets committed
     assert write_offsets_to_table(table, "app", {0: 5, 1: 10}) is True
-    assert table.txn_version("app-0") == 5
-    assert table.txn_version("app-1") == 10
+    assert table.snapshot()["txn"] == {"app-0": 5, "app-1": 10}
 
     # identical request → idempotent no-op
     assert write_offsets_to_table(table, "app", {0: 5, 1: 10}) is False
 
     # stored ahead of request → already applied, no-op
     assert write_offsets_to_table(table, "app", {0: 3}) is False
-    assert table.txn_version("app-0") == 5
+    assert table.snapshot()["txn"]["app-0"] == 5
 
     # stored BEHIND request → refuse (InconsistentStoredOffsets)
     with pytest.raises(InconsistentStoredOffsets, match="0:stored=5/seek=9"):
@@ -102,7 +110,7 @@ def test_seek_offsets_ledger_semantics(tmp_path):
 
 
 def test_dlq_delta_sink_with_transforms(spark, tmp_path):
-    """D3: dead letters land in their own Delta-style table, with
+    """D3: dead letters land in their own standard Delta table, with
     dlq_transforms applied (reference tests/dead_letter_tests.rs:46-48
     derives a date partition from the failure timestamp)."""
     from pyspark.sql import functions as F
@@ -123,11 +131,57 @@ def test_dlq_delta_sink_with_transforms(spark, tmp_path):
     )
     n = q.write(rows)
     assert n == 1
-    back = DeltaLikeTable(dlq_dir).read(spark).collect()
+    assert os.path.isdir(os.path.join(dlq_dir, "_delta_log"))
+    assert not os.path.exists(os.path.join(dlq_dir, "_kdi_log"))
+    back = read_delta(spark, dlq_dir).collect()
     assert len(back) == 1
     assert back[0]["error"] == "JsonParseError"
     assert len(back[0]["date"]) == 10  # yyyy-MM-dd derived by the transform
     assert back[0]["base64_bytes"] is not None
+
+
+def test_cli_ingest_startup_on_standard_table(spark, tmp_path):
+    """``ingest --log_format delta`` on an existing standard table:
+    the startup reads the schema from ``_delta_log`` and seeds
+    ``--seek_offsets`` there as ``txn`` actions (no ``_kdi_log``)."""
+    table = str(tmp_path / "t")
+    schema = StructType(
+        [StructField("id", LongType()), StructField("color", StringType())]
+    )
+    DeltaStandardWriter(table).write(
+        spark.createDataFrame([(1, "red")], schema)
+    )
+    job = prepare_ingest(
+        _parse(["ingest", "t", table, "--app_id", "cli",
+                "--log_format", "delta", "--seek_offsets", '{"0":7,"1":9}'])
+    )
+    assert job.target_schema == schema
+    assert not os.path.exists(os.path.join(table, "_kdi_log"))
+    txn = {}
+    log = os.path.join(table, "_delta_log")
+    for name in sorted(os.listdir(log)):
+        if name.endswith(".json"):
+            with open(os.path.join(log, name)) as f:
+                for line in f:
+                    act = json.loads(line)
+                    if "txn" in act:
+                        txn[act["txn"]["appId"]] = act["txn"]["version"]
+    assert txn == {"cli-0": 7, "cli-1": 9}
+    assert job.ledger_floors() == {0: 7, 1: 9}
+
+
+@pytest.mark.parametrize("fmt", ["iceberg", "hudi", "hudi_mor"])
+def test_cli_ingest_startup_refuses_schemaless_formats(tmp_path, fmt):
+    """Only ``delta`` declares the schema the startup decodes with; the
+    other formats exit with a clear message before the location is
+    touched (no table directory, no seeded offsets)."""
+    table = str(tmp_path / "t")
+    with pytest.raises(SystemExit, match="--log_format delta"):
+        prepare_ingest(
+            _parse(["ingest", "t", table, "--log_format", fmt,
+                    "--seek_offsets", '{"0":7}'])
+        )
+    assert not os.path.exists(table)
 
 
 def test_avro_requires_package(spark):

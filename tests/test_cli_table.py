@@ -70,3 +70,32 @@ def test_cli_vacuum_dry_run(spark, table_dir, capsys):
     assert "would_reclaim=1" in out
     assert main(["table", table_dir, "vacuum", "--retention_ms", "0"]) == 0
     assert "reclaimed=1" in capsys.readouterr().out
+
+
+def test_cli_table_refuses_standard_delta_table(spark, tmp_path):
+    """`table` reads `_kdi_log`; on the standard `_delta_log` table that
+    `ingest` writes it must refuse instead of vacuuming every data file
+    as unreferenced."""
+    import os
+
+    from kafka_delta_ingest_spark.delta_standard import DeltaStandardSink, read_delta
+
+    loc = str(tmp_path / "std")
+    DeltaStandardSink(loc).write_batch(
+        spark.createDataFrame([(i, i * 10) for i in range(20)], "id long, val long"),
+        txn={"app-0": 19},
+    )
+
+    def data_files():
+        return sorted(
+            f for _, _, fs in os.walk(loc) for f in fs if f.endswith(".parquet")
+        )
+
+    before = data_files()
+    assert before
+    for action in (["vacuum", "--retention_ms", "0"], ["count"], ["optimize"]):
+        with pytest.raises(SystemExit, match="standard Delta table"):
+            main(["table", loc, *action])
+    assert data_files() == before
+    assert not os.path.exists(os.path.join(loc, "_kdi_log"))
+    assert read_delta(spark, loc).count() == 20

@@ -425,7 +425,7 @@ def test_standard_raced_overwrite_conflicts(spark, tmp_path, monkeypatch):
     # commit invalidates it
     import pytest
 
-    import kafka_delta_ingest_spark.sinks.delta_like as dl
+    import kafka_delta_ingest_spark.sinks.base as dl
     from kafka_delta_ingest_spark.delta_standard import (
         ConcurrentDeltaWriteError,
         DeltaStandardWriter,
@@ -456,7 +456,7 @@ def test_standard_raced_overwrite_conflicts(spark, tmp_path, monkeypatch):
 def test_standard_raced_same_txn_skips(spark, tmp_path, monkeypatch):
     # two workers race the SAME batch (same txn appId/version): the
     # loser must skip, not double-append — exactly-once under races
-    import kafka_delta_ingest_spark.sinks.delta_like as dl
+    import kafka_delta_ingest_spark.sinks.base as dl
     from kafka_delta_ingest_spark.delta_standard import (
         DeltaStandardWriter,
         read_delta,
@@ -485,11 +485,50 @@ def test_standard_raced_same_txn_skips(spark, tmp_path, monkeypatch):
     assert got == [0, 1, 2, 3, 100, 101, 102]  # no duplicates
 
 
+def test_standard_raced_same_txn_merge_skips(spark, tmp_path, monkeypatch):
+    # the MERGE twin of the race above: a CDC merge that loses the race
+    # to a worker applying the SAME txn skips instead of committing
+    import kafka_delta_ingest_spark.sinks.base as dl
+    from kafka_delta_ingest_spark.delta_standard import (
+        DeltaStandardWriter,
+        read_delta,
+    )
+
+    t = str(tmp_path / "race_merge")
+    w1 = DeltaStandardWriter(t)
+    w1.write(_std_docs(spark, n=4))
+    src = _std_docs(spark, n=3, lo=2)  # doc_id 2, 3 match; 4 inserts
+    upd = {"val": "source.val + 1"}
+
+    real_stats = dl._parquet_stats
+    fired = {"done": False}
+
+    def stats_wrapper(path):
+        if not fired["done"]:
+            fired["done"] = True
+            monkeypatch.undo()
+            DeltaStandardWriter(t).merge(
+                spark, src, "source.doc_id = target.doc_id",
+                when_matched_update=upd, txn={"cdc-0": 5},
+            )
+        return real_stats(path)
+
+    monkeypatch.setattr(dl, "_parquet_stats", stats_wrapper)
+    v = w1.merge(
+        spark, src, "source.doc_id = target.doc_id",
+        when_matched_update=upd, txn={"cdc-0": 5},
+    )
+    assert fired["done"]
+    assert v == w1.latest_version() == 1  # skipped to the winner's commit
+    got = sorted((r.doc_id, r.val) for r in read_delta(spark, t).collect())
+    assert got == [(0, 0), (1, 10), (2, 21), (3, 31), (4, 40)]
+
+
 def test_standard_first_commit_same_txn_race_skips(spark, tmp_path):
     # r8 review: the exactly-once re-check must also cover the FIRST
     # commit of a brand-new table (read_version=-1 previously disabled
     # it): two workers bootstrapping the same batch → one commit.
-    import kafka_delta_ingest_spark.sinks.delta_like as dl
+    import kafka_delta_ingest_spark.sinks.base as dl
     from kafka_delta_ingest_spark.delta_standard import (
         DeltaStandardWriter,
         read_delta,

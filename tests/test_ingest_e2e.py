@@ -17,8 +17,12 @@ from pyspark.sql.types import (
 )
 
 from kafka_delta_ingest_spark.config import IngestOptions
+from kafka_delta_ingest_spark.delta_standard import (
+    DeltaStandardSink,
+    DeltaStandardWriter,
+    read_delta,
+)
 from kafka_delta_ingest_spark.ingest import IngestJob
-from kafka_delta_ingest_spark.sinks.delta_like import DeltaLikeTable
 
 # The reference's primary fixture schema (FIXTURES.md F1 web_requests,
 # tests/data/web_requests/_delta_log/00000000000000000000.json).
@@ -108,8 +112,12 @@ def test_web_requests_e2e(spark, tmp_path):
     assert m.version == 0
     assert m.delta_write_num_records == 20
     assert m.messages_deserialization_failed == 0
+    # delta.add.size: real bytes of the committed add actions
+    assert m.delta_add_file_size == sum(
+        a["size"] for a in DeltaStandardWriter(table)._py_replay()["adds"].values()
+    ) > 0
 
-    back = DeltaLikeTable(table).read(spark)
+    back = read_delta(spark, table)
     assert back.count() == 20
     r = back.filter(F.col("uuid") == "uuid-3").collect()[0]
     assert r.date == "2021-03-24"  # derived by substr transform
@@ -121,7 +129,7 @@ def test_web_requests_e2e(spark, tmp_path):
 
     # txn ledger: per-kafka-partition last offsets (reference
     # src/delta_helpers.rs:29-40).
-    snap = DeltaLikeTable(table).snapshot()
+    snap = DeltaStandardSink(table).snapshot()
     assert snap["txn"] == {"wr-0": 18, "wr-1": 19}
 
 
@@ -151,7 +159,7 @@ def test_idempotent_replay_skipped(spark, tmp_path):
     # guard (src/value_buffers.rs:14-35): the write is skipped entirely.
     m2 = job.run_batch(raw)
     assert m2.skipped
-    assert DeltaLikeTable(table).read(spark).count() == 1
+    assert read_delta(spark, table).count() == 1
 
 
 def test_zero_offset_replay_skipped(spark, tmp_path):
@@ -181,7 +189,7 @@ def test_zero_offset_replay_skipped(spark, tmp_path):
 
     m0 = job.run_batch(raw_at(0, b'{"id": "a"}'))
     assert not m0.skipped
-    assert DeltaLikeTable(table).snapshot()["txn"] == {"zero_offset-0": 0}
+    assert DeltaStandardSink(table).snapshot()["txn"] == {"zero_offset-0": 0}
 
     # Replay of offset 0: stored version 0 must be treated as present
     # (is-not-None semantics), not as falsy -> the write is skipped.
@@ -190,7 +198,7 @@ def test_zero_offset_replay_skipped(spark, tmp_path):
 
     m1 = job.run_batch(raw_at(1, b'{"id": "b"}'))
     assert not m1.skipped
-    assert DeltaLikeTable(table).read(spark).count() == 2
+    assert read_delta(spark, table).count() == 2
 
 
 def test_deserialization_failure_routes_to_dlq(spark, tmp_path):
@@ -240,7 +248,7 @@ def test_deserialization_failure_routes_to_dlq(spark, tmp_path):
     # offsets advance past bad AND empty messages: the tombstone at
     # offset 2 counts as processed (reference src/lib.rs:847-852), so
     # the ledger records 2, not the last non-empty offset.
-    assert DeltaLikeTable(table).snapshot()["txn"] == {"app-0": 2}
+    assert DeltaStandardSink(table).snapshot()["txn"] == {"app-0": 2}
 
 
 def test_coercion_failure_routes_to_dlq(spark, tmp_path):
@@ -271,7 +279,7 @@ def test_coercion_failure_routes_to_dlq(spark, tmp_path):
     ]
     m = job.run_batch(_raw_df(spark, rows))
     assert m.delta_write_num_records == 1
-    good = DeltaLikeTable(table).read(spark).collect()
+    good = read_delta(spark, table).collect()
     assert len(good) == 1 and good[0].id == "good"
     dlq_rows = spark.read.parquet(dlq_loc).collect()
     assert len(dlq_rows) == 1
@@ -304,7 +312,7 @@ def test_null_partition_value_hive_default(spark, tmp_path):
 
     dirs = {d for d in os.listdir(table) if d.startswith("color=")}
     assert dirs == {"color=red", "color=blue", "color=__HIVE_DEFAULT_PARTITION__"}
-    back = DeltaLikeTable(table).read(spark)
+    back = read_delta(spark, table)
     assert back.count() == 3
     assert back.filter(F.col("color").isNull()).count() == 1
 
@@ -329,8 +337,8 @@ def test_file_stats_recorded(spark, tmp_path):
         for i in range(10)
     ]
     job.run_batch(_raw_df(spark, rows))
-    snap = DeltaLikeTable(table).snapshot()
-    stats = [f["stats"] for f in snap["files"]]
+    adds = DeltaStandardWriter(table)._py_replay()["adds"].values()
+    stats = [json.loads(a["stats"]) for a in adds]
     assert sum(s["numRecords"] for s in stats) == 10
     all_mins = [s["minValues"].get("value") for s in stats if s["minValues"]]
     all_maxs = [s["maxValues"].get("value") for s in stats if s["maxValues"]]
@@ -357,13 +365,13 @@ def test_checkpoint_every_10_commits(spark, tmp_path):
             )
         ]
         job.run_batch(_raw_df(spark, rows))
-    log = os.listdir(f"{table}/_kdi_log")
-    assert "checkpoint.00000000000000000010.json" in log
+    log = os.listdir(f"{table}/_delta_log")
+    assert "00000000000000000010.checkpoint.parquet" in log
     assert "_last_checkpoint" in log
-    snap = DeltaLikeTable(table).snapshot()
+    snap = DeltaStandardSink(table).snapshot()
     assert snap["version"] == 10
     assert snap["txn"] == {"app-0": 10}
-    assert DeltaLikeTable(table).read(spark).count() == 11
+    assert read_delta(spark, table).count() == 11
 
 
 def test_optimize_compacts_small_files(spark, tmp_path):
@@ -394,21 +402,22 @@ def test_optimize_compacts_small_files(spark, tmp_path):
             "value binary, partition int, offset long, topic string, "
             "timestamp timestamp, timestampType int")))
 
-    table = DeltaLikeTable(table_dir)
-    before = table._live_files()
+    table = DeltaStandardWriter(table_dir)
+    before = table._py_replay()["adds"]
     assert len(before) >= 5
-    rows_before = sorted(r["uuid"] for r in table.read(spark).collect())
+    rows_before = sorted(r["uuid"] for r in read_delta(spark, table_dir).collect())
 
-    result = table.optimize(spark, target_file_bytes=10 * 1024 * 1024)
-    assert not result.skipped
-    after = table._live_files()
+    v_before = table.latest_version()
+    v_opt = table.optimize(spark, target_file_bytes=10 * 1024 * 1024)
+    assert v_opt == v_before + 1  # committed: not skipped
+    after = table._py_replay()["adds"]
     assert len(after) < len(before)
-    rows_after = sorted(r["uuid"] for r in table.read(spark).collect())
+    rows_after = sorted(r["uuid"] for r in read_delta(spark, table_dir).collect())
     assert rows_after == rows_before  # no loss, no dupes
     # txn ledger survives compaction
     assert table.txn_version("opt-0") == 49
     # second optimize is a no-op (already compact)
-    assert table.optimize(spark, target_file_bytes=10 * 1024 * 1024).skipped
+    assert table.optimize(spark, target_file_bytes=10 * 1024 * 1024) == v_opt
 
 
 def test_web_requests_e2e_standard_delta_log(spark, tmp_path):

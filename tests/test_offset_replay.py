@@ -17,9 +17,9 @@ import json
 from pyspark.sql import Row
 
 from kafka_delta_ingest_spark.config import AutoOffsetReset, IngestOptions
+from kafka_delta_ingest_spark.delta_standard import read_delta
 from kafka_delta_ingest_spark.ingest import IngestJob
 from kafka_delta_ingest_spark.offsets import write_offsets_to_table
-from kafka_delta_ingest_spark.sinks.delta_like import DeltaLikeTable
 from tests.test_streaming import RAW_SCHEMA, TABLE_SCHEMA, _stream, _write_raw
 
 
@@ -44,7 +44,7 @@ def _msgs(first_id: int, n: int, partition: int = 0, first_offset: int | None = 
 
 def _written_ids(spark, table_dir):
     return sorted(
-        r["id"] for r in DeltaLikeTable(table_dir).read(spark).collect()
+        r["id"] for r in read_delta(spark, table_dir).collect()
     )
 
 

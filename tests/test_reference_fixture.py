@@ -12,8 +12,8 @@ from pyspark.sql import Row, functions as F
 from pyspark.sql.types import StructType
 
 from kafka_delta_ingest_spark.config import IngestOptions
+from kafka_delta_ingest_spark.delta_standard import DeltaStandardWriter, read_delta
 from kafka_delta_ingest_spark.ingest import IngestJob
-from kafka_delta_ingest_spark.sinks.delta_like import DeltaLikeTable
 
 FIXTURE = "/root/reference/tests/json/web_requests-100.json"
 DELTA_LOG = (
@@ -82,8 +82,8 @@ def test_reference_quickstart_workload(spark, tmp_path):
     assert m.delta_write_num_records == 100
     assert m.messages_deserialization_failed == 0
 
-    table = DeltaLikeTable(table_dir)
-    back = table.read(spark)
+    table = DeltaStandardWriter(table_dir)
+    back = read_delta(spark, table_dir)
 
     # Exact row content against the raw fixture.
     got = {r["uuid"]: r for r in back.collect()}

@@ -121,9 +121,12 @@ def test_ingest_job_e2e_with_live_registry(spark, tmp_path):
         IngestOptions,
         MessageFormat,
     )
+    from kafka_delta_ingest_spark.delta_standard import (
+        DeltaStandardSink,
+        read_delta,
+    )
     from kafka_delta_ingest_spark.ingest import IngestJob
     from kafka_delta_ingest_spark.schema_registry import clear_caches
-    from kafka_delta_ingest_spark.sinks.delta_like import DeltaLikeTable
 
     clear_caches()
     src = str(tmp_path / "src")
@@ -174,8 +177,8 @@ def test_ingest_job_e2e_with_live_registry(spark, tmp_path):
             raw_stream=spark.readStream.schema(raw_schema).parquet(src),
         )
         q.awaitTermination(120)
-    t = DeltaLikeTable(table_dir)
-    got = {r.id: (r.color, r.age) for r in t.read(spark).collect()}
+    t = DeltaStandardSink(table_dir)
+    got = {r.id: (r.color, r.age) for r in read_delta(spark, table_dir).collect()}
     assert sorted(got) == list(range(30))
     assert got[3] == ("red", None) and got[4] == ("blue", 4)
     assert t.snapshot()["txn"] == {"sr_app-0": 28, "sr_app-1": 29}

@@ -1,38 +1,36 @@
-"""Sink contract: the jar-free DeltaLikeTable and the production
-RealDeltaTable must behave identically at the write/replay/read surface,
-and the transaction log each emits must normalize to the same action
-stream (reference src/delta_helpers.rs:15-40; conflict loop
-src/lib.rs:966-1024).
-
-delta-spark is not installable in this container (no package network;
-re-verified by ``delta_available()``), so the RealDeltaTable legs are
-skip-marked and light up automatically on a cluster that has the jars —
-COVERAGE.md records the blocker. The DeltaLikeTable legs additionally
-pin the action stream against a recorded fixture
-(tests/fixtures/sink_action_stream.json) so any protocol drift in the
-jar-free sink is caught even without the jars.
+"""Sink contract: every ingest destination (sinks.base.Sink) behaves the
+same at the write / replay / offset-bootstrap / read surface
+(reference src/delta_helpers.rs:15-40, src/offsets.rs:36-102), and the
+jar-free logs normalize to one recorded action stream
+(tests/fixtures/sink_action_stream.json), so protocol drift in either
+Delta writer is caught.
 """
 
 import json
 import os
 
 import pytest
-from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
+from kafka_delta_ingest_spark.config import IngestOptions
+from kafka_delta_ingest_spark.offsets import (
+    InconsistentStoredOffsets,
+    write_offsets_to_table,
+)
+from kafka_delta_ingest_spark.sinks.base import open_sink
 from kafka_delta_ingest_spark.sinks.delta_like import DeltaLikeTable
-from kafka_delta_ingest_spark.sinks.delta_real import RealDeltaTable, delta_available
 from kafka_delta_ingest_spark.sinks.log_compare import normalize_log
 
 FIXTURE = os.path.join(os.path.dirname(__file__), "fixtures", "sink_action_stream.json")
 
-needs_delta = pytest.mark.skipif(
-    not delta_available(), reason="delta-spark jars not installed in this environment"
+FORMATS = ["delta", "iceberg", "hudi", "hudi_mor"]
+SCHEMA = StructType(
+    [
+        StructField("id", LongType()),
+        StructField("user", StringType()),
+        StructField("date", StringType()),
+    ]
 )
-
-SINKS = [
-    pytest.param(DeltaLikeTable, id="delta_like"),
-    pytest.param(RealDeltaTable, id="delta_real", marks=needs_delta),
-]
 
 
 def _batch(spark, lo, hi, date):
@@ -41,37 +39,72 @@ def _batch(spark, lo, hi, date):
     ).repartition(1)
 
 
-def _append(sink, df, txn, epoch):
-    """Uniform append adapter over the two sinks' idempotence APIs."""
-    if isinstance(sink, DeltaLikeTable):
-        return sink.write_batch(df, partition_by=["date"], txn=txn)
-    return sink.write_batch(
-        df, partition_by=["date"], txn=txn, app_id="contract", epoch_id=epoch
+def _sink(path, fmt):
+    opts = IngestOptions(table_uri=path, log_format=fmt, partition_by=["date"])
+    return open_sink(opts, SCHEMA)
+
+
+def _ids(spark, sink):
+    return sorted(r.id for r in sink.read(spark).select("id").collect())
+
+
+@pytest.mark.parametrize("fmt", FORMATS)
+def test_append_replay_read_contract(spark, fmt, tmp_path):
+    """Exactly-once at the shared surface: appends report their files,
+    records and bytes; a replayed batch comes back skipped and adds no
+    rows; the table reads back as the exact id set."""
+    t = _sink(str(tmp_path / "t"), fmt)
+    first = t.write_batch(
+        _batch(spark, 0, 10, "2024-01-01"), partition_by=["date"], txn={"app-0": 5}
     )
+    assert not first.skipped
+    assert first.num_records == 10 and first.num_files >= 1
+    assert first.num_bytes > 0
+    second = t.write_batch(
+        _batch(spark, 10, 20, "2024-01-02"), partition_by=["date"], txn={"app-0": 6}
+    )
+    assert second.num_records == 10 and second.num_bytes > 0
+    replay = t.write_batch(
+        _batch(spark, 10, 20, "2024-01-02"), partition_by=["date"], txn={"app-0": 6}
+    )
+    assert replay.skipped and replay.num_records == 0 and replay.num_bytes == 0
+    assert t.snapshot()["txn"] == {"app-0": 6}
+    assert _ids(spark, t) == list(range(20))
 
 
-@pytest.mark.parametrize("sink_cls", SINKS)
-def test_append_replay_read_contract(spark, sink_cls, tmp_path):
-    """Exactly-once at the surface both sinks share: a replayed batch
-    must not duplicate rows, and the final table is the exact id set."""
-    t = sink_cls(str(tmp_path / "t"))
-    _append(t, _batch(spark, 0, 10, "2024-01-01"), {"app-0": 5}, 0)
-    _append(t, _batch(spark, 10, 20, "2024-01-02"), {"app-0": 6}, 1)
-    if isinstance(t, DeltaLikeTable):
-        res = _append(t, _batch(spark, 10, 20, "2024-01-02"), {"app-0": 6}, 1)
-        assert res.skipped
-    else:  # real Delta dedups on (txnAppId, txnVersion)
-        _append(t, _batch(spark, 10, 20, "2024-01-02"), {"app-0": 6}, 1)
-    ids = sorted(r.id for r in t.read(spark).select("id").collect())
-    assert ids == list(range(20))
+@pytest.mark.parametrize("fmt", FORMATS)
+def test_offset_bootstrap_contract(spark, fmt, tmp_path):
+    """--seek_offsets through commit_offsets: a fresh table takes the
+    offsets, a repeat or lower request is a no-op, a higher one is
+    refused, and the seeded ledger gates the first data batch."""
+    t = _sink(str(tmp_path / "t"), fmt)
+    assert write_offsets_to_table(t, "app", {0: 5, 1: 10}) is True
+    assert t.snapshot()["txn"] == {"app-0": 5, "app-1": 10}
+    assert write_offsets_to_table(t, "app", {0: 5, 1: 10}) is False
+    assert write_offsets_to_table(t, "app", {0: 3}) is False
+    with pytest.raises(InconsistentStoredOffsets, match="0:stored=5/seek=9"):
+        write_offsets_to_table(t, "app", {0: 9})
+    assert t.write_batch(
+        _batch(spark, 0, 5, "2024-01-01"), partition_by=["date"], txn={"app-0": 5}
+    ).skipped
+    res = t.write_batch(
+        _batch(spark, 5, 8, "2024-01-01"), partition_by=["date"], txn={"app-0": 8}
+    )
+    assert res.num_records == 3 and res.num_bytes > 0
+    assert t.snapshot()["txn"] == {"app-0": 8, "app-1": 10}
+    assert _ids(spark, t) == [5, 6, 7]
+
+
+def _append(t, df, txn):
+    return t.write_batch(df, partition_by=["date"], txn=txn)
 
 
 def _run_scenario(spark, path):
     """The canonical batch sequence for the recorded-log comparison."""
     t = DeltaLikeTable(path)
-    _append(t, _batch(spark, 0, 10, "2024-01-01"), {"app-0": 5}, 0)
-    _append(t, _batch(spark, 10, 20, "2024-01-02"), {"app-0": 6, "app-1": 3}, 1)
-    assert _append(t, _batch(spark, 10, 20, "2024-01-02"), {"app-0": 6}, 1).skipped
+    _append(t, _batch(spark, 0, 10, "2024-01-01"), {"app-0": 5})
+    _append(t, _batch(spark, 10, 20, "2024-01-02"), {"app-0": 6, "app-1": 3})
+    assert _append(t, _batch(spark, 10, 20, "2024-01-02"), {"app-0": 6}).skipped
     t.delete_where(spark, [("id", "<", 5)])
     src = spark.createDataFrame(
         [(7, "patched", "2024-01-01"), (42, "new", "2024-01-02")],
@@ -94,35 +127,12 @@ def test_action_stream_matches_recorded_fixture(spark, tmp_path):
     assert ids == list(range(5, 20)) + [42]
 
 
-@needs_delta
-def test_real_delta_log_normalizes_like_recorded_fixture(spark, tmp_path):
-    """On a cluster with delta-spark: the REAL Delta log for the append
-    part of the scenario must normalize to the same stream the jar-free
-    sink records (operation category, txn pairs, adds/records,
-    partition values)."""
-    t = RealDeltaTable(str(tmp_path / "t"))
-    _append(t, _batch(spark, 0, 10, "2024-01-01"), {"app-0": 5}, 0)
-    _append(t, _batch(spark, 10, 20, "2024-01-02"), {"app-0": 6, "app-1": 3}, 1)
-    got = [
-        {k: c[k] for k in ("operation", "numAdds", "numRecords")}
-        for c in normalize_log(t.path)
-    ]
-    with open(FIXTURE) as f:
-        want = [
-            {k: c[k] for k in ("operation", "numAdds", "numRecords")}
-            for c in json.load(f)[:2]
-        ]
-    assert got == want
-
-
 def test_standard_writer_log_normalizes_like_recorded_fixture(
     spark, tmp_path
 ):
     """The STANDARD-layout writer (delta_standard.DeltaStandardWriter)
-    must produce the same normalized action stream the jar-free sink
-    records for the append scenario — the exact parity check the
-    real-Delta leg runs on a jarred cluster (above), but runnable HERE
-    because this writer is jar-free. Covers operation category, txn
+    must produce the same normalized action stream the kdi sink
+    records for the append scenario. Covers operation category, txn
     (appId, version) pairs, add counts, per-file record counts, and
     partition values; also pins the txn replay-skip."""
     from kafka_delta_ingest_spark.delta_standard import (
@@ -169,29 +179,3 @@ def test_action_stream_protocol_shape(spark, tmp_path):
             assert add["stats"]["numRecords"] > 0
             for col, val in add["partitionValues"].items():
                 assert f"{col}={val}" in add["path"]
-
-
-def test_pred_sql_grammar():
-    """The condition translator both real-Delta DML passthroughs use —
-    pure function, verifiable without jars."""
-    from kafka_delta_ingest_spark.sinks.delta_real import _pred_sql
-
-    assert _pred_sql([("id", "<", 5)]) == "`id` < 5"
-    assert _pred_sql([("s", "=", "x'y")]) == "`s` = 'x''y'"  # quotes escaped
-    # No silent drops: every predicate lands in the conjunction.
-    got = _pred_sql([("a", ">=", 1), ("b", "is_not_null"), ("c", "=", "z")])
-    assert got == "`a` >= 1 AND `b` IS NOT NULL AND `c` = 'z'"
-
-
-@needs_delta
-def test_real_delta_dml_roundtrip(spark, tmp_path):
-    """On a jarred cluster: the DML passthrough surface round-trips
-    (delete, update, restore, CDF) — auto-skipped here."""
-    t = RealDeltaTable(str(tmp_path / "t"))
-    t.write_batch(spark.createDataFrame([(i, i) for i in range(10)], "id long, val long"))
-    t.enable_cdf()
-    t.update_where(spark, {"val": "val + 1"}, [("id", "<", 3)])
-    t.delete_where(spark, [("id", "=", 9)])
-    assert t.read(spark).count() == 9
-    t.restore(spark, 0)
-    assert t.read(spark).count() == 10
