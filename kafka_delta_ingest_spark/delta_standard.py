@@ -201,9 +201,10 @@ def _best_checkpoint(log: str, target: int, store=None) -> int | None:
     return best
 
 
-# Reconstructed checkpoint states, keyed (log, cp, size, mtime_ns) of
-# the first checkpoint file. Checkpoint files are immutable once
-# written (a rewrite would change size/mtime and miss), and ONE
+# Reconstructed checkpoint states, keyed (log, cp) plus the (size,
+# mtime_ns) of EVERY checkpoint part: a multi-part checkpoint whose
+# later part is rewritten must miss. Checkpoint files are immutable
+# once written (a rewrite would change size/mtime and miss), and ONE
 # declared read query replays the same checkpoint 2-4x per invocation
 # (each time-travel count plus the final read resolves through the
 # same checkpoint), each replay costing 4-6 driver-blocking Spark jobs
@@ -228,8 +229,9 @@ def _replay_checkpoint(spark, log: str, cp: int):
     from pyspark.sql import functions as F
 
     cp_files = _checkpoint_files(log, cp)
-    st = os.stat(cp_files[0])
-    key = (log, cp, st.st_size, st.st_mtime_ns)
+    key = (log, cp) + tuple(
+        (st.st_size, st.st_mtime_ns) for st in map(os.stat, cp_files)
+    )
     hit = _CP_STATE_MEMO.get(key)
     if hit is not None:
         adds, meta, protocol = hit

@@ -22,6 +22,16 @@ expressions):
    *before* the write, so good rows never pay for bad ones.
 6. append + txn commit through the destination's sink (sinks.base:
    a standard ``_delta_log`` by default, or Iceberg / Hudi)
+
+Batch shape: the message path itself is narrow. A micro-batch that
+arrives in at least as many splits as the cluster has cores runs it
+with no exchange at all. A narrower one (a file-backed source, or a
+topic with few partitions) gets two hash exchanges, so it does not run
+in one task: the raw rows are spread on ``(partition, offset)`` before
+step 1, and the good rows are regrouped by the table's partition
+columns before step 6, so each table partition still gets one file per
+batch (the reference's one writer per partition value,
+src/writer.rs:390-427).
 """
 
 from __future__ import annotations
@@ -34,6 +44,7 @@ from pyspark.sql.types import StructType
 from kafka_delta_ingest_spark.config import IngestOptions, MessageFormat
 from kafka_delta_ingest_spark.coercions import apply_coercions
 from kafka_delta_ingest_spark.dead_letters import DeadLetterQueue, dead_letter_columns
+from kafka_delta_ingest_spark.metrics import DELTA_WRITE_FAILED, IngestMetrics
 from kafka_delta_ingest_spark.serialization import json_payload_to_struct
 from kafka_delta_ingest_spark.sinks.base import Sink, open_sink
 from kafka_delta_ingest_spark.transforms import Transformer
@@ -52,6 +63,28 @@ CONFORM_COL = "_kdi_conforms"
 ERROR_COL = "_kdi_error"
 RAW_COL = "_kdi_raw_value"
 PRE_COERCE_JSON_COL = "_kdi_pre_coerce_json"
+PRE_COERCE_COL = "_kdi_pre_coerce"
+
+
+def narrow_width(raw: DataFrame) -> int | None:
+    """The cluster width when ``raw`` arrives in fewer splits than the
+    session's default parallelism, else None.
+
+    Runs no Spark job: the split count is read from the physical plan.
+    A foreachBatch frame is a scan of the micro-batch's already-built
+    RDD, and a static source is a file scan; neither holds a shuffle,
+    so ``rdd()`` only plans. A frame whose plan does hold a shuffle
+    would be materialized by ``rdd()`` under AQE, so the partition
+    count its initial plan declares is read instead (0 when unknown,
+    i.e. narrow)."""
+    width = raw.sparkSession.sparkContext.defaultParallelism
+    jdf = raw._jdf
+    plan = jdf.queryExecution().executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan":
+        n = plan.inputPlan().outputPartitioning().numPartitions()
+    else:
+        n = jdf.rdd().getNumPartitions()
+    return width if n < width else None
 
 
 @dataclass
@@ -102,8 +135,6 @@ class IngestJob:
         # Per-partition stored-offset floors, read lazily ONCE from the
         # table's txn ledger at the first batch (None = not yet read).
         self._offset_floors: dict[int, int] | None = None
-        from kafka_delta_ingest_spark.metrics import IngestMetrics
-
         self.metrics = IngestMetrics(endpoint=opts.statsd_endpoint)
 
     # ------------------------------------------------------------------
@@ -117,7 +148,9 @@ class IngestJob:
         (binary), ``partition`` (int), ``offset`` (long), ``topic``
         (string), ``timestamp`` (timestamp), ``timestampType`` (int).
         Output: destination-schema columns + META columns + ERROR_COL
-        (non-null → dead letter) + CONFORM_COL.
+        (non-null → dead letter) + CONFORM_COL, plus the DLQ payloads:
+        RAW_COL on deserialization failures and PRE_COERCE_JSON_COL on
+        non-conforming rows (null on every other row).
         """
         fmt = self.opts.message_format
         if fmt in (
@@ -187,26 +220,34 @@ class IngestJob:
 
         transformed = self.transformer.apply(flat)
 
-        # Snapshot the PRE-coercion record as JSON for the quarantine
-        # path: coercion nulls the offending field, so serializing the
+        # Keep the PRE-coercion record for the quarantine path:
+        # coercion nulls the offending field, so serializing the
         # coerced row would dead-letter a record with the bad value
         # already erased — undiagnosable and unreplayable (the
         # reference quarantines the record as it attempted to write it,
-        # src/writer.rs:618-639). Column pruning drops this for the
-        # good-row branch; only DLQ rows ever compute it.
+        # src/writer.rs:618-639). It rides through coercion as a struct
+        # and is serialized under the same predicate split() routes on:
+        # process_batch persists this frame, which defeats column
+        # pruning, so a plain column would cost every good row a
+        # to_json and its raw bytes in the cache.
         tcols = [
             f.name
             for f in self.target_schema.fields
             if f.name in transformed.columns
         ]
         pre = transformed.withColumn(
-            PRE_COERCE_JSON_COL,
-            F.to_json(F.struct(*[F.col(f"`{c}`") for c in tcols])),
+            PRE_COERCE_COL, F.struct(*[F.col(f"`{c}`") for c in tcols])
         )
         coerced = apply_coercions(
             pre, self.target_schema, conform_col=CONFORM_COL, keep_extra=True
         )
-        return coerced
+        failed = F.col(ERROR_COL).isNotNull()
+        return coerced.withColumns({
+            RAW_COL: F.when(failed, F.col(RAW_COL)),
+            PRE_COERCE_JSON_COL: F.when(
+                ~failed & ~F.col(CONFORM_COL), F.to_json(F.col(PRE_COERCE_COL))
+            ),
+        }).drop(PRE_COERCE_COL)
 
     def split(self, planned: DataFrame) -> tuple[DataFrame, DataFrame]:
         """(good rows projected to the destination schema, dead letters)."""
@@ -315,14 +356,34 @@ class IngestJob:
         return raw.filter(F.col("offset") > floor)
 
     def process_batch(self, raw: DataFrame, batch_id: int = 0) -> BatchMetrics:
-        """foreachBatch body: split, append data + txn ledger, DLQ."""
+        """foreachBatch body: split, append data + txn ledger, DLQ.
+
+        A batch that arrives in fewer splits than the cluster has cores
+        (a file-backed source, or a topic with few partitions) would run
+        its whole message path in one task. It is hash-spread on the
+        Kafka coordinates before :meth:`plan`, so parse, transform and
+        coerce run on every core, and its good rows are regrouped by
+        ``partition_by`` before the write (an unpartitioned table into
+        one task), so each table partition it touches is encoded by one
+        writer task and lands in one file. Dead letters go to one file
+        per batch. A batch that is already wide keeps the narrow,
+        exchange-free plan."""
         import time as _time
 
         t_start = _time.perf_counter()
         self.sync_schema()
-        planned = self.plan(self._apply_offset_floors(raw)).persist()
+        fresh = self._apply_offset_floors(raw)
+        width = narrow_width(fresh)
+        if width is not None:
+            fresh = fresh.repartition(width, "partition", "offset")
+        planned = self.plan(fresh).persist()
         try:
             good, dlq = self.split(planned)
+            if width is not None:
+                parts = [F.col(f"`{c}`") for c in self.opts.partition_by or []]
+                # An explicit count: AQE does not coalesce it, so each
+                # table partition gets exactly one writer task.
+                good = good.repartition(width, *parts) if parts else good.repartition(1)
 
             # Per-Kafka-partition last offsets → txn actions
             # (reference src/delta_helpers.rs:15-40): DLQ'd AND
@@ -348,9 +409,13 @@ class IngestJob:
             txn = {f"{self.opts.app_id}-{p}": o for p, o in offsets.items()}
 
             m = BatchMetrics()
-            result = self.table.write_batch(
-                good, partition_by=self.opts.partition_by or None, txn=txn
-            )
+            try:
+                result = self.table.write_batch(
+                    good, partition_by=self.opts.partition_by or None, txn=txn
+                )
+            except Exception:
+                self.metrics.count(DELTA_WRITE_FAILED)
+                raise
             m.version = result.version
             m.skipped = result.skipped
             m.delta_write_num_records = result.num_records
@@ -373,7 +438,9 @@ class IngestJob:
             m.messages_deserialization_failed = n_dlq - n_coerce
             m.messages_transform_failed = n_coerce
             m.messages_deserialized = m.delta_write_num_records + n_coerce
-            self.dlq.write(dlq)
+            # One DLQ file per batch: the good-row write has built the
+            # cache by now, so coalescing over it adds no exchange.
+            self.dlq.write(dlq if width is None else dlq.coalesce(1))
             # Continuous file sizing (opt-in): after every
             # auto_optimize_interval ingest commits, bin-pack small
             # files toward min_bytes_per_file — the Spark-idiomatic

@@ -600,7 +600,14 @@ def ngram_jaccard_pairs(
     threshold: float = 0.5,
     max_gram_df: int = 1000,
 ) -> DataFrame:
-    """Exact word-n-gram Jaccard over candidate pairs sharing a gram.
+    """Word-n-gram Jaccard over candidate pairs sharing a gram, exact
+    up to 64-bit hash collisions.
+
+    Grams are compared by their ``xxhash64``, not their text: two
+    distinct grams that collide count as one, which can inflate an
+    intersection and a gram's df-cap count. For a corpus of G distinct
+    grams the chance of any collision is about G² / 2⁶⁵ (under 1e-7
+    at a million grams).
 
     ``max_gram_df`` drops grams present in more than that many docs
     before the pair join (df-cap — see module docstring).
@@ -677,7 +684,9 @@ def ngram_containment_pairs(
     joined back at pair scale — only the final ratio differs.
     ``max_gram_df=None`` disables the df-cap for callers needing
     exact containment on every pair (a capped gram removes itself
-    from the intersection, understating containment).
+    from the intersection, understating containment). Grams are
+    compared by ``xxhash64``, so "exact" holds up to 64-bit
+    collisions, as in :func:`ngram_jaccard_pairs`.
     """
     df = spread(df)
     # Materialized hashed gram table shared by the size census and the

@@ -322,6 +322,37 @@ def test_complete_multipart_checkpoint_is_used(spark, table):
     assert got == list(range(5)) + list(range(10, 13))
 
 
+def test_checkpoint_memo_misses_when_a_later_part_is_rewritten(spark, table):
+    # The replayed-checkpoint memo must key on EVERY part: rewriting
+    # part 2 of 2 (part 1 untouched) has to re-read the checkpoint.
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    t, _ = table
+    log = os.path.join(t, "_delta_log")
+    single = glob.glob(os.path.join(log, "*.checkpoint.parquet"))[0]
+    v = os.path.basename(single)[:20]
+    tbl = pq.read_table(single)
+    os.remove(single)
+    os.remove(os.path.join(log, "%020d.json" % 0))
+    part2 = os.path.join(log, f"{v}.checkpoint.{2:010d}.{2:010d}.parquet")
+    pq.write_table(
+        tbl.slice(0, 2),
+        os.path.join(log, f"{v}.checkpoint.{1:010d}.{2:010d}.parquet"),
+    )
+    pq.write_table(tbl.slice(2), part2)
+    before = sorted(r.doc_id for r in read_delta(spark, t).collect())
+    assert before == list(range(5)) + list(range(10, 13))
+    # drop the grp=a v0 file's add from part 2
+    rest = tbl.slice(2)
+    paths = pc.struct_field(rest["add"], "path")
+    gone = next(p for p in paths.to_pylist() if p and p.startswith("grp=a/"))
+    pq.write_table(rest.filter(pc.invert(pc.fill_null(pc.equal(paths, gone), False))), part2)
+    removed = pq.read_table(os.path.join(t, gone)).column("doc_id").to_pylist()
+    got = sorted(r.doc_id for r in read_delta(spark, t).collect())
+    assert removed and got == sorted(set(before) - set(removed))
+
+
 def test_checkpoint_remove_tombstones_reconciled_in_spark(spark, tmp_path):
     # checkpoints retain remove tombstones (VACUUM window); the Spark
     # replay must anti-join them out of the add set.

@@ -1,0 +1,214 @@
+"""Batch shape of ``IngestJob.process_batch``: a micro-batch narrower
+than the cluster is hash-spread before the message path and regrouped
+by the table's partition columns before the write; a wide one keeps
+the exchange-free plan. Also the slimmed DLQ payload columns, the
+job-free width check and the ``delta.write.failed`` counter."""
+
+import base64
+import datetime
+import json
+import os
+
+import pytest
+from pyspark.sql.types import (
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampType,
+)
+
+from kafka_delta_ingest_spark.config import IngestOptions
+from kafka_delta_ingest_spark.delta_standard import DeltaStandardSink, read_delta
+from kafka_delta_ingest_spark.ingest import (
+    CONFORM_COL,
+    ERROR_COL,
+    PRE_COERCE_JSON_COL,
+    RAW_COL,
+    IngestJob,
+    narrow_width,
+)
+from kafka_delta_ingest_spark.metrics import DELTA_WRITE_COMPLETED, DELTA_WRITE_FAILED
+
+SCHEMA = StructType(
+    [
+        StructField("id", LongType()),
+        StructField("ts", TimestampType()),
+        StructField("date", StringType()),
+    ]
+)
+RAW_DDL = (
+    "value binary, partition int, offset long, topic string, "
+    "timestamp timestamp, timestampType int"
+)
+DATES = ("2024-03-01", "2024-03-02", "2024-03-03")
+DESER_BYTES = "{not json: é".encode()
+BAD_TS = "2024-03-02 10:00:00"  # no offset: not RFC3339
+
+
+def _messages(batch: int, n: int = 60) -> list[tuple[int, bytes]]:
+    """(id, payload) for one batch: good rows over three dates, one
+    unparseable payload and one with a non-RFC3339 ``ts``."""
+    out = []
+    for k in range(n):
+        i = batch * 1000 + k
+        ts = f"{DATES[k % 3]}T{k % 24:02d}:00:00Z"
+        out.append((i, json.dumps({"id": i, "ts": ts}).encode()))
+    out.append((batch * 1000 + n, DESER_BYTES))
+    bad = batch * 1000 + n + 1
+    out.append((bad, json.dumps({"id": bad, "ts": BAD_TS}).encode()))
+    return out
+
+
+def _raw(spark, batch: int, splits: int = 1):
+    """A Kafka-layout frame in ``splits`` input partitions, like the
+    frame foreachBatch hands over (a scan of an existing RDD)."""
+    stamp = datetime.datetime(2024, 3, 1)
+    rows = [
+        (bytearray(v), i % 4, i, "events", stamp, 0)
+        for i, v in _messages(batch)
+    ]
+    return spark.createDataFrame(
+        spark.sparkContext.parallelize(rows, splits), RAW_DDL
+    )
+
+
+def _plan(df) -> str:
+    return df.sparkSession._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "simple"
+    )
+
+
+class RecordingSink(DeltaStandardSink):
+    """A real standard-Delta sink that keeps the plan of every frame
+    handed to ``write_batch``."""
+
+    def __init__(self, path):
+        super().__init__(path)
+        self.plans = []
+
+    def write_batch(self, df, partition_by=None, txn=None):
+        self.plans.append(_plan(df))
+        return super().write_batch(df, partition_by, txn)
+
+
+def _job(tmp_path, partition_by=("date",), sink=None):
+    opts = IngestOptions(
+        topic="events",
+        table_uri=str(tmp_path / "table"),
+        dlq_table_location=str(tmp_path / "dlq"),
+        transforms={"date": "substr(ts, `0`, `10`)"},
+        partition_by=list(partition_by),
+    )
+    if sink is None:
+        sink = RecordingSink(opts.table_uri)
+    return IngestJob(opts, SCHEMA, sink=sink)
+
+
+def _adds(table: str, version: int) -> list[dict]:
+    path = os.path.join(table, "_delta_log", f"{version:020d}.json")
+    with open(path) as f:
+        acts = [json.loads(line) for line in f if line.strip()]
+    return [a["add"] for a in acts if "add" in a]
+
+
+def test_single_split_batch_is_spread_and_regrouped_by_date(spark, tmp_path):
+    job = _job(tmp_path)
+    for batch in range(2):
+        m = job.run_batch(_raw(spark, batch))
+        assert m.delta_write_num_records == 60
+        p = job.table.plans[-1]
+        # one regroup on the table's partition column, after the
+        # message path's spread on the Kafka coordinates
+        assert p.count("hashpartitioning(date") == 1
+        assert p.count("hashpartitioning(partition") == 1
+        adds = _adds(job.opts.table_uri, m.version)
+        assert sorted(a["partitionValues"]["date"] for a in adds) == list(DATES)
+        assert len(_adds(job.opts.dlq_table_location, batch)) == 1
+    assert read_delta(spark, job.opts.table_uri).count() == 120
+
+
+def test_unpartitioned_table_writes_one_file_per_batch(spark, tmp_path):
+    job = _job(tmp_path, partition_by=())
+    for batch in range(2):
+        m = job.run_batch(_raw(spark, batch))
+        assert len(_adds(job.opts.table_uri, m.version)) == 1
+        assert "SinglePartition" in job.table.plans[-1]
+
+
+def test_wide_batch_keeps_the_exchange_free_plan(spark, tmp_path):
+    width = spark.sparkContext.defaultParallelism
+    raw = _raw(spark, 0, splits=width)
+    assert narrow_width(raw) is None
+    job = _job(tmp_path)
+    m = job.run_batch(raw)
+    assert "Exchange" not in job.table.plans[-1]
+    assert m.delta_write_num_records == 60
+    assert read_delta(spark, job.opts.table_uri).count() == 60
+
+
+def test_width_check_runs_no_spark_job(spark, tmp_path):
+    sc = spark.sparkContext
+    width = sc.defaultParallelism
+    path = str(tmp_path / "src")
+    _raw(spark, 0).coalesce(1).write.parquet(path)
+    frames = {
+        "rdd": (_raw(spark, 0), width),
+        "file": (spark.read.schema(RAW_DDL).parquet(path), width),
+        "shuffled": (_raw(spark, 0).repartition(width + 1), None),
+    }
+    st = sc.statusTracker()
+    group = "kdi-width-check"
+    sc.setJobGroup(group, group)
+    try:
+        for name, (df, want) in frames.items():
+            assert narrow_width(df) == want, name
+        assert st.getJobIdsForGroup(group) == []
+        frames["file"][0].count()  # the probe does see jobs
+        assert st.getJobIdsForGroup(group) != []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_dlq_payloads_survive_the_slim_cache(spark, tmp_path):
+    job = _job(tmp_path)
+    planned = job.plan(_raw(spark, 0)).collect()
+    good = [r for r in planned if r[ERROR_COL] is None and r[CONFORM_COL]]
+    assert len(good) == 60
+    assert all(r[RAW_COL] is None and r[PRE_COERCE_JSON_COL] is None for r in good)
+
+    job.run_batch(_raw(spark, 0))
+    dead = read_delta(spark, job.opts.dlq_table_location).collect()
+    deser = [r for r in dead if r.base64_bytes is not None]
+    coerce = [r for r in dead if r.error == "FailedToCoerceToDestinationSchema"]
+    assert len(dead) == 2 and len(deser) == 1 and len(coerce) == 1
+    assert base64.b64decode(deser[0].base64_bytes) == DESER_BYTES
+    assert deser[0].json_string is None
+    assert coerce[0].base64_bytes is None
+    assert json.loads(coerce[0].json_string) == {
+        "id": 61, "ts": BAD_TS, "date": BAD_TS[:10],
+    }
+    rows = read_delta(spark, job.opts.table_uri).selectExpr(
+        "id", "date_format(ts, \"yyyy-MM-dd'T'HH:mm:ss'Z'\") AS ts", "date"
+    ).collect()
+    want = set()
+    for i, v in _messages(0)[:60]:
+        ts = json.loads(v)["ts"]
+        want.add((i, ts, ts[:10]))
+    assert {(r.id, r.ts, r.date) for r in rows} == want
+
+
+class FailingSink(DeltaStandardSink):
+    def write_batch(self, df, partition_by=None, txn=None):
+        raise OSError("disk full")
+
+
+def test_failed_sink_write_counts_delta_write_failed(spark, tmp_path):
+    job = _job(tmp_path, sink=FailingSink(str(tmp_path / "table")))
+    with pytest.raises(OSError, match="disk full"):
+        job.run_batch(_raw(spark, 0))
+    totals = job.metrics.totals()
+    assert totals[DELTA_WRITE_FAILED] == 1
+    assert DELTA_WRITE_COMPLETED not in totals
+    assert job.metrics_history == []
