@@ -2201,30 +2201,30 @@ def sink_dml_cdf(spark, sf_dir):
     import shutil as _sh
     import tempfile as _tf
 
-    from kafka_delta_ingest_spark.sinks.delta_like import DeltaLikeTable
+    from kafka_delta_ingest_spark.delta_standard import (
+        DeltaStandardWriter,
+        table_changes,
+    )
 
     root = _tf.mkdtemp(prefix="kdi-cdfq-")
     try:
-        t = DeltaLikeTable(root + "/t")
+        t = DeltaStandardWriter(root + "/t")
         base = (
             load_table(spark, sf_dir, "orders")
             .filter(F.col("o_orderkey") <= 2000)
             .select("o_orderkey", "o_orderstatus", "o_totalprice")
             .coalesce(1)
         )
-        t.write_batch(base)  # v0
-        t.enable_cdf()  # v1
+        t.write(base)  # v0
+        t.enable_change_data_feed()  # v1
         t.update_where(  # v2
-            spark,
-            {"o_totalprice": "o_totalprice + 1"},
-            [("o_orderstatus", "=", "P")],
+            spark, "o_orderstatus = 'P'", {"o_totalprice": "o_totalprice + 1"}
         )
         t.delete_where(  # v3
-            spark,
-            [("o_orderstatus", "=", "F"), ("o_orderkey", "<=", 1000)],
+            spark, "o_orderstatus = 'F' AND o_orderkey <= 1000"
         )
-        t.restore(spark, 2)  # v4: undo the delete, keep the update
-        changes = t.table_changes(spark, from_version=1).select(
+        t.restore(2, spark)  # v4: undo the delete, keep the update
+        changes = table_changes(spark, t.root, 2).select(
             "o_orderkey",
             "o_orderstatus",
             "o_totalprice",
@@ -7452,9 +7452,7 @@ def _constraints_std_fixture(spark, sf_dir: str) -> tuple:
         DeltaStandardWriter,
         read_delta,
     )
-    from kafka_delta_ingest_spark.sinks.delta_like import (
-        ConstraintViolation,
-    )
+    from kafka_delta_ingest_spark.sinks.base import ConstraintViolation
 
     key = ("dscon", sf_dir)
     hit = _TBLFMT_FIXTURES.get(key)
@@ -8819,7 +8817,7 @@ def ingest_csv_path(spark, sf_dir):
 )
 def sink_zorder_cluster(spark, sf_dir):
     """Bit-exact cross-engine certification of the sink's Z-ORDER
-    (Morton) clustering key (sinks/delta_like.py::zorder_value — the
+    (Morton) clustering key (sinks/base.py::zorder_value — the
     OPTIMIZE ... ZORDER BY analog Delta uses for multi-dimensional
     data skipping; reference has no equivalent, this is a sink-side
     scale feature).  The key normalizes each clustered column to a
@@ -8839,7 +8837,7 @@ def sink_zorder_cluster(spark, sf_dir):
     expressions inside whole-stage codegen; the clustered write is
     repartitionByRange on the key — no extra shuffle beyond the sort
     the layout requires."""
-    from kafka_delta_ingest_spark.sinks.delta_like import zorder_value
+    from kafka_delta_ingest_spark.sinks.base import zorder_value
 
     li = load_table(spark, sf_dir, "lineitem")
     z = zorder_value(li, ["l_partkey", "l_suppkey"])

@@ -187,8 +187,9 @@ def build_parser() -> argparse.ArgumentParser:
 
     tab = sub.add_parser(
         "table",
-        help="Admin operations on a _kdi_log table (DESCRIBE HISTORY, "
-             "COUNT, OPTIMIZE, VACUUM, RESTORE, DELETE, UPDATE, CDF)",
+        help="Admin operations on a Delta table, such as the ones "
+             "`ingest` writes (DESCRIBE HISTORY, COUNT, OPTIMIZE, "
+             "VACUUM, RESTORE, DELETE, UPDATE, CDF)",
     )
     tab.add_argument("location", help="Table root directory")
     tab.add_argument(
@@ -199,22 +200,17 @@ def build_parser() -> argparse.ArgumentParser:
         ],
     )
     tab.add_argument("--version", type=int, default=None,
-                     help="restore: target version; changes: from-version")
+                     help="restore: target version; changes: first "
+                          "version (inclusive, default 0)")
     tab.add_argument("--to_version", type=int, default=None,
                      help="changes: inclusive upper version")
     tab.add_argument("--where", default=None,
-                     help='Conjunctive predicates as JSON, e.g. '
-                          '\'[["id", "<", 10]]\' (delete/update/count/optimize)')
+                     help="SQL predicate, e.g. 'id < 10' "
+                          "(delete/update/count)")
     tab.add_argument("--set", dest="set_exprs", default=None,
                      help='update: SET expressions as JSON, e.g. '
                           '\'{"val": "val + 1"}\'')
-    tab.add_argument("--dv", action="store_true",
-                     help="delete/update: deletion-vector mode (mask rows, "
-                          "no file rewrite)")
     tab.add_argument("--retention_ms", type=int, default=7 * 24 * 3600 * 1000)
-    tab.add_argument("--dry_run", action="store_true",
-                     help="vacuum: report reclaimable files, touch nothing")
-    tab.add_argument("--cluster_by", default=None, help="optimize: comma-separated")
     tab.add_argument("--zorder_by", default=None, help="optimize: comma-separated")
     tab.add_argument("--target_bytes", type=int, default=134_217_728)
     conv = sub.add_parser(
@@ -240,12 +236,6 @@ def build_parser() -> argparse.ArgumentParser:
     conv.add_argument("--record_key", default=None,
                       help="*-to-hudi bootstrap: record-key column")
     return p
-
-
-def _parse_preds(val: str | None) -> list[tuple] | None:
-    if not val:
-        return None
-    return [tuple(p) for p in json.loads(val)]
 
 
 def run_convert(args: argparse.Namespace) -> int:
@@ -300,94 +290,76 @@ def run_convert(args: argparse.Namespace) -> int:
 
 
 def run_table(args: argparse.Namespace) -> int:
-    """The admin surface over the jar-free sink — each action is one
-    call on :class:`DeltaLikeTable`, printed in a parse-friendly form.
-    A standard ``_delta_log`` table (what ``ingest`` writes) is refused:
-    read as a ``_kdi_log`` it has no live files, so ``vacuum`` would
-    delete all its data."""
+    """The admin surface over a standard ``_delta_log`` table — each
+    action is one call on :class:`DeltaStandardWriter` (or the log
+    readers beside it), printed in a parse-friendly form. No action
+    writes a ``txn`` action, so ``ingest`` resumes from the same
+    offsets after any of them."""
+    from kafka_delta_ingest_spark.delta_standard import (
+        DeltaStandardWriter,
+        delta_history,
+        read_delta,
+        table_changes,
+    )
     from kafka_delta_ingest_spark.session import get_spark
-    from kafka_delta_ingest_spark.sinks.delta_like import LOG_DIR, DeltaLikeTable
 
     loc = args.location
-    if os.path.isdir(os.path.join(loc, "_delta_log")) and not os.path.isdir(
-        os.path.join(loc, LOG_DIR)
-    ):
-        raise SystemExit(
-            f"{loc} is a standard Delta table (_delta_log); `table` "
-            f"administers {LOG_DIR} tables only"
-        )
-    t = DeltaLikeTable(loc)
-    preds = _parse_preds(args.where)
+    if not os.path.isdir(os.path.join(loc, "_delta_log")):
+        raise SystemExit(f"{loc} is not a Delta table (no _delta_log)")
+    w = DeltaStandardWriter(loc)
 
+    if args.action == "history":
+        for h in delta_history(loc):
+            print(f"v={h['version']} ts={h['timestamp']} op={h['operation']}")
+        return 0
     if args.action == "count":
-        n = t.count_rows(preds)
-        if n is None:
-            spark = get_spark("kdi-table")
-            n = t.read(spark, preds).count()
-            print(f"count={n} source=scan")
-        else:
+        n = None if args.where else w.count_rows()
+        if n is not None:
             print(f"count={n} source=log")
+            return 0
+        df = read_delta(get_spark("kdi-table"), loc)
+        if args.where:
+            df = df.filter(args.where)
+        print(f"count={df.count()} source=scan")
         return 0
     if args.action == "vacuum":
-        deleted = t.vacuum(retention_ms=args.retention_ms, dry_run=args.dry_run)
-        verb = "would_reclaim" if args.dry_run else "reclaimed"
-        print(f"{verb}={len(deleted)}")
+        deleted = w.vacuum(retention_ms=args.retention_ms)
+        print(f"reclaimed={len(deleted)}")
         for p in deleted:
             print(p)
         return 0
     if args.action == "enable-cdf":
-        v = t.enable_cdf()
-        print(f"version={v}")
+        print(f"version={w.enable_change_data_feed()}")
         return 0
 
     spark = get_spark("kdi-table")
-    if args.action == "history":
-        for r in t.describe_history(spark).collect():
-            print(
-                f"v={r.version} ts={r.timestamp} op={r.operation} "
-                f"adds={r.numAddedFiles} removes={r.numRemovedFiles} "
-                f"params={r.operationParameters}"
-            )
-        return 0
     if args.action == "restore":
         if args.version is None:
             raise SystemExit("restore requires --version")
-        res = t.restore(spark, args.version)
-        print(f"version={res.version} restored_files={res.num_files}")
-        return 0
-    if args.action == "delete":
-        if not preds:
+        v = w.restore(args.version, spark)
+    elif args.action == "delete":
+        if not args.where:
             raise SystemExit("delete requires --where")
-        res = t.delete_where_with_retry(spark, preds, dv=args.dv)
-        print(f"version={res.version} skipped={res.skipped}")
-        return 0
-    if args.action == "update":
-        if not preds or not args.set_exprs:
+        v = w.delete_where(spark, args.where)
+    elif args.action == "update":
+        if not args.where or not args.set_exprs:
             raise SystemExit("update requires --where and --set")
-        # with_retry: a CLI update racing a concurrent rewrite should
-        # recompute-and-retry, matching the delete branch above.
-        res = t.update_where_with_retry(
-            spark, json.loads(args.set_exprs), preds, dv=args.dv
-        )
-        print(f"version={res.version} skipped={res.skipped}")
-        return 0
-    if args.action == "optimize":
-        res = t.optimize(
+        v = w.update_where(spark, args.where, json.loads(args.set_exprs))
+    elif args.action == "optimize":
+        v = w.optimize(
             spark,
             target_file_bytes=args.target_bytes,
-            cluster_by=args.cluster_by.split(",") if args.cluster_by else None,
             zorder_by=args.zorder_by.split(",") if args.zorder_by else None,
-            where=preds,
         )
-        print(f"version={res.version} files={res.num_files} skipped={res.skipped}")
-        return 0
-    if args.action == "changes":
-        from_v = args.version if args.version is not None else -1
-        df = t.table_changes(spark, from_v, args.to_version)
+    else:  # changes
+        df = table_changes(
+            spark, loc, args.version or 0, args.to_version
+        )
         for r in df.collect():
             print(json.dumps({c: str(r[c]) for c in df.columns}, sort_keys=True))
         return 0
-    raise SystemExit(f"unknown table action {args.action!r}")
+    print(f"version={v}")
+    return 0
 
 
 def options_from_args(args: argparse.Namespace) -> IngestOptions:

@@ -36,6 +36,7 @@ from __future__ import annotations
 
 import json
 import os
+from urllib.parse import unquote
 
 __all__ = [
     "bootstrap_delta_to_hudi",
@@ -145,7 +146,7 @@ def convert_delta_to_iceberg(
     # driver collects only manifest-sized dicts
     entries = [
         (
-            os.path.join(delta_path, a["path"]),
+            os.path.join(delta_path, unquote(a["path"])),
             json.dumps(_typed_pv(a.get("partitionValues") or {})),
         )
         for a in adds
@@ -721,13 +722,13 @@ def bootstrap_delta_to_hudi(
                 )
                 for c in part_cols
             )
-            pv_by_src[os.path.join(delta_path, a["path"])] = (
+            pv_by_src[os.path.join(delta_path, unquote(a["path"]))] = (
                 part,
                 {c: pv.get(c) for c in part_cols},
             )
     return _bootstrap_to_hudi(
         spark, hudi_path, record_key,
-        [os.path.join(delta_path, a["path"]) for a in adds],
+        [os.path.join(delta_path, unquote(a["path"])) for a in adds],
         delta_path,
         parts=list(part_cols),
         partition_ddl=partition_ddl,

@@ -33,8 +33,8 @@ src/delta_helpers.rs:15-40) produced under ``_delta_log/``:
   anti-join;
 * time travel: ``version=`` replays to that commit; ``timestamp=``
   picks the last commit whose ``commitInfo.timestamp`` (file mtime
-  fallback) is at or before the instant — the same surface
-  DeltaLikeTable and the Iceberg reader expose.
+  fallback) is at or before the instant — the same surface the
+  Iceberg reader exposes.
 """
 
 from __future__ import annotations
@@ -54,6 +54,12 @@ from kafka_delta_ingest_spark.sinks.base import (
 )
 
 _LOG = "_delta_log"
+
+# VACUUM's floor for data files no log action names, whatever the
+# caller's retention: a writer promotes its parquet into the table
+# root before the commit that names it (keeping the write mtime), so
+# a young untracked file may belong to a commit still in flight.
+_UNTRACKED_MIN_AGE_MS = 24 * 3600 * 1000
 
 
 class ConcurrentDeltaWriteError(RuntimeError):
@@ -212,6 +218,21 @@ def _best_checkpoint(log: str, target: int, store=None) -> int | None:
 # This is within-process metadata reuse of an immutable file's parse —
 # the data-path read under test still executes per call (r13).
 _CP_STATE_MEMO: dict = {}
+
+
+def _checkpoint_maps_to_dicts(row: dict) -> None:
+    """pyarrow reads a checkpoint's map columns as lists of (key,
+    value) pairs; turn the ones the writer reads back (configuration,
+    partition values, tags) into the dicts a JSON commit yields."""
+    for act, keys in (
+        ("metaData", ("configuration",)),
+        ("add", ("partitionValues", "tags")),
+        ("remove", ("partitionValues", "tags")),
+    ):
+        a = row.get(act)
+        for k in keys if a else ():
+            if isinstance(a.get(k), list):
+                a[k] = dict(a[k])
 
 
 def _replay_checkpoint(spark, log: str, cp: int):
@@ -588,12 +609,14 @@ def read_delta(spark, table_path: str, version=None, timestamp_ms=None):
     target = _resolve_version(log, version, timestamp_ms)
     state = _replay(spark, table_path, target)
     adds = state["adds"]
-    if not adds:
+    if not adds and state["meta"] is None:
         raise ValueError(f"no live files at version {target}")
     dv_adds = [a for a in adds if a.get("deletionVector")]
     logical, rename, part_cols, id_mode, read_fields = _schema_mapping(
         state["meta"]
     )
+    if not adds:  # every row deleted: empty, with the table's schema
+        return spark.createDataFrame([], logical)
     if id_mode:
         # id mode: Spark's parquet reader matches columns BY FIELD ID
         # when the requested schema carries `parquet.field.id`
@@ -647,9 +670,7 @@ def read_delta(spark, table_path: str, version=None, timestamp_ms=None):
             return frame
         return frame.select(
             "*",
-            F.regexp_replace(
-                F.col("_metadata.file_path"), "^file:(//)?", ""
-            ).alias("_kdi_fp"),
+            _file_path_col().alias("_kdi_fp"),
             F.col("_metadata.row_index").alias("_kdi_pos"),
         )
 
@@ -715,6 +736,34 @@ def read_delta(spark, table_path: str, version=None, timestamp_ms=None):
             ]
         )
     return df.select(*[f.name for f in logical.fields])
+
+
+def _remove_quietly(paths) -> None:
+    """Best-effort cleanup of files an aborted commit staged: nothing
+    references them, and a failure here must not mask the abort."""
+    for p in paths:
+        try:
+            os.remove(p)
+        except OSError:
+            pass
+
+
+def _file_path_col():
+    """The scanned row's data file as a plain local path.
+    ``_metadata.file_path`` is a URI, so a partition directory that
+    Spark already escaped (``ts=00%3A00``) comes back encoded twice;
+    decoding once yields the path on disk (``+`` is literal in a URI
+    path, so it is protected from the form decoding)."""
+    from pyspark.sql import functions as F
+
+    return F.url_decode(
+        F.regexp_replace(
+            F.regexp_replace(
+                F.col("_metadata.file_path"), "^file:(//)?", ""
+            ),
+            "[+]", "%2B",
+        )
+    )
 
 
 def _apply_deletion_vectors(spark, table_path, df, dv_adds, abs_of):
@@ -1230,9 +1279,9 @@ class DeltaStandardWriter:
     partition values, periodic parquet checkpoint + ``_last_checkpoint``)
     so this engine's OUTPUT is consumable by delta-spark / delta-rs /
     any protocol-conformant reader — the reference daemon's core
-    interop property (README.adoc:3-5, src/delta_helpers.rs:15-40),
-    which the repo's ``_kdi_log`` sink (sinks/delta_like.py) does not
-    provide on its own.
+    interop property (README.adoc:3-5, src/delta_helpers.rs:15-40).
+    It is the package's only Delta writer: ingest, the DLQ, the
+    ``kdi table`` admin CLI and the DML/CDF queries all commit here.
 
     Protocol conformance (PROTOCOL.md):
 
@@ -1326,6 +1375,7 @@ class DeltaStandardWriter:
                 for row in pq.read_table(
                     _io.BytesIO(self.store.read_bytes(f))
                 ).to_pylist():
+                    _checkpoint_maps_to_dicts(row)
                     if row.get("metaData") and row["metaData"].get("id"):
                         meta = row["metaData"]
                     if row.get("protocol") and row["protocol"].get(
@@ -1441,8 +1491,7 @@ class DeltaStandardWriter:
 
     def evolve_schema(self, schema) -> int:
         """Commit a new ``metaData`` action widening the table schema
-        (ALTER TABLE ADD COLUMNS analog) — ADD-ONLY, like the kdi
-        sink's evolve_schema (sinks/delta_like.py): existing columns
+        (ALTER TABLE ADD COLUMNS analog) — ADD-ONLY: existing columns
         must keep their exact types and none may be omitted, so old
         files stay readable (missing new columns read as null) and no
         name can silently resurrect stale bytes. Returns the committed
@@ -1785,8 +1834,12 @@ class DeltaStandardWriter:
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(staging)
+        # add paths are URIs: a partition directory Spark escaped
+        # (``ts=00%3A00``) is percent-encoded once more, as the
+        # protocol and every reader here (unquote) expect
         return [
-            {**a, "dataChange": True, "stats": json.dumps(a["stats"])}
+            {**a, "path": urllib.parse.quote(a["path"], safe="/="),
+             "dataChange": True, "stats": json.dumps(a["stats"])}
             for a in promote_staging(staging, self.root, now_ms)
         ]
 
@@ -1851,12 +1904,12 @@ class DeltaStandardWriter:
         state = self._py_replay(target=read_v if read_v >= 0 else None)
         if state["meta"] is None:
             raise ValueError("delete_where on an empty table")
+        if not state["adds"]:
+            return read_v  # no live rows to delete
         live = read_delta(spark, self.root, version=read_v)
         matches = (
             live.select(
-                F.regexp_replace(
-                    F.col("_metadata.file_path"), "^file:(//)?", ""
-                ).alias("_fp"),
+                _file_path_col().alias("_fp"),
                 F.col("_metadata.row_index").alias("_pos"),
                 "*",
             )
@@ -1916,11 +1969,7 @@ class DeltaStandardWriter:
             # the conflict check, a refused claim) must not orphan
             # the cdc parquet — nothing references these paths, and
             # vacuum's log scan would otherwise never reclaim them
-            for p in cdc_written:
-                try:
-                    os.remove(p)
-                except OSError:
-                    pass
+            _remove_quietly(cdc_written)
             raise
         if version > 0 and version % self.checkpoint_every == 0:
             self._write_checkpoint(version)
@@ -2011,9 +2060,7 @@ class DeltaStandardWriter:
         bump to minWriterVersion 3 (the version that obliges writers
         to enforce CHECK constraints — delta-spark refuses to write
         tables it cannot enforce). NULL results satisfy the check
-        (SQL standard), matching the kdi sink's semantics."""
-        import time
-
+        (SQL standard)."""
         from pyspark.sql import functions as F
 
         read_v = self.latest_version()
@@ -2032,55 +2079,70 @@ class DeltaStandardWriter:
                 f"cannot add constraint {name!r}: {n_bad} existing "
                 f"row(s) violate CHECK ({expr})"
             )
-        new_meta = dict(meta)
-        cfg = dict(meta.get("configuration") or {})
-        cfg[f"delta.constraints.{name}"] = expr
-        new_meta["configuration"] = cfg
-        return self._atomic_commit(
-            [
-                {
-                    "commitInfo": {
-                        "operation": f"ADD CONSTRAINT {name}",
-                        "timestamp": int(time.time() * 1000),
-                    }
-                },
-                {
-                    "protocol": {
-                        "minReaderVersion": 1,
-                        "minWriterVersion": 3,
-                    }
-                },
-                {"metaData": new_meta},
-            ],
-            read_version=read_v,
-            conflict_on_any_change=True,
+        return self._configuration_commit(
+            read_v, meta, f"ADD CONSTRAINT {name}",
+            set_keys={f"delta.constraints.{name}": expr},
+            # minWriterVersion 3 obliges writers to enforce CHECKs
+            protocol={"minReaderVersion": 1, "minWriterVersion": 3},
         )
 
     def drop_constraint(self, name: str) -> int:
-        import time
-
         read_v = self.latest_version()
         state = self._py_replay(target=read_v if read_v >= 0 else None)
         meta = state["meta"]
         key = f"delta.constraints.{name}"
         if meta is None or key not in (meta.get("configuration") or {}):
             raise ValueError(f"no such constraint: {name!r}")
-        new_meta = dict(meta)
-        cfg = dict(meta["configuration"])
-        del cfg[key]
-        new_meta["configuration"] = cfg
+        return self._configuration_commit(
+            read_v, meta, f"DROP CONSTRAINT {name}", unset_keys=[key]
+        )
+
+    def enable_change_data_feed(self) -> int:
+        """ALTER TABLE SET TBLPROPERTIES (delta.enableChangeDataFeed =
+        true) on an existing table: one metadata-only commit. Every
+        later DML commit writes its ``cdc`` rows; changes before this
+        version stay underivable for DV deletes. Idempotent: returns
+        the current version when CDF is already on."""
+        read_v = self.latest_version()
+        meta = self._py_replay(target=read_v if read_v >= 0 else None)[
+            "meta"
+        ]
+        if meta is None:
+            raise ValueError("table has no schema yet")
+        if self._cdf_enabled(meta):
+            return read_v
+        return self._configuration_commit(
+            read_v, meta, "SET TBLPROPERTIES",
+            set_keys={"delta.enableChangeDataFeed": "true"},
+        )
+
+    def _configuration_commit(
+        self, read_v: int, meta: dict, operation: str,
+        set_keys: dict | None = None, unset_keys=(),
+        protocol: dict | None = None,
+    ) -> int:
+        """One metadata-only commit of ``meta`` with its configuration
+        updated (and an optional protocol bump). Its read set is the
+        whole table, so any commit after ``read_v`` conflicts."""
+        import time
+
+        cfg = dict(meta.get("configuration") or {})
+        cfg.update(set_keys or {})
+        for k in unset_keys:
+            del cfg[k]
+        actions: list[dict] = [
+            {
+                "commitInfo": {
+                    "operation": operation,
+                    "timestamp": int(time.time() * 1000),
+                }
+            }
+        ]
+        if protocol:
+            actions.append({"protocol": protocol})
+        actions.append({"metaData": {**meta, "configuration": cfg}})
         return self._atomic_commit(
-            [
-                {
-                    "commitInfo": {
-                        "operation": f"DROP CONSTRAINT {name}",
-                        "timestamp": int(time.time() * 1000),
-                    }
-                },
-                {"metaData": new_meta},
-            ],
-            read_version=read_v,
-            conflict_on_any_change=True,
+            actions, read_version=read_v, conflict_on_any_change=True
         )
 
     def _enforce_constraints(self, df, meta: dict) -> None:
@@ -2141,6 +2203,8 @@ class DeltaStandardWriter:
         state = self._py_replay(target=read_v if read_v >= 0 else None)
         if state["meta"] is None:
             raise ValueError("update_where on an empty table")
+        if not state["adds"]:
+            return read_v  # no live rows to update
         schema_cols = [
             f["name"]
             for f in json.loads(state["meta"]["schemaString"])["fields"]
@@ -2157,9 +2221,7 @@ class DeltaStandardWriter:
             )
         live = read_delta(spark, self.root, version=read_v)
         tagged = live.select(
-            F.regexp_replace(
-                F.col("_metadata.file_path"), "^file:(//)?", ""
-            ).alias("__fp"),
+            _file_path_col().alias("__fp"),
             "*",
         )
         touched_abs = {
@@ -2248,16 +2310,11 @@ class DeltaStandardWriter:
                 read_files=touched_rel,
             )
         except BaseException:
-            for p in cdc_written:
-                try:
-                    os.remove(p)
-                except OSError:
-                    pass
-            for a in adds:
-                try:
-                    os.remove(os.path.join(self.root, a["path"]))
-                except OSError:
-                    pass
+            _remove_quietly(cdc_written)
+            _remove_quietly(
+                os.path.join(self.root, urllib.parse.unquote(a["path"]))
+                for a in adds
+            )
             raise
         if version > 0 and version % self.checkpoint_every == 0:
             self._write_checkpoint(version)
@@ -2353,13 +2410,17 @@ class DeltaStandardWriter:
         ]
         part_cols = state["meta"].get("partitionColumns") or []
         live = read_delta(spark, self.root, version=read_v)
-        tagged = live.select(
-            F.regexp_replace(
-                F.col("_metadata.file_path"), "^file:(//)?", ""
-            ).alias("__fp"),
-            F.col("_metadata.row_index").alias("__pos"),
-            "*",
-        ).alias("target")
+        if state["adds"]:
+            file_cols = [
+                _file_path_col().alias("__fp"),
+                F.col("_metadata.row_index").alias("__pos"),
+            ]
+        else:  # no data files, so no _metadata: nothing can match
+            file_cols = [
+                F.lit(None).cast("string").alias("__fp"),
+                F.lit(None).cast("long").alias("__pos"),
+            ]
+        tagged = live.select(*file_cols, "*").alias("target")
         src = source.alias("source")
         on_expr = F.expr(on)
 
@@ -2533,16 +2594,11 @@ class DeltaStandardWriter:
                 txn=txn or None,
             )
         except BaseException:
-            for p in cdc_written:
-                try:
-                    os.remove(p)
-                except OSError:
-                    pass
-            for a in adds:
-                try:
-                    os.remove(os.path.join(self.root, a["path"]))
-                except OSError:
-                    pass
+            _remove_quietly(cdc_written)
+            _remove_quietly(
+                os.path.join(self.root, urllib.parse.unquote(a["path"]))
+                for a in adds
+            )
             raise
         if version is None:
             return self.latest_version()  # a racer merged this txn
@@ -2552,7 +2608,7 @@ class DeltaStandardWriter:
 
     # -- RESTORE / VACUUM -------------------------------------------------
 
-    def restore(self, version: int) -> int:
+    def restore(self, version: int, spark) -> int:
         """RESTORE TO VERSION AS OF ``version``: commits the forward
         diff — remove every file live now but not then, re-add every
         file live then but not now (a path whose DV descriptor differs
@@ -2561,7 +2617,13 @@ class DeltaStandardWriter:
         commits stay time-travelable. Pure log metadata, O(diff) not
         O(table) — restoring a 100 TB table after a bad batch is
         instant. Raises if a file the restore resurrects was already
-        vacuumed."""
+        vacuumed.
+
+        With CDF on, the same commit carries the ROW diff as cdc
+        files: target rows ``exceptAll`` current rows are inserts, the
+        reverse are deletes, so rows that only moved between files
+        emit nothing. That diff is one Spark scan of both
+        versions."""
         import time
 
         cur_v = self.latest_version()
@@ -2617,25 +2679,66 @@ class DeltaStandardWriter:
                         "already vacuumed"
                     )
                 actions.append({"add": {**t, "dataChange": True}})
-        version_out = self._atomic_commit(
-            actions,
-            # restore's read set is the WHOLE table diff — any
-            # concurrent data change invalidates it
-            read_version=cur_v,
-            conflict_on_any_change=True,
-        )
+        cdc_written: list[str] = []
+        if self._cdf_enabled(cur["meta"]) and len(actions) > 1:
+            cdc_actions, cdc_written = self._stage_cdc(
+                self._restore_row_diff(spark, cur_v, version)
+            )
+            actions.extend(cdc_actions)
+        try:
+            version_out = self._atomic_commit(
+                actions,
+                # restore's read set is the WHOLE table diff — any
+                # concurrent data change invalidates it
+                read_version=cur_v,
+                conflict_on_any_change=True,
+            )
+        except BaseException:
+            _remove_quietly(cdc_written)
+            raise
         if version_out > 0 and version_out % self.checkpoint_every == 0:
             self._write_checkpoint(version_out)
         return version_out
 
+    def _restore_row_diff(self, spark, cur_v: int, target: int):
+        """The cdc rows of restoring ``cur_v`` to ``target``, projected
+        onto the target's columns (a restore may revert an added
+        column)."""
+        from pyspark.sql import functions as F
+
+        then = read_delta(spark, self.root, version=target)
+        now = read_delta(spark, self.root, version=cur_v)
+        now = now.select(
+            *[
+                F.col(f.name) if f.name in now.columns
+                else F.lit(None).cast(f.dataType).alias(f.name)
+                for f in then.schema.fields
+            ]
+        )
+        return then.exceptAll(now).withColumn(
+            "_change_type", F.lit("insert")
+        ).unionByName(
+            now.exceptAll(then).withColumn("_change_type", F.lit("delete"))
+        )
+
     def vacuum(self, retention_ms: int = 7 * 24 * 3600 * 1000,
                now_ms: int | None = None) -> list[str]:
-        """Physically delete tombstoned data files (and DV ``.bin``
-        files no live add references) whose remove timestamp is older
-        than ``retention_ms``. Returns deleted relative paths. No
-        commit — vacuum reclaims storage, it does not change state;
-        time travel past the retention window stops working, exactly
-        Delta's contract."""
+        """Physically delete tombstoned data files whose remove
+        timestamp, and ``_change_data`` cdc files whose commit
+        timestamp, is older than ``retention_ms``. Files no log action
+        names are aged by mtime: a crashed delete's DV ``.bin`` or cdc
+        file on the same retention; an aborted write's promoted
+        parquet and ``_staging-*`` leftovers must also be older than
+        ``_UNTRACKED_MIN_AGE_MS``, whatever the retention, since a
+        writer promotes its parquet into the table root before its
+        commit names it. As in Delta's VACUUM,
+        names starting with ``_`` or ``.`` (``_delta_log``, a streaming
+        checkpoint kept in the table root, ``.crc`` files) are never
+        touched, except ``_change_data``, ``_staging-*`` and partition
+        directories. Returns deleted relative paths. No commit —
+        vacuum reclaims storage, it does not change state; time travel
+        past the retention window stops working, exactly Delta's
+        contract."""
         import time
 
         import uuid as _uuid
@@ -2645,6 +2748,7 @@ class DeltaStandardWriter:
         if now_ms is None:
             now_ms = int(time.time() * 1000)
         cutoff = now_ms - retention_ms
+        untracked_cutoff = now_ms - max(retention_ms, _UNTRACKED_MIN_AGE_MS)
         state = self._py_replay()
         live = set(state["adds"])
 
@@ -2663,7 +2767,7 @@ class DeltaStandardWriter:
         # needed to time-travel to the version that wrote it, so only
         # truly unreferenced bins (crashed writes) are reclaimed.
         victims: dict[str, int] = {}
-        referenced_dvs: set[str] = set()
+        logged: set[str] = set(live)  # every data path the log names
         cdc_refs: dict[str, int] = {}  # cdc rel path -> commit ts
         for v in _commit_versions(self.log, self.store):
             commit_ts = 0
@@ -2675,14 +2779,16 @@ class DeltaStandardWriter:
                     act = json.loads(line)
                     if "remove" in act:
                         r = act["remove"]
+                        logged.add(r["path"])
                         victims[r["path"]] = r.get(
                             "deletionTimestamp", 0
                         )
                     elif "add" in act:
+                        logged.add(act["add"]["path"])
                         victims.pop(act["add"]["path"], None)
                         b = dv_bin_of(act["add"])
                         if b:
-                            referenced_dvs.add(b)
+                            logged.add(b)
                     elif "cdc" in act:
                         commit_cdc.append(act["cdc"]["path"])
                     elif "commitInfo" in act:
@@ -2696,7 +2802,7 @@ class DeltaStandardWriter:
             for a in state["adds"].values():
                 b = dv_bin_of(a)
                 if b:
-                    referenced_dvs.add(b)
+                    logged.add(b)
         deleted = []
         for rel, ts in victims.items():
             if rel in live or ts > cutoff:
@@ -2707,43 +2813,81 @@ class DeltaStandardWriter:
             if os.path.exists(ap):
                 os.remove(ap)
                 deleted.append(rel)
-        for fname in os.listdir(self.root):
-            if (
-                fname.startswith("deletion_vector_")
-                and fname.endswith(".bin")
-                and fname not in referenced_dvs
-            ):
-                ap = os.path.join(self.root, fname)
-                # age-gate unreferenced bins like data tombstones: an
-                # in-flight delete_where writes the .bin BEFORE its
-                # commit — deleting a young bin races that commit and
-                # leaves its descriptor dangling (r8 ADVICE, medium)
-                if int(os.path.getmtime(ap) * 1000) > cutoff:
+        keep = {urllib.parse.unquote(p) for p in logged}
+        part_dirs = tuple(
+            f"{c}=" for c in (state["meta"] or {}).get("partitionColumns") or []
+        )
+
+        def swept(name: str, is_dir: bool, top: bool) -> bool:
+            if not name.startswith(("_", ".")):
+                return True
+            return is_dir and (
+                name.startswith(part_dirs)
+                or top and (name == "_change_data"
+                            or name.startswith("_staging-"))
+            )
+
+        # an in-flight writer's staging dir is young (adding entries
+        # bumps its mtime); read the ages before the deletes below
+        # bump them too
+        stale_staging = [
+            os.path.join(self.root, d)
+            for d in os.listdir(self.root)
+            if d.startswith("_staging-")
+            and int(os.path.getmtime(os.path.join(self.root, d)) * 1000)
+            <= untracked_cutoff
+        ]
+        for dirpath, dirs, files in os.walk(self.root):
+            rel_dir = os.path.relpath(dirpath, self.root)
+            # everything under a staging dir is Spark output no commit
+            # names, its _SUCCESS and .crc files included
+            if not rel_dir.startswith("_staging-"):
+                top = dirpath == self.root
+                dirs[:] = [d for d in dirs if swept(d, True, top)]
+                files = [f for f in files if swept(f, False, top)]
+            for fname in sorted(files):
+                ap = os.path.join(dirpath, fname)
+                rel = os.path.relpath(ap, self.root).replace(os.sep, "/")
+                if rel in keep:
                     continue
-                os.remove(ap)
-                deleted.append(fname)
-        # _change_data: cdc parquet is only servable through
-        # table_changes while its commit sits inside the retention
-        # window — delta-spark's vacuum ages CDF out on the same
-        # clock as data tombstones. Unreferenced files (a crashed or
-        # aborted delete_where) reclaim on the same age gate, keyed
-        # on mtime since no commit ever named them.
-        cd_dir = os.path.join(self.root, "_change_data")
-        if os.path.isdir(cd_dir):
-            for fname in sorted(os.listdir(cd_dir)):
-                rel = f"_change_data/{fname}"
-                ap = os.path.join(cd_dir, fname)
-                ref_ts = cdc_refs.get(rel)
-                age_ts = (
-                    ref_ts
-                    if ref_ts is not None
-                    else int(os.path.getmtime(ap) * 1000)
-                )
-                if age_ts > cutoff:
-                    continue
-                os.remove(ap)
-                deleted.append(rel)
+                if rel in cdc_refs:
+                    # cdc parquet is only servable through
+                    # table_changes while its commit sits inside the
+                    # retention window
+                    stale = cdc_refs[rel] <= cutoff
+                else:
+                    sidecar = rel.startswith("_change_data/") or (
+                        rel_dir == "." and fname.startswith("deletion_vector_")
+                    )
+                    stale = int(os.path.getmtime(ap) * 1000) <= (
+                        cutoff if sidecar else untracked_cutoff
+                    )
+                if stale:
+                    os.remove(ap)
+                    deleted.append(rel)
+        for d in stale_staging:
+            for dp, _dirs, _files in os.walk(d, topdown=False):
+                try:
+                    os.rmdir(dp)
+                except OSError:
+                    pass  # still holds files younger than the cutoff
         return deleted
+
+    def count_rows(self) -> int | None:
+        """Live row count from the log alone: the adds' ``numRecords``
+        minus their deletion-vector cardinalities. None when an add
+        carries no record count (a scan is needed)."""
+        n = 0
+        for a in self._py_replay()["adds"].values():
+            stats = a.get("stats")
+            if isinstance(stats, str):
+                stats = json.loads(stats)
+            if not stats or stats.get("numRecords") is None:
+                return None
+            n += stats["numRecords"] - (
+                (a.get("deletionVector") or {}).get("cardinality", 0)
+            )
+        return n
 
     # -- OPTIMIZE (bin-packing compaction) -------------------------------
 
@@ -2851,9 +2995,7 @@ class DeltaStandardWriter:
             if dv_in:
                 df = df.select(
                     "*",
-                    F.regexp_replace(
-                        F.col("_metadata.file_path"), "^file:(//)?", ""
-                    ).alias("_kdi_fp"),
+                    _file_path_col().alias("_kdi_fp"),
                     F.col("_metadata.row_index").alias("_kdi_pos"),
                 )
                 df = _apply_deletion_vectors(
@@ -3133,7 +3275,7 @@ def table_changes(spark, table_path: str, start_version: int,
     per change in ``[start_version, end_version]`` with
     ``_change_type`` / ``_commit_version`` / ``_commit_timestamp``
     meta columns — the surface ``table_changes()`` exposes in
-    delta-spark (and the kdi sink already provides on its own log).
+    delta-spark.
 
     Per commit: explicit ``cdc`` actions win (their parquet files
     carry ``_change_type``, including ``update_preimage``/

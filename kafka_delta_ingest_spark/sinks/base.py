@@ -240,7 +240,10 @@ def _parquet_stats(path: str) -> dict:
 
     Parity with the reference's add-action stats
     (src/writer.rs:657-1076): top-level primitive columns only, min/max
-    for bool/int/long/float/double/string.
+    for bool/int/long/float/double/string. A string column whose
+    footer bound is not valid UTF-8 (a dead letter's raw bytes) gets
+    no min/max at all: a bound taken from the other row groups alone
+    would be wrong. Its nullCount stays.
     """
     import pyarrow.parquet as pq
 
@@ -249,6 +252,7 @@ def _parquet_stats(path: str) -> dict:
     mins: dict = {}
     maxs: dict = {}
     nulls: dict = {}
+    no_bounds: set = set()
     for rg in range(md.num_row_groups):
         for ci in range(md.num_columns):
             col = md.row_group(rg).column(ci)
@@ -260,8 +264,14 @@ def _parquet_stats(path: str) -> dict:
                 continue
             if st.null_count is not None:
                 nulls[name] = nulls.get(name, 0) + st.null_count
-            if st.has_min_max:
-                mn, mx = _json_safe(st.min), _json_safe(st.max)
+            if st.has_min_max and name not in no_bounds:
+                try:
+                    mn, mx = _json_safe(st.min), _json_safe(st.max)
+                except UnicodeDecodeError:
+                    no_bounds.add(name)
+                    mins.pop(name, None)
+                    maxs.pop(name, None)
+                    continue
                 if name not in mins or (mn is not None and mn < mins[name]):
                     mins[name] = mn
                 if name not in maxs or (mx is not None and mx > maxs[name]):

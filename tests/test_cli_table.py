@@ -1,101 +1,149 @@
 """`python -m kafka_delta_ingest_spark table <loc> <action>`: the admin
-CLI over the sink's Delta-parity surface (history, metadata count, DML,
+CLI over a standard ``_delta_log`` table (history, metadata count, DML,
 restore, vacuum, change feed)."""
 
 import json
-import shutil
-import tempfile
+import os
+import time
 
 import pytest
 
 from kafka_delta_ingest_spark.cli import main
-from kafka_delta_ingest_spark.sinks.delta_like import DeltaLikeTable
+from kafka_delta_ingest_spark.delta_standard import (
+    DeltaStandardSink,
+    DeltaStandardWriter,
+    read_delta,
+)
 
 
 @pytest.fixture()
-def table_dir(spark):
-    d = tempfile.mkdtemp(prefix="kdi-clitab-")
-    t = DeltaLikeTable(d + "/t")
-    t.write_batch(
+def table_dir(spark, tmp_path):
+    loc = str(tmp_path / "t")
+    DeltaStandardWriter(loc).write(
         spark.createDataFrame(
             [(i, i * 10) for i in range(20)], "id long, val long"
         ).coalesce(1)
     )
-    yield d + "/t"
-    shutil.rmtree(d, ignore_errors=True)
+    return loc
 
 
 def test_cli_count_and_history(spark, table_dir, capsys):
     assert main(["table", table_dir, "count"]) == 0
     assert "count=20 source=log" in capsys.readouterr().out
+    assert main(["table", table_dir, "count", "--where", "id < 5"]) == 0
+    assert "count=5 source=scan" in capsys.readouterr().out
     assert main(["table", table_dir, "history"]) == 0
     out = capsys.readouterr().out
-    assert "v=0" in out and "op=STREAMING UPDATE" in out
+    assert "v=0" in out and "op=WRITE" in out
 
 
 def test_cli_delete_update_restore(spark, table_dir, capsys):
-    assert main(["table", table_dir, "delete", "--where", '[["id", "<", 5]]']) == 0
+    assert main(["table", table_dir, "delete", "--where", "id < 5"]) == 0
     assert main(
         [
             "table", table_dir, "update",
-            "--where", '[["id", "=", 7]]',
+            "--where", "id = 7",
             "--set", '{"val": "val + 1"}',
         ]
     ) == 0
-    t = DeltaLikeTable(table_dir)
-    got = {r.id: r.val for r in t.read(spark).collect()}
+    got = {r.id: r.val for r in read_delta(spark, table_dir).collect()}
     assert len(got) == 15 and got[7] == 71
+    # the DV delete is subtracted from the log count
+    capsys.readouterr()
+    assert main(["table", table_dir, "count"]) == 0
+    assert "count=15 source=log" in capsys.readouterr().out
 
     assert main(["table", table_dir, "restore", "--version", "0"]) == 0
-    assert DeltaLikeTable(table_dir).read(spark).count() == 20
+    assert read_delta(spark, table_dir).count() == 20
 
 
 def test_cli_cdf_changes(spark, table_dir, capsys):
     assert main(["table", table_dir, "enable-cdf"]) == 0
+    v = int(capsys.readouterr().out.strip().split("=")[1])
+    main(["table", table_dir, "delete", "--where", "id = 3"])
     capsys.readouterr()
-    v = DeltaLikeTable(table_dir).latest_version()
-    main(["table", table_dir, "delete", "--where", '[["id", "=", 3]]', "--dv"])
-    capsys.readouterr()
-    assert main(["table", table_dir, "changes", "--version", str(v)]) == 0
+    assert main(["table", table_dir, "changes", "--version", str(v + 1)]) == 0
     lines = [l for l in capsys.readouterr().out.splitlines() if l.startswith("{")]
     rows = [json.loads(l) for l in lines]
     assert [(r["id"], r["_change_type"]) for r in rows] == [("3", "delete")]
 
 
-def test_cli_vacuum_dry_run(spark, table_dir, capsys):
-    main(["table", table_dir, "delete", "--where", '[["id", "<", 100]]'])
+def test_cli_vacuum_reclaims_tombstones(spark, table_dir, capsys):
+    """An OPTIMIZE tombstones the small files; vacuum inside the
+    retention window reclaims nothing, with retention 0 it reclaims
+    exactly the tombstoned files."""
+    DeltaStandardWriter(table_dir).write(
+        spark.createDataFrame([(100, 0)], "id long, val long")
+    )
+    assert main(["table", table_dir, "optimize"]) == 0
     capsys.readouterr()
-    assert main(["table", table_dir, "vacuum", "--retention_ms", "0", "--dry_run"]) == 0
-    out = capsys.readouterr().out
-    assert "would_reclaim=1" in out
+    assert main(["table", table_dir, "vacuum"]) == 0
+    assert "reclaimed=0" in capsys.readouterr().out
     assert main(["table", table_dir, "vacuum", "--retention_ms", "0"]) == 0
-    assert "reclaimed=1" in capsys.readouterr().out
+    assert "reclaimed=2" in capsys.readouterr().out
+    assert read_delta(spark, table_dir).count() == 21
 
 
-def test_cli_table_refuses_standard_delta_table(spark, tmp_path):
-    """`table` reads `_kdi_log`; on the standard `_delta_log` table that
-    `ingest` writes it must refuse instead of vacuuming every data file
-    as unreferenced."""
-    import os
+def test_cli_vacuum_keeps_ingest_checkpoint(spark, table_dir, capsys):
+    """`ingest` keeps its streaming checkpoint inside the table root
+    by default; vacuum, like Delta's, never touches ``_``- or
+    ``.``-prefixed names, however old."""
+    kept = [
+        os.path.join(table_dir, "_kdi_checkpoints", "app-0", "offsets", "0"),
+        os.path.join(table_dir, ".part-0.parquet.crc"),
+    ]
+    old = time.time() - 30 * 24 * 3600
+    for p in kept:
+        os.makedirs(os.path.dirname(p), exist_ok=True)
+        with open(p, "w") as f:
+            f.write("v1")
+        os.utime(p, (old, old))
+    assert main(["table", table_dir, "vacuum", "--retention_ms", "0"]) == 0
+    assert "reclaimed=0" in capsys.readouterr().out
+    assert all(os.path.exists(p) for p in kept)
+    assert read_delta(spark, table_dir).count() == 20
 
-    from kafka_delta_ingest_spark.delta_standard import DeltaStandardSink, read_delta
 
+def test_cli_table_administers_ingested_table(spark, tmp_path, capsys):
+    """The table `ingest` writes (a DeltaStandardSink with a txn
+    ledger) takes every admin action; vacuum deletes no live file,
+    and no admin commit moves the ledger, so `ingest` resumes without
+    a replay."""
     loc = str(tmp_path / "std")
-    DeltaStandardSink(loc).write_batch(
-        spark.createDataFrame([(i, i * 10) for i in range(20)], "id long, val long"),
+    sink = DeltaStandardSink(loc)
+    sink.write_batch(
+        spark.createDataFrame(
+            [(i, i * 10) for i in range(20)], "id long, val long"
+        ).coalesce(1),
         txn={"app-0": 19},
     )
+    ledger = sink.snapshot()["txn"]
 
-    def data_files():
-        return sorted(
-            f for _, _, fs in os.walk(loc) for f in fs if f.endswith(".parquet")
-        )
+    def live_files():
+        return {
+            os.path.join(loc, p)
+            for p in DeltaStandardWriter(loc)._py_replay()["adds"]
+        }
 
-    before = data_files()
-    assert before
-    for action in (["vacuum", "--retention_ms", "0"], ["count"], ["optimize"]):
-        with pytest.raises(SystemExit, match="standard Delta table"):
-            main(["table", loc, *action])
-    assert data_files() == before
-    assert not os.path.exists(os.path.join(loc, "_kdi_log"))
-    assert read_delta(spark, loc).count() == 20
+    def run(*action):
+        assert main(["table", loc, *action]) == 0
+        assert sink.snapshot()["txn"] == ledger == {"app-0": 19}
+        return capsys.readouterr().out
+
+    assert "count=20 source=log" in run("count")
+    assert "op=WRITE" in run("history")
+    run("delete", "--where", "id < 5")
+    run("update", "--where", "id = 7", "--set", '{"val": "val + 1"}')
+    run("restore", "--version", "0")
+    v = int(run("enable-cdf").strip().split("=")[1])
+    run("delete", "--where", "id = 3")
+    changes = [json.loads(l) for l in run("changes", "--version", str(v + 1)).splitlines()]
+    assert [(r["id"], r["_change_type"]) for r in changes] == [("3", "delete")]
+
+    before = live_files()
+    assert all(os.path.exists(p) for p in before)
+    run("vacuum", "--retention_ms", "0")
+    assert live_files() == before
+    assert all(os.path.exists(p) for p in before)
+    got = {r.id: r.val for r in read_delta(spark, loc).collect()}
+    assert len(got) == 19 and got[7] == 70

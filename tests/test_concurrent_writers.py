@@ -1,248 +1,211 @@
-"""Multi-writer optimistic concurrency on the Delta-style log.
+"""Multi-writer optimistic concurrency on the standard Delta log.
 
 The reference's flagship e2e runs 2 concurrent workers over 4 Kafka
 partitions and asserts the exact id set 0..199 lands with no dupes or
 loss (reference tests/emails_s3_tests.rs:21-77, coordinator-free by
 design, doc/DESIGN.md:12,42). This is the same proof against our
-commit protocol: many writers race `_commit`'s O_EXCL version claim;
+commit protocol: many writers race the put-if-absent version claim;
 every batch must land exactly once at a distinct version, and the
 per-partition txn ledger must converge to the max offset per appId.
 """
 
-import shutil
-import tempfile
 from concurrent.futures import ThreadPoolExecutor
 
-from kafka_delta_ingest_spark.sinks.delta_like import DeltaLikeTable
+import pytest
+
+import kafka_delta_ingest_spark.sinks.base as sink_base
+from kafka_delta_ingest_spark.delta_standard import (
+    ConcurrentDeltaWriteError,
+    DeltaStandardWriter,
+    read_delta,
+)
 
 
-def test_concurrent_writers_no_loss_no_dupes(spark):
-    root = tempfile.mkdtemp(prefix="kdi-conc-")
-    try:
-        path = root + "/t"
-        DeltaLikeTable(path)  # init log dir
-
-        n_writers, batches_per_writer, rows_per_batch = 4, 5, 10
-
-        def work(w: int) -> list[int]:
-            t = DeltaLikeTable(path)  # own handle, like a separate process
-            versions = []
-            for b in range(w * batches_per_writer, (w + 1) * batches_per_writer):
-                lo = b * rows_per_batch
-                df = spark.createDataFrame(
-                    [(i, f"w{w}") for i in range(lo, lo + rows_per_batch)],
-                    "id long, writer string",
-                )
-                res = t.write_batch(df, txn={f"app-{w}": b})
-                assert not res.skipped
-                versions.append(res.version)
-            return versions
-
-        with ThreadPoolExecutor(max_workers=n_writers) as ex:
-            all_versions = [
-                v for vs in ex.map(work, range(n_writers)) for v in vs
-            ]
-
-        # Every commit claimed a distinct version — no lost updates.
-        assert len(all_versions) == len(set(all_versions)) == n_writers * batches_per_writer
-
-        t = DeltaLikeTable(path)
-        ids = [r.id for r in t.read(spark).select("id").collect()]
-        expect = n_writers * batches_per_writer * rows_per_batch
-        assert sorted(ids) == list(range(expect))  # exact set: no dupes, no loss
-
-        # txn ledger converged to each writer's last batch number.
-        snap = t.snapshot()
-        for w in range(n_writers):
-            assert snap["txn"][f"app-{w}"] == (w + 1) * batches_per_writer - 1
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+def _ids(spark, path):
+    return sorted(r.id for r in read_delta(spark, path).select("id").collect())
 
 
-def test_replay_after_race_is_skipped(spark):
+def test_concurrent_writers_no_loss_no_dupes(spark, tmp_path):
+    path = str(tmp_path / "t")
+    n_writers, batches_per_writer, rows_per_batch = 4, 5, 10
+    # The table exists before the race: concurrent CREATEs conflict on
+    # metadata, as in Delta; racing appends never do.
+    DeltaStandardWriter(path).write(
+        spark.createDataFrame([(-1, "seed")], "id long, writer string")
+    )
+
+    def work(w: int) -> list[int]:
+        t = DeltaStandardWriter(path)  # own handle, like a separate process
+        versions = []
+        for b in range(w * batches_per_writer, (w + 1) * batches_per_writer):
+            lo = b * rows_per_batch
+            df = spark.createDataFrame(
+                [(i, f"w{w}") for i in range(lo, lo + rows_per_batch)],
+                "id long, writer string",
+            )
+            version, adds = t.write_adds(df, txn={f"app-{w}": b})
+            assert adds
+            versions.append(version)
+        return versions
+
+    with ThreadPoolExecutor(max_workers=n_writers) as ex:
+        all_versions = [
+            v for vs in ex.map(work, range(n_writers)) for v in vs
+        ]
+
+    # Every commit claimed a distinct version — no lost updates.
+    assert len(all_versions) == len(set(all_versions)) == n_writers * batches_per_writer
+
+    expect = n_writers * batches_per_writer * rows_per_batch
+    assert _ids(spark, path) == [-1] + list(range(expect))  # no dupes, no loss
+
+    # txn ledger converged to each writer's last batch number.
+    txn = DeltaStandardWriter(path)._py_replay()["txn"]
+    for w in range(n_writers):
+        assert txn[f"app-{w}"] == (w + 1) * batches_per_writer - 1
+
+
+def test_replay_after_race_is_skipped(spark, tmp_path):
     """A writer that loses its ack and replays the same (appId, version)
     txn must be skipped — the reference's AlreadyProcessedPartitionOffset
     path (src/value_buffers.rs:14-35) at the commit layer."""
-    root = tempfile.mkdtemp(prefix="kdi-replay-")
-    try:
-        t = DeltaLikeTable(root + "/t")
-        df = spark.createDataFrame([(1, "x")], "id long, v string")
-        r1 = t.write_batch(df, txn={"app-0": 7})
-        assert not r1.skipped
-        r2 = t.write_batch(df, txn={"app-0": 7})  # replay
-        assert r2.skipped
-        assert t.read(spark).count() == 1
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    t = DeltaStandardWriter(str(tmp_path / "t"))
+    df = spark.createDataFrame([(1, "x")], "id long, v string")
+    v1, adds1 = t.write_adds(df, txn={"app-0": 7})
+    assert adds1
+    v2, adds2 = t.write_adds(df, txn={"app-0": 7})  # replay
+    assert not adds2 and v2 == v1
+    assert read_delta(spark, t.root).count() == 1
 
 
-def test_racing_deletes_raise_concurrent_delete_delete(spark):
-    """Two DELETEs computed from the same snapshot race; the loser must
-    fail with ConcurrentDeleteDelete instead of silently resurrecting
-    the winner's deleted rows (Delta ConcurrentDeleteDeleteException;
-    reference conflict loop src/lib.rs:966-1024)."""
-    import pytest
+def _race_before_commit(monkeypatch, race):
+    """Run ``race()`` once, after a mutating op read its snapshot but
+    BEFORE it commits — inside the footer-stats read of its staged
+    data files."""
+    real = sink_base._parquet_stats
 
-    from kafka_delta_ingest_spark.sinks.delta_like import ConcurrentDeleteDelete
+    def wrapper(path):
+        monkeypatch.setattr(sink_base, "_parquet_stats", real)
+        race()
+        return real(path)
 
-    root = tempfile.mkdtemp(prefix="kdi-dd-")
-    try:
-        t = DeltaLikeTable(root + "/t")
-        # One physical file so both predicates hit the same candidate
-        # set (otherwise stats pruning gives the writers disjoint files
-        # and they genuinely don't conflict).
-        df = spark.createDataFrame(
+    monkeypatch.setattr(sink_base, "_parquet_stats", wrapper)
+
+
+def test_racing_deletes_raise_concurrent_delete_delete(spark, tmp_path, monkeypatch):
+    """Two DELETEs computed from the same snapshot race on one file;
+    the loser must fail with ConcurrentDeltaWriteError instead of
+    silently resurrecting the winner's deleted rows (Delta
+    ConcurrentDeleteDeleteException; reference conflict loop
+    src/lib.rs:966-1024)."""
+    t = DeltaStandardWriter(str(tmp_path / "t"))
+    # One physical file so both predicates hit the same file.
+    t.write(
+        spark.createDataFrame(
             [(i, "x" if i < 50 else "y") for i in range(100)], "id long, v string"
         ).repartition(1)
-        t.write_batch(df)
-
-        # Writer B reads the pre-race snapshot, then stalls while writer
-        # A's DELETE commits. Pinning the stale snapshot reproduces the
-        # interleaving deterministically (no sleeps, no threads).
-        stale = t.snapshot()
-        b = DeltaLikeTable(root + "/t")
-        b.snapshot = lambda as_of=None, _s=stale: _s  # type: ignore[method-assign]
-
-        ra = t.delete_where(spark, [("id", "<", 10)])
-        assert not ra.skipped
-
-        with pytest.raises(ConcurrentDeleteDelete):
-            b.delete_where(spark, [("id", ">=", 90)])
-
-        # The table still reflects exactly writer A's delete.
-        ids = sorted(r.id for r in t.read(spark).select("id").collect())
-        assert ids == list(range(10, 100))
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    )
+    _inject_before_commit(
+        monkeypatch,
+        lambda: DeltaStandardWriter(t.root).delete_where(spark, "id < 10"),
+    )
+    with pytest.raises(ConcurrentDeltaWriteError):
+        t.delete_where(spark, "id >= 90")
+    # The table still reflects exactly writer A's delete.
+    assert _ids(spark, t.root) == list(range(10, 100))
 
 
-def test_merge_racing_optimize_conflicts(spark):
+def test_merge_racing_optimize_conflicts(spark, tmp_path, monkeypatch):
     """MERGE computed from a snapshot that OPTIMIZE has since compacted
     must conflict (its rewrite would re-add the compacted small files'
     rows alongside the compacted copy — duplication)."""
-    import pytest
-
-    from kafka_delta_ingest_spark.sinks.delta_like import ConcurrentDeleteDelete
-
-    root = tempfile.mkdtemp(prefix="kdi-mo-")
-    try:
-        t = DeltaLikeTable(root + "/t")
-        for lo in (0, 50):
-            df = spark.createDataFrame(
+    t = DeltaStandardWriter(str(tmp_path / "t"))
+    for lo in (0, 50):
+        t.write(
+            spark.createDataFrame(
                 [(i, "x") for i in range(lo, lo + 50)], "id long, v string"
             )
-            t.write_batch(df)
+        )
+    compacted = []
+    _race_before_commit(
+        monkeypatch,
+        lambda: compacted.append(DeltaStandardWriter(t.root).optimize(spark)),
+    )
+    src = spark.createDataFrame([(5, "updated")], "id long, v string")
+    with pytest.raises(ConcurrentDeltaWriteError):
+        t.merge(
+            spark, src, "source.id = target.id",
+            when_matched_update={"v": "source.v"},
+        )
+    assert compacted == [2]
+    assert read_delta(spark, t.root).count() == 100
+    assert read_delta(spark, t.root).filter("v = 'updated'").count() == 0
 
-        stale = t.snapshot()
-        b = DeltaLikeTable(root + "/t")
-        b.snapshot = lambda as_of=None, _s=stale: _s  # type: ignore[method-assign]
 
-        ro = t.optimize(spark)
-        assert not ro.skipped
-
-        src = spark.createDataFrame([(5, "updated")], "id long, v string")
-        with pytest.raises(ConcurrentDeleteDelete):
-            b.merge(spark, src, key_cols=["id"])
-
-        assert t.read(spark).count() == 100
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
-
-
-def test_append_does_not_conflict_with_delete(spark):
+def test_append_does_not_conflict_with_delete(spark, tmp_path, monkeypatch):
     """A blind append landing between a DELETE's snapshot read and its
     commit must NOT conflict (WriteSerializable): the appended rows
     survive and the delete applies to the snapshot it read."""
-    root = tempfile.mkdtemp(prefix="kdi-ad-")
-    try:
-        t = DeltaLikeTable(root + "/t")
-        df = spark.createDataFrame([(i, "x") for i in range(50)], "id long, v string")
-        t.write_batch(df)
-
-        stale = t.snapshot()
-        b = DeltaLikeTable(root + "/t")
-        b.snapshot = lambda as_of=None, _s=stale: _s  # type: ignore[method-assign]
-
-        # Concurrent blind append of ids 100..109.
-        t.write_batch(
+    t = DeltaStandardWriter(str(tmp_path / "t"))
+    t.write(spark.createDataFrame([(i, "x") for i in range(50)], "id long, v string"))
+    _inject_before_commit(
+        monkeypatch,
+        lambda: DeltaStandardWriter(t.root).write(
             spark.createDataFrame([(i, "new") for i in range(100, 110)], "id long, v string")
-        )
-
-        rb = b.delete_where(spark, [("id", "<", 10)])
-        assert not rb.skipped
-
-        ids = sorted(r.id for r in t.read(spark).select("id").collect())
-        assert ids == list(range(10, 50)) + list(range(100, 110))
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+        ),
+    )
+    t.delete_where(spark, "id < 10")
+    assert _ids(spark, t.root) == list(range(10, 50)) + list(range(100, 110))
 
 
-def test_delete_retry_recomputes_after_conflict(spark, tmp_path):
+def test_delete_retry_recomputes_after_conflict(spark, tmp_path, monkeypatch):
     """Two DV deletes race from the same snapshot: the loser's retry
     re-reads the fresh snapshot, recomputes against the winner's state,
     and lands — the reference's bounded conflict loop
-    (src/lib.rs:966-1024) on the rewrite path."""
+    (src/lib.rs:966-1024) on the delete path."""
     from pyspark.sql import Row
 
-    from kafka_delta_ingest_spark.sinks.delta_like import DeltaLikeTable
-
-    t = DeltaLikeTable(str(tmp_path / "t"))
-    t.write_batch(
+    t = DeltaStandardWriter(str(tmp_path / "t"))
+    t.write(
         spark.createDataFrame(
             [Row(id=i, val=f"v{i}") for i in range(20)]
-        ).repartition(2)
+        ).repartition(1)
     )
-
-    # Writer A lands a DV delete first (simulating the race winner).
-    t.delete_where(spark, [("id", "<", 3)], dv=True)
-    # Writer B, retry-wrapped, derives from the CURRENT snapshot inside
-    # the loop and must succeed without manual recomputation.
-    res = t.delete_where_with_retry(spark, [("id", ">=", 15)], dv=True)
-    assert not res.skipped
-    back = t.read(spark)
+    _inject_before_commit(
+        monkeypatch,
+        lambda: DeltaStandardWriter(t.root).delete_where(spark, "id < 3"),
+    )
+    with pytest.raises(ConcurrentDeltaWriteError):
+        t.delete_where(spark, "id >= 15")
+    t.delete_where(spark, "id >= 15")  # retry: fresh snapshot
+    back = read_delta(spark, t.root)
     assert back.count() == 12
     assert back.filter("id < 3 OR id >= 15").count() == 0
 
 
-def test_update_racing_delete_conflicts_then_retry_lands(spark):
-    """UPDATE computed from a snapshot a DELETE has since rewritten must
-    conflict (its rewrite would resurrect the deleted rows); the
-    retry-wrapped variant recomputes from the fresh snapshot and lands
-    against the winner's state."""
-    import pytest
-
-    from kafka_delta_ingest_spark.sinks.delta_like import ConcurrentDeleteDelete
-
-    root = tempfile.mkdtemp(prefix="kdi-ud-")
-    try:
-        t = DeltaLikeTable(root + "/t")
-        df = spark.createDataFrame(
+def test_update_racing_delete_conflicts_then_retry_lands(spark, tmp_path, monkeypatch):
+    """UPDATE computed from a snapshot a DELETE has since changed must
+    conflict (its rewrite would resurrect the deleted rows); the retry
+    recomputes from the fresh snapshot and lands against the winner's
+    state."""
+    t = DeltaStandardWriter(str(tmp_path / "t"))
+    t.write(
+        spark.createDataFrame(
             [(i, i * 10) for i in range(100)], "id long, val long"
         ).repartition(1)
-        t.write_batch(df)
+    )
+    _race_before_commit(
+        monkeypatch,
+        lambda: DeltaStandardWriter(t.root).delete_where(spark, "id < 10"),
+    )
+    with pytest.raises(ConcurrentDeltaWriteError):
+        t.update_where(spark, "id >= 90", {"val": "val + 1"})
 
-        stale = t.snapshot()
-        b = DeltaLikeTable(root + "/t")
-        b.snapshot = lambda as_of=None, _s=stale: _s  # type: ignore[method-assign]
-
-        ra = t.delete_where(spark, [("id", "<", 10)])
-        assert not ra.skipped
-
-        with pytest.raises(ConcurrentDeleteDelete):
-            b.update_where(spark, {"val": "val + 1"}, [("id", ">=", 90)])
-
-        # Retry path (fresh handle, real snapshot): recomputes against
-        # the post-delete state and lands.
-        res = t.update_where_with_retry(
-            spark, {"val": "val + 1"}, [("id", ">=", 90)]
-        )
-        assert not res.skipped
-        got = {r.id: r.val for r in t.read(spark).collect()}
-        assert len(got) == 90  # the racing delete's rows stayed dead
-        assert all(got[i] == i * 10 + 1 for i in range(90, 100))
-        assert all(got[i] == i * 10 for i in range(10, 90))
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    t.update_where(spark, "id >= 90", {"val": "val + 1"})  # retry
+    got = {r.id: r.val for r in read_delta(spark, t.root).collect()}
+    assert len(got) == 90  # the racing delete's rows stayed dead
+    assert all(got[i] == i * 10 + 1 for i in range(90, 100))
+    assert all(got[i] == i * 10 for i in range(10, 90))
 
 
 # ---------------------------------------------------------------------------

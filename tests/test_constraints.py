@@ -1,19 +1,22 @@
-"""CHECK constraints: Delta ALTER TABLE ADD CONSTRAINT parity."""
+"""CHECK constraints: Delta ALTER TABLE ADD CONSTRAINT parity on the
+standard log — appends, MERGE, checkpoints and schema evolution."""
 
 import pytest
 from pyspark.sql import Row
 
-from kafka_delta_ingest_spark.sinks.delta_like import (
-    ConstraintViolation,
-    DeltaLikeTable,
-)
+from kafka_delta_ingest_spark.delta_standard import DeltaStandardWriter, read_delta
+from kafka_delta_ingest_spark.sinks.base import ConstraintViolation
 
 
 def _t(spark, tmp_path, rows=None):
-    t = DeltaLikeTable(str(tmp_path / "t"))
+    t = DeltaStandardWriter(str(tmp_path / "t"))
     rows = rows or [Row(id=i, qty=i + 1) for i in range(5)]
-    t.write_batch(spark.createDataFrame(rows))
+    t.write(spark.createDataFrame(rows))
     return t
+
+
+def _count(spark, t):
+    return read_delta(spark, t.root).count()
 
 
 def test_constraint_blocks_violating_append(spark, tmp_path):
@@ -22,24 +25,19 @@ def test_constraint_blocks_violating_append(spark, tmp_path):
     assert t.constraints() == {"qty_positive": "qty > 0"}
 
     with pytest.raises(ConstraintViolation, match="qty_positive"):
-        t.write_batch(spark.createDataFrame([Row(id=99, qty=-1)]))
+        t.write(spark.createDataFrame([Row(id=99, qty=-1)]))
     # The failed transaction left nothing behind.
-    assert t.read(spark).count() == 5
+    assert _count(spark, t) == 5
 
-    t.write_batch(spark.createDataFrame([Row(id=100, qty=7)]))
-    assert t.read(spark).count() == 6
+    t.write(spark.createDataFrame([Row(id=100, qty=7)]))
+    assert _count(spark, t) == 6
 
 
 def test_constraint_null_satisfies(spark, tmp_path):
     t = _t(spark, tmp_path)
     t.add_constraint(spark, "qty_positive", "qty > 0")
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    sch = StructType(
-        [StructField("id", LongType()), StructField("qty", LongType())]
-    )
-    t.write_batch(spark.createDataFrame([(7, None)], sch))
-    assert t.read(spark).count() == 6  # NULL passes (SQL CHECK semantics)
+    t.write(spark.createDataFrame([(7, None)], "id long, qty long"))
+    assert _count(spark, t) == 6  # NULL passes (SQL CHECK semantics)
 
 
 def test_add_constraint_rejects_violating_table(spark, tmp_path):
@@ -53,14 +51,15 @@ def test_constraint_survives_checkpoint_and_drop(spark, tmp_path):
     t = _t(spark, tmp_path)
     t.add_constraint(spark, "qty_positive", "qty > 0")
     for i in range(10):  # drive past a checkpoint boundary
-        t.write_batch(spark.createDataFrame([Row(id=200 + i, qty=1)]))
+        t.write(spark.createDataFrame([Row(id=200 + i, qty=1)]))
+    assert t.latest_version() >= t.checkpoint_every
     assert t.constraints() == {"qty_positive": "qty > 0"}
     with pytest.raises(ConstraintViolation):
-        t.write_batch(spark.createDataFrame([Row(id=999, qty=0)]))
+        t.write(spark.createDataFrame([Row(id=999, qty=0)]))
 
     t.drop_constraint("qty_positive")
-    t.write_batch(spark.createDataFrame([Row(id=999, qty=0)]))
-    assert t.read(spark).filter("id = 999").count() == 1
+    t.write(spark.createDataFrame([Row(id=999, qty=0)]))
+    assert read_delta(spark, t.root).filter("id = 999").count() == 1
     with pytest.raises(ValueError):
         t.drop_constraint("qty_positive")
 
@@ -70,8 +69,11 @@ def test_merge_enforces_constraints(spark, tmp_path):
     t.add_constraint(spark, "qty_positive", "qty > 0")
     bad = spark.createDataFrame([Row(id=2, qty=-9)])
     with pytest.raises(ConstraintViolation):
-        t.merge(spark, bad, key_cols=["id"])
-    assert t.read(spark).filter("qty < 0").count() == 0
+        t.merge(
+            spark, bad, "source.id = target.id",
+            when_matched_update={"qty": "source.qty"},
+        )
+    assert read_delta(spark, t.root).filter("qty < 0").count() == 0
 
 
 def test_constraint_survives_schema_evolution(spark, tmp_path):
@@ -90,51 +92,4 @@ def test_constraint_survives_schema_evolution(spark, tmp_path):
     )
     assert t.constraints() == {"qty_positive": "qty > 0"}
     with pytest.raises(ConstraintViolation):
-        t.write_batch(spark.createDataFrame([Row(id=9, qty=-2, note="x")]))
-
-
-def test_generated_column_computed_when_missing(spark, tmp_path):
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    t = DeltaLikeTable(str(tmp_path / "t"))
-    t.write_batch(
-        spark.createDataFrame(
-            [Row(id=1, ts="2024-03-01T10:00:00", date="2024-03-01")]
-        )
-    )
-    t.set_generated_column("date", "substring(ts, 1, 10)")
-    # Writer omits the column -> computed in-flight.
-    sch = StructType(
-        [StructField("id", LongType()), StructField("ts", StringType())]
-    )
-    t.write_batch(spark.createDataFrame([(2, "2024-04-15T09:30:00")], sch))
-    got = {r.id: r.date for r in t.read(spark).collect()}
-    assert got[2] == "2024-04-15"
-
-
-def test_generated_column_validates_supplied_values(spark, tmp_path):
-    t = DeltaLikeTable(str(tmp_path / "t"))
-    t.write_batch(
-        spark.createDataFrame(
-            [Row(id=1, ts="2024-03-01T10:00:00", date="2024-03-01")]
-        )
-    )
-    t.set_generated_column("date", "substring(ts, 1, 10)")
-    with pytest.raises(ConstraintViolation, match="generated column date"):
-        t.write_batch(
-            spark.createDataFrame(
-                [Row(id=3, ts="2024-05-01T00:00:00", date="1999-01-01")]
-            )
-        )
-    # Correctly supplied values pass.
-    t.write_batch(
-        spark.createDataFrame(
-            [Row(id=4, ts="2024-05-01T00:00:00", date="2024-05-01")]
-        )
-    )
-    assert t.read(spark).count() == 2
+        t.write(spark.createDataFrame([Row(id=9, qty=-2, note="x")]))

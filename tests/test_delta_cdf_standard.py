@@ -171,3 +171,35 @@ def test_writer_dv_delete_emits_cdc_when_cdf_enabled(spark, tmp_path):
     v2 = w2.delete_where(spark, "doc_id = 1")
     with pytest.raises(ValueError, match="enable CDF"):
         table_changes(spark, t2, v2, v2).collect()
+
+
+def test_table_changes_seeds_from_checkpoint_not_v0(spark, tmp_path, monkeypatch):
+    """An incremental poll must read O(range) commit files, seeded from
+    the newest checkpoint at or below the range — never replay the
+    whole log per poll."""
+    import builtins
+
+    from kafka_delta_ingest_spark.delta_standard import DeltaStandardWriter, table_changes
+
+    t = str(tmp_path / "t")
+    w = DeltaStandardWriter(t)
+    for i in range(12):  # checkpoint lands at version 10
+        w.write(spark.createDataFrame([(i,)], "id long"))
+    w.enable_change_data_feed()  # v12
+    w.write(spark.createDataFrame([(100,)], "id long"))  # v13
+
+    opened = []
+    real_open = builtins.open
+
+    def spy(path, *a, **k):
+        name = os.path.basename(str(path))
+        if name.endswith(".json") and name[:20].isdigit():
+            opened.append(int(name[:20]))
+        return real_open(path, *a, **k)
+
+    monkeypatch.setattr(builtins, "open", spy)
+    ch = table_changes(spark, t, 13).collect()
+    monkeypatch.undo()
+    assert [r.id for r in ch] == [100]
+    # Seeded from checkpoint.10: versions 0..9 never opened.
+    assert opened and min(opened) >= 11

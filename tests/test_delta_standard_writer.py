@@ -301,19 +301,19 @@ def test_restore_to_version(spark, tmp_path):
     w.write(_docs(spark, 10))                       # v0
     w.write(_docs(spark, 3), mode="overwrite")      # v1
     w.delete_where(spark, "doc_id = 1")             # v2 (DV)
-    v = w.restore(0)                                # v3
+    v = w.restore(0, spark)                         # v3
     assert v == 3
     assert read_delta(spark, t).count() == 10
     # history preserved: the rolled-back states stay travelable
     assert read_delta(spark, t, version=1).count() == 3
     assert read_delta(spark, t, version=2).count() == 2
     # restoring to a DV'd version brings the descriptor back
-    w.restore(2)
+    w.restore(2, spark)
     assert sorted(
         r.doc_id for r in read_delta(spark, t).collect()
     ) == [0, 2]
     with pytest.raises(ValueError, match="does not exist"):
-        w.restore(99)
+        w.restore(99, spark)
 
 
 def test_vacuum_reclaims_tombstones(spark, tmp_path):
@@ -330,7 +330,7 @@ def test_vacuum_reclaims_tombstones(spark, tmp_path):
     # time travel to the vacuumed version now fails at scan time
     # (the protocol contract); restore refuses up front
     with pytest.raises(ValueError, match="already vacuumed"):
-        w.restore(0)
+        w.restore(0, spark)
     # retention respected: fresh tombstones survive a default vacuum
     w.write(_docs(spark, 2), mode="overwrite")      # v2
     assert w.vacuum() == []  # 7-day retention keeps v1's files
@@ -510,3 +510,78 @@ def test_write_decimal_column_stats(spark, tmp_path):
                 maxs.append(Decimal(s["maxValues"]["amt"]))
     assert mins and min(mins) == Decimal("0.0")
     assert max(maxs) == Decimal("13.5")
+
+
+def test_count_rows_matches_scan_through_dml(spark, tmp_path):
+    """The log-only COUNT(*) (add numRecords minus DV cardinalities,
+    zero data files read) tracks a scan through every DML kind."""
+    t = str(tmp_path / "t")
+    w = DeltaStandardWriter(t)
+    for b in range(3):
+        w.write(_docs(spark, 10).withColumn("doc_id", F.col("doc_id") + b * 10).coalesce(1))
+    assert w.count_rows() == 30 == read_delta(spark, t).count()
+    w.delete_where(spark, "doc_id < 7")  # DV cardinality path
+    assert w.count_rows() == 23 == read_delta(spark, t).count()
+    w.update_where(spark, "doc_id = 15", {"val": "0"})  # rewrite path
+    assert w.count_rows() == 23 == read_delta(spark, t).count()
+    w.merge(
+        spark,
+        spark.createDataFrame([(100, "1", 0)], "doc_id long, grp string, val long"),
+        "source.doc_id = target.doc_id",
+    )
+    assert w.count_rows() == 24 == read_delta(spark, t).count()
+    w.optimize(spark)  # DVs materialized away
+    assert w.count_rows() == 24 == read_delta(spark, t).count()
+
+
+def test_escaped_partition_values_round_trip(spark, tmp_path):
+    """Spark percent-escapes ':' etc. in partition dirs; the add path is
+    a URI over that directory and partitionValues the UNESCAPED value,
+    so reads, filters and DML through the partition all find the file."""
+    from urllib.parse import unquote
+
+    t = str(tmp_path / "t")
+    w = DeltaStandardWriter(t)
+    w.write(
+        spark.createDataFrame(
+            [(1, "2024-01-01 00:00:00"), (2, "2024-01-02 00:00:00"), (3, "a%b+c")],
+            "id long, ts string",
+        ),
+        partition_by=["ts"],
+    )
+    adds = list(w._py_replay()["adds"].values())
+    assert any("%3A" in unquote(a["path"]) for a in adds)  # escaped dir
+    assert all(os.path.exists(os.path.join(t, unquote(a["path"]))) for a in adds)
+    assert {a["partitionValues"]["ts"] for a in adds} == {
+        "2024-01-01 00:00:00", "2024-01-02 00:00:00", "a%b+c",
+    }
+    got = read_delta(spark, t).filter("ts = '2024-01-01 00:00:00'").collect()
+    assert [(r.id, r.ts) for r in got] == [(1, "2024-01-01 00:00:00")]
+    # DML through the same window: DV delete, rewrite update, merge.
+    w.delete_where(spark, "ts = '2024-01-02 00:00:00'")
+    w.update_where(spark, "ts = 'a%b+c'", {"id": "id * 10"})
+    w.merge(
+        spark,
+        spark.createDataFrame([(1, "2024-01-01 00:00:00")], "id long, ts string"),
+        "source.id = target.id AND source.ts = target.ts",
+        when_matched_delete=True,
+    )
+    assert [(r.id, r.ts) for r in read_delta(spark, t).collect()] == [(30, "a%b+c")]
+
+
+def test_zorder_rejects_unordered_types(spark):
+    from kafka_delta_ingest_spark.sinks.base import zorder_value
+
+    df = spark.createDataFrame([(1, "a")], "id long, s string")
+    with pytest.raises(ValueError, match="unordered type"):
+        zorder_value(df, ["id", "s"])
+
+
+def test_zorder_null_and_constant_columns(spark):
+    """Null values rank 0 (sorted first); a constant column contributes
+    zero bits but must not error or perturb the other dimension."""
+    from kafka_delta_ingest_spark.sinks.base import zorder_value
+
+    df = spark.createDataFrame([(None, 7), (5, 7), (9, 7)], "a int, b int")
+    out = df.withColumn("z", zorder_value(df, ["a", "b"])).orderBy("z").collect()
+    assert [r.a for r in out] == [None, 5, 9]

@@ -19,7 +19,11 @@ from pyspark.sql import functions as F
 
 from kafka_delta_ingest_spark.operators.dedup import exact_dedup_normalized
 from kafka_delta_ingest_spark.operators.text import normalize_text, quality_score
-from kafka_delta_ingest_spark.sinks.delta_like import DeltaLikeTable
+from kafka_delta_ingest_spark.delta_standard import (
+    DeltaStandardWriter,
+    read_delta,
+    table_changes,
+)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -39,26 +43,30 @@ def _curate_batch(df):
 
 def _full_recompute(spark, raw):
     """Golden path: the same pipeline over the WHOLE raw table."""
-    return _curate_batch(raw.read(spark))
+    return _curate_batch(read_delta(spark, raw.root))
 
 
 def _poll(spark, raw, curated, cursor):
-    """One incremental poll: feed since cursor -> admit -> append."""
+    """One incremental poll: feed after cursor -> admit -> append."""
     head = raw.latest_version()
-    feed = raw.table_changes(spark, cursor, head)
+    feed = table_changes(spark, raw.root, cursor + 1, head)
     batch = _curate_batch(
         feed.filter(F.col("_change_type") == "insert").drop(
-            "_change_type", "_commit_version"
+            "_change_type", "_commit_version", "_commit_timestamp"
         )
     ).withColumn("_nk", F.md5(normalize_text(F.col("text"))))
-    if curated.table_schema() is not None:
-        existing = curated.read(spark).select(
+    if curated.latest_version() >= 0:
+        existing = read_delta(spark, curated.root).select(
             F.md5(normalize_text(F.col("text"))).alias("_nk")
         )
         batch = batch.join(existing, "_nk", "left_anti")
     admitted = batch.drop("_nk")
-    curated.write_batch(admitted, txn={"curator": head})
+    curated.write(admitted, txn={"curator": head})
     return head
+
+
+def _ids(spark, t):
+    return {r.doc_id for r in read_delta(spark, t.root).collect()}
 
 
 def test_incremental_equals_batch_recompute(spark, root):
@@ -69,17 +77,17 @@ def test_incremental_equals_batch_recompute(spark, root):
         .limit(60)
         .collect()
     )
-    raw = DeltaLikeTable(root + "/raw")
-    curated = DeltaLikeTable(root + "/curated")
+    raw = DeltaStandardWriter(root + "/raw")
+    curated = DeltaStandardWriter(root + "/curated")
     schema = "doc_id long, text string, lang string"
 
     # Batch 1: first 30 docs.
-    raw.write_batch(spark.createDataFrame(docs[:30], schema))
-    raw.enable_cdf()
+    raw.write(spark.createDataFrame(docs[:30], schema))
+    raw.enable_change_data_feed()
     cursor = -1
     cursor = _poll(spark, raw, curated, cursor)
     golden = {r.doc_id for r in _full_recompute(spark, raw).collect()}
-    got = {r.doc_id for r in curated.read(spark).collect()}
+    got = _ids(spark, curated)
     assert got == golden and len(got) > 0
 
     # Batch 2: 20 fresh docs PLUS 5 re-submissions of batch-1 text
@@ -88,14 +96,14 @@ def test_incremental_equals_batch_recompute(spark, root):
         (1000 + i, docs[i].text, docs[i].lang) for i in range(5)
     ]
     inbatch_dupe = [(2000, docs[31].text, docs[31].lang)]
-    raw.write_batch(
+    raw.write(
         spark.createDataFrame(
             [tuple(d) for d in docs[30:50]] + resub + inbatch_dupe, schema
         )
     )
     cursor = _poll(spark, raw, curated, cursor)
     golden = {r.doc_id for r in _full_recompute(spark, raw).collect()}
-    got = {r.doc_id for r in curated.read(spark).collect()}
+    got = _ids(spark, curated)
     assert got == golden
     # The cross-batch re-submissions were rejected by the curated-key
     # anti-join, the in-batch dupe by the batch dedup.
@@ -103,76 +111,112 @@ def test_incremental_equals_batch_recompute(spark, root):
 
     # Batch 3: the last 10 docs; replaying the SAME poll twice must be
     # idempotent (txn ledger skips the second write).
-    raw.write_batch(spark.createDataFrame([tuple(d) for d in docs[50:]], schema))
-    head = raw.latest_version()
+    raw.write(spark.createDataFrame([tuple(d) for d in docs[50:]], schema))
     feed_cursor = cursor
     cursor = _poll(spark, raw, curated, feed_cursor)
-    n_after = curated.read(spark).count()
+    n_after = read_delta(spark, curated.root).count()
     _poll(spark, raw, curated, feed_cursor)  # replay, same cursor
-    assert curated.read(spark).count() == n_after
+    assert read_delta(spark, curated.root).count() == n_after
     golden = {r.doc_id for r in _full_recompute(spark, raw).collect()}
-    got = {r.doc_id for r in curated.read(spark).collect()}
-    assert got == golden
+    assert _ids(spark, curated) == golden
 
 
 def test_poll_reads_only_the_delta(spark, root):
     """The feed for a poll must contain exactly the rows appended since
     the cursor — the incremental-cost contract."""
-    raw = DeltaLikeTable(root + "/raw")
-    raw.write_batch(
+    raw = DeltaStandardWriter(root + "/raw")
+    raw.write(
         spark.createDataFrame([(i, f"t{i}") for i in range(100)], "doc_id long, text string")
     )
-    raw.enable_cdf()
-    v1 = raw.latest_version()
-    raw.write_batch(
+    v1 = raw.enable_change_data_feed()
+    raw.write(
         spark.createDataFrame([(100 + i, f"t{100+i}") for i in range(7)], "doc_id long, text string")
     )
-    feed = raw.table_changes(spark, v1)
+    feed = table_changes(spark, raw.root, v1 + 1)
     assert feed.count() == 7  # never the 100-row backlog
     assert {r._change_type for r in feed.collect()} == {"insert"}
 
 
-def test_change_feed_cursor_replication(spark, root):
-    """The productized poller: replicate_into maintains a mirror with a
-    durable cursor; replayed and empty polls are no-ops."""
-    from kafka_delta_ingest_spark.streaming.feed import (
-        ChangeFeedCursor,
-        replicate_into,
-    )
+def _replicate(spark, src, dst, key):
+    """One replication poll whose cursor is the destination's own txn
+    ledger: the net change per key since the last applied source
+    version, MERGEd with that version as the txn — so the apply and
+    the cursor advance commit atomically, and a replayed poll skips."""
+    from pyspark.sql import Window
 
-    src = DeltaLikeTable(root + "/src")
-    dst = DeltaLikeTable(root + "/dst")
-    cursor = root + "/cursor.json"
-    src.write_batch(
+    head = src.latest_version()
+    pos = dst.txn_version("replica")
+    if pos is not None and pos >= head:
+        return head
+    feed = table_changes(spark, src.root, (pos or 0) + 1, head).filter(
+        "_change_type != 'update_preimage'"
+    )
+    # within a commit a delete precedes its re-insert
+    rank = F.when(F.col("_change_type") == "delete", 0).otherwise(1)
+    w = Window.partitionBy(key).orderBy(
+        F.col("_commit_version").desc(), rank.desc()
+    )
+    net = (
+        feed.withColumn("_rn", F.row_number().over(w))
+        .filter("_rn = 1")
+        .drop("_rn", "_commit_version", "_commit_timestamp")
+    )
+    # a tombstone for a key the mirror never held inserts nothing
+    held = read_delta(spark, dst.root).select(key)
+    net = net.filter("_change_type != 'delete'").unionByName(
+        net.filter("_change_type = 'delete'").join(held, key, "left_semi")
+    )
+    cols = [c for c in net.columns if c != "_change_type"]
+    dst.merge(
+        spark,
+        net,
+        f"source.{key} = target.{key}",
+        when_matched_delete="source._change_type = 'delete'",
+        when_matched_update={c: f"source.{c}" for c in cols},
+        when_not_matched_insert={c: f"source.{c}" for c in cols},
+        txn={"replica": head},
+    )
+    return head
+
+
+def test_change_feed_cursor_replication(spark, root):
+    """A mirror maintained from the change feed with the destination's
+    txn ledger as the durable cursor; replayed and empty polls are
+    no-ops."""
+    src = DeltaStandardWriter(root + "/src")
+    dst = DeltaStandardWriter(root + "/dst")
+    src.write(
         spark.createDataFrame([(i, i) for i in range(10)], "id long, val long")
     )
-    src.enable_cdf()
+    src.enable_change_data_feed()
+    dst.write(read_delta(spark, src.root), txn={"replica": src.latest_version()})
 
-    h1 = replicate_into(spark, src, dst, ["id"], cursor)
-    assert sorted(map(tuple, dst.read(spark).collect())) == sorted(
-        map(tuple, src.read(spark).collect())
-    )
+    def rows(t):
+        return sorted(map(tuple, read_delta(spark, t.root).collect()))
 
-    src.update_where(spark, {"val": "val + 100"}, [("id", "<", 3)])
-    src.delete_where(spark, [("id", "=", 9)])
-    h2 = replicate_into(spark, src, dst, ["id"], cursor)
-    assert h2 > h1
-    assert sorted(map(tuple, dst.read(spark).collect())) == sorted(
-        map(tuple, src.read(spark).collect())
-    )
+    src.update_where(spark, "id < 3", {"val": "val + 100"})
+    src.delete_where(spark, "id = 9")
+    src.write(spark.createDataFrame([(42, 0)], "id long, val long"))
+    h2 = _replicate(spark, src, dst, "id")
+    assert rows(dst) == rows(src)
+    assert dst.txn_version("replica") == h2
 
     # Empty poll: cursor already at head, destination untouched.
     v_dst = dst.latest_version()
-    assert replicate_into(spark, src, dst, ["id"], cursor) == h2
+    assert _replicate(spark, src, dst, "id") == h2
     assert dst.latest_version() == v_dst
 
-    # Crash-replay: a stale cursor re-polls the same range; MERGE over
-    # the same net changes is idempotent and the mirror still matches.
-    ChangeFeedCursor(src, cursor).ack(h1)
-    replicate_into(spark, src, dst, ["id"], cursor)
-    assert sorted(map(tuple, dst.read(spark).collect())) == sorted(
-        map(tuple, src.read(spark).collect())
+    # Crash-replay: the same poll re-applied is skipped by the ledger.
+    head = src.latest_version()
+    dst.merge(
+        spark,
+        spark.createDataFrame([(0, -1)], "id long, val long"),
+        "source.id = target.id",
+        when_matched_update={"val": "source.val"},
+        txn={"replica": head},
     )
+    assert dst.latest_version() == v_dst
+    assert rows(dst) == rows(src)
 
 
 def _doc_rows(spark, lo, hi):

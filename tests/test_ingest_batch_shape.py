@@ -199,6 +199,36 @@ def test_dlq_payloads_survive_the_slim_cache(spark, tmp_path):
     assert {(r.id, r.ts, r.date) for r in rows} == want
 
 
+def test_non_utf8_unparseable_message_lands_in_dlq(spark, tmp_path):
+    """A payload that is neither JSON nor UTF-8 must reach the DLQ
+    with its exact bytes: the string columns holding it get no
+    footer min/max in the add stats (a non-UTF-8 bound cannot be
+    decoded), and the write does not crash on it."""
+    job = _job(tmp_path)
+    stamp = datetime.datetime(2024, 3, 1)
+    bad = b"\xff\xfeabc"
+    good = json.dumps({"id": 1, "ts": "2024-03-01T00:00:00Z"}).encode()
+    raw = spark.createDataFrame(
+        [
+            (bytearray(good), 0, 0, "events", stamp, 0),
+            (bytearray(bad), 0, 1, "events", stamp, 0),
+        ],
+        RAW_DDL,
+    )
+    m = job.run_batch(raw)
+    assert m.delta_write_num_records == 1
+    (dead,) = read_delta(spark, job.opts.dlq_table_location).collect()
+    assert base64.b64decode(dead.base64_bytes) == bad
+    dlq = DeltaStandardSink(job.opts.dlq_table_location)
+    (add,) = dlq.w._py_replay()["adds"].values()
+    stats = json.loads(add["stats"])
+    assert stats["numRecords"] == 1
+    # the error message quotes the payload: no bounds, nullCount kept
+    assert "error" not in stats["minValues"] and "error" not in stats["maxValues"]
+    assert stats["nullCount"]["error"] == 0
+    assert stats["minValues"]["base64_bytes"] == dead.base64_bytes
+
+
 class FailingSink(DeltaStandardSink):
     def write_batch(self, df, partition_by=None, txn=None):
         raise OSError("disk full")

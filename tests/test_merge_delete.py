@@ -1,18 +1,13 @@
-"""MERGE (upsert) and DELETE with stats-pruned file rewrites.
+"""MERGE (upsert) and DELETE on the standard Delta log.
 
 The reference is append-only by design; these are the Delta-native
 row-mutation operators a training-data pipeline needs (late-arriving
 corrections, GDPR deletes). The tests pin the scale property — files
-whose stats window provably misses the source keys / predicate are NOT
-rewritten — alongside the row-level semantics.
+holding no matched key / row are NOT touched — alongside the
+row-level semantics.
 """
 
-import shutil
-import tempfile
-
-import pytest
-
-from kafka_delta_ingest_spark.sinks.delta_like import DeltaLikeTable
+from kafka_delta_ingest_spark.delta_standard import DeltaStandardWriter, read_delta
 
 
 def _seed(t, spark, batches=3, n=10):
@@ -21,125 +16,127 @@ def _seed(t, spark, batches=3, n=10):
         df = spark.createDataFrame(
             [(i, f"old{i}") for i in range(lo, lo + n)], "id long, s string"
         ).coalesce(1)
-        t.write_batch(df)
+        t.write(df)
 
 
-def test_merge_upserts_and_prunes_untouched_files(spark):
-    root = tempfile.mkdtemp(prefix="kdi-merge-")
-    try:
-        t = DeltaLikeTable(root + "/t")
-        _seed(t, spark)  # files: ids 0-9, 10-19, 20-29
-        files_before = {f["path"] for f in t._live_files()}
-
-        # Updates confined to ids 0-4: stats prove files 10-19 and
-        # 20-29 cannot match, so they must survive untouched.
-        src = spark.createDataFrame(
-            [(i, f"new{i}") for i in range(5)], "id long, s string"
-        )
-        res = t.merge(spark, src, key_cols=["id"])
-        assert not res.skipped
-
-        got = {r.id: r.s for r in t.read(spark).collect()}
-        assert len(got) == 30
-        assert all(got[i] == f"new{i}" for i in range(5))
-        assert all(got[i] == f"old{i}" for i in range(5, 30))
-
-        files_after = {f["path"] for f in t._live_files()}
-        # Two of the three original files survived the merge unrewritten.
-        assert len(files_before & files_after) == 2
-
-        # Insert-only merge (keys beyond every file's window): nothing
-        # is rewritten, the source appends.
-        ins = spark.createDataFrame(
-            [(i, f"ins{i}") for i in range(100, 105)], "id long, s string"
-        )
-        pre = {f["path"] for f in t._live_files()}
-        t.merge(spark, ins, key_cols=["id"])
-        post = {f["path"] for f in t._live_files()}
-        assert pre <= post  # old files all survive
-        assert t.read(spark).count() == 35
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+def _live(t):
+    return t._py_replay()["adds"]
 
 
-def test_merge_source_dedup_and_time_travel(spark):
-    root = tempfile.mkdtemp(prefix="kdi-merge2-")
-    try:
-        t = DeltaLikeTable(root + "/t")
-        _seed(t, spark, batches=1)
-        v_before = t.snapshot()["version"]
-        # Duplicate keys in the source collapse before the upsert.
-        src = spark.createDataFrame(
-            [(3, "a"), (3, "b"), (99, "x")], "id long, s string"
-        )
-        t.merge(spark, src, key_cols=["id"])
-        assert t.read(spark).count() == 11
-        # Pre-merge snapshot still reconstructable (tombstones, no deletes).
-        assert t.read(spark, version=v_before).count() == 10
-        assert {
-            r.s for r in t.read(spark, version=v_before).filter("id = 3").collect()
-        } == {"old3"}
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+def _upsert(spark, t, src):
+    return t.merge(
+        spark, src, "source.id = target.id",
+        when_matched_update={"s": "source.s"},
+    )
 
 
-def test_delete_where_rewrites_only_matching_files(spark):
-    root = tempfile.mkdtemp(prefix="kdi-del-")
-    try:
-        t = DeltaLikeTable(root + "/t")
-        _seed(t, spark)
-        files_before = {f["path"] for f in t._live_files()}
+def test_merge_upserts_and_prunes_untouched_files(spark, tmp_path):
+    t = DeltaStandardWriter(str(tmp_path / "t"))
+    _seed(t, spark)  # files: ids 0-9, 10-19, 20-29
+    files_before = set(_live(t))
 
-        res = t.delete_where(spark, [("id", ">=", 20)])
-        assert not res.skipped
-        assert sorted(r.id for r in t.read(spark).collect()) == list(range(20))
-        files_after = {f["path"] for f in t._live_files()}
-        # files 0-9 and 10-19 survive by stats proof; 20-29 fully
-        # matched -> tombstoned with no replacement (0 surviving rows).
-        assert len(files_before & files_after) == 2
-        assert res.num_records == 0
+    # Updates confined to ids 0-4: files 10-19 and 20-29 hold no
+    # matched row, so they must survive untouched.
+    src = spark.createDataFrame(
+        [(i, f"new{i}") for i in range(5)], "id long, s string"
+    )
+    assert _upsert(spark, t, src) == 3
 
-        # A predicate no file can match is a no-op commit-free skip.
-        assert t.delete_where(spark, [("id", ">=", 1000)]).skipped
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    got = {r.id: r.s for r in read_delta(spark, t.root).collect()}
+    assert len(got) == 30
+    assert all(got[i] == f"new{i}" for i in range(5))
+    assert all(got[i] == f"old{i}" for i in range(5, 30))
+
+    files_after = set(_live(t))
+    # Two of the three original files survived the merge unrewritten.
+    assert len(files_before & files_after) == 2
+
+    # Insert-only merge (keys match no row): nothing is rewritten, the
+    # source appends.
+    ins = spark.createDataFrame(
+        [(i, f"ins{i}") for i in range(100, 105)], "id long, s string"
+    )
+    pre = set(_live(t))
+    _upsert(spark, t, ins)
+    assert pre <= set(_live(t))  # old files all survive
+    assert read_delta(spark, t.root).count() == 35
 
 
-def test_delete_where_keeps_null_predicate_rows(spark):
+def test_merge_source_dedup_and_time_travel(spark, tmp_path):
+    t = DeltaStandardWriter(str(tmp_path / "t"))
+    _seed(t, spark, batches=1)
+    v_before = t.latest_version()
+    # The source is deduplicated to one row per key before the upsert
+    # (a key matching twice is a cardinality violation).
+    src = spark.createDataFrame(
+        [(3, "a"), (3, "b"), (99, "x")], "id long, s string"
+    ).dropDuplicates(["id"])
+    _upsert(spark, t, src)
+    assert read_delta(spark, t.root).count() == 11
+    # Pre-merge snapshot still reconstructable (tombstones, no deletes).
+    old = read_delta(spark, t.root, version=v_before)
+    assert old.count() == 10
+    assert {r.s for r in old.filter("id = 3").collect()} == {"old3"}
+
+
+def test_delete_where_rewrites_only_matching_files(spark, tmp_path):
+    """DELETE writes a deletion vector on each file holding a matching
+    row — the file fully matched gets a DV over all its rows — and
+    leaves every other file's add untouched."""
+    t = DeltaStandardWriter(str(tmp_path / "t"))
+    _seed(t, spark)
+    before = _live(t)
+
+    v = t.delete_where(spark, "id >= 20")
+    assert v == 3
+    assert sorted(r.id for r in read_delta(spark, t.root).collect()) == list(range(20))
+    after = _live(t)
+    touched = {p for p, a in after.items() if a != before.get(p)}
+    assert len(touched) == 1
+    (dv,) = [after[p]["deletionVector"] for p in touched]
+    assert dv["cardinality"] == 10
+
+    # A predicate no row matches is a commit-free no-op.
+    assert t.delete_where(spark, "id >= 1000") == v
+    assert t.latest_version() == v
+
+
+def test_delete_where_keeps_null_predicate_rows(spark, tmp_path):
     """SQL DELETE removes rows where the predicate is TRUE — rows where
     it evaluates to NULL (here: s IS NULL under ``s = 'x'``) must
     survive, not be silently dropped by ``~NULL``."""
-    root = tempfile.mkdtemp(prefix="kdi-delnull-")
-    try:
-        t = DeltaLikeTable(root + "/t")
-        df = spark.createDataFrame(
+    t = DeltaStandardWriter(str(tmp_path / "t"))
+    t.write(
+        spark.createDataFrame(
             [(1, "x"), (2, "y"), (3, None), (4, "x"), (5, None)],
             "id long, s string",
         ).coalesce(1)
-        t.write_batch(df)
-
-        res = t.delete_where(spark, [("s", "=", "x")])
-        assert not res.skipped
-        got = {(r.id, r.s) for r in t.read(spark).collect()}
-        # Only the TRUE rows (1, 4) are deleted; NULL-predicate rows stay.
-        assert got == {(2, "y"), (3, None), (5, None)}
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    )
+    t.delete_where(spark, "s = 'x'")
+    got = {(r.id, r.s) for r in read_delta(spark, t.root).collect()}
+    # Only the TRUE rows (1, 4) are deleted; NULL-predicate rows stay.
+    assert got == {(2, "y"), (3, None), (5, None)}
 
 
 def test_delete_everything_reads_empty(spark, tmp_path):
-    """Deleting every row must leave a readable EMPTY table — the
-    zero-live-files read path must not fall back to a directory scan,
-    which would resurrect tombstoned-but-unvacuumed physical files
-    (minimal case of the model-fuzz falsifying example: optimize →
-    delete-all doubled the row count)."""
+    """Deleting every row must leave a readable EMPTY table — also once
+    OPTIMIZE has materialized the deletion vectors away and no data
+    file is left (the minimal case of the model fuzz: optimize →
+    delete-all → optimize)."""
     from pyspark.sql import Row
 
-    t = DeltaLikeTable(str(tmp_path / "t"))
-    t.write_batch(spark.createDataFrame([Row(id=i, val=f"v{i}") for i in range(8)]))
+    t = DeltaStandardWriter(str(tmp_path / "t"))
+    t.write(spark.createDataFrame([Row(id=i, val=f"v{i}") for i in range(8)]))
     t.optimize(spark, target_file_bytes=1 << 20)
-    res = t.delete_where(spark, [("id", "<", 100)])
-    assert not res.skipped
-    empty = t.read(spark)
+    t.delete_where(spark, "id < 100")
+    empty = read_delta(spark, t.root)
     assert empty.count() == 0
     assert set(empty.columns) == {"id", "val"}  # schema survives
+    t.optimize(spark, target_file_bytes=1 << 20)
+    assert not _live(t)
+    empty = read_delta(spark, t.root)
+    assert empty.count() == 0 and set(empty.columns) == {"id", "val"}
+    # DML on the file-less table: deletes are no-ops, MERGE inserts.
+    assert t.delete_where(spark, "id < 100") == t.latest_version()
+    t.merge(spark, spark.createDataFrame([Row(id=1, val="back")]), "source.id = target.id")
+    assert [(r.id, r.val) for r in read_delta(spark, t.root).collect()] == [(1, "back")]

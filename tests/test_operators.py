@@ -1801,3 +1801,34 @@ def test_kmeans_train_budget_noop_below_budget_and_samples_above(
     assert {r.cent_id: list(r.cvec) for r in small} == {
         r.cent_id: list(r.cvec) for r in again
     }
+
+
+def test_source_mix_decorrelated_from_split(spark):
+    """source_mix's salted hash must be independent of
+    deterministic_split's bucket: a 0.4-weight source must still land
+    rows in the holdout split (unsalted, every survivor had
+    bucket < 40 < 90 -> train, emptying the holdout)."""
+    from kafka_delta_ingest_spark.operators.sampling import (
+        deterministic_split,
+        source_mix,
+    )
+
+    d = load_table(spark, SF_DIR, "documents")
+    mixed = source_mix(d, {f"src{i}": (1.0 if i % 2 == 0 else 0.4) for i in range(20)})
+    split = deterministic_split(mixed, "doc_id", train_pct=90)
+    odd_holdout = split.filter(
+        (F.col("split") == "holdout")
+        & (F.expr("CAST(substr(source, 4) AS INT) % 2 = 1"))
+    ).count()
+    assert odd_holdout > 0
+
+
+def test_stratified_subpercent_fraction_not_dropped(spark):
+    """A 0.5% fraction must sample ~0.5%, not quantize to zero."""
+    from kafka_delta_ingest_spark.operators.sampling import (
+        hash_stratified_sample,
+    )
+
+    d = spark.range(200_000).selectExpr("id AS doc_id", "'en' AS lang")
+    got = hash_stratified_sample(d, "lang", {"en": 0.005}).count()
+    assert 500 <= got <= 1500  # ~1000 expected; zero was the bug

@@ -1,9 +1,8 @@
 """Sink contract: every ingest destination (sinks.base.Sink) behaves the
 same at the write / replay / offset-bootstrap / read surface
 (reference src/delta_helpers.rs:15-40, src/offsets.rs:36-102), and the
-jar-free logs normalize to one recorded action stream
-(tests/fixtures/sink_action_stream.json), so protocol drift in either
-Delta writer is caught.
+standard Delta writer's log normalizes to one recorded action stream
+(tests/fixtures/sink_action_stream.json), so protocol drift is caught.
 """
 
 import json
@@ -13,13 +12,12 @@ import pytest
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from kafka_delta_ingest_spark.config import IngestOptions
+from kafka_delta_ingest_spark.delta_standard import DeltaStandardWriter, read_delta
 from kafka_delta_ingest_spark.offsets import (
     InconsistentStoredOffsets,
     write_offsets_to_table,
 )
 from kafka_delta_ingest_spark.sinks.base import open_sink
-from kafka_delta_ingest_spark.sinks.delta_like import DeltaLikeTable
-from kafka_delta_ingest_spark.sinks.log_compare import normalize_log
 
 FIXTURE = os.path.join(os.path.dirname(__file__), "fixtures", "sink_action_stream.json")
 
@@ -95,22 +93,73 @@ def test_offset_bootstrap_contract(spark, fmt, tmp_path):
     assert _ids(spark, t) == [5, 6, 7]
 
 
-def _append(t, df, txn):
-    return t.write_batch(df, partition_by=["date"], txn=txn)
+#: operation name → category, so the recorded stream names what a
+#: commit did rather than one engine's spelling of it.
+_OP_CATEGORY = {
+    "WRITE": "append",
+    "STREAMING UPDATE": "append",
+    "DELETE": "delete",
+    "MERGE": "merge",
+}
+
+
+def normalize_log(table_path: str) -> list[dict]:
+    """One engine-independent dict per commit of a ``_delta_log``:
+    operation category, txn (appId, version) pairs, add/remove counts,
+    per-file record counts and partition values, and how many adds
+    carry a deletion vector. Timestamps, file names and byte sizes
+    are dropped."""
+    log = os.path.join(table_path, "_delta_log")
+    versions = sorted(
+        int(f[:20]) for f in os.listdir(log) if f.endswith(".json") and f[:20].isdigit()
+    )
+    out = []
+    for v in versions:
+        with open(os.path.join(log, f"{v:020d}.json")) as f:
+            acts = [json.loads(line) for line in f if line.strip()]
+        op = next(a["commitInfo"]["operation"] for a in acts if "commitInfo" in a)
+        adds = sorted(
+            (
+                {
+                    "partitionValues": dict(a["add"].get("partitionValues", {})),
+                    "numRecords": json.loads(a["add"]["stats"])["numRecords"],
+                }
+                for a in acts
+                if "add" in a
+            ),
+            key=lambda d: (sorted(d["partitionValues"].items()), d["numRecords"]),
+        )
+        out.append(
+            {
+                "version": v,
+                "operation": _OP_CATEGORY.get(op, op.lower()),
+                "metaData": any("metaData" in a for a in acts),
+                "txn": sorted([a["txn"]["appId"], a["txn"]["version"]] for a in acts if "txn" in a),
+                "numAdds": len(adds),
+                "numRemoves": sum("remove" in a for a in acts),
+                "numRecords": sum(a["numRecords"] for a in adds),
+                "adds": adds,
+                "numDeletionVectors": sum(
+                    "deletionVector" in a.get("add", {}) for a in acts
+                ),
+            }
+        )
+    return out
 
 
 def _run_scenario(spark, path):
     """The canonical batch sequence for the recorded-log comparison."""
-    t = DeltaLikeTable(path)
-    _append(t, _batch(spark, 0, 10, "2024-01-01"), {"app-0": 5})
-    _append(t, _batch(spark, 10, 20, "2024-01-02"), {"app-0": 6, "app-1": 3})
-    assert _append(t, _batch(spark, 10, 20, "2024-01-02"), {"app-0": 6}).skipped
-    t.delete_where(spark, [("id", "<", 5)])
+    t = DeltaStandardWriter(path)
+    t.write(_batch(spark, 0, 10, "2024-01-01"), partition_by=["date"], txn={"app-0": 5})
+    t.write(_batch(spark, 10, 20, "2024-01-02"), txn={"app-0": 6, "app-1": 3})
+    _v, adds = t.write_adds(_batch(spark, 10, 20, "2024-01-02"), txn={"app-0": 6})
+    assert not adds  # replay skipped
+    t.delete_where(spark, "id < 5")
     src = spark.createDataFrame(
         [(7, "patched", "2024-01-01"), (42, "new", "2024-01-02")],
         "id long, user string, date string",
     )
-    t.merge(spark, src, key_cols=["id"])
+    t.merge(spark, src, "source.id = target.id", when_matched_update={"user": "source.user"})
     return t
 
 
@@ -119,43 +168,35 @@ def test_action_stream_matches_recorded_fixture(spark, tmp_path):
     byte-stable against the recorded fixture — the contract a real
     Delta log can be diffed against on a jarred cluster."""
     t = _run_scenario(spark, str(tmp_path / "t"))
-    got = normalize_log(t.path)
+    got = normalize_log(t.root)
     with open(FIXTURE) as f:
         want = json.load(f)
     assert got == want
-    ids = sorted(r.id for r in t.read(spark).select("id").collect())
+    ids = sorted(r.id for r in read_delta(spark, t.root).select("id").collect())
     assert ids == list(range(5, 20)) + [42]
 
 
 def test_standard_writer_log_normalizes_like_recorded_fixture(
     spark, tmp_path
 ):
-    """The STANDARD-layout writer (delta_standard.DeltaStandardWriter)
-    must produce the same normalized action stream the kdi sink
-    records for the append scenario. Covers operation category, txn
-    (appId, version) pairs, add counts, per-file record counts, and
-    partition values; also pins the txn replay-skip."""
-    from kafka_delta_ingest_spark.delta_standard import (
-        DeltaStandardWriter,
-    )
+    """The append half of the scenario through the sink surface
+    (DeltaStandardSink.write_batch, what ingest calls) normalizes to
+    the recorded appends. Covers operation category, txn (appId,
+    version) pairs, add counts, per-file record counts, and partition
+    values; also pins the txn replay-skip."""
+    from kafka_delta_ingest_spark.delta_standard import DeltaStandardSink
 
-    t = DeltaStandardWriter(str(tmp_path / "t"))
-    t.write(_batch(spark, 0, 10, "2024-01-01"), partition_by=["date"],
-            txn={"app-0": 5})
-    t.write(_batch(spark, 10, 20, "2024-01-02"),
-            txn={"app-0": 6, "app-1": 3})
+    t = DeltaStandardSink(str(tmp_path / "t"))
+    t.write_batch(_batch(spark, 0, 10, "2024-01-01"), partition_by=["date"],
+                  txn={"app-0": 5})
+    t.write_batch(_batch(spark, 10, 20, "2024-01-02"),
+                  txn={"app-0": 6, "app-1": 3})
     # identical replay must be skipped (no third commit)
-    assert t.write(_batch(spark, 10, 20, "2024-01-02"),
-                   txn={"app-0": 6}) == 1
-    keys = ("operation", "txn", "numAdds", "numRemoves", "numRecords",
-            "adds", "metaData")
-    got = [
-        {k: c[k] for k in keys}
-        for c in normalize_log(str(tmp_path / "t"))
-    ]
+    replay = t.write_batch(_batch(spark, 10, 20, "2024-01-02"), txn={"app-0": 6})
+    assert replay.skipped and replay.version == 1
     with open(FIXTURE) as f:
-        want = [{k: c[k] for k in keys} for c in json.load(f)[:2]]
-    assert got == want
+        want = json.load(f)[:2]
+    assert normalize_log(str(tmp_path / "t")) == want
 
 
 def test_action_stream_protocol_shape(spark, tmp_path):
@@ -163,8 +204,10 @@ def test_action_stream_protocol_shape(spark, tmp_path):
     commitInfo leads every commit, rewrites list removes before adds,
     every add carries parseable stats, and partitionValues mirror the
     Hive directory the file lives in."""
+    from urllib.parse import unquote
+
     t = _run_scenario(spark, str(tmp_path / "t"))
-    log = os.path.join(t.path, "_kdi_log")
+    log = os.path.join(t.root, "_delta_log")
     for fname in sorted(f for f in os.listdir(log) if f.endswith(".json") and f[:20].isdigit()):
         with open(os.path.join(log, fname)) as f:
             actions = [json.loads(line) for line in f]
@@ -176,6 +219,6 @@ def test_action_stream_protocol_shape(spark, tmp_path):
             if "add" not in a:
                 continue
             add = a["add"]
-            assert add["stats"]["numRecords"] > 0
+            assert json.loads(add["stats"])["numRecords"] > 0
             for col, val in add["partitionValues"].items():
-                assert f"{col}={val}" in add["path"]
+                assert f"{col}={val}" in unquote(add["path"])

@@ -5,7 +5,7 @@ constraint rides in metaData configuration (``delta.constraints.*``,
 the protocol channel delta-spark enforces) with the protocol bumped
 to minWriterVersion 3; existing rows are validated before the DDL is
 accepted; write/UPDATE/MERGE all enforce; NULL check results satisfy
-(SQL standard). kdi-sink counterpart: tests/test_constraints.py.
+(SQL standard). See also tests/test_constraints.py.
 """
 
 import json
@@ -19,7 +19,7 @@ from kafka_delta_ingest_spark.delta_standard import (
     DeltaStandardWriter,
     read_delta,
 )
-from kafka_delta_ingest_spark.sinks.delta_like import ConstraintViolation
+from kafka_delta_ingest_spark.sinks.base import ConstraintViolation
 
 
 def _w(spark, rows=None):
@@ -107,5 +107,30 @@ def test_duplicate_constraint_refused(spark):
         w.add_constraint(spark, "c", "qty > 0")
         with pytest.raises(ValueError, match="already exists"):
             w.add_constraint(spark, "c", "qty > 1")
+    finally:
+        shutil.rmtree(os.path.dirname(root), ignore_errors=True)
+
+
+def test_concurrent_constraint_ddls_not_lost(spark, monkeypatch):
+    """Two ADD CONSTRAINTs racing from the same snapshot: the loser's
+    commit conflicts instead of erasing the winner's constraint, and
+    its retry (a fresh snapshot) lands both."""
+    from kafka_delta_ingest_spark.delta_standard import ConcurrentDeltaWriteError
+
+    w, root = _w(spark)
+    try:
+        b = DeltaStandardWriter(root)
+        # B's snapshot read sees the pre-race version; A commits first.
+        stale = [w.latest_version()]
+        real = b.latest_version
+        monkeypatch.setattr(
+            b, "latest_version", lambda: stale.pop() if stale else real()
+        )
+        w.add_constraint(spark, "a_pos", "id >= 0")
+        with pytest.raises(ConcurrentDeltaWriteError):
+            b.add_constraint(spark, "b_pos", "qty > 0")
+        assert w.constraints() == {"a_pos": "id >= 0"}
+        b.add_constraint(spark, "b_pos", "qty > 0")
+        assert set(w.constraints()) == {"a_pos", "b_pos"}
     finally:
         shutil.rmtree(os.path.dirname(root), ignore_errors=True)

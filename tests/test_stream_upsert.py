@@ -1,4 +1,4 @@
-"""Streaming CDC apply: a change stream upserted into the Delta-style
+"""Streaming CDC apply: a change stream upserted into a standard Delta
 table via foreachBatch + MERGE.
 
 The pattern every warehouse ingest uses for mutable sources: each
@@ -15,14 +15,30 @@ import time
 
 from pyspark.sql import Window, functions as F
 
-from kafka_delta_ingest_spark.sinks.delta_like import DeltaLikeTable
+from kafka_delta_ingest_spark.delta_standard import DeltaStandardWriter, read_delta
+
+
+def _latest_per_key(bdf, order_col):
+    w = Window.partitionBy("k").orderBy(F.col(order_col).desc())
+    return (
+        bdf.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn")
+    )
+
+
+def _upsert(t, spark, src):
+    return t.merge(
+        spark, src, "source.k = target.k",
+        when_matched_update={"v": "source.v", "seq": "source.seq"},
+    )
 
 
 def test_stream_of_changes_upserts_to_latest_state(spark):
     d = tempfile.mkdtemp(prefix="kdi-cdc-")
     try:
         src, ckpt, table = d + "/src", d + "/ckpt", d + "/t"
-        t = DeltaLikeTable(table)
+        t = DeltaStandardWriter(table)
         spark.createDataFrame(
             [(1, "a1", 1), (2, "a2", 2)], "k long, v string, seq long"
         ).coalesce(1).write.mode("append").parquet(src)
@@ -33,13 +49,11 @@ def test_stream_of_changes_upserts_to_latest_state(spark):
         ).coalesce(1).write.mode("append").parquet(src)
 
         def apply_cdc(bdf, _bid):
-            w = Window.partitionBy("k").orderBy(F.col("seq").desc())
-            latest = (
-                bdf.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1)
-                .drop("_rn")
-            )
-            t.merge(bdf.sparkSession, latest, key_cols=["k"])
+            latest = _latest_per_key(bdf, "seq")
+            if t.latest_version() < 0:  # the first batch creates the table
+                t.write(latest)
+            else:
+                _upsert(t, bdf.sparkSession, latest)
 
         q = (
             spark.readStream.schema("k long, v string, seq long")
@@ -52,28 +66,28 @@ def test_stream_of_changes_upserts_to_latest_state(spark):
         )
         q.awaitTermination(180)
 
-        got = {r.k: r.v for r in t.read(spark).collect()}
+        got = {r.k: r.v for r in read_delta(spark, table).collect()}
         assert got == {1: "a1", 2: "b2", 3: "b3x"}
         # Replaying the same change set converges (idempotent apply).
         replay = spark.createDataFrame(
             [(2, "b2", 3), (3, "b3x", 5)], "k long, v string, seq long"
         )
-        t.merge(spark, replay, key_cols=["k"])
-        assert {r.k: r.v for r in t.read(spark).collect()} == got
+        _upsert(t, spark, replay)
+        assert {r.k: r.v for r in read_delta(spark, table).collect()} == got
     finally:
         shutil.rmtree(d, ignore_errors=True)
 
 
 def test_stream_of_cdf_changes_applies_deletes_and_upserts(spark):
-    """Streaming apply_changes: a change stream carrying inserts,
-    updates, AND delete tombstones (the table_changes row shape) folds
-    into the table per micro-batch — the streaming twin of
-    replicate_into's poll loop."""
+    """A change stream carrying inserts, updates, AND delete tombstones
+    (the table_changes row shape) folds into the table per
+    micro-batch: the latest change per key, MERGEd with a conditional
+    delete clause."""
     d = tempfile.mkdtemp(prefix="kdi-cdcd-")
     try:
         src, ckpt, table = d + "/src", d + "/ckpt", d + "/t"
-        t = DeltaLikeTable(table)
-        t.write_batch(
+        t = DeltaStandardWriter(table)
+        t.write(
             spark.createDataFrame(
                 [(1, "seed1"), (2, "seed2"), (3, "seed3")], "k long, v string"
             )
@@ -90,7 +104,20 @@ def test_stream_of_cdf_changes_applies_deletes_and_upserts(spark):
         ).coalesce(1).write.mode("append").parquet(src)
 
         def apply_feed(bdf, _bid):
-            t.apply_changes(bdf.sparkSession, bdf, key_cols=["k"])
+            latest = _latest_per_key(bdf, "_commit_version")
+            # a tombstone for a key the table never held inserts nothing
+            held = read_delta(bdf.sparkSession, table).select("k")
+            changes = latest.filter("_change_type != 'delete'").unionByName(
+                latest.filter("_change_type = 'delete'").join(held, "k", "left_semi")
+            )
+            t.merge(
+                bdf.sparkSession,
+                changes,
+                "source.k = target.k",
+                when_matched_delete="source._change_type = 'delete'",
+                when_matched_update={"v": "source.v"},
+                when_not_matched_insert={"k": "source.k", "v": "source.v"},
+            )
 
         q = (
             spark.readStream.schema(schema)
@@ -103,7 +130,7 @@ def test_stream_of_cdf_changes_applies_deletes_and_upserts(spark):
         )
         q.awaitTermination(180)
 
-        got = {r.k: r.v for r in t.read(spark).collect()}
+        got = {r.k: r.v for r in read_delta(spark, table).collect()}
         assert got == {2: "upd2", 3: "seed3", 4: "new4x"}
     finally:
         shutil.rmtree(d, ignore_errors=True)

@@ -26,7 +26,6 @@ from kafka_delta_ingest_spark.delta_standard import (
     read_delta,
 )
 from kafka_delta_ingest_spark.ingest import IngestJob
-from kafka_delta_ingest_spark.sinks.delta_like import DeltaLikeTable
 
 RAW_SCHEMA = (
     "value binary, partition int, offset long, topic string, "
@@ -285,14 +284,12 @@ def test_streaming_curation_matches_batch_pipeline(spark, tmp_path):
             .where(SF.col("_rn") == 1)
             .drop("_rn")
         )
-        try:
-            existing = table.read(spark).select(SF.md5("text").alias("h"))
-            fresh = first.join(existing, "h", "left_anti")
-        except Exception:  # first batch: table not created yet
-            fresh = first
-        return fresh.drop("h")
+        if table.latest_version() < 0:  # first batch: no table yet
+            return first.drop("h")
+        existing = read_delta(spark, table.root).select(SF.md5("text").alias("h"))
+        return first.join(existing, "h", "left_anti").drop("h")
 
-    table = DeltaLikeTable(table_dir)
+    table = DeltaStandardWriter(table_dir)
 
     def run_wave(rows, run_name):
         spark.createDataFrame(rows, schema).coalesce(1).write.mode(
@@ -303,7 +300,7 @@ def test_streaming_curation_matches_batch_pipeline(spark, tmp_path):
             .parquet(src)
             .writeStream.option("checkpointLocation", ckpt)
             .foreachBatch(
-                lambda df, bid: table.write_batch(curate_batch(df, table))
+                lambda df, bid: table.write(curate_batch(df, table))
             )
             .trigger(availableNow=True)
             .queryName(run_name)
@@ -315,12 +312,12 @@ def test_streaming_curation_matches_batch_pipeline(spark, tmp_path):
     run_wave(wave2, "curate_w2")
 
     streamed = {
-        (r.doc_id, r.text) for r in table.read(spark).collect()
+        (r.doc_id, r.text) for r in read_delta(spark, table_dir).collect()
     }
 
     # Batch twin over the union, same rules, one plan.
     union = spark.createDataFrame(wave1 + wave2, schema)
-    batch = curate_batch(union, DeltaLikeTable(str(tmp_path / "nope")))
+    batch = curate_batch(union, DeltaStandardWriter(str(tmp_path / "nope")))
     want = {(r.doc_id, r.text) for r in batch.collect()}
 
     assert streamed == want

@@ -1,133 +1,70 @@
-"""UPDATE WHERE, RESTORE, and the full Change Data Feed.
+"""UPDATE WHERE, RESTORE, and the full Change Data Feed on the standard
+Delta log.
 
-Rounds out the sink's Delta parity beyond the append-only reference
+Rounds out Delta parity beyond the append-only reference
 (kafka-delta-ingest writes only adds — src/writer.rs): UPDATE completes
 the DML triad next to MERGE/DELETE; RESTORE is the instant O(diff)
 rollback lever after a bad batch; CDF records row-level diffs as `cdc`
 actions (real Delta's action shape) so incremental consumers track the
-change rate, never table size.
+change rate, never table size. CDF is enabled on an existing table by
+one metadata commit, as ALTER TABLE SET TBLPROPERTIES does.
 """
 
 import os
 import shutil
-import tempfile
 
 import pytest
 
-from kafka_delta_ingest_spark.sinks.delta_like import (
-    ConstraintViolation,
-    DeltaLikeTable,
+from kafka_delta_ingest_spark.delta_standard import (
+    DeltaStandardWriter,
+    read_delta,
+    table_changes,
 )
 
 
-@pytest.fixture()
-def root():
-    d = tempfile.mkdtemp(prefix="kdi-urc-")
-    yield d
-    shutil.rmtree(d, ignore_errors=True)
+def _t(tmp_path):
+    return DeltaStandardWriter(str(tmp_path / "t"))
 
 
-def _seed(t, spark, batches=3, n=10):
-    for b in range(batches):
-        lo = b * n
-        df = spark.createDataFrame(
-            [(i, f"old{i}", i * 10) for i in range(lo, lo + n)],
-            "id long, s string, val long",
-        ).coalesce(1)
-        t.write_batch(df)
+def _rows(spark, t, version=None):
+    return sorted(tuple(r) for r in read_delta(spark, t.root, version=version).collect())
 
 
-def _rows(df):
-    return sorted(tuple(r) for r in df.collect())
+def _cdf(spark, t, after, to_v=None):
+    """The feed of the commits after version ``after``."""
+    return table_changes(spark, t.root, after + 1, to_v)
 
 
 # -- UPDATE WHERE ----------------------------------------------------------
 
 
-def test_update_where_rows_and_pruning(spark, root):
-    t = DeltaLikeTable(root + "/t")
-    _seed(t, spark)  # 3 files: ids 0-9, 10-19, 20-29
-    files_before = {f["path"] for f in t._live_files()}
-
-    res = t.update_where(
-        spark, {"s": "concat('upd', id)", "val": "val + 1"}, [("id", "<", 5)]
-    )
-    assert not res.skipped
-
-    got = {r.id: (r.s, r.val) for r in t.read(spark).collect()}
-    assert len(got) == 30
-    for i in range(5):
-        assert got[i] == (f"upd{i}", i * 10 + 1)
-    for i in range(5, 30):
-        assert got[i] == (f"old{i}", i * 10)
-
-    # Stats pruning: only the ids-0-9 file may match id<5; the other
-    # two files must survive the rewrite untouched.
-    files_after = {f["path"] for f in t._live_files()}
-    assert len(files_before & files_after) == 2
-
-
-def test_update_set_evaluates_against_preimage(spark, root):
-    t = DeltaLikeTable(root + "/t")
-    df = spark.createDataFrame([(1, 2), (3, 4)], "a long, b long")
-    t.write_batch(df)
+def test_update_set_evaluates_against_preimage(spark, tmp_path):
+    t = _t(tmp_path)
+    t.write(spark.createDataFrame([(1, 2), (3, 4)], "a long, b long"))
     # SQL UPDATE semantics: SET a=b, b=a swaps (both RHS read pre-image).
-    t.update_where(spark, {"a": "b", "b": "a"}, [("a", ">=", 0)])
-    assert _rows(t.read(spark)) == [(2, 1), (4, 3)]
+    t.update_where(spark, "a >= 0", {"a": "b", "b": "a"})
+    assert _rows(spark, t) == [(2, 1), (4, 3)]
 
 
-def test_update_null_predicate_rows_survive_unchanged(spark, root):
-    t = DeltaLikeTable(root + "/t")
-    df = spark.createDataFrame(
-        [(1, "x"), (None, "y")], "id long, s string"
-    )
-    t.write_batch(df)
-    t.update_where(spark, {"s": "'z'"}, [("id", "=", 1)])
-    got = {tuple(r) for r in t.read(spark).collect()}
+def test_update_null_predicate_rows_survive_unchanged(spark, tmp_path):
+    t = _t(tmp_path)
+    t.write(spark.createDataFrame([(1, "x"), (None, "y")], "id long, s string"))
+    t.update_where(spark, "id = 1", {"s": "'z'"})
+    got = {tuple(r) for r in read_delta(spark, t.root).collect()}
     # NULL-id row keeps its value: predicate NULL is not TRUE.
     assert got == {(1, "z"), (None, "y")}
 
 
-def test_update_unknown_column_raises(spark, root):
-    t = DeltaLikeTable(root + "/t")
-    t.write_batch(spark.createDataFrame([(1,)], "id long"))
-    with pytest.raises(ValueError, match="unknown columns"):
-        t.update_where(spark, {"nope": "1"}, [("id", "=", 1)])
-
-
-def test_update_check_constraint_blocks_commit(spark, root):
-    t = DeltaLikeTable(root + "/t")
-    t.write_batch(spark.createDataFrame([(1, 10), (2, 20)], "id long, val long"))
-    t.add_constraint(spark, "val_pos", "val > 0")
-    v_before = t.latest_version()
-    with pytest.raises(ConstraintViolation):
-        t.update_where(spark, {"val": "-1"}, [("id", "=", 1)])
-    assert t.latest_version() == v_before  # nothing landed
-    assert _rows(t.read(spark)) == [(1, 10), (2, 20)]
-
-
-def test_update_recomputes_generated_column(spark, root):
-    t = DeltaLikeTable(root + "/t")
-    t.write_batch(
-        spark.createDataFrame([(5, 50)], "id long, twice long")
-    )
-    t.set_generated_column("twice", "id * 10")
-    t.update_where(spark, {"id": "id + 1"}, [("id", "=", 5)])
-    # `twice` was not SET; its generation expression re-derives it from
-    # the updated id (Delta recomputes generated columns on UPDATE).
-    assert _rows(t.read(spark)) == [(6, 60)]
-
-
-def test_update_honors_deletion_vectors(spark, root):
-    t = DeltaLikeTable(root + "/t")
-    t.write_batch(
+def test_update_honors_deletion_vectors(spark, tmp_path):
+    t = _t(tmp_path)
+    t.write(
         spark.createDataFrame(
             [(i, i) for i in range(10)], "id long, val long"
         ).coalesce(1)
     )
-    t.delete_where(spark, [("id", "=", 3)], dv=True)
-    t.update_where(spark, {"val": "val + 100"}, [("id", "<", 5)])
-    got = {r.id: r.val for r in t.read(spark).collect()}
+    t.delete_where(spark, "id = 3")
+    t.update_where(spark, "id < 5", {"val": "val + 100"})
+    got = {r.id: r.val for r in read_delta(spark, t.root).collect()}
     assert 3 not in got  # DV-deleted row did not resurrect
     assert got[0] == 100 and got[4] == 104 and got[9] == 9
 
@@ -135,32 +72,35 @@ def test_update_honors_deletion_vectors(spark, root):
 # -- Change Data Feed ------------------------------------------------------
 
 
-def _cdf(t, spark, from_v, to_v=None):
-    return t.table_changes(spark, from_v, to_v)
-
-
-def test_cdf_append_streams_inserts(spark, root):
-    t = DeltaLikeTable(root + "/t")
-    t.write_batch(spark.createDataFrame([(1, "a")], "id long, s string"))
-    t.enable_cdf()
-    v = t.latest_version()
-    t.write_batch(spark.createDataFrame([(2, "b"), (3, "c")], "id long, s string"))
-    ch = _cdf(t, spark, v).select("id", "s", "_change_type").collect()
+def test_cdf_append_streams_inserts(spark, tmp_path):
+    t = _t(tmp_path)
+    t.write(spark.createDataFrame([(1, "a")], "id long, s string"))
+    v = t.enable_change_data_feed()
+    t.write(spark.createDataFrame([(2, "b"), (3, "c")], "id long, s string"))
+    ch = _cdf(spark, t, v).select("id", "s", "_change_type").collect()
     assert sorted((r.id, r.s, r._change_type) for r in ch) == [
         (2, "b", "insert"),
         (3, "c", "insert"),
     ]
 
 
-def test_cdf_delete_records_deleted_rows(spark, root):
-    t = DeltaLikeTable(root + "/t")
-    t.write_batch(
-        spark.createDataFrame([(i, f"s{i}") for i in range(6)], "id long, s string")
-    )
-    t.enable_cdf()
-    v = t.latest_version()
-    t.delete_where(spark, [("id", "<", 2)])
-    ch = _cdf(t, spark, v).collect()
+def test_enable_cdf_is_one_idempotent_metadata_commit(spark, tmp_path):
+    t = _t(tmp_path)
+    t.write(spark.createDataFrame([(1, "a")], "id long, s string"))
+    v = t.enable_change_data_feed()
+    assert v == 1
+    assert t.enable_change_data_feed() == v  # already on: no commit
+    meta = t._py_replay()["meta"]
+    assert meta["configuration"]["delta.enableChangeDataFeed"] == "true"
+    assert _rows(spark, t) == [(1, "a")]
+
+
+def test_cdf_delete_records_deleted_rows(spark, tmp_path):
+    t = _t(tmp_path)
+    t.write(spark.createDataFrame([(i, f"s{i}") for i in range(6)], "id long, s string"))
+    v = t.enable_change_data_feed()
+    t.delete_where(spark, "id < 2")
+    ch = _cdf(spark, t, v).collect()
     assert sorted((r.id, r._change_type) for r in ch) == [
         (0, "delete"),
         (1, "delete"),
@@ -168,32 +108,13 @@ def test_cdf_delete_records_deleted_rows(spark, root):
     assert all(r._commit_version == t.latest_version() for r in ch)
 
 
-def test_cdf_update_emits_pre_and_post_images(spark, root):
-    t = DeltaLikeTable(root + "/t")
-    t.write_batch(spark.createDataFrame([(1, 10), (2, 20)], "id long, val long"))
-    t.enable_cdf()
-    v = t.latest_version()
-    t.update_where(spark, {"val": "val + 5"}, [("id", "=", 2)])
-    ch = sorted(
-        (r.id, r.val, r._change_type) for r in _cdf(t, spark, v).collect()
-    )
-    assert ch == [(2, 20, "update_preimage"), (2, 25, "update_postimage")]
-
-
-def test_cdf_merge_classifies_updates_vs_inserts(spark, root):
-    t = DeltaLikeTable(root + "/t")
-    t.write_batch(
-        spark.createDataFrame([(1, "old1"), (2, "old2")], "id long, s string")
-    )
-    t.enable_cdf()
-    v = t.latest_version()
-    src = spark.createDataFrame(
-        [(2, "new2"), (9, "new9")], "id long, s string"
-    )
-    t.merge(spark, src, key_cols=["id"])
-    ch = sorted(
-        (r.id, r.s, r._change_type) for r in _cdf(t, spark, v).collect()
-    )
+def test_cdf_merge_classifies_updates_vs_inserts(spark, tmp_path):
+    t = _t(tmp_path)
+    t.write(spark.createDataFrame([(1, "old1"), (2, "old2")], "id long, s string"))
+    v = t.enable_change_data_feed()
+    src = spark.createDataFrame([(2, "new2"), (9, "new9")], "id long, s string")
+    t.merge(spark, src, "source.id = target.id", when_matched_update={"s": "source.s"})
+    ch = sorted((r.id, r.s, r._change_type) for r in _cdf(spark, t, v).collect())
     assert ch == [
         (2, "new2", "update_postimage"),
         (2, "old2", "update_preimage"),
@@ -201,247 +122,21 @@ def test_cdf_merge_classifies_updates_vs_inserts(spark, root):
     ]
 
 
-def test_cdf_dv_delete_only_newly_deleted_rows(spark, root):
-    t = DeltaLikeTable(root + "/t")
-    t.write_batch(
-        spark.createDataFrame(
-            [(i, i) for i in range(8)], "id long, val long"
-        ).coalesce(1)
-    )
-    t.enable_cdf()
-    v0 = t.latest_version()
-    t.delete_where(spark, [("id", "<", 2)], dv=True)
-    v1 = t.latest_version()
-    t.delete_where(spark, [("id", "<", 4)], dv=True)  # 0,1 already gone
-    first = sorted(r.id for r in _cdf(t, spark, v0, v1).collect())
-    second = sorted(r.id for r in _cdf(t, spark, v1).collect())
-    assert first == [0, 1]
-    assert second == [2, 3]  # cumulative sidecar, but cdc has only the delta
-    types = {r._change_type for r in _cdf(t, spark, v0).collect()}
-    assert types == {"delete"}
-
-
-def test_cdf_range_before_enable_raises(spark, root):
-    t = DeltaLikeTable(root + "/t")
-    t.write_batch(
-        spark.createDataFrame([(i,) for i in range(4)], "id long")
-    )
-    t.delete_where(spark, [("id", "=", 0)])  # pre-CDF rewrite
-    t.enable_cdf()
-    with pytest.raises(ValueError, match="enableChangeDataFeed"):
-        _cdf(t, spark, 0).collect()
-
-
-def test_cdf_skips_optimize(spark, root):
-    t = DeltaLikeTable(root + "/t")
-    for i in range(3):
-        t.write_batch(spark.createDataFrame([(i,)], "id long").coalesce(1))
-    t.enable_cdf()
-    v = t.latest_version()
-    t.optimize(spark)
-    assert _cdf(t, spark, v).count() == 0  # compaction is not a data change
-
-
-# -- RESTORE ---------------------------------------------------------------
-
-
-def test_restore_undoes_delete_preserving_history(spark, root):
-    t = DeltaLikeTable(root + "/t")
-    _seed(t, spark)
-    v_good = t.latest_version()
-    t.delete_where(spark, [("id", "<", 15)])
-    assert t.read(spark).count() == 15
-    res = t.restore(spark, v_good)
-    assert not res.skipped
-    assert t.read(spark).count() == 30
-    # History preserved: the deleted state is still time-travelable,
-    # and the restore landed as a NEW version on top.
-    assert t.read(spark, version=v_good + 1).count() == 15
-    assert t.latest_version() == v_good + 2
-
-
-def test_restore_is_log_only_when_cdf_off(spark, root):
-    t = DeltaLikeTable(root + "/t")
-    _seed(t, spark)
-    v_good = t.latest_version()
-    data_files_before = {
-        f for f in os.listdir(root + "/t") if f.endswith(".parquet")
-    }
-    t.delete_where(spark, [("id", ">=", 20)])
-    t.restore(spark, v_good)
-    # The restore re-references existing files; the only new parquet
-    # came from the DELETE's rewrite, none from RESTORE itself.
-    assert t.read(spark).count() == 30
-    live = {f["path"] for f in t._live_files()}
-    assert {f for f in live if "/" not in f} <= data_files_before | {
-        f for f in os.listdir(root + "/t") if f.endswith(".parquet")
-    }
-
-
-def test_restore_reverts_schema_evolution(spark, root):
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    t = DeltaLikeTable(root + "/t")
-    t.write_batch(spark.createDataFrame([(1,)], "id long"))
-    v0 = t.latest_version()
-    t.evolve_schema(
-        StructType(
-            [StructField("id", LongType()), StructField("extra", LongType())]
-        )
-    )
-    assert len(t.table_schema().fields) == 2
-    t.restore(spark, v0)
-    assert len(t.table_schema().fields) == 1
-
-
-def test_restore_emits_row_level_cdf(spark, root):
-    t = DeltaLikeTable(root + "/t")
-    t.write_batch(
-        spark.createDataFrame(
-            [(i, f"s{i}") for i in range(6)], "id long, s string"
-        ).coalesce(1)
-    )
-    t.enable_cdf()
-    v_good = t.latest_version()
-    t.delete_where(spark, [("id", "<", 2)])
-    v_del = t.latest_version()
-    t.restore(spark, v_good)
-    ch = sorted(
-        (r.id, r._change_type)
-        for r in _cdf(t, spark, v_del).collect()
-    )
-    # Exactly the deleted rows come back as inserts; the surviving rows
-    # (present in both snapshots' files) must NOT appear as changes.
-    assert ch == [(0, "insert"), (1, "insert")]
-
-
-def test_restore_across_dv_descriptor_change(spark, root):
-    t = DeltaLikeTable(root + "/t")
-    t.write_batch(
-        spark.createDataFrame(
-            [(i, i) for i in range(8)], "id long, val long"
-        ).coalesce(1)
-    )
-    t.enable_cdf()
-    v_good = t.latest_version()
-    t.delete_where(spark, [("id", "=", 5)], dv=True)
-    v_del = t.latest_version()
-    assert t.read(spark).count() == 7
-    t.restore(spark, v_good)
-    assert sorted(r.id for r in t.read(spark).collect()) == list(range(8))
-    # Row-exact CDF even though only the DV descriptor changed: the one
-    # masked row is the only insert.
-    ch = sorted(
-        (r.id, r._change_type) for r in _cdf(t, spark, v_del).collect()
-    )
-    assert ch == [(5, "insert")]
-
-
-def test_restore_after_vacuum_raises(spark, root):
-    t = DeltaLikeTable(root + "/t")
-    _seed(t, spark, batches=2)
-    v_good = t.latest_version()
-    t.delete_where(spark, [("id", "<", 100)])  # tombstones everything
-    t.vacuum(retention_ms=0)
-    with pytest.raises(ValueError, match="vacuumed"):
-        t.restore(spark, v_good)
-
-
-def test_vacuum_reclaims_orphaned_cdc_files(spark, root):
-    t = DeltaLikeTable(root + "/t")
-    t.write_batch(spark.createDataFrame([(1,)], "id long"))
-    t.enable_cdf()
-    t.delete_where(spark, [("id", "=", 1)])
-    cdc_dir = os.path.join(root + "/t", "_change_data")
-    referenced = {
-        os.path.join(dp, f)
-        for dp, _d, fs in os.walk(cdc_dir)
-        for f in fs
-        if f.endswith(".parquet")
-    }
-    # Plant an orphan (simulating a lost commit race).
-    orphan_dir = os.path.join(cdc_dir, "cdc-orphan")
-    os.makedirs(orphan_dir)
-    orphan = os.path.join(orphan_dir, "part-0.parquet")
-    next(iter(referenced))  # sanity: referenced set non-empty
-    shutil.copy(next(iter(referenced)), orphan)
-    t.vacuum(retention_ms=0)
-    assert not os.path.exists(orphan)
-    for f in referenced:  # referenced change files survive
-        assert os.path.exists(f)
-
-
-# -- conditional MERGE + CDC apply ----------------------------------------
-
-
-def test_merge_matched_delete_condition(spark, root):
-    t = DeltaLikeTable(root + "/t")
-    t.write_batch(
-        spark.createDataFrame(
-            [(1, "a"), (2, "b"), (3, "c")], "id long, s string"
-        )
-    )
-    src = spark.createDataFrame(
-        [
-            (2, "ignored", True),   # matched + flag -> delete
-            (3, "c2", False),       # matched -> update
-            (4, "d", False),        # unmatched -> insert
-            (5, "ghost", True),     # unmatched + flag -> no-op tombstone
-        ],
-        "id long, s string, is_del boolean",
-    )
-    t.merge(
-        spark, src, key_cols=["id"],
-        delete_condition="is_del", drop_cols=["is_del"],
-    )
-    got = {r.id: r.s for r in t.read(spark).collect()}
-    assert got == {1: "a", 3: "c2", 4: "d"}
-    assert t.table_schema().fieldNames() == ["id", "s"]  # flag never lands
-
-
-def test_merge_update_condition_stale_guard(spark, root):
-    t = DeltaLikeTable(root + "/t")
-    t.write_batch(
-        spark.createDataFrame(
-            [(1, "cur", 5), (2, "cur", 5)], "id long, s string, ver long"
-        )
-    )
-    src = spark.createDataFrame(
-        [
-            (1, "newer", 7),   # passes ver > 5 -> update
-            (2, "stale", 3),   # fails -> table row untouched
-            (9, "stale-but-new-key", 1),  # unmatched -> inserts regardless
-        ],
-        "id long, s string, ver long",
-    )
-    t.merge(spark, src, key_cols=["id"], update_condition="ver > 5")
-    got = {r.id: (r.s, r.ver) for r in t.read(spark).collect()}
-    assert got == {
-        1: ("newer", 7),
-        2: ("cur", 5),
-        9: ("stale-but-new-key", 1),
-    }
-
-
-def test_merge_conditional_cdf_classification(spark, root):
-    t = DeltaLikeTable(root + "/t")
-    t.write_batch(
-        spark.createDataFrame([(1, "a"), (2, "b")], "id long, s string")
-    )
-    t.enable_cdf()
-    v = t.latest_version()
+def test_merge_conditional_cdf_classification(spark, tmp_path):
+    t = _t(tmp_path)
+    t.write(spark.createDataFrame([(1, "a"), (2, "b")], "id long, s string"))
+    v = t.enable_change_data_feed()
     src = spark.createDataFrame(
         [(1, "x", True), (2, "b2", False), (7, "n", False)],
         "id long, s string, is_del boolean",
     )
     t.merge(
-        spark, src, key_cols=["id"],
-        delete_condition="is_del", drop_cols=["is_del"],
+        spark, src, "source.id = target.id",
+        when_matched_delete="source.is_del",
+        when_matched_update={"s": "source.s"},
+        when_not_matched_insert={"id": "source.id", "s": "source.s"},
     )
-    ch = sorted(
-        (r.id, r.s, r._change_type)
-        for r in t.table_changes(spark, v).collect()
-    )
+    ch = sorted((r.id, r.s, r._change_type) for r in _cdf(spark, t, v).collect())
     assert ch == [
         (1, "a", "delete"),
         (2, "b", "update_preimage"),
@@ -450,129 +145,139 @@ def test_merge_conditional_cdf_classification(spark, root):
     ]
 
 
-def test_apply_changes_maintains_replica(spark, root):
-    a = DeltaLikeTable(root + "/a")
-    b = DeltaLikeTable(root + "/b")
-    a.write_batch(
-        spark.createDataFrame(
-            [(i, f"s{i}", i) for i in range(6)], "id long, s string, val long"
+def test_cdf_dv_delete_only_newly_deleted_rows(spark, tmp_path):
+    t = _t(tmp_path)
+    t.write(spark.createDataFrame([(i, i) for i in range(8)], "id long, val long").coalesce(1))
+    v0 = t.enable_change_data_feed()
+    v1 = t.delete_where(spark, "id < 2")
+    t.delete_where(spark, "id < 4")  # 0,1 already gone
+    first = sorted(r.id for r in _cdf(spark, t, v0, v1).collect())
+    second = sorted(r.id for r in _cdf(spark, t, v1).collect())
+    assert first == [0, 1]
+    assert second == [2, 3]  # cumulative vector, but cdc has only the delta
+    assert {r._change_type for r in _cdf(spark, t, v0).collect()} == {"delete"}
+
+
+# -- RESTORE ---------------------------------------------------------------
+
+
+def _seed(t, spark, batches=3, n=10):
+    for b in range(batches):
+        lo = b * n
+        t.write(
+            spark.createDataFrame(
+                [(i, f"old{i}", i * 10) for i in range(lo, lo + n)],
+                "id long, s string, val long",
+            ).coalesce(1)
         )
+
+
+def test_restore_undoes_delete_preserving_history(spark, tmp_path):
+    t = _t(tmp_path)
+    _seed(t, spark)
+    v_good = t.latest_version()
+    t.delete_where(spark, "id < 15")
+    assert read_delta(spark, t.root).count() == 15
+    assert t.restore(v_good, spark) == v_good + 2
+    assert read_delta(spark, t.root).count() == 30
+    # History preserved: the deleted state is still time-travelable,
+    # and the restore landed as a NEW version on top.
+    assert read_delta(spark, t.root, version=v_good + 1).count() == 15
+
+
+def test_restore_is_log_only_when_cdf_off(spark, tmp_path):
+    t = _t(tmp_path)
+    _seed(t, spark)
+    v_good = t.latest_version()
+    t.update_where(spark, "id >= 20", {"val": "0"})
+
+    def files():
+        return {
+            os.path.join(dp, f) for dp, _d, fs in os.walk(t.root) for f in fs
+            if "_delta_log" not in dp
+        }
+
+    before = files()
+    t.restore(v_good, spark)
+    # The restore re-references existing files and writes no cdc.
+    assert files() == before
+    assert _rows(spark, t) == _rows(spark, t, v_good)
+
+
+def test_restore_reverts_schema_evolution(spark, tmp_path):
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    t = _t(tmp_path)
+    t.write(spark.createDataFrame([(1,)], "id long"))
+    v0 = t.latest_version()
+    t.evolve_schema(
+        StructType([StructField("id", LongType()), StructField("extra", LongType())])
     )
-    a.enable_cdf()
-    v0 = a.latest_version()
-    # Seed the replica from the initial snapshot.
-    b.write_batch(a.read(spark))
-
-    # Poll 1: an update + an insert batch.
-    a.update_where(spark, {"val": "val + 100"}, [("id", "<", 2)])
-    a.write_batch(spark.createDataFrame([(10, "new", 0)], "id long, s string, val long"))
-    v1 = a.latest_version()
-    b.apply_changes(spark, a.table_changes(spark, v0, v1), key_cols=["id"])
-    assert sorted(map(tuple, b.read(spark).collect())) == sorted(
-        map(tuple, a.read(spark).collect())
-    )
-
-    # Poll 2: delete + another update + a restore-free mix.
-    a.delete_where(spark, [("id", "=", 3)])
-    a.update_where(spark, {"s": "'zz'"}, [("id", "=", 10)])
-    b.apply_changes(spark, a.table_changes(spark, v1), key_cols=["id"])
-    assert sorted(map(tuple, b.read(spark).collect())) == sorted(
-        map(tuple, a.read(spark).collect())
-    )
+    assert read_delta(spark, t.root).columns == ["id", "extra"]
+    t.restore(v0, spark)
+    assert read_delta(spark, t.root).columns == ["id"]
 
 
-def test_apply_changes_collapses_to_net_effect(spark, root):
-    a = DeltaLikeTable(root + "/a")
-    b = DeltaLikeTable(root + "/b")
-    a.write_batch(spark.createDataFrame([(0, "seed")], "id long, s string"))
-    a.enable_cdf()
-    v0 = a.latest_version()
-    b.write_batch(a.read(spark))
-    # id=1: insert then delete -> must never appear in the replica.
-    # id=0: two updates -> only the LAST value applies.
-    a.merge(spark, spark.createDataFrame([(1, "born")], "id long, s string"), ["id"])
-    a.update_where(spark, {"s": "'mid'"}, [("id", "=", 0)])
-    a.delete_where(spark, [("id", "=", 1)])
-    a.update_where(spark, {"s": "'final'"}, [("id", "=", 0)])
-    feed = a.table_changes(spark, v0)
-    b.apply_changes(spark, feed, key_cols=["id"])
-    assert [tuple(r) for r in b.read(spark).collect()] == [(0, "final")]
-
-
-# -- deletion-vector UPDATE ------------------------------------------------
-
-
-def test_update_dv_masks_preimage_and_appends_postimage(spark, root):
-    t = DeltaLikeTable(root + "/t")
-    t.write_batch(
-        spark.createDataFrame(
-            [(i, i) for i in range(10)], "id long, val long"
-        ).coalesce(1)
-    )
-    orig = {f["path"] for f in t._live_files()}
-    t.update_where(spark, {"val": "val + 100"}, [("id", "<", 3)], dv=True)
-    got = {r.id: r.val for r in t.read(spark).collect()}
-    assert got == {i: (i + 100 if i < 3 else i) for i in range(10)}
-    live = t._live_files()
-    # The original file survives (re-added with a DV descriptor masking
-    # the 3 pre-image rows); the post-image rows are a NEW small file.
-    by_path = {f["path"]: f for f in live}
-    assert orig <= set(by_path)
-    assert by_path[next(iter(orig))]["deletionVector"]["cardinality"] == 3
-    assert len(live) == 2
-    # Metadata-only count stays exact through the mask+append.
-    assert t.count_rows() == 10
-
-
-def test_update_dv_twice_same_rows(spark, root):
-    t = DeltaLikeTable(root + "/t")
-    t.write_batch(
-        spark.createDataFrame(
-            [(i, i) for i in range(6)], "id long, val long"
-        ).coalesce(1)
-    )
-    t.update_where(spark, {"val": "val + 10"}, [("id", "=", 2)], dv=True)
-    # Second DV update hits the POST-image row (in the appended file).
-    t.update_where(spark, {"val": "val + 10"}, [("id", "=", 2)], dv=True)
-    got = {r.id: r.val for r in t.read(spark).collect()}
-    assert got[2] == 22 and len(got) == 6
-    assert t.count_rows() == 6
-
-
-def test_update_dv_emits_cdf_images(spark, root):
-    t = DeltaLikeTable(root + "/t")
-    t.write_batch(
-        spark.createDataFrame([(1, 10), (2, 20)], "id long, val long").coalesce(1)
-    )
-    t.enable_cdf()
-    v = t.latest_version()
-    t.update_where(spark, {"val": "val * 2"}, [("id", "=", 1)], dv=True)
+def test_restore_emits_row_level_cdf(spark, tmp_path):
+    t = _t(tmp_path)
+    t.write(spark.createDataFrame([(i, f"s{i}") for i in range(6)], "id long, s string").coalesce(1))
+    v_good = t.enable_change_data_feed()
+    v_del = t.update_where(spark, "id < 2", {"s": "'gone'"})
+    t.restore(v_good, spark)
     ch = sorted(
-        (r.id, r.val, r._change_type)
-        for r in t.table_changes(spark, v).collect()
+        (r.id, r.s, r._change_type) for r in _cdf(spark, t, v_del).collect()
     )
-    assert ch == [(1, 10, "update_preimage"), (1, 20, "update_postimage")]
+    # Exactly the changed rows come back; the surviving rows carried
+    # through the rewritten file must NOT appear as changes.
+    assert ch == [
+        (0, "gone", "delete"),
+        (0, "s0", "insert"),
+        (1, "gone", "delete"),
+        (1, "s1", "insert"),
+    ]
 
 
-def test_optimize_materializes_dv_update(spark, root):
-    t = DeltaLikeTable(root + "/t")
-    t.write_batch(
-        spark.createDataFrame(
-            [(i, i) for i in range(8)], "id long, val long"
-        ).coalesce(1)
-    )
-    t.update_where(spark, {"val": "-1"}, [("id", ">=", 6)], dv=True)
-    t.optimize(spark)
-    assert all(not f.get("deletionVector") for f in t._live_files())
-    got = {r.id: r.val for r in t.read(spark).collect()}
-    assert got == {i: (-1 if i >= 6 else i) for i in range(8)}
+def test_restore_across_dv_descriptor_change(spark, tmp_path):
+    t = _t(tmp_path)
+    t.write(spark.createDataFrame([(i, i) for i in range(8)], "id long, val long").coalesce(1))
+    v_good = t.enable_change_data_feed()
+    v_del = t.delete_where(spark, "id = 5")
+    assert read_delta(spark, t.root).count() == 7
+    t.restore(v_good, spark)
+    assert sorted(r.id for r in read_delta(spark, t.root).collect()) == list(range(8))
+    # Row-exact CDF even though only the DV descriptor changed: the one
+    # masked row is the only insert.
+    ch = sorted((r.id, r._change_type) for r in _cdf(spark, t, v_del).collect())
+    assert ch == [(5, "insert")]
 
 
-def test_merge_computes_generated_columns(spark, root):
-    t = DeltaLikeTable(root + "/t")
-    t.write_batch(spark.createDataFrame([(1, 10)], "id long, twice long"))
-    t.set_generated_column("twice", "id * 10")
-    src = spark.createDataFrame([(2,)], "id long")  # omits `twice`
-    t.merge(spark, src, key_cols=["id"])
-    got = {r.id: r.twice for r in t.read(spark).collect()}
-    assert got == {1: 10, 2: 20}  # computed in-flight, not NULL
+def test_restore_after_vacuum_raises(spark, tmp_path):
+    t = _t(tmp_path)
+    _seed(t, spark, batches=2)
+    v_good = t.latest_version()
+    t.write(spark.createDataFrame([(99, "x", 0)], "id long, s string, val long"), mode="overwrite")
+    t.vacuum(retention_ms=0)
+    with pytest.raises(ValueError, match="vacuumed"):
+        t.restore(v_good, spark)
+
+
+def test_vacuum_reclaims_orphaned_cdc_files(spark, tmp_path):
+    t = _t(tmp_path)
+    t.write(spark.createDataFrame([(1,), (2,)], "id long"))
+    t.enable_change_data_feed()
+    t.delete_where(spark, "id = 1")
+    cdc_dir = os.path.join(t.root, "_change_data")
+    referenced = {os.path.join(cdc_dir, f) for f in os.listdir(cdc_dir)}
+    # Plant an orphan (simulating a lost commit race).
+    orphan = os.path.join(cdc_dir, "cdc-orphan.parquet")
+    shutil.copy(next(iter(referenced)), orphan)
+    t.vacuum(retention_ms=0)
+    assert not os.path.exists(orphan)
+    # Referenced change files age out with their commit, like data
+    # tombstones; inside the retention window they survive.
+    t2 = _t(tmp_path / "b")
+    t2.write(spark.createDataFrame([(1,), (2,)], "id long"))
+    t2.enable_change_data_feed()
+    t2.delete_where(spark, "id = 1")
+    t2.vacuum()
+    assert os.listdir(os.path.join(t2.root, "_change_data"))
