@@ -313,13 +313,10 @@ def run_table(args: argparse.Namespace) -> int:
             print(f"v={h['version']} ts={h['timestamp']} op={h['operation']}")
         return 0
     if args.action == "count":
-        n = None if args.where else w.count_rows()
-        if n is not None:
-            print(f"count={n} source=log")
+        if not args.where:
+            print(f"count={w.count_rows()} source=log")
             return 0
-        df = read_delta(get_spark("kdi-table"), loc)
-        if args.where:
-            df = df.filter(args.where)
+        df = read_delta(get_spark("kdi-table"), loc).filter(args.where)
         print(f"count={df.count()} source=scan")
         return 0
     if args.action == "vacuum":

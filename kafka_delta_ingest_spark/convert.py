@@ -13,8 +13,9 @@ forever after (for the converted snapshot).
 
 Scale notes:
 
-* The Delta replay is the same Spark-side add/remove reconciliation
-  ``read_delta`` uses — tombstones never reach the driver.
+* The Delta replay is the driver-side pyarrow replay ``read_delta``
+  uses: checkpoint columns are filtered before they become Python
+  objects, and no Spark job runs.
 * Per-file footer statistics (record counts, null counts, bounds)
   are computed EXECUTOR-side via ``mapInPandas`` over the file list;
   the driver only collects the manifest-sized result (it must hold
@@ -74,6 +75,7 @@ def convert_delta_to_iceberg(
         _resolve_version,
         _schema_mapping,
     )
+    from kafka_delta_ingest_spark.logstore import get_log_store
     from kafka_delta_ingest_spark.iceberg import (
         IcebergWriter,
         _spark_type_to_iceberg,
@@ -83,10 +85,10 @@ def convert_delta_to_iceberg(
     if ts_ms is None:
         ts_ms = int(time.time() * 1000)
     log = _log_path(delta_path)
-    target = _resolve_version(log, version, None)
-    state = _replay(spark, delta_path, target)
+    store = get_log_store(delta_path)
+    state = _replay(log, _resolve_version(log, store, version), store)
     meta = state["meta"]
-    adds = state["adds"]
+    adds = list(state["adds"].values())
     if meta is None:
         raise ValueError(f"{delta_path} has no table metadata")
     dv = [a["path"] for a in adds if a.get("deletionVector")]
@@ -652,6 +654,7 @@ def bootstrap_delta_to_hudi(
         _resolve_version,
         _schema_mapping,
     )
+    from kafka_delta_ingest_spark.logstore import get_log_store
 
     if os.path.isdir(os.path.join(hudi_path, ".hoodie")):
         raise ValueError(
@@ -659,10 +662,10 @@ def bootstrap_delta_to_hudi(
             "creates fresh metadata"
         )
     log = _log_path(delta_path)
-    target = _resolve_version(log, version, None)
-    state = _replay(spark, delta_path, target)
+    store = get_log_store(delta_path)
+    state = _replay(log, _resolve_version(log, store, version), store)
     meta = state["meta"]
-    adds = state["adds"]
+    adds = list(state["adds"].values())
     if meta is None:
         raise ValueError(f"{delta_path} has no table metadata")
     dv = [a["path"] for a in adds if a.get("deletionVector")]

@@ -7,11 +7,15 @@ The reader consumes tables that real Delta writers (delta-spark,
 delta-rs, the reference ingest daemon itself —
 src/delta_helpers.rs:15-40) produced under ``_delta_log/``:
 
-* log replay: ``%020d.json`` JSON-lines commits, starting from the
-  newest parquet checkpoint at or below the target version
-  (``_last_checkpoint`` pointer, single- and multi-part
-  ``%020d.checkpoint[.%010d.%010d].parquet``) — the log scan is
-  O(commits since checkpoint), not O(table history);
+* log replay: one driver-side :func:`_replay`, shared by the reader,
+  the writer, the change feed, VACUUM and conversion, reads every log
+  file through the table's ``LogStore``. It starts from the newest
+  checkpoint at or below the target version (``_last_checkpoint``
+  pointer, single- and multi-part
+  ``%020d.checkpoint[.%010d.%010d].parquet``, V2 JSON or parquet
+  manifests with their ``_sidecars/``), read with pyarrow one action
+  column at a time, then applies the ``%020d.json`` commits after it
+  — O(commits since checkpoint), and no Spark job;
 * state reconstruction: latest protocol/metaData, live file set =
   adds minus removes keyed by path;
 * partition columns: standard Delta stores them in ``add.
@@ -44,6 +48,7 @@ import json
 import os
 import urllib.parse
 
+from kafka_delta_ingest_spark.logstore import LocalLogStore, get_log_store
 from kafka_delta_ingest_spark.sinks.base import (
     CommitResult,
     ConstraintViolation,
@@ -76,15 +81,22 @@ def _log_path(table_path: str) -> str:
 
 
 def _commit_versions(log: str, store=None) -> list[int]:
-    names = store.list_dir(log) if store is not None else os.listdir(log)
-    out = []
-    for f in names:
-        if f.endswith(".json") and f[:20].isdigit() and len(f) == 25:
-            out.append(int(f[:20]))
-    return sorted(out)
+    # DeltaFixtureWriter lists its own local log without a store
+    names = (store or LocalLogStore()).list_dir(log)
+    return sorted(
+        int(f[:20])
+        for f in names
+        if f.endswith(".json") and f[:20].isdigit() and len(f) == 25
+    )
 
 
-def _checkpoint_files(log: str, version: int, store=None) -> list[str]:
+def _commit_actions(log: str, v: int, store) -> list[dict]:
+    """The actions of commit ``v``, in file order."""
+    body = store.read_bytes(os.path.join(log, f"{v:020d}.json")).decode()
+    return [json.loads(line) for line in body.splitlines() if line.strip()]
+
+
+def _checkpoint_files(log: str, version: int, store) -> list[str]:
     """Files of a COMPLETE checkpoint at ``version``, else [].
 
     Three layouts (protocol):
@@ -98,9 +110,7 @@ def _checkpoint_files(log: str, version: int, store=None) -> list[str]:
       self-contained manifest (each uuid file is a complete
       checkpoint; adds/removes may live in ``sidecar``-referenced
       files under ``_sidecars/``). Any one qualifies."""
-    names = (
-        store.list_dir(log) if store is not None else os.listdir(log)
-    )
+    names = store.list_dir(log)
     single_name = f"{version:020d}.checkpoint.parquet"
     single = os.path.join(log, single_name)
     if single_name in names:
@@ -172,257 +182,140 @@ def _reconcile_remove(adds: dict, remove: dict) -> None:
         adds.pop(remove["path"], None)
 
 
-def _best_checkpoint(log: str, target: int, store=None) -> int | None:
+def _best_checkpoint(log: str, target: int, store) -> int | None:
     """Newest checkpoint version ≤ target, preferring _last_checkpoint
     when it qualifies."""
     ptr = os.path.join(log, "_last_checkpoint")
-    best = None
-    ptr_exists = (
-        store.exists(ptr) if store is not None else os.path.exists(ptr)
-    )
-    if ptr_exists:
-        if store is not None:
-            v = json.loads(store.read_bytes(ptr)).get("version")
-        else:
-            with open(ptr) as f:
-                v = json.load(f).get("version")
+    if store.exists(ptr):
+        v = json.loads(store.read_bytes(ptr)).get("version")
         if v is not None and v <= target and _checkpoint_files(
             log, v, store
         ):
-            best = v
-    if best is None:
-        names = (
-            store.list_dir(log) if store is not None
-            else os.listdir(log)
-        )
-        cands = set()
-        for f in names:
-            if ".checkpoint." in f and f[:20].isdigit():
-                cands.add(int(f[:20]))
-        ok = [
-            v for v in cands
-            if v <= target and _checkpoint_files(log, v, store)
-        ]
-        best = max(ok) if ok else None
-    return best
-
-
-# Reconstructed checkpoint states, keyed (log, cp) plus the (size,
-# mtime_ns) of EVERY checkpoint part: a multi-part checkpoint whose
-# later part is rewritten must miss. Checkpoint files are immutable
-# once written (a rewrite would change size/mtime and miss), and ONE
-# declared read query replays the same checkpoint 2-4x per invocation
-# (each time-travel count plus the final read resolves through the
-# same checkpoint), each replay costing 4-6 driver-blocking Spark jobs
-# (schema inference + probe collects + the add/remove reconciliation).
-# This is within-process metadata reuse of an immutable file's parse —
-# the data-path read under test still executes per call (r13).
-_CP_STATE_MEMO: dict = {}
-
-
-def _checkpoint_maps_to_dicts(row: dict) -> None:
-    """pyarrow reads a checkpoint's map columns as lists of (key,
-    value) pairs; turn the ones the writer reads back (configuration,
-    partition values, tags) into the dicts a JSON commit yields."""
-    for act, keys in (
-        ("metaData", ("configuration",)),
-        ("add", ("partitionValues", "tags")),
-        ("remove", ("partitionValues", "tags")),
-    ):
-        a = row.get(act)
-        for k in keys if a else ():
-            if isinstance(a.get(k), list):
-                a[k] = dict(a[k])
-
-
-def _replay_checkpoint(spark, log: str, cp: int):
-    """(adds, meta, protocol) reconstructed from checkpoint ``cp``.
-
-    add/remove reconciliation runs IN SPARK: the driver collects
-    only metaData/protocol (one row each) and the SURVIVING add
-    actions — O(live files), not O(checkpoint rows incl. remove
-    tombstones). At 1M+-file tables the remove tombstones and
-    superseded adds never reach the driver (r7, was a full
-    .collect() of the checkpoint). V2 checkpoints (UUID-named
-    manifest, add/remove actions in `sidecar`-referenced parquet
-    under _sidecars/) route their sidecars through the same
-    Spark reconciliation."""
-    from pyspark.sql import functions as F
-
-    cp_files = _checkpoint_files(log, cp)
-    key = (log, cp) + tuple(
-        (st.st_size, st.st_mtime_ns) for st in map(os.stat, cp_files)
+            return v
+    cands = {
+        int(f[:20])
+        for f in store.list_dir(log)
+        if ".checkpoint." in f and f[:20].isdigit()
+    }
+    return max(
+        (v for v in cands if v <= target and _checkpoint_files(log, v, store)),
+        default=None,
     )
-    hit = _CP_STATE_MEMO.get(key)
-    if hit is not None:
-        adds, meta, protocol = hit
-        # shallow copy: callers mutate the DICT (later commits add/
-        # remove entries), never the per-add action values.
-        return dict(adds), meta, protocol
-    adds: dict[str, dict] = {}
-    meta = None
-    protocol = None
-    frames = []
-    sidecars: list[str] = []
-    if cp_files[0].endswith(".json"):
-        # v2 JSON manifest: protocol/metaData/sidecar refs parse
-        # driver-side (the manifest is metadata-sized)
-        with open(cp_files[0]) as f:
-            for line in f:
-                line = line.strip()
-                if not line:
-                    continue
-                act = json.loads(line)
-                if "metaData" in act:
-                    meta = act["metaData"]
-                elif "protocol" in act:
-                    protocol = act["protocol"]
-                elif "sidecar" in act:
-                    sidecars.append(act["sidecar"]["path"])
-                elif "add" in act:
-                    adds[act["add"]["path"]] = act["add"]
-                elif "remove" in act:
-                    _reconcile_remove(adds, act["remove"])
-    else:
-        cpdf = spark.read.parquet(*cp_files)
-        cols = set(cpdf.columns)
-        # ONE probe job for the metadata-sized actions (r13): the
-        # metaData / protocol / sidecar rows were three separate
-        # filter+collect jobs over the same checkpoint scan — each a
-        # driver-blocking round trip on every replay.
-        probe = {
-            "metaData": "metaData.id",
-            "protocol": "protocol.minReaderVersion",
-            "sidecar": "sidecar.path",
-        }
-        want = [c for c in probe if c in cols]
-        if want:
-            cond = None
-            for c in want:
-                nn = F.col(probe[c]).isNotNull()
-                cond = nn if cond is None else (cond | nn)
-            for row in cpdf.filter(cond).select(*want).collect():
-                d = row.asDict()
-                if d.get("metaData") is not None and (
-                    d["metaData"].id is not None
-                ):
-                    meta = d["metaData"].asDict(recursive=True)
-                if d.get("protocol") is not None and (
-                    d["protocol"].minReaderVersion is not None
-                ):
-                    protocol = d["protocol"].asDict(recursive=True)
-                if d.get("sidecar") is not None and (
-                    d["sidecar"].path is not None
-                ):
-                    sidecars.append(d["sidecar"].path)
-        if "add" in cols:
-            frames.append(cpdf)
-    if sidecars:
-        frames.append(
-            spark.read.parquet(
-                *[os.path.join(log, "_sidecars", p)
-                  for p in sidecars]
-            )
+
+
+def _read_action_file(path: str, store):
+    """One checkpoint part, V2 manifest or sidecar as a pyarrow table
+    with one action per row (a JSON manifest is JSON lines)."""
+    import io
+
+    import pyarrow.json as pj
+    import pyarrow.parquet as pq
+
+    data = io.BytesIO(store.read_bytes(path))
+    if path.endswith(".json"):
+        return pj.read_json(data)
+    return pq.read_table(data)
+
+
+def _actions_of(table, col: str, key: str) -> list[dict]:
+    """The ``col`` actions of a checkpoint table as dicts. Only rows
+    that set ``col.key`` are converted: each row holds one action, so
+    the other columns of a row are null."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if col not in table.column_names:
+        return []
+    arr = table.column(col)
+    if not pa.types.is_struct(arr.type) or arr.type.get_field_index(key) < 0:
+        return []
+    return arr.filter(pc.is_valid(pc.struct_field(arr, key))).to_pylist()
+
+
+def _maps_to_dicts(action: dict, *keys: str) -> dict:
+    # parquet map columns come back as (key, value) pairs
+    for k in keys:
+        if isinstance(action.get(k), list):
+            action[k] = dict(action[k])
+    return action
+
+
+def _load_checkpoint(st: dict, log: str, cp: int, store) -> None:
+    """Fold checkpoint ``cp`` into the empty replay state ``st``. The
+    checkpoint is reconciled state, so its adds and remove tombstones
+    are matched as sets on (path, dv uid), whatever their row order."""
+    tables = [
+        _read_action_file(p, store) for p in _checkpoint_files(log, cp, store)
+    ]
+    tables += [
+        _read_action_file(os.path.join(log, "_sidecars", s["path"]), store)
+        for t in tables
+        for s in _actions_of(t, "sidecar", "path")
+    ]
+    live, dead = [], set()
+    for t in tables:
+        for m in _actions_of(t, "metaData", "id"):
+            st["meta"] = _maps_to_dicts(m, "configuration")
+        for p in _actions_of(t, "protocol", "minReaderVersion"):
+            st["protocol"] = p
+        for x in _actions_of(t, "txn", "appId"):
+            st["txn"][x["appId"]] = x["version"]
+        live += _actions_of(t, "add", "path")
+        dead.update(
+            (r["path"], _dv_uid(r.get("deletionVector")))
+            for r in _actions_of(t, "remove", "path")
         )
-
-    def _uid_col(fr, prefix):
-        # protocol reconciliation key: (path, dv uid) — see
-        # _dv_uid. "" when the struct has no deletionVector field
-        # (pre-DV checkpoints) or the row carries none.
-        fields = fr.schema[prefix].dataType.fieldNames()
-        if "deletionVector" not in fields:
-            return F.lit("")
-        dv = F.col(f"{prefix}.deletionVector")
-        base = F.concat(
-            F.coalesce(dv["storageType"], F.lit("")),
-            F.coalesce(dv["pathOrInlineDv"], F.lit("")),
-        )
-        with_off = F.when(
-            dv["offset"].isNotNull(),
-            F.concat(base, F.lit("@"),
-                     dv["offset"].cast("string")),
-        ).otherwise(base)
-        return F.when(
-            dv["storageType"].isNotNull(), with_off
-        ).otherwise(F.lit(""))
-
-    adds_df = None
-    rm = None
-    for fr in frames:
-        fcols = set(fr.columns)
-        if "add" in fcols:
-            a = fr.filter(F.col("add.path").isNotNull()).select(
-                "add", _uid_col(fr, "add").alias("_add_uid")
+    for a in live:
+        if (a["path"], _dv_uid(a.get("deletionVector"))) not in dead:
+            st["adds"][a["path"]] = _maps_to_dicts(
+                a, "partitionValues", "tags"
             )
-            adds_df = a if adds_df is None else adds_df.unionByName(
-                a, allowMissingColumns=True
-            )
-        if "remove" in fcols:
-            r = fr.filter(F.col("remove.path").isNotNull()).select(
-                F.col("remove.path").alias("_rm_path"),
-                _uid_col(fr, "remove").alias("_rm_uid"),
-            )
-            rm = r if rm is None else rm.unionByName(r)
-    if adds_df is not None:
-        if rm is not None:
-            adds_df = adds_df.join(
-                rm,
-                (adds_df["add"]["path"] == rm["_rm_path"])
-                & (adds_df["_add_uid"] == rm["_rm_uid"]),
-                "left_anti",
-            )
-        for row in adds_df.collect():
-            a = row.add.asDict(recursive=True)
-            adds[a["path"]] = a
-    if len(_CP_STATE_MEMO) > 64:
-        _CP_STATE_MEMO.clear()
-    _CP_STATE_MEMO[key] = (dict(adds), meta, protocol)
-    return adds, meta, protocol
 
 
-def _replay(spark, table_path: str, target: int) -> dict:
-    """Reconstruct table state at ``target``: live adds, metaData,
-    protocol."""
-    log = _log_path(table_path)
-    adds: dict[str, dict] = {}
-    meta = None
-    protocol = None
+def _replay(log: str, target: int, store) -> dict:
+    """Table state at version ``target``: the live ``adds`` keyed by
+    path, the latest ``meta`` and ``protocol`` (None until a commit
+    declares them) and the ``txn`` ledger (appId → version). Starts
+    from the newest complete checkpoint at or below ``target``, so the
+    JSON scan is O(commits since that checkpoint). Every read goes
+    through ``store``; no Spark job runs."""
+    st = {"adds": {}, "meta": None, "protocol": None, "txn": {}}
+    if target < 0:
+        return st
     start = 0
-    cp = _best_checkpoint(log, target)
+    cp = _best_checkpoint(log, target, store)
     if cp is not None:
-        adds, meta, protocol = _replay_checkpoint(spark, log, cp)
+        _load_checkpoint(st, log, cp, store)
         start = cp + 1
-    for v in _commit_versions(log):
-        if v < start or v > target:
+    adds = st["adds"]
+    for v in _commit_versions(log, store):
+        if not start <= v <= target:
             continue
-        with open(os.path.join(log, f"{v:020d}.json")) as f:
-            for line in f:
-                line = line.strip()
-                if not line:
-                    continue
-                act = json.loads(line)
-                if "metaData" in act:
-                    meta = act["metaData"]
-                elif "protocol" in act:
-                    protocol = act["protocol"]
-                elif "add" in act:
-                    adds[act["add"]["path"]] = act["add"]
-                elif "remove" in act:
-                    _reconcile_remove(adds, act["remove"])
-    if meta is None:
-        raise ValueError("log replay found no metaData action")
-    return {"adds": list(adds.values()), "meta": meta,
-            "protocol": protocol}
+        for act in _commit_actions(log, v, store):
+            if "metaData" in act:
+                st["meta"] = act["metaData"]
+            elif "protocol" in act:
+                st["protocol"] = act["protocol"]
+            elif "add" in act:
+                adds[act["add"]["path"]] = act["add"]
+            elif "remove" in act:
+                _reconcile_remove(adds, act["remove"])
+            elif "txn" in act:
+                st["txn"][act["txn"]["appId"]] = act["txn"]["version"]
+    return st
 
 
-def _resolve_version(log: str, version=None, timestamp_ms=None) -> int:
-    versions = _commit_versions(log)
+def _resolve_version(log: str, store, version=None,
+                     timestamp_ms=None) -> int:
+    versions = _commit_versions(log, store)
     if not versions:
         raise ValueError("empty Delta log")
     if version is not None:
         if version > max(versions):
             raise ValueError(f"version {version} beyond log end")
-        if version < versions[0] and _best_checkpoint(log, version) is None:
+        if version < versions[0] and _best_checkpoint(
+            log, version, store
+        ) is None:
             raise ValueError(
                 f"version {version} before earliest available commit "
                 f"({versions[0]}) and no checkpoint covers it"
@@ -431,16 +324,19 @@ def _resolve_version(log: str, version=None, timestamp_ms=None) -> int:
     if timestamp_ms is not None:
         best = None
         for v in versions:
-            path = os.path.join(log, f"{v:020d}.json")
-            ts = None
-            with open(path) as f:
-                for line in f:
-                    act = json.loads(line)
-                    if "commitInfo" in act:
-                        ts = act["commitInfo"].get("timestamp")
-                        break
+            ts = next(
+                (
+                    a["commitInfo"].get("timestamp")
+                    for a in _commit_actions(log, v, store)
+                    if "commitInfo" in a
+                ),
+                None,
+            )
             if ts is None:
-                ts = int(os.path.getmtime(path) * 1000)
+                ts = int(
+                    os.path.getmtime(os.path.join(log, f"{v:020d}.json"))
+                    * 1000
+                )
             if ts <= timestamp_ms:
                 best = v
         if best is None:
@@ -606,11 +502,12 @@ def read_delta(spark, table_path: str, version=None, timestamp_ms=None):
     from pyspark.sql import functions as F
 
     log = _log_path(table_path)
-    target = _resolve_version(log, version, timestamp_ms)
-    state = _replay(spark, table_path, target)
-    adds = state["adds"]
-    if not adds and state["meta"] is None:
+    store = get_log_store(table_path)
+    target = _resolve_version(log, store, version, timestamp_ms)
+    state = _replay(log, target, store)
+    if state["meta"] is None:
         raise ValueError(f"no live files at version {target}")
+    adds = list(state["adds"].values())
     dv_adds = [a for a in adds if a.get("deletionVector")]
     logical, rename, part_cols, id_mode, read_fields = _schema_mapping(
         state["meta"]
@@ -1306,9 +1203,12 @@ class DeltaStandardWriter:
     Data files are written by SPARK (one executor-parallel job into a
     staging dir, then promoted under the table root) — the writer
     itself only handles metadata, so write throughput scales with the
-    cluster exactly like any parquet write. Certification reads the
-    result back through the independent :func:`read_delta` replay path
-    (tests + the ``sink_delta_standard_roundtrip`` driver query).
+    cluster exactly like any parquet write. The writer shares
+    :func:`_replay` with the reader, so certification is independent
+    of it: tests replay tables ``DeltaFixtureWriter`` hand-writes from
+    the protocol, ``perfbench/check.py`` checks the written log on
+    its own, and the ``sink_delta_standard_roundtrip`` registered query
+    reads the result back.
     """
 
     def __init__(self, table_path: str, checkpoint_every: int = 10,
@@ -1326,8 +1226,6 @@ class DeltaStandardWriter:
         checkpoint publishes); default resolves from the table URI —
         local disk here, with the object-store contract documented in
         logstore.py."""
-        from kafka_delta_ingest_spark.logstore import get_log_store
-
         self.root = table_path
         self.log = os.path.join(table_path, _LOG)
         self.store = store or get_log_store(table_path)
@@ -1342,79 +1240,16 @@ class DeltaStandardWriter:
     # -- state ---------------------------------------------------------
 
     def latest_version(self) -> int:
-        versions = [
-            int(f[:20])
-            for f in self.store.list_dir(self.log)
-            if f.endswith(".json") and f[:20].isdigit() and len(f) == 25
-        ]
-        return max(versions) if versions else -1
+        versions = _commit_versions(self.log, self.store)
+        return versions[-1] if versions else -1
 
     def _py_replay(self, target: int | None = None) -> dict:
-        """Driver-side replay of own log (checkpoint-aware) to
-        ``target`` (default: latest) — used for overwrite remove-sets,
-        txn ledger lookups, RESTORE diffs, and checkpoint
-        consolidation. O(live files) memory, the same model delta-rs
-        uses when checkpointing."""
-        adds: dict[str, dict] = {}
-        txn: dict[str, int] = {}
-        meta = None
-        protocol = None
-        start = 0
-        if target is None:
-            target = self.latest_version()
-        if target < 0:
-            return {"adds": adds, "meta": meta, "protocol": protocol,
-                    "txn": txn}
-        cp = _best_checkpoint(self.log, target, self.store)
-        if cp is not None:
-            import io as _io
-
-            import pyarrow.parquet as pq
-
-            for f in _checkpoint_files(self.log, cp, self.store):
-                for row in pq.read_table(
-                    _io.BytesIO(self.store.read_bytes(f))
-                ).to_pylist():
-                    _checkpoint_maps_to_dicts(row)
-                    if row.get("metaData") and row["metaData"].get("id"):
-                        meta = row["metaData"]
-                    if row.get("protocol") and row["protocol"].get(
-                        "minReaderVersion"
-                    ):
-                        protocol = row["protocol"]
-                    a = row.get("add")
-                    if a and a.get("path"):
-                        adds[a["path"]] = a
-                    r = row.get("remove")
-                    if r and r.get("path"):
-                        _reconcile_remove(adds, r)
-                    t = row.get("txn")
-                    if t and t.get("appId"):
-                        txn[t["appId"]] = t["version"]
-            start = cp + 1
-        for v in _commit_versions(self.log, self.store):
-            if v < start or v > target:
-                continue
-            body = self.store.read_bytes(
-                os.path.join(self.log, f"{v:020d}.json")
-            ).decode()
-            for line in body.splitlines():
-                    line = line.strip()
-                    if not line:
-                        continue
-                    act = json.loads(line)
-                    if "metaData" in act:
-                        meta = act["metaData"]
-                    elif "protocol" in act:
-                        protocol = act["protocol"]
-                    elif "add" in act:
-                        adds[act["add"]["path"]] = act["add"]
-                    elif "remove" in act:
-                        _reconcile_remove(adds, act["remove"])
-                    elif "txn" in act:
-                        txn[act["txn"]["appId"]] = act["txn"]["version"]
-        return {"adds": adds, "meta": meta, "protocol": protocol,
-                "txn": txn}
+        """:func:`_replay` of this table at ``target`` (default: latest)."""
+        return _replay(
+            self.log,
+            self.latest_version() if target is None else target,
+            self.store,
+        )
 
     # safe implicit upcasts on write (delta-spark's ANSI store
     # assignment): the frame value range embeds in the table type
@@ -1648,37 +1483,34 @@ class DeltaStandardWriter:
         conflict_on_any_change: bool,
     ) -> None:
         for v in range(lo, hi + 1):
-            path = os.path.join(self.log, f"{v:020d}.json")
-            if not self.store.exists(path):
+            if not self.store.exists(
+                os.path.join(self.log, f"{v:020d}.json")
+            ):
                 continue
-            for line in self.store.read_bytes(path).decode().splitlines():
-                    line = line.strip()
-                    if not line:
-                        continue
-                    act = json.loads(line)
-                    if "metaData" in act or "protocol" in act:
-                        raise ConcurrentDeltaWriteError(
-                            f"version {v} changed table metadata after "
-                            "this operation's snapshot"
-                        )
-                    hit = None
-                    if "add" in act:
-                        hit = act["add"]["path"]
-                    elif "remove" in act:
-                        hit = act["remove"]["path"]
-                    if hit is None:
-                        continue
-                    if conflict_on_any_change:
-                        raise ConcurrentDeltaWriteError(
-                            f"version {v} committed a data change "
-                            "after this operation's whole-table "
-                            "snapshot"
-                        )
-                    if read_files is not None and hit in read_files:
-                        raise ConcurrentDeltaWriteError(
-                            f"version {v} touched {hit!r}, which this "
-                            "operation read and rewrites"
-                        )
+            for act in _commit_actions(self.log, v, self.store):
+                if "metaData" in act or "protocol" in act:
+                    raise ConcurrentDeltaWriteError(
+                        f"version {v} changed table metadata after "
+                        "this operation's snapshot"
+                    )
+                hit = None
+                if "add" in act:
+                    hit = act["add"]["path"]
+                elif "remove" in act:
+                    hit = act["remove"]["path"]
+                if hit is None:
+                    continue
+                if conflict_on_any_change:
+                    raise ConcurrentDeltaWriteError(
+                        f"version {v} committed a data change "
+                        "after this operation's whole-table "
+                        "snapshot"
+                    )
+                if read_files is not None and hit in read_files:
+                    raise ConcurrentDeltaWriteError(
+                        f"version {v} touched {hit!r}, which this "
+                        "operation read and rewrites"
+                    )
 
     # -- write ----------------------------------------------------------
 
@@ -2726,12 +2558,11 @@ class DeltaStandardWriter:
         """Physically delete tombstoned data files whose remove
         timestamp, and ``_change_data`` cdc files whose commit
         timestamp, is older than ``retention_ms``. Files no log action
-        names are aged by mtime: a crashed delete's DV ``.bin`` or cdc
-        file on the same retention; an aborted write's promoted
-        parquet and ``_staging-*`` leftovers must also be older than
-        ``_UNTRACKED_MIN_AGE_MS``, whatever the retention, since a
-        writer promotes its parquet into the table root before its
-        commit names it. As in Delta's VACUUM,
+        names (an aborted write's promoted parquet, a crashed delete's
+        DV ``.bin`` or cdc file, ``_staging-*`` leftovers) are aged by
+        mtime and must also be older than ``_UNTRACKED_MIN_AGE_MS``,
+        whatever the retention, since a writer lands each of them
+        before the commit that names it. As in Delta's VACUUM,
         names starting with ``_`` or ``.`` (``_delta_log``, a streaming
         checkpoint kept in the table root, ``.crc`` files) are never
         touched, except ``_change_data``, ``_staging-*`` and partition
@@ -2772,37 +2603,28 @@ class DeltaStandardWriter:
         for v in _commit_versions(self.log, self.store):
             commit_ts = 0
             commit_cdc: list[str] = []
-            body = self.store.read_bytes(
-                os.path.join(self.log, f"{v:020d}.json")
-            ).decode()
-            for line in body.splitlines():
-                    act = json.loads(line)
-                    if "remove" in act:
-                        r = act["remove"]
-                        logged.add(r["path"])
-                        victims[r["path"]] = r.get(
-                            "deletionTimestamp", 0
-                        )
-                    elif "add" in act:
-                        logged.add(act["add"]["path"])
-                        victims.pop(act["add"]["path"], None)
-                        b = dv_bin_of(act["add"])
-                        if b:
-                            logged.add(b)
-                    elif "cdc" in act:
-                        commit_cdc.append(act["cdc"]["path"])
-                    elif "commitInfo" in act:
-                        commit_ts = act["commitInfo"].get(
-                            "timestamp", 0
-                        )
+            for act in _commit_actions(self.log, v, self.store):
+                if "remove" in act:
+                    r = act["remove"]
+                    logged.add(r["path"])
+                    victims[r["path"]] = r.get("deletionTimestamp", 0)
+                elif "add" in act:
+                    logged.add(act["add"]["path"])
+                    victims.pop(act["add"]["path"], None)
+                    b = dv_bin_of(act["add"])
+                    if b:
+                        logged.add(b)
+                elif "cdc" in act:
+                    commit_cdc.append(act["cdc"]["path"])
+                elif "commitInfo" in act:
+                    commit_ts = act["commitInfo"].get("timestamp", 0)
             for p in commit_cdc:
                 cdc_refs[p] = commit_ts
-        cp = _best_checkpoint(self.log, self.latest_version())
-        if cp is not None:
-            for a in state["adds"].values():
-                b = dv_bin_of(a)
-                if b:
-                    logged.add(b)
+        # live adds replayed from a checkpoint may predate the log
+        for a in state["adds"].values():
+            b = dv_bin_of(a)
+            if b:
+                logged.add(b)
         deleted = []
         for rel, ts in victims.items():
             if rel in live or ts > cutoff:
@@ -2856,11 +2678,8 @@ class DeltaStandardWriter:
                     # retention window
                     stale = cdc_refs[rel] <= cutoff
                 else:
-                    sidecar = rel.startswith("_change_data/") or (
-                        rel_dir == "." and fname.startswith("deletion_vector_")
-                    )
                     stale = int(os.path.getmtime(ap) * 1000) <= (
-                        cutoff if sidecar else untracked_cutoff
+                        untracked_cutoff
                     )
                 if stale:
                     os.remove(ap)
@@ -2873,18 +2692,24 @@ class DeltaStandardWriter:
                     pass  # still holds files younger than the cutoff
         return deleted
 
-    def count_rows(self) -> int | None:
-        """Live row count from the log alone: the adds' ``numRecords``
-        minus their deletion-vector cardinalities. None when an add
-        carries no record count (a scan is needed)."""
+    def count_rows(self) -> int:
+        """Live row count without a scan: the adds' ``numRecords``
+        minus their deletion-vector cardinalities. An add without a
+        record count (writers may omit stats, and a V2 checkpoint
+        sidecar may drop them) counts its parquet footer's rows."""
+        import pyarrow.parquet as pq
+
         n = 0
         for a in self._py_replay()["adds"].values():
             stats = a.get("stats")
             if isinstance(stats, str):
                 stats = json.loads(stats)
-            if not stats or stats.get("numRecords") is None:
-                return None
-            n += stats["numRecords"] - (
+            rows = (stats or {}).get("numRecords")
+            if rows is None:
+                rows = pq.read_metadata(
+                    os.path.join(self.root, urllib.parse.unquote(a["path"]))
+                ).num_rows
+            n += rows - (
                 (a.get("deletionVector") or {}).get("cardinality", 0)
             )
         return n
@@ -3293,10 +3118,11 @@ def table_changes(spark, table_path: str, start_version: int,
     from pyspark.sql import functions as F
 
     log = _log_path(table_path)
-    last = _resolve_version(log)
+    store = get_log_store(table_path)
+    last = _resolve_version(log, store)
     if end_version is None:
         end_version = last
-    state = _replay(spark, table_path, min(end_version, last))
+    state = _replay(log, min(end_version, last), store)
     logical, rename, part_cols, _id_mode, _rf = _schema_mapping(
         state["meta"]
     )
@@ -3317,30 +3143,25 @@ def table_changes(spark, table_path: str, start_version: int,
 
     read_schema = StructType(data_fields)
     out = None
-    for v in _commit_versions(log):
+    for v in _commit_versions(log, store):
         if v < start_version or v > end_version:
             continue
         cdc_paths, add_paths, rm_paths = [], [], []
         ts = None
         dv_delete = False
-        with open(os.path.join(log, f"{v:020d}.json")) as f:
-            for line in f:
-                line = line.strip()
-                if not line:
-                    continue
-                act = json.loads(line)
-                if "commitInfo" in act:
-                    ts = act["commitInfo"].get("timestamp")
-                elif "cdc" in act:
-                    cdc_paths.append(act["cdc"]["path"])
-                elif "add" in act:
-                    if act["add"].get("dataChange", True):
-                        add_paths.append(act["add"]["path"])
-                    elif act["add"].get("deletionVector"):
-                        dv_delete = True
-                elif "remove" in act:
-                    if act["remove"].get("dataChange", True):
-                        rm_paths.append(act["remove"]["path"])
+        for act in _commit_actions(log, v, store):
+            if "commitInfo" in act:
+                ts = act["commitInfo"].get("timestamp")
+            elif "cdc" in act:
+                cdc_paths.append(act["cdc"]["path"])
+            elif "add" in act:
+                if act["add"].get("dataChange", True):
+                    add_paths.append(act["add"]["path"])
+                elif act["add"].get("deletionVector"):
+                    dv_delete = True
+            elif "remove" in act:
+                if act["remove"].get("dataChange", True):
+                    rm_paths.append(act["remove"]["path"])
         frames = []
         if cdc_paths:
             cdc_schema = StructType(
@@ -3402,15 +3223,17 @@ def delta_history(table_path: str) -> list[dict]:
     """(version, operation, timestamp) per commit — DESCRIBE HISTORY
     for standard-layout tables."""
     log = _log_path(table_path)
+    store = get_log_store(table_path)
     out = []
-    for v in _commit_versions(log):
-        op, ts = None, None
-        with open(os.path.join(log, f"{v:020d}.json")) as f:
-            for line in f:
-                act = json.loads(line)
-                if "commitInfo" in act:
-                    op = act["commitInfo"].get("operation")
-                    ts = act["commitInfo"].get("timestamp")
-                    break
-        out.append({"version": v, "operation": op, "timestamp": ts})
+    for v in _commit_versions(log, store):
+        info = next(
+            (
+                a["commitInfo"]
+                for a in _commit_actions(log, v, store)
+                if "commitInfo" in a
+            ),
+            {},
+        )
+        out.append({"version": v, "operation": info.get("operation"),
+                    "timestamp": info.get("timestamp")})
     return out

@@ -15,36 +15,3 @@ def spark():
 
 
 SF_DIR = os.environ.get("TEST_SF_DIR", "/root/testdata/sf0.001")
-
-# ---------------------------------------------------------------------------
-# Slow-test gating (r13): the FULL suite takes 25-30 min on this class
-# of box, which exceeds the round driver's verification budget (its
-# `pytest tests/ -x -q` run was cut off mid-suite in r12 — VERIFY
-# `tests_ok:false` with a timeout-shaped tail). The heaviest e2e
-# modules — measured with --durations, list below — are SKIPPED by
-# default so the default invocation fits the budget; set
-# KDI_FULL_TESTS=1 to run everything (the pre-commit gate in this
-# repo's workflow does). Coverage is not deleted: every skipped module
-# still runs under the env flag, and the per-operator fast tests for
-# the same code paths remain in the default set.
-# ---------------------------------------------------------------------------
-
-_SLOW_MODULES: set[str] = set()  # filled from measured durations
-_slow_file = os.path.join(os.path.dirname(__file__), "slow_modules.txt")
-if os.path.exists(_slow_file):
-    with open(_slow_file) as fh:
-        _SLOW_MODULES = {
-            ln.strip() for ln in fh if ln.strip() and not ln.startswith("#")
-        }
-
-
-def pytest_collection_modifyitems(config, items):
-    if os.environ.get("KDI_FULL_TESTS"):
-        return
-    skip = pytest.mark.skip(
-        reason="slow e2e module (default fast subset; KDI_FULL_TESTS=1 runs it)"
-    )
-    for item in items:
-        mod = os.path.basename(str(item.fspath))
-        if mod in _SLOW_MODULES:
-            item.add_marker(skip)

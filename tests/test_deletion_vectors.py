@@ -7,6 +7,7 @@ anti-join on the parquet ``_metadata.row_index`` at read time.
 """
 
 import os
+import time
 
 import pytest
 from pyspark.sql import Row, functions as F
@@ -162,6 +163,9 @@ def test_vacuum_reclaims_unreferenced_dv_sidecars(spark, tmp_path):
     orphan = "deletion_vector_00000000-0000-0000-0000-000000000000.bin"
     with open(os.path.join(t.root, orphan), "wb") as f:
         f.write(b"x")
+    # untracked files are reclaimable only past the one-day floor
+    old = time.time() - 2 * 24 * 3600
+    os.utime(os.path.join(t.root, orphan), (old, old))
     assert orphan in t.vacuum(retention_ms=0)
     assert len(_dv_bins(t)) == 1
     assert read_delta(spark, t.root).count() == 15

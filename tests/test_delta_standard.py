@@ -5,6 +5,7 @@ errors."""
 import glob
 import json
 import os
+import time
 
 import pytest
 
@@ -12,9 +13,13 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from kafka_delta_ingest_spark.delta_standard import (
     DeltaFixtureWriter,
+    DeltaStandardWriter,
+    _replay,
     delta_history,
     read_delta,
+    table_changes,
 )
+from kafka_delta_ingest_spark.logstore import LocalLogStore
 
 _SCHEMA = StructType(
     [
@@ -323,8 +328,8 @@ def test_complete_multipart_checkpoint_is_used(spark, table):
 
 
 def test_checkpoint_memo_misses_when_a_later_part_is_rewritten(spark, table):
-    # The replayed-checkpoint memo must key on EVERY part: rewriting
-    # part 2 of 2 (part 1 untouched) has to re-read the checkpoint.
+    # Rewriting part 2 of 2 of a checkpoint (part 1 untouched) shows
+    # up in the next replay and read.
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
@@ -349,13 +354,14 @@ def test_checkpoint_memo_misses_when_a_later_part_is_rewritten(spark, table):
     gone = next(p for p in paths.to_pylist() if p and p.startswith("grp=a/"))
     pq.write_table(rest.filter(pc.invert(pc.fill_null(pc.equal(paths, gone), False))), part2)
     removed = pq.read_table(os.path.join(t, gone)).column("doc_id").to_pylist()
+    assert gone not in _replay(log, int(v), LocalLogStore())["adds"]
     got = sorted(r.doc_id for r in read_delta(spark, t).collect())
     assert removed and got == sorted(set(before) - set(removed))
 
 
 def test_checkpoint_remove_tombstones_reconciled_in_spark(spark, tmp_path):
-    # checkpoints retain remove tombstones (VACUUM window); the Spark
-    # replay must anti-join them out of the add set.
+    # checkpoints retain remove tombstones (VACUUM window); the replay
+    # must match them out of the add set.
     t = str(tmp_path / "tomb")
     w = DeltaFixtureWriter(t, _SCHEMA)
     w.add_files(
@@ -372,6 +378,8 @@ def test_checkpoint_remove_tombstones_reconciled_in_spark(spark, tmp_path):
     # checkpoint (commit 1 = the checkpoint version stays so the log
     # is non-empty, but replay starts AFTER the checkpoint).
     os.remove(os.path.join(t, "_delta_log", "%020d.json" % 0))
+    log = os.path.join(t, "_delta_log")
+    assert set(_replay(log, 1, LocalLogStore())["adds"]) == {rel[0]}
     got = [(r.doc_id, r.val) for r in read_delta(spark, t).collect()]
     assert got == [(1, 1)]
 
@@ -379,7 +387,7 @@ def test_checkpoint_remove_tombstones_reconciled_in_spark(spark, tmp_path):
 @pytest.mark.parametrize("fmt", ["json", "parquet"])
 def test_v2_checkpoint_with_sidecars(spark, table, fmt):
     # UUID-named manifest + add actions in a _sidecars/ parquet: the
-    # replay must route sidecars through the Spark reconciliation.
+    # replay must follow the manifest's sidecar actions.
     t, _ = table
     log = os.path.join(t, "_delta_log")
     # drop the classic checkpoint the fixture wrote; build a v2 one
@@ -396,15 +404,61 @@ def test_v2_checkpoint_with_sidecars(spark, table, fmt):
     assert got == list(range(5)) + list(range(10, 13))
 
 
+@pytest.mark.parametrize("fmt", ["parquet", "json"])
+def test_writer_sees_v2_checkpoint_state(spark, tmp_path, fmt):
+    # The writer replays the same V2 manifest + sidecar as the reader:
+    # its live set, log-only count and VACUUM all see both files.
+    t = str(tmp_path / "v2w")
+    w = DeltaFixtureWriter(t, _SCHEMA)
+    for lo, ts in ((0, 1000), (3, 2000)):
+        w.add_files(
+            [({}, [{"doc_id": i, "grp": "a", "val": i}
+                   for i in range(lo, lo + 3)])],
+            timestamp_ms=ts,
+        )
+    w.checkpoint_v2(fmt=fmt)
+    os.remove(os.path.join(t, "_delta_log", "%020d.json" % 0))
+    sw = DeltaStandardWriter(t)
+    assert set(sw._py_replay()["adds"]) == {
+        "part-00001.parquet", "part-00002.parquet",
+    }
+    assert sw.count_rows() == 6
+    later = int(time.time() * 1000) + 2 * 24 * 3600 * 1000
+    assert sw.vacuum(retention_ms=0, now_ms=later) == []
+    assert read_delta(spark, t).count() == 6
+
+
+def test_planning_reads_runs_no_spark_job(spark, tmp_path):
+    # Log replay is driver-side pyarrow: planning a read or a change
+    # feed over a checkpointed table submits no Spark job.
+    t = str(tmp_path / "nojob")
+    w = DeltaStandardWriter(t)
+    for i in range(11):
+        w.write(spark.createDataFrame([(i, "a", i)], _SCHEMA))
+    assert os.path.exists(
+        os.path.join(t, "_delta_log", "%020d.checkpoint.parquet" % 10)
+    )
+    sc = spark.sparkContext
+    st = sc.statusTracker()
+    group = "kdi-replay-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        df = read_delta(spark, t)
+        changes = table_changes(spark, t, 0)
+        assert st.getJobIdsForGroup(group) == []
+        assert df.count() == 11 and changes.count() == 11
+        assert st.getJobIdsForGroup(group) != []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
 def test_replay_scales_to_large_checkpoint(spark, tmp_path):
-    # r7 verdict item: checkpoint replay streams through Spark — the
-    # driver collects only SURVIVING adds. Synthetic 100k-add /
-    # 40k-tombstone checkpoint; _replay must return exactly the 60k
-    # live adds (no data files needed — replay touches only the log).
+    # Synthetic 100k-add / 40k-tombstone checkpoint, tombstones after
+    # the adds they cancel; _replay must return exactly the 60k live
+    # adds (no data files needed — replay touches only the log).
     import pyarrow as pa
     import pyarrow.parquet as pq
-
-    from kafka_delta_ingest_spark.delta_standard import _replay
 
     t = str(tmp_path / "big")
     log = os.path.join(t, "_delta_log")
@@ -461,9 +515,9 @@ def test_replay_scales_to_large_checkpoint(spark, tmp_path):
     with open(os.path.join(log, "%020d.json" % 0), "w") as f:
         f.write(json.dumps({"commitInfo": {"operation": "WRITE",
                                            "timestamp": 0}}) + "\n")
-    state = _replay(spark, t, 0)
+    state = _replay(log, 0, LocalLogStore())
     assert len(state["adds"]) == n - dead
-    paths = {a["path"] for a in state["adds"]}
+    paths = set(state["adds"])
     assert f"p{dead:06d}.parquet" in paths
     assert f"p{dead - 1:06d}.parquet" not in paths
 

@@ -7,6 +7,7 @@ README.adoc:3-5, src/delta_helpers.rs:15-40."""
 import glob
 import json
 import os
+import time
 
 import pytest
 
@@ -352,11 +353,34 @@ def test_vacuum_keeps_superseded_dvs_within_retained_log(spark, tmp_path):
         t, "deletion_vector_00000000-0000-0000-0000-00000000dead.bin"
     )
     open(stray, "wb").write(b"x")
+    # untracked files are reclaimable only past the one-day floor
+    old = time.time() - 2 * 24 * 3600
+    os.utime(stray, (old, old))
     deleted = w.vacuum(retention_ms=0)
     assert os.path.basename(stray) in deleted
     # both real descriptors survive; v1 stays travelable
     assert read_delta(spark, t, version=1).count() == 5
     assert read_delta(spark, t).count() == 4
+
+
+def test_vacuum_keeps_dv_bin_of_a_delete_in_flight(spark, tmp_path):
+    # A DELETE writes its DV bin before the commit that names it; a
+    # VACUUM at retention 0 in between must leave the bin in place.
+    t = str(tmp_path / "dvr")
+    w = DeltaStandardWriter(t)
+    w.write(_docs(spark, 6))
+    commit = w._atomic_commit
+    swept = []
+
+    def vacuum_then_commit(*args, **kwargs):
+        assert [f for f in os.listdir(t) if f.endswith(".bin")]
+        swept.extend(DeltaStandardWriter(t).vacuum(retention_ms=0))
+        return commit(*args, **kwargs)
+
+    w._atomic_commit = vacuum_then_commit
+    w.delete_where(spark, "doc_id = 0")
+    assert swept == []
+    assert read_delta(spark, t).count() == 5
 
 
 def test_optimize_zorder_clusters_standard_log(spark, tmp_path):

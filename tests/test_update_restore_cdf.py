@@ -12,6 +12,7 @@ one metadata commit, as ALTER TABLE SET TBLPROPERTIES does.
 
 import os
 import shutil
+import time
 
 import pytest
 
@@ -271,6 +272,12 @@ def test_vacuum_reclaims_orphaned_cdc_files(spark, tmp_path):
     # Plant an orphan (simulating a lost commit race).
     orphan = os.path.join(cdc_dir, "cdc-orphan.parquet")
     shutil.copy(next(iter(referenced)), orphan)
+    # young, it may belong to a commit in flight; past the one-day
+    # floor for untracked files it is reclaimed
+    t.vacuum(retention_ms=0)
+    assert os.path.exists(orphan)
+    old = time.time() - 2 * 24 * 3600
+    os.utime(orphan, (old, old))
     t.vacuum(retention_ms=0)
     assert not os.path.exists(orphan)
     # Referenced change files age out with their commit, like data
