@@ -118,6 +118,30 @@ def coerce_column(col: Column, src: DataType, dst: DataType) -> tuple[Column, Co
     return casted, ok
 
 
+def coercion_columns(
+    src_schema: StructType,
+    target: StructType,
+    conform_col: str = "_conforms",
+    keep_extra: bool = False,
+) -> list[Column]:
+    """The projection :func:`apply_coercions` runs over a frame of
+    ``src_schema``, built from the schemas alone."""
+    src_names = src_schema.fieldNames()
+    cols: list[Column] = []
+    ok_all: Column = F.lit(True)
+    for f in target.fields:
+        if f.name in src_names:
+            c, o = coerce_column(F.col(f"`{f.name}`"), src_schema[f.name].dataType, f.dataType)
+            cols.append(c.alias(f.name))
+            ok_all = ok_all & o
+        else:
+            cols.append(F.lit(None).cast(f.dataType).alias(f.name))
+    if keep_extra:
+        names = target.fieldNames()
+        cols.extend(F.col(f"`{c}`") for c in src_names if c not in names)
+    return cols + [ok_all.alias(conform_col)]
+
+
 def apply_coercions(
     df: DataFrame,
     target: StructType,
@@ -132,17 +156,4 @@ def apply_coercions(
     impossible coercion (the reference's parquet-decode quarantine path,
     src/writer.rs:618-639) get False and should be routed to the DLQ.
     """
-    src_schema = df.schema
-    cols: list[Column] = []
-    ok_all: Column = F.lit(True)
-    for f in target.fields:
-        if f.name in src_schema.fieldNames():
-            c, o = coerce_column(F.col(f"`{f.name}`"), src_schema[f.name].dataType, f.dataType)
-            cols.append(c.alias(f.name))
-            ok_all = ok_all & o
-        else:
-            cols.append(F.lit(None).cast(f.dataType).alias(f.name))
-    if keep_extra:
-        extras = [F.col(f"`{c}`") for c in df.columns if c not in target.fieldNames()]
-        cols.extend(extras)
-    return df.select(*cols, ok_all.alias(conform_col))
+    return df.select(*coercion_columns(df.schema, target, conform_col, keep_extra))

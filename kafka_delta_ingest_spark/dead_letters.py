@@ -64,14 +64,24 @@ class DeadLetterQueue:
 
     table_location: str | None = None
     dlq_transforms: dict[str, str] = field(default_factory=dict)
+    # the dlq_transforms projection over DEAD_LETTER_SCHEMA, built at
+    # the first write: the schema never changes, so neither does it
+    _columns: list[Column] | None = field(
+        default=None, init=False, repr=False, compare=False
+    )
 
     def write(self, dlq_df: DataFrame) -> int:
-        """Write dead letters; returns the count routed (for metrics)."""
+        """Write dead letters (rows of ``DEAD_LETTER_SCHEMA``); returns
+        the count routed (for metrics)."""
         if self.table_location is None:
             return 0  # noop DLQ: dead letters are dropped (default)
         out = dlq_df
         if self.dlq_transforms:
-            out = Transformer(self.dlq_transforms).apply(out)
+            if self._columns is None:
+                self._columns = Transformer(self.dlq_transforms).columns(
+                    DEAD_LETTER_SCHEMA
+                )
+            out = out.select(*self._columns)
         # Synchronous append to a standard Delta table (reference
         # insert_all, src/dead_letters.rs:240-316 + src/writer.rs:577-601)
         # through the same sink as the data table.

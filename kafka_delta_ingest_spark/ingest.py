@@ -2,26 +2,39 @@
 
 The reference's run loop (reference src/lib.rs:393-529) interprets
 messages one at a time: deserialize → transform → coerce → buffer →
-write → commit. Here the same dataflow is declared ONCE as a DataFrame
-plan over the Kafka source and executed by Structured Streaming
+write → commit. Here the same dataflow is a DataFrame plan over the
+Kafka source, executed by Structured Streaming
 micro-batches; ``foreachBatch`` hosts the three sink-boundary behaviors
 that need custom logic (SURVEY §7.0): DLQ splitting, the
 per-Kafka-partition txn offset ledger, and dlq_transforms.
 
-Message path (one ``select``, whole-stage-codegen'd — the per-message
-control flow of reference src/lib.rs:811-869 collapses into columnar
-expressions):
+Message path (whole-stage-codegen'd — the per-message control flow of
+reference src/lib.rs:811-869 collapses into columnar expressions):
 
-1. deserialize (serialization.json_payload_to_struct, PERMISSIVE)
+1. deserialize (serialization.json_payload_to_struct, PERMISSIVE);
+   empty and tombstone messages stay in the frame as a third row class,
+   neither written nor dead-lettered, so their offsets still count
 2. failed rows → DeadLetter{base64_bytes,...} (src/lib.rs:853-865)
 3. transform (transforms.Transformer — kafka meta + JMESPath subset)
-4. coerce onto the destination schema (coercions.apply_coercions)
+4. coerce onto the destination schema (coercions.coercion_columns)
 5. non-conforming rows → DeadLetter{json_string,...} — the columnar
    replacement for the reference's row-level parquet quarantine
    (src/writer.rs:618-639): conformance is decided by predicates
    *before* the write, so good rows never pay for bad ones.
 6. append + txn commit through the destination's sink (sinks.base:
    a standard ``_delta_log`` by default, or Iceberg / Hudi)
+
+Compiled once per schema: steps 1-5 are built as Column lists
+(:class:`MessagePath`) at the first batch and rebuilt only when
+:meth:`IngestJob.sync_schema` adopts a new destination schema, as the
+reference rebuilds its coercion tree only on schema drift. A batch runs
+five ``select`` calls, one grouped aggregate and two filters over the
+cached result, and builds no Column of its own.
+
+Per batch, the aggregate gives each Kafka partition's max offset and
+row counts by class. Its job builds the cache that the data write and
+the DLQ write read; a batch with no good row commits its offsets alone,
+and a batch with no dead letter skips the DLQ write.
 
 Batch shape: the message path itself is narrow. A micro-batch that
 arrives in at least as many splits as the cluster has cores runs it
@@ -36,18 +49,20 @@ src/writer.rs:390-427).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field as dc_field
+from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
 
 from kafka_delta_ingest_spark.config import IngestOptions, MessageFormat
-from kafka_delta_ingest_spark.coercions import apply_coercions
+# apply_coercions is the DataFrame form of coercion_columns; it stays
+# importable from here because perfbench/tracing.py times it by this name
+from kafka_delta_ingest_spark.coercions import apply_coercions, coercion_columns  # noqa: F401
 from kafka_delta_ingest_spark.dead_letters import DeadLetterQueue, dead_letter_columns
 from kafka_delta_ingest_spark.metrics import DELTA_WRITE_FAILED, IngestMetrics
 from kafka_delta_ingest_spark.serialization import json_payload_to_struct
-from kafka_delta_ingest_spark.sinks.base import Sink, open_sink
-from kafka_delta_ingest_spark.transforms import Transformer
+from kafka_delta_ingest_spark.sinks.base import Sink, already_applied, open_sink
+from kafka_delta_ingest_spark.transforms import DEFAULT_KAFKA_COLS, Transformer
 
 # Reserved names for Kafka metadata carried alongside the flattened
 # payload (the payload owns the plain namespace, as in the reference
@@ -100,6 +115,36 @@ class BatchMetrics:
     skipped: bool = False
 
 
+@dataclass(frozen=True)
+class MessagePath:
+    """The message path compiled for one destination schema: every
+    Column a batch hands to ``select``, ``filter`` and ``groupBy``.
+
+    The reference compiles its transforms and its coercion tree once and
+    rebuilds them only on schema drift (``Transformer::from_transforms``,
+    src/transforms.rs:95-122; ``update_schema``, src/writer.rs:370-387).
+    :meth:`IngestJob.message_path` does the same, so a batch builds no
+    Column and reads no schema: its driver cost does not grow with the
+    schema or the transforms.
+    """
+
+    target: StructType
+    # plan(): decode, flatten, transform, coerce, route — one select each
+    stages: tuple[list[Column], ...]
+    # a narrow batch's spread on the Kafka coordinates, and the regroup
+    # of its good rows on the table's partition columns
+    spread: list[Column]
+    regroup: list[Column]
+    good: Column
+    good_columns: list[Column]
+    dead: Column
+    dead_columns: list[Column]
+    # grouped by Kafka partition: max offset, good rows, deserialization
+    # and coercion failures
+    partition: Column
+    counts: list[Column]
+
+
 class IngestJob:
     def __init__(self, opts: IngestOptions, target_schema: StructType,
                  sink: Sink | None = None):
@@ -108,16 +153,7 @@ class IngestJob:
         # schema (the CLI reads it from the destination, cli.prepare_ingest,
         # and hands over the sink it opened to do so).
         self.target_schema = target_schema
-        self.transformer = Transformer(
-            opts.transforms,
-            kafka_cols={
-                "partition": META["partition"],
-                "offset": META["offset"],
-                "topic": META["topic"],
-                "timestamp": META["timestamp"],
-                "timestamp_type": META["timestamp_type"],
-            },
-        )
+        self.transformer = Transformer(opts.transforms, kafka_cols=dict(META))
         self.table = (
             sink if sink is not None else open_sink(opts, target_schema)
         )
@@ -133,92 +169,100 @@ class IngestJob:
         # would count.
         self._commits_since_optimize = 0
         # Per-partition stored-offset floors, read lazily ONCE from the
-        # table's txn ledger at the first batch (None = not yet read).
+        # table's txn ledger at the first batch (None = not yet read),
+        # and the row predicate built from them (None = no floor).
         self._offset_floors: dict[int, int] | None = None
+        self._above_floor: Column | None = None
+        # built by message_path() for target_schema
+        self._path: MessagePath | None = None
         self.metrics = IngestMetrics(endpoint=opts.statsd_endpoint)
 
     # ------------------------------------------------------------------
     # Plan construction (pure — no actions)
     # ------------------------------------------------------------------
 
-    def plan(self, raw: DataFrame) -> DataFrame:
-        """Kafka-layout DataFrame → annotated row stream.
+    def message_path(self, raw: DataFrame) -> MessagePath:
+        """The path compiled for the current ``target_schema``: built at
+        the first batch and again only after the schema changes
+        (:meth:`sync_schema`). The build resolves types against ``raw``,
+        a Kafka-layout frame, and runs no Spark job."""
+        path = self._path
+        if path is None or path.target is not self.target_schema:
+            path = self._path = self._compile(raw)
+        return path
 
-        ``raw`` must have the Spark Kafka source layout: ``value``
-        (binary), ``partition`` (int), ``offset`` (long), ``topic``
-        (string), ``timestamp`` (timestamp), ``timestampType`` (int).
-        Output: destination-schema columns + META columns + ERROR_COL
-        (non-null → dead letter) + CONFORM_COL, plus the DLQ payloads:
-        RAW_COL on deserialization failures and PRE_COERCE_JSON_COL on
-        non-conforming rows (null on every other row).
-        """
+    def _decode(self, value: Column) -> tuple[Column, Column]:
+        """Payload bytes → (parsed wire struct, error or NULL), for the
+        configured message format."""
         fmt = self.opts.message_format
-        if fmt in (
+        if fmt not in (
             MessageFormat.AVRO,
             MessageFormat.AVRO_SCHEMA_REGISTRY,
             MessageFormat.AVRO_SOE,
         ):
-            from kafka_delta_ingest_spark.serialization import (
-                avro_payload_to_json,
-                avro_registry_to_json,
-                json_text_to_struct,
-            )
-
-            if (
-                fmt == MessageFormat.AVRO_SCHEMA_REGISTRY
-                and self.opts.schema_registry_url
-                and not self.opts.avro_schema_json
-            ):
-                # Per-message writer-schema resolution by the id in the
-                # wire-format header (reference src/serialization.rs:212-241).
-                text = avro_registry_to_json(
-                    F.col("value"),
-                    self.opts.schema_registry_url,
-                    fetcher=self.opts.schema_registry_fetcher,
-                )
-            else:
-                text = avro_payload_to_json(
-                    F.col("value"),
-                    avro_schema_json=self.opts.avro_schema_json,
-                    confluent_wire_format=fmt == MessageFormat.AVRO_SCHEMA_REGISTRY,
-                    soe_schemas=self.opts.soe_schemas
-                    if fmt == MessageFormat.AVRO_SOE
-                    else None,
-                )
-            parsed, err = json_text_to_struct(text, self.target_schema)
-        else:
-            parsed, err = json_payload_to_struct(
-                F.col("value"),
+            return json_payload_to_struct(
+                value,
                 self.target_schema,
                 gzip=fmt == MessageFormat.JSON_GZIP,
                 confluent_wire_format=fmt == MessageFormat.JSON_SCHEMA_REGISTRY,
             )
-
-        # Empty payloads are skipped silently, not dead-lettered
-        # (reference src/lib.rs:847-852).
-        nonempty = raw.filter(F.col("value").isNotNull() & (F.length("value") > 0))
-
-        staged = nonempty.select(
-            parsed.alias("_payload"),
-            err.alias(ERROR_COL),
-            F.col("value").alias(RAW_COL),
-            F.col("partition").alias(META["partition"]),
-            F.col("offset").alias(META["offset"]),
-            F.col("topic").alias(META["topic"]),
-            F.col("timestamp").alias(META["timestamp"]),
-            F.col("timestampType").alias(META["timestamp_type"]),
+        from kafka_delta_ingest_spark.serialization import (
+            avro_payload_to_json,
+            avro_registry_to_json,
+            json_text_to_struct,
         )
 
+        if (
+            fmt == MessageFormat.AVRO_SCHEMA_REGISTRY
+            and self.opts.schema_registry_url
+            and not self.opts.avro_schema_json
+        ):
+            # Per-message writer-schema resolution by the id in the
+            # wire-format header (reference src/serialization.rs:212-241).
+            text = avro_registry_to_json(
+                value,
+                self.opts.schema_registry_url,
+                fetcher=self.opts.schema_registry_fetcher,
+            )
+        else:
+            text = avro_payload_to_json(
+                value,
+                avro_schema_json=self.opts.avro_schema_json,
+                confluent_wire_format=fmt == MessageFormat.AVRO_SCHEMA_REGISTRY,
+                soe_schemas=self.opts.soe_schemas
+                if fmt == MessageFormat.AVRO_SOE
+                else None,
+            )
+        return json_text_to_struct(text, self.target_schema)
+
+    def _compile(self, raw: DataFrame) -> MessagePath:
+        target = self.target_schema
+        names = target.fieldNames()
+        value = F.col("value")
+        # Empty payloads are skipped silently, not dead-lettered
+        # (reference src/lib.rs:847-852), but their offsets count. They
+        # stay in the frame as a third row class: the decoders see NULL,
+        # the error is NULL, and so is the conformance flag (route).
+        nonempty = F.length(value) > 0
+        parsed, err = self._decode(F.when(nonempty, value))
+        decode = [
+            parsed.alias("_payload"),
+            F.when(nonempty, err).alias(ERROR_COL),
+            value.alias(RAW_COL),
+            *[F.col(DEFAULT_KAFKA_COLS[k]).alias(c) for k, c in META.items()],
+        ]
         # Flatten payload to top level (the reference's message object),
         # carrying meta + error columns alongside.
-        flat = staged.select(
-            *[F.col(f"_payload.`{f.name}`").alias(f.name) for f in self.target_schema.fields],
-            ERROR_COL,
-            RAW_COL,
+        flatten = [
+            *[F.col(f"_payload.`{n}`").alias(n) for n in names],
+            F.col(ERROR_COL),
+            F.col(RAW_COL),
             *[F.col(c) for c in META.values()],
-        )
-
-        transformed = self.transformer.apply(flat)
+        ]
+        flat = raw.select(*decode).select(*flatten)
+        transform = self.transformer.columns(flat.schema)
+        transformed_schema = flat.select(*transform).schema
+        transformed = transformed_schema.fieldNames()
 
         # Keep the PRE-coercion record for the quarantine path:
         # coercion nulls the offending field, so serializing the
@@ -230,45 +274,75 @@ class IngestJob:
         # process_batch persists this frame, which defeats column
         # pruning, so a plain column would cost every good row a
         # to_json and its raw bytes in the cache.
-        tcols = [
-            f.name
-            for f in self.target_schema.fields
-            if f.name in transformed.columns
-        ]
-        pre = transformed.withColumn(
-            PRE_COERCE_COL, F.struct(*[F.col(f"`{c}`") for c in tcols])
-        )
-        coerced = apply_coercions(
-            pre, self.target_schema, conform_col=CONFORM_COL, keep_extra=True
-        )
+        pre = F.struct(*[F.col(f"`{n}`") for n in names if n in transformed])
+        coerce = coercion_columns(
+            transformed_schema, target, CONFORM_COL, keep_extra=True
+        ) + [pre.alias(PRE_COERCE_COL)]
         failed = F.col(ERROR_COL).isNotNull()
-        return coerced.withColumns({
-            RAW_COL: F.when(failed, F.col(RAW_COL)),
-            PRE_COERCE_JSON_COL: F.when(
-                ~failed & ~F.col(CONFORM_COL), F.to_json(F.col(PRE_COERCE_COL))
+        conforms = F.col(CONFORM_COL)
+        carried = names + [n for n in transformed if n not in names]
+        route = [
+            F.when(failed, F.col(RAW_COL)).alias(RAW_COL) if n == RAW_COL
+            else F.col(f"`{n}`")
+            for n in carried
+        ] + [
+            F.when(F.length(F.col(RAW_COL)) > 0, conforms).alias(CONFORM_COL),
+            F.when(
+                ~failed & ~conforms, F.to_json(F.col(PRE_COERCE_COL))
+            ).alias(PRE_COERCE_JSON_COL),
+        ]
+
+        # Empty rows have a NULL flag, so neither predicate holds.
+        good = F.col(ERROR_COL).isNull() & conforms
+        coerce_failed = ~failed & ~conforms
+        return MessagePath(
+            target=target,
+            stages=(decode, flatten, transform, coerce, route),
+            spread=[F.col("partition"), F.col("offset")],
+            regroup=[F.col(f"`{c}`") for c in self.opts.partition_by or []],
+            good=good,
+            good_columns=[F.col(f"`{n}`") for n in names],
+            dead=failed | coerce_failed,
+            dead_columns=dead_letter_columns(
+                F.col(RAW_COL),
+                F.col(PRE_COERCE_JSON_COL),
+                F.coalesce(
+                    F.col(ERROR_COL), F.lit("FailedToCoerceToDestinationSchema")
+                ),
             ),
-        }).drop(PRE_COERCE_COL)
+            partition=F.col(META["partition"]),
+            counts=[
+                F.max(META["offset"]).alias("offset"),
+                F.count_if(good).alias("good"),
+                F.count_if(failed).alias("deser"),
+                F.count_if(coerce_failed).alias("coerce"),
+            ],
+        )
+
+    def plan(self, raw: DataFrame) -> DataFrame:
+        """Kafka-layout DataFrame → annotated row stream.
+
+        ``raw`` must have the Spark Kafka source layout: ``value``
+        (binary), ``partition`` (int), ``offset`` (long), ``topic``
+        (string), ``timestamp`` (timestamp), ``timestampType`` (int).
+        Output: destination-schema columns + META columns + ERROR_COL
+        (non-null → dead letter) + CONFORM_COL (False → dead letter,
+        NULL → an empty message), plus the DLQ payloads: RAW_COL on
+        deserialization failures and PRE_COERCE_JSON_COL on
+        non-conforming rows (null on every other row).
+        """
+        out = raw
+        for cols in self.message_path(raw).stages:
+            out = out.select(*cols)
+        return out
 
     def split(self, planned: DataFrame) -> tuple[DataFrame, DataFrame]:
-        """(good rows projected to the destination schema, dead letters)."""
-        target_cols = [f.name for f in self.target_schema.fields]
-        good = (
-            planned.filter(F.col(ERROR_COL).isNull() & F.col(CONFORM_COL))
-            .select(*[F.col(f"`{c}`") for c in target_cols])
-        )
-        deser_failed = planned.filter(F.col(ERROR_COL).isNotNull())
-        dlq_deser = deser_failed.select(
-            *dead_letter_columns(F.col(RAW_COL), None, F.col(ERROR_COL))
-        )
-        nonconforming = planned.filter(F.col(ERROR_COL).isNull() & ~F.col(CONFORM_COL))
-        dlq_bad = nonconforming.select(
-            *dead_letter_columns(
-                None,
-                F.col(PRE_COERCE_JSON_COL),
-                F.lit("FailedToCoerceToDestinationSchema"),
-            )
-        )
-        return good, dlq_deser.unionByName(dlq_bad)
+        """(good rows projected to the destination schema, dead letters)
+        of a frame :meth:`plan` built. Empty messages are in neither."""
+        path = self._path
+        good = planned.filter(path.good).select(*path.good_columns)
+        dead = planned.filter(path.dead).select(*path.dead_columns)
+        return good, dead
 
     # ------------------------------------------------------------------
     # Execution
@@ -279,9 +353,9 @@ class IngestJob:
         runtime schema evolution (reference ``update_schema``
         src/writer.rs:370-387 + src/lib.rs:956-963: after a write the
         table metadata is re-read; on drift the Arrow schema and the
-        coercion tree are rebuilt). Our plan is recompiled from
-        ``target_schema`` every batch, so adopting the new StructType is
-        the whole rebuild. Returns True when the schema changed."""
+        coercion tree are rebuilt). Adopting the new StructType makes
+        the next :meth:`message_path` rebuild the compiled path.
+        Returns True when the schema changed."""
         declared = self.table.table_schema()
         if declared is not None and declared != self.target_schema:
             self.target_schema = declared
@@ -343,17 +417,28 @@ class IngestJob:
         and for seek/latest bootstraps on sources that cannot seek."""
         if self._offset_floors is None:
             self._offset_floors = self.ledger_floors()
-        if not self._offset_floors:
+            if self._offset_floors:
+                pairs = [
+                    F.lit(x)
+                    for p, o in sorted(self._offset_floors.items())
+                    for x in (p, o)
+                ]
+                floor = F.coalesce(
+                    F.create_map(*pairs)[F.col("partition")], F.lit(-(1 << 62))
+                )
+                self._above_floor = F.col("offset") > floor
+        if self._above_floor is None:
             return raw
-        pairs = [
-            F.lit(x)
-            for p, o in sorted(self._offset_floors.items())
-            for x in (p, o)
-        ]
-        floor = F.coalesce(
-            F.create_map(*pairs)[F.col("partition")], F.lit(-(1 << 62))
-        )
-        return raw.filter(F.col("offset") > floor)
+        return raw.filter(self._above_floor)
+
+    def _commit_offsets(self, txn: dict[str, int]) -> tuple[int, bool]:
+        """Record the offsets of a batch with no row to append (only
+        dead letters and empty messages) in a ledger-only commit:
+        ``(version, skipped)``. A replay commits nothing."""
+        snap = self.table.snapshot()
+        if already_applied(snap["txn"], txn):
+            return snap["version"], True
+        return self.table.commit_offsets(txn), False
 
     def process_batch(self, raw: DataFrame, batch_id: int = 0) -> BatchMetrics:
         """foreachBatch body: split, append data + txn ledger, DLQ.
@@ -367,80 +452,72 @@ class IngestJob:
         one task), so each table partition it touches is encoded by one
         writer task and lands in one file. Dead letters go to one file
         per batch. A batch that is already wide keeps the narrow,
-        exchange-free plan."""
+        exchange-free plan.
+
+        The planned frame is cached, and one grouped aggregate over it
+        builds the cache and returns, per Kafka partition, the max
+        offset and the good, deserialization-failed and coercion-failed
+        row counts. The data write and the DLQ write then read the
+        cache; a batch with no dead letter runs no DLQ write."""
         import time as _time
 
         t_start = _time.perf_counter()
         self.sync_schema()
         fresh = self._apply_offset_floors(raw)
+        path = self.message_path(fresh)
         width = narrow_width(fresh)
         if width is not None:
-            fresh = fresh.repartition(width, "partition", "offset")
+            fresh = fresh.repartition(width, *path.spread)
         planned = self.plan(fresh).persist()
         try:
-            good, dlq = self.split(planned)
-            if width is not None:
-                parts = [F.col(f"`{c}`") for c in self.opts.partition_by or []]
-                # An explicit count: AQE does not coalesce it, so each
-                # table partition gets exactly one writer task.
-                good = good.repartition(width, *parts) if parts else good.repartition(1)
-
             # Per-Kafka-partition last offsets → txn actions
-            # (reference src/delta_helpers.rs:15-40): DLQ'd AND
+            # (reference src/delta_helpers.rs:15-40). Dead letters and
             # empty/tombstone messages count as processed (the
-            # reference counts empties, src/lib.rs:847-852), so offsets
-            # come from the RAW batch — the planned frame has already
-            # dropped empty payloads, and a ledger built from it would
-            # understate progress on compacted topics and re-consume
-            # tombstone offsets after a seek.
-            # This is a second scan of raw, but column-pruned to the
-            # two int columns (partition, offset) — no payload decode.
-            # observe() can't replace it: per-partition max is a
-            # GROUPED aggregate, and observation metrics are scalar
-            # (a collect_list map-building workaround would buffer the
-            # whole batch per task). Measured cost is noise next to
-            # the parquet write (r6 verdict, What's wrong #4).
-            offsets = {
-                row["p"]: row["o"]
-                for row in raw.groupBy(F.col("partition").alias("p"))
-                .agg(F.max("offset").alias("o"))
-                .collect()
+            # reference counts empties, src/lib.rs:847-852), and the
+            # planned frame keeps both, so the ledger does not
+            # understate progress on compacted topics.
+            counts = planned.groupBy(path.partition).agg(*path.counts).collect()
+            txn = {
+                f"{self.opts.app_id}-{r[META['partition']]}": r["offset"]
+                for r in counts
             }
-            txn = {f"{self.opts.app_id}-{p}": o for p, o in offsets.items()}
+            n_good = sum(r["good"] for r in counts)
+            # The reference keeps the two failure causes apart
+            # (src/metrics.rs): rows that never parsed vs rows that
+            # parsed but failed schema coercion.
+            n_deser = sum(r["deser"] for r in counts)
+            n_coerce = sum(r["coerce"] for r in counts)
+            good, dead = self.split(planned)
 
-            m = BatchMetrics()
+            m = BatchMetrics(skipped=True)
             try:
-                result = self.table.write_batch(
-                    good, partition_by=self.opts.partition_by or None, txn=txn
-                )
+                if n_good:
+                    if width is not None:
+                        # An explicit count: AQE does not coalesce it, so
+                        # each table partition gets exactly one writer task.
+                        good = (
+                            good.repartition(width, *path.regroup)
+                            if path.regroup else good.repartition(1)
+                        )
+                    result = self.table.write_batch(
+                        good, partition_by=self.opts.partition_by or None, txn=txn
+                    )
+                    m.version = result.version
+                    m.skipped = result.skipped
+                    m.delta_write_num_records = result.num_records
+                    m.delta_add_file_size = result.num_bytes
+                elif txn:
+                    m.version, m.skipped = self._commit_offsets(txn)
             except Exception:
                 self.metrics.count(DELTA_WRITE_FAILED)
                 raise
-            m.version = result.version
-            m.skipped = result.skipped
-            m.delta_write_num_records = result.num_records
-            m.delta_add_file_size = result.num_bytes
-            # One aggregate splits the DLQ by cause: rows that never
-            # parsed (deserialization) vs rows that parsed but failed
-            # schema coercion — the reference keeps these counters
-            # separate (src/metrics.rs), and conflating them makes the
-            # deserialization-failure dashboard spike on schema drift.
-            cause = dlq.agg(
-                F.count("*").alias("n"),
-                F.sum(
-                    (
-                        F.col("error") == "FailedToCoerceToDestinationSchema"
-                    ).cast("long")
-                ).alias("n_coerce"),
-            ).collect()[0]
-            n_dlq = int(cause["n"] or 0)
-            n_coerce = int(cause["n_coerce"] or 0)
-            m.messages_deserialization_failed = n_dlq - n_coerce
+            m.messages_deserialization_failed = n_deser
             m.messages_transform_failed = n_coerce
             m.messages_deserialized = m.delta_write_num_records + n_coerce
-            # One DLQ file per batch: the good-row write has built the
-            # cache by now, so coalescing over it adds no exchange.
-            self.dlq.write(dlq if width is None else dlq.coalesce(1))
+            if n_deser or n_coerce:
+                # One DLQ file per batch: the aggregate built the cache,
+                # so coalescing over it adds no exchange.
+                self.dlq.write(dead if width is None else dead.coalesce(1))
             # Continuous file sizing (opt-in): after every
             # auto_optimize_interval ingest commits, bin-pack small
             # files toward min_bytes_per_file — the Spark-idiomatic
@@ -462,7 +539,7 @@ class IngestJob:
             self.metrics_history.append(m)
             self.metrics.record_batch(
                 deserialized=m.messages_deserialized,
-                deserialize_failed=m.messages_deserialization_failed,
+                deserialize_failed=n_deser,
                 transform_failed=n_coerce,
                 write_duration_s=_time.perf_counter() - t_start,
                 add_file_bytes=m.delta_add_file_size,

@@ -90,20 +90,17 @@ def get_spark(
         # ~200 ms of worker CPU per Python-UDF task. The wrapper makes
         # invalidation mtime-aware (the later-CPython upstream fix).
         # Only set when WE create the context AND the module is where
-        # the worker's PYTHONPATH will find it — a harness-owned
-        # session never sees this conf.
+        # the workers will find it — a harness-owned session never sees
+        # this conf. The repository root reaches the workers' PYTHONPATH
+        # through the executor environment, which Spark merges into it;
+        # this process's own environment is left alone.
         repo_root = os.path.dirname(
             os.path.dirname(os.path.abspath(__file__))
         )
         if os.path.exists(os.path.join(repo_root, "kdi_pydaemon.py")):
-            cur = os.environ.get("PYTHONPATH", "")
-            if repo_root not in cur.split(os.pathsep):
-                os.environ["PYTHONPATH"] = (
-                    repo_root + (os.pathsep + cur if cur else "")
-                )
             builder = builder.config(
-                "spark.python.daemon.module", "kdi_pydaemon"
-            )
+                "spark.executorEnv.PYTHONPATH", repo_root
+            ).config("spark.python.daemon.module", "kdi_pydaemon")
         # Local mode runs everything in the driver JVM, whose heap
         # defaults to 1g regardless of machine size — 32 concurrent
         # tasks sharing 1g hit GCLocker retry death on any

@@ -40,6 +40,7 @@ import re
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql.types import DataType, StructType
 
 # Well-known Kafka metadata properties (reference src/transforms.rs:310-316).
 KAFKA_PROPERTIES = (
@@ -290,49 +291,54 @@ class Transformer:
     kafka_cols: dict[str, str] = field(default_factory=lambda: dict(DEFAULT_KAFKA_COLS))
 
     def apply(self, df: DataFrame) -> DataFrame:
-        # Compile every SOURCE against the pristine input `df` — one
-        # logical snapshot, matching reference src/transforms.rs:399.
-        assignments: list[tuple[list[str], Column]] = []
+        return df.select(*self.columns(df.schema))
+
+    def columns(self, schema: StructType) -> list[Column]:
+        """The one projection :meth:`apply` runs over a frame of
+        ``schema``: every input column (assigned ones rebuilt in place),
+        then each new target root in first-assignment order.
+
+        Every SOURCE is compiled against the pristine input columns —
+        one logical snapshot, matching reference src/transforms.rs:399 —
+        and the assignments are then composed in order, each one over
+        the previous one's result (the reference's read-snapshot /
+        write-mutable-object split)."""
+        out: dict[str, Column] = {f.name: F.col(f"`{f.name}`") for f in schema.fields}
+        # the type of each root as far as the composition has changed
+        # it: None once assigned, read back from the analyzer only if a
+        # later dotted target descends into it
+        types: dict[str, DataType | None] = {f.name: f.dataType for f in schema.fields}
         for target, source in self.transforms.items():
             if source in KAFKA_PROPERTIES:
-                col = kafka_meta_column(source, self.kafka_cols)
+                value = kafka_meta_column(source, self.kafka_cols)
             else:
-                col = compile_expression(source)
-            assignments.append((target.split("."), col))
+                value = compile_expression(source)
+            parts = target.split(".")
+            root = parts[0]
+            if root not in out:
+                out[root] = (
+                    value if len(parts) == 1
+                    else F.when(value.isNotNull(), _nested_struct(parts[1:], value))
+                )
+            elif len(parts) == 1:
+                # Null result → keep the previous value (coalesce also
+                # finds the common type when the transform retypes it).
+                out[root] = F.coalesce(value, out[root])
+            else:
+                dtype = types[root]
+                if dtype is None:
+                    dtype = _analyzed_type(schema, out[root])
+                out[root] = _set_in_struct(out[root], dtype, parts[1:], value)
+            types[root] = None
+        return [c.alias(name) for name, c in out.items()]
 
-        # Materialize every result into a temp column FIRST (all reading
-        # the untouched input), then apply assignments in order — matching
-        # the reference's read-snapshot / write-mutable-object split.
-        out = df
-        for i, (_parts, col) in enumerate(assignments):
-            out = out.withColumn(f"_kdi_tx_{i}", col)
-        for i, (parts, _col) in enumerate(assignments):
-            out = _set_path(out, parts, F.col(f"_kdi_tx_{i}"))
-        return out.drop(*[f"_kdi_tx_{i}" for i in range(len(assignments))])
 
+def _analyzed_type(schema: StructType, col: Column) -> DataType:
+    """The type ``col`` resolves to over a frame of ``schema``."""
+    from pyspark.sql import SparkSession
 
-def _set_path(df: DataFrame, parts: list[str], value: Column) -> DataFrame:
-    """Assign ``value`` at a dotted path with the reference's null-skip
-    and intermediate-struct-creation semantics (src/transforms.rs:323-371).
-
-    Unlike ``Column.withField``, this rebuilds intermediate structs
-    explicitly so that a NULL (or absent) intermediate object is
-    *created* rather than propagated — matching the reference's
-    "parent object does not exist yet → create an object, then recurse".
-    """
-    root = parts[0]
-    if len(parts) == 1:
-        if root in df.columns:
-            # Null result → keep the previous value (coalesce also finds
-            # the common type when the transform retypes the column).
-            return df.withColumn(root, F.coalesce(value, F.col(f"`{root}`")))
-        return df.withColumn(root, value)
-    if root in df.columns:
-        cur = F.col(f"`{root}`")
-        new_root = _set_in_struct(cur, df.schema[root].dataType, parts[1:], value)
-        return df.withColumn(root, new_root)
-    new_root = _nested_struct(parts[1:], value)
-    return df.withColumn(root, F.when(value.isNotNull(), new_root))
+    probe = SparkSession.active().createDataFrame([], schema)
+    return probe.select(col).schema[0].dataType
 
 
 def _nested_struct(parts: list[str], value: Column) -> Column:
@@ -344,9 +350,10 @@ def _nested_struct(parts: list[str], value: Column) -> Column:
 
 def _set_in_struct(cur: Column, dtype, parts: list[str], value: Column) -> Column:
     """Rebuild ``cur`` (struct-typed, possibly NULL) with ``value`` set at
-    ``parts``; creates intermediate structs and preserves siblings."""
-    from pyspark.sql.types import StructType
-
+    ``parts``; creates intermediate structs and preserves siblings — the
+    reference's "parent object does not exist yet → create an object,
+    then recurse" (src/transforms.rs:323-371), which
+    ``Column.withField`` would not do for a NULL parent."""
     p = parts[0]
     is_struct = isinstance(dtype, StructType)
     existing_names = dtype.fieldNames() if is_struct else []

@@ -174,6 +174,42 @@ def test_ingest_job_avro_message_path(spark):
     assert dlq.count() == 1
 
 
+def test_ingest_job_avro_empty_messages_are_not_dead_letters(spark):
+    """Empty and tombstone Avro messages reach the decoder as NULL and
+    are neither written nor dead-lettered (reference src/lib.rs:847-852)."""
+    import datetime
+
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    from kafka_delta_ingest_spark.config import IngestOptions, MessageFormat
+    from kafka_delta_ingest_spark.ingest import IngestJob
+
+    schema_json = json.dumps(
+        {"type": "record", "name": "E", "fields": [{"name": "id", "type": "long"}]}
+    )
+    good = ap.encode({"id": 7}, ap.parse_schema(schema_json))
+    raw = spark.createDataFrame(
+        [
+            (v, 0, o, "t", datetime.datetime(2024, 1, 1), 0)
+            for o, v in enumerate([good, b"", None])
+        ],
+        "value binary, partition int, offset long, topic string, "
+        "timestamp timestamp, timestampType int",
+    )
+    job = IngestJob(
+        IngestOptions(
+            topic="t",
+            table_uri="/tmp/kdi-avro-noop",
+            message_format=MessageFormat.AVRO,
+            avro_schema_json=schema_json,
+        ),
+        StructType([StructField("id", LongType())]),
+    )
+    good_df, dlq = job.split(job.plan(raw))
+    assert [r.id for r in good_df.collect()] == [7]
+    assert dlq.count() == 0
+
+
 def test_soe_schema_dir_cli_loading(tmp_path):
     """--soe-avro with a directory registers every schema under its
     Rabin fingerprint (reference SoeAvroDeserializer::try_from_path)."""

@@ -1,13 +1,16 @@
 """Batch shape of ``IngestJob.process_batch``: a micro-batch narrower
 than the cluster is hash-spread before the message path and regrouped
 by the table's partition columns before the write; a wide one keeps
-the exchange-free plan. Also the slimmed DLQ payload columns, the
-job-free width check and the ``delta.write.failed`` counter."""
+the exchange-free plan. The message path is compiled once per schema,
+and a batch runs at most seven Spark jobs. Also the slimmed DLQ payload
+columns, the job-free width check and the ``delta.write.failed``
+counter."""
 
 import base64
 import datetime
 import json
 import os
+import uuid
 
 import pytest
 from pyspark.sql.types import (
@@ -18,8 +21,13 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from kafka_delta_ingest_spark import ingest
 from kafka_delta_ingest_spark.config import IngestOptions
-from kafka_delta_ingest_spark.delta_standard import DeltaStandardSink, read_delta
+from kafka_delta_ingest_spark.delta_standard import (
+    DeltaStandardSink,
+    DeltaStandardWriter,
+    read_delta,
+)
 from kafka_delta_ingest_spark.ingest import (
     CONFORM_COL,
     ERROR_COL,
@@ -29,6 +37,7 @@ from kafka_delta_ingest_spark.ingest import (
     narrow_width,
 )
 from kafka_delta_ingest_spark.metrics import DELTA_WRITE_COMPLETED, DELTA_WRITE_FAILED
+from kafka_delta_ingest_spark.transforms import Transformer
 
 SCHEMA = StructType(
     [
@@ -46,27 +55,31 @@ DESER_BYTES = "{not json: é".encode()
 BAD_TS = "2024-03-02 10:00:00"  # no offset: not RFC3339
 
 
-def _messages(batch: int, n: int = 60) -> list[tuple[int, bytes]]:
-    """(id, payload) for one batch: good rows over three dates, one
-    unparseable payload and one with a non-RFC3339 ``ts``."""
+def _messages(batch: int, n: int = 60, bad: bool = True,
+              extra=None) -> list[tuple[int, bytes]]:
+    """(id, payload) for one batch: good rows over three dates, then
+    (if ``bad``) one unparseable payload and one with a non-RFC3339
+    ``ts``. ``extra(i)`` adds fields to each good payload."""
     out = []
     for k in range(n):
         i = batch * 1000 + k
         ts = f"{DATES[k % 3]}T{k % 24:02d}:00:00Z"
-        out.append((i, json.dumps({"id": i, "ts": ts}).encode()))
-    out.append((batch * 1000 + n, DESER_BYTES))
-    bad = batch * 1000 + n + 1
-    out.append((bad, json.dumps({"id": bad, "ts": BAD_TS}).encode()))
+        payload = {"id": i, "ts": ts, **(extra(i) if extra else {})}
+        out.append((i, json.dumps(payload).encode()))
+    if bad:
+        out.append((batch * 1000 + n, DESER_BYTES))
+        i = batch * 1000 + n + 1
+        out.append((i, json.dumps({"id": i, "ts": BAD_TS}).encode()))
     return out
 
 
-def _raw(spark, batch: int, splits: int = 1):
+def _raw(spark, batch: int, splits: int = 1, **kw):
     """A Kafka-layout frame in ``splits`` input partitions, like the
     frame foreachBatch hands over (a scan of an existing RDD)."""
     stamp = datetime.datetime(2024, 3, 1)
     rows = [
         (bytearray(v), i % 4, i, "events", stamp, 0)
-        for i, v in _messages(batch)
+        for i, v in _messages(batch, **kw)
     ]
     return spark.createDataFrame(
         spark.sparkContext.parallelize(rows, splits), RAW_DDL
@@ -79,25 +92,53 @@ def _plan(df) -> str:
     )
 
 
+def _exchanges(df) -> list[str]:
+    """The partitioning of every shuffle exchange in ``df``'s physical
+    plan, each exchange once. The walk enters a cached relation through
+    its adaptive plan's current plan: the explain string prints an
+    adaptive plan that has run twice, as its final and initial plan."""
+    out = []
+
+    def walk(node):
+        name = node.nodeName()
+        if name == "AdaptiveSparkPlan":
+            return walk(node.executedPlan())
+        if name.endswith("QueryStage"):
+            return walk(node.plan())
+        if name == "InMemoryTableScan":
+            walk(node.relation().cachedPlan())
+        if name == "Exchange":
+            out.append(node.outputPartitioning().toString())
+        children = node.children()
+        for i in range(children.size()):
+            walk(children.apply(i))
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return out
+
+
 class RecordingSink(DeltaStandardSink):
-    """A real standard-Delta sink that keeps the plan of every frame
-    handed to ``write_batch``."""
+    """A real standard-Delta sink that keeps the plan and the shuffle
+    exchanges of every frame handed to ``write_batch``."""
 
     def __init__(self, path):
         super().__init__(path)
         self.plans = []
+        self.exchanges = []
 
     def write_batch(self, df, partition_by=None, txn=None):
         self.plans.append(_plan(df))
+        self.exchanges.append(_exchanges(df))
         return super().write_batch(df, partition_by, txn)
 
 
-def _job(tmp_path, partition_by=("date",), sink=None):
+def _job(tmp_path, partition_by=("date",), sink=None, dlq_transforms=None):
     opts = IngestOptions(
         topic="events",
         table_uri=str(tmp_path / "table"),
         dlq_table_location=str(tmp_path / "dlq"),
         transforms={"date": "substr(ts, `0`, `10`)"},
+        dlq_transforms=dlq_transforms or {},
         partition_by=list(partition_by),
     )
     if sink is None:
@@ -117,7 +158,7 @@ def test_single_split_batch_is_spread_and_regrouped_by_date(spark, tmp_path):
     for batch in range(2):
         m = job.run_batch(_raw(spark, batch))
         assert m.delta_write_num_records == 60
-        p = job.table.plans[-1]
+        p = " ".join(job.table.exchanges[-1])
         # one regroup on the table's partition column, after the
         # message path's spread on the Kafka coordinates
         assert p.count("hashpartitioning(date") == 1
@@ -242,3 +283,88 @@ def test_failed_sink_write_counts_delta_write_failed(spark, tmp_path):
     assert totals[DELTA_WRITE_FAILED] == 1
     assert DELTA_WRITE_COMPLETED not in totals
     assert job.metrics_history == []
+
+
+def _jobs_of(spark, fn):
+    """(fn's result, the number of Spark jobs it ran)."""
+    sc = spark.sparkContext
+    group = f"kdi-batch-shape-{uuid.uuid4()}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_narrow_batch_runs_at_most_seven_jobs(spark, tmp_path):
+    """spread, the cache stage, the per-partition aggregate (map and
+    result), regroup, data write, DLQ write — no second scan of the
+    source for offsets and no DLQ-cause aggregate."""
+    job = _job(tmp_path, sink=DeltaStandardSink(str(tmp_path / "table")))
+    job.run_batch(_raw(spark, 0))
+    m, n = _jobs_of(spark, lambda: job.run_batch(_raw(spark, 1)))
+    assert m.delta_write_num_records == 60
+    assert m.messages_deserialization_failed == 1
+    assert m.messages_transform_failed == 1
+    assert n <= 7
+
+
+def test_clean_batch_runs_no_dlq_write(spark, tmp_path):
+    job = _job(tmp_path, sink=DeltaStandardSink(str(tmp_path / "table")))
+    job.run_batch(_raw(spark, 0))
+    _, dirty = _jobs_of(spark, lambda: job.run_batch(_raw(spark, 1)))
+    m, clean = _jobs_of(spark, lambda: job.run_batch(_raw(spark, 2, bad=False)))
+    assert m.delta_write_num_records == 60 and not m.skipped
+    assert clean == dirty - 1
+    log = os.path.join(job.opts.dlq_table_location, "_delta_log")
+    assert sorted(f for f in os.listdir(log) if f.endswith(".json")) == [
+        f"{v:020d}.json" for v in (0, 1)
+    ]
+
+
+def test_message_path_is_built_once_per_schema(spark, tmp_path, monkeypatch):
+    calls = {}
+
+    def counting(owner, name):
+        orig = getattr(owner, name)
+
+        def wrapper(*args, **kwargs):
+            calls[name] = calls.get(name, 0) + 1
+            return orig(*args, **kwargs)
+
+        monkeypatch.setattr(owner, name, wrapper)
+
+    for name in ("json_payload_to_struct", "apply_coercions", "coercion_columns"):
+        counting(ingest, name)
+    for name in ("apply", "columns"):
+        counting(Transformer, name)
+
+    job = _job(tmp_path, dlq_transforms={"day": "substr(to_string(timestamp), `0`, `10`)"})
+    job.run_batch(_raw(spark, 0))
+    # the message path, then the DLQ's transforms at its first write
+    assert calls == {"json_payload_to_struct": 1, "coercion_columns": 1, "columns": 2}
+    path = job._path
+    job.run_batch(_raw(spark, 1))
+    assert calls == {"json_payload_to_struct": 1, "coercion_columns": 1, "columns": 2}
+    assert job._path is path
+    days = {r.day for r in read_delta(spark, job.opts.dlq_table_location).collect()}
+    assert len(days) == 1 and len(days.pop()) == 10
+
+
+def test_evolved_schema_rebuilds_the_path(spark, tmp_path):
+    job = _job(tmp_path)
+    job.run_batch(_raw(spark, 0))
+    path = job._path
+    evolved = StructType(list(SCHEMA.fields) + [StructField("size", LongType())])
+    DeltaStandardWriter(job.opts.table_uri).evolve_schema(evolved)
+    m = job.run_batch(_raw(spark, 1, extra=lambda i: {"size": i * 10}))
+    assert m.delta_write_num_records == 60
+    assert job.target_schema == evolved and job._path is not path
+    sizes = {
+        r.id: r.size
+        for r in read_delta(spark, job.opts.table_uri).select("id", "size").collect()
+    }
+    assert len(sizes) == 120
+    assert sizes[5] is None and sizes[1005] == 10050

@@ -251,6 +251,42 @@ def test_deserialization_failure_routes_to_dlq(spark, tmp_path):
     assert DeltaStandardSink(table).snapshot()["txn"] == {"app-0": 2}
 
 
+@pytest.mark.parametrize("fmt", ["delta", "iceberg", "hudi"])
+def test_batch_without_good_rows_records_its_offsets(spark, tmp_path, fmt):
+    """A batch of only a dead letter and a tombstone appends no row,
+    but its offsets are processed: the ledger moves to them in a
+    ledger-only commit, so a fresh job replaying the batch skips it
+    instead of dead-lettering the message a second time."""
+    dlq_loc = str(tmp_path / "dlq")
+    opts = IngestOptions(
+        table_uri=str(tmp_path / "t"), app_id="app",
+        dlq_table_location=dlq_loc, log_format=fmt,
+    )
+    schema = StructType([StructField("id", StringType())])
+
+    def raw(*values):
+        return _raw_df(spark, [
+            Row(value=v, partition=0, offset=o, topic="t",
+                timestamp=None, timestampType=0)
+            for o, v in values
+        ])
+
+    job = IngestJob(opts, schema)
+    job.run_batch(raw((0, bytearray(b'{"id": "0"}'))))
+    dead = raw((1, bytearray(b"this is not json")), (2, None))
+    m = job.run_batch(dead)
+    assert not m.skipped
+    assert m.messages_deserialization_failed == 1
+    assert m.delta_write_num_records == 0
+    assert job.table.snapshot()["txn"] == {"app-0": 2}
+    assert read_delta(spark, dlq_loc).count() == 1
+
+    replay = IngestJob(opts, schema).run_batch(dead)
+    assert replay.skipped
+    assert read_delta(spark, dlq_loc).count() == 1
+    assert job.table.read(spark).count() == 1
+
+
 def test_coercion_failure_routes_to_dlq(spark, tmp_path):
     table = str(tmp_path / "t")
     dlq_loc = str(tmp_path / "dlq")

@@ -126,3 +126,34 @@ def test_empty_payload_guard(spark):
     good, dlq = job.split(planned)
     assert good.count() == 1  # only the real message
     assert dlq.count() == 0  # empties skipped, NOT dead-lettered
+
+
+def test_decoders_map_null_to_null(spark):
+    """IngestJob hands an empty or tombstone message to the decoders as
+    NULL: each one returns NULL for it, without decoding anything."""
+    from kafka_delta_ingest_spark import avro_python as ap
+    from kafka_delta_ingest_spark.serialization import (
+        avro_payload_to_json,
+        avro_registry_to_json,
+    )
+
+    schema_json = json.dumps(
+        {"type": "record", "name": "E", "fields": [{"name": "id", "type": "long"}]}
+    )
+
+    def fetch(url):
+        raise AssertionError(f"no schema id to resolve, asked for {url}")
+
+    v = F.col("value")
+    cols = {
+        "gzip": gunzip(v),
+        "avro": avro_payload_to_json(v, avro_schema_json=schema_json),
+        "soe": avro_payload_to_json(
+            v, soe_schemas={ap.schema_fingerprint(schema_json): schema_json}
+        ),
+        "container": avro_payload_to_json(v),
+        "registry": avro_registry_to_json(v, "http://registry.test", fetcher=fetch),
+    }
+    df = spark.createDataFrame([Row(value=None)], "value binary")
+    row = df.select(*[c.alias(k) for k, c in cols.items()]).first()
+    assert row.asDict() == dict.fromkeys(cols)
