@@ -393,9 +393,9 @@ def _fp_table() -> list[int]:
 
 def rabin_fingerprint(text: str) -> int:
     """64-bit CRC-64-AVRO (Rabin) fingerprint of raw text, returned as
-    a SIGNED little-endian i64 to match ``soe_fingerprint`` in
-    serialization.py (reference src/serialization.rs:188-195 reads the
-    wire bytes as little-endian i64). Callers fingerprinting a SCHEMA
+    a SIGNED little-endian i64, the way single-object-encoding routing
+    in serialization.py reads the wire bytes (reference
+    src/serialization.rs:188-195). Callers fingerprinting a SCHEMA
     should use :func:`schema_fingerprint`, which canonicalizes first."""
     table = _fp_table()
     fp = _EMPTY

@@ -185,7 +185,7 @@ def _executor_iceberg_entries(
     ``mapInPandas``; the driver collects only the manifest-sized
     result. ``items`` are (path, partition-values-JSON) pairs;
     ``fields`` the Iceberg schema fields whose ids key the metrics."""
-    from kafka_delta_ingest_spark.iceberg import footer_bounds
+    from kafka_delta_ingest_spark.iceberg import data_file_entry
 
     n_slices = max(1, min(len(items), 256))
     flist = spark.createDataFrame(
@@ -210,26 +210,12 @@ def _executor_iceberg_entries(
                 md = pq.ParquetFile(path).metadata
                 if md.num_rows == 0:
                     continue
-                nvc, lowers, uppers = footer_bounds(path, fields)
+                entry = data_file_entry(
+                    path, md, os.path.getsize(path), json.loads(pv),
+                    fields=fields,
+                )
                 rows.append(
-                    base64.b64encode(
-                        pickle.dumps(
-                            {
-                                "content": 0,
-                                "file_path": path,
-                                "file_format": "PARQUET",
-                                "partition": json.loads(pv),
-                                "record_count": md.num_rows,
-                                "file_size_in_bytes": os.path.getsize(
-                                    path
-                                ),
-                                "equality_ids": None,
-                                "null_value_counts": nvc,
-                                "lower_bounds": lowers,
-                                "upper_bounds": uppers,
-                            }
-                        )
-                    ).decode("ascii")
+                    base64.b64encode(pickle.dumps(entry)).decode("ascii")
                 )
             yield pd.DataFrame({"j": rows})
 

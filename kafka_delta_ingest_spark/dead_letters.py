@@ -70,9 +70,11 @@ class DeadLetterQueue:
         default=None, init=False, repr=False, compare=False
     )
 
-    def write(self, dlq_df: DataFrame) -> int:
-        """Write dead letters (rows of ``DEAD_LETTER_SCHEMA``); returns
-        the count routed (for metrics)."""
+    def write(self, dlq_df: DataFrame, txn: dict[str, int] | None = None) -> int:
+        """Write dead letters (rows of ``DEAD_LETTER_SCHEMA``) with the
+        batch's ``txn`` ledger entries, so a replayed batch appends
+        them once; returns the count routed (for metrics), 0 on a
+        replay."""
         if self.table_location is None:
             return 0  # noop DLQ: dead letters are dropped (default)
         out = dlq_df
@@ -85,4 +87,5 @@ class DeadLetterQueue:
         # Synchronous append to a standard Delta table (reference
         # insert_all, src/dead_letters.rs:240-316 + src/writer.rs:577-601)
         # through the same sink as the data table.
-        return DeltaStandardSink(self.table_location).write_batch(out).num_records
+        sink = DeltaStandardSink(self.table_location)
+        return sink.write_batch(out, txn=txn).num_records

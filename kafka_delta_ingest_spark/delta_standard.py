@@ -49,12 +49,14 @@ import os
 import urllib.parse
 
 from kafka_delta_ingest_spark.logstore import LocalLogStore, get_log_store
+from kafka_delta_ingest_spark.sinks import base as sink_base
 from kafka_delta_ingest_spark.sinks.base import (
+    STAGING_PREFIX,
     CommitResult,
     ConstraintViolation,
-    _parquet_stats,
+    _parse_partition_values,
     already_applied,
-    promote_staging,
+    staged_parquet,
     zorder_value,
 )
 
@@ -1200,9 +1202,11 @@ class DeltaStandardWriter:
       commits, a single-part parquet checkpoint of the reconciled
       state is written plus the ``_last_checkpoint`` pointer.
 
-    Data files are written by SPARK (one executor-parallel job into a
-    staging dir, then promoted under the table root) — the writer
-    itself only handles metadata, so write throughput scales with the
+    Data files are written by SPARK: one executor-parallel job into a
+    staging directory, then promoted under the table root, both through
+    :func:`sinks.base.staged_parquet`, which also removes the staging
+    directory when the job or the promotion fails. The writer itself
+    only handles metadata, so write throughput scales with the
     cluster exactly like any parquet write. The writer shares
     :func:`_replay` with the reader, so certification is independent
     of it: tests replay tables ``DeltaFixtureWriter`` hand-writes from
@@ -1653,61 +1657,80 @@ class DeltaStandardWriter:
     def _stage_adds(
         self, df, partition_by: list[str] | None, now_ms: int
     ) -> list[dict]:
-        """Write ``df`` executor-parallel into a staging dir, promote
-        the parquet under the table root (hive layout when
+        """Write ``df`` executor-parallel through
+        :func:`staged_parquet`, promote each non-empty file to the same
+        relative path under the table root (hive layout when
         partitioned), and return the add-action dicts with
-        footer-derived stats. Shared by write / update_where / merge —
-        the data path is always one Spark job; only metadata is
-        driver-side."""
-        import uuid
+        footer-derived stats. Zero-row files are never promoted: a
+        stats-less empty add would defeat every later pruning pass.
+        Shared by write / update_where / merge — the data path is
+        always one Spark job; only metadata is driver-side."""
+        with staged_parquet(df, self.root, partition_by) as staged:
+            adds = [
+                self._promote_add(
+                    f,
+                    # add paths are URIs: a partition directory Spark
+                    # escaped (``ts=00%3A00``) is percent-encoded once
+                    # more, as the protocol and every reader here
+                    # (unquote) expect
+                    urllib.parse.quote(
+                        f"{f.rel_dir}/{f.name}" if f.rel_dir else f.name,
+                        safe="/=",
+                    ),
+                    _parse_partition_values(f.rel_dir),
+                    now_ms,
+                    data_change=True,
+                )
+                for f in staged
+            ]
+        return [a for a in adds if a is not None]
 
-        staging = os.path.join(self.root, f"_staging-{uuid.uuid4().hex}")
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(staging)
-        # add paths are URIs: a partition directory Spark escaped
-        # (``ts=00%3A00``) is percent-encoded once more, as the
-        # protocol and every reader here (unquote) expect
-        return [
-            {**a, "path": urllib.parse.quote(a["path"], safe="/="),
-             "dataChange": True, "stats": json.dumps(a["stats"])}
-            for a in promote_staging(staging, self.root, now_ms)
-        ]
+    def _promote_add(self, f, path: str, partition_values: dict,
+                     now_ms: int, data_change: bool) -> dict | None:
+        """The add action of staged file ``f`` promoted to the URI
+        ``path`` under the table root, with its footer stats; None
+        (and ``f`` left to the staging cleanup) when it has no rows."""
+        # looked up on the module: tests hook it as the point after the
+        # snapshot read and before the commit
+        stats = sink_base._parquet_stats(f.path)
+        if stats["numRecords"] == 0:
+            return None
+        size = f.promote(os.path.join(self.root, urllib.parse.unquote(path)))
+        return {
+            "path": path,
+            "partitionValues": partition_values,
+            "size": size,
+            "modificationTime": now_ms,
+            "dataChange": data_change,
+            "stats": json.dumps(stats),
+        }
 
     def _stage_cdc(self, df) -> tuple[list[dict], list[str]]:
         """Write CDF change rows (must carry ``_change_type``) as
         ``_change_data/`` cdc parquet via staging. Returns (cdc
         actions, absolute written paths — for cleanup if the commit
-        aborts)."""
-        import shutil
+        aborts). Zero-row files are kept: an empty cdc file is how a
+        commit with no row diff says "no row changed"."""
         import uuid
 
-        cd_dir = os.path.join(self.root, "_change_data")
-        os.makedirs(cd_dir, exist_ok=True)
-        staging = os.path.join(self.root, f"_staging-{uuid.uuid4().hex}")
-        df.write.mode("overwrite").parquet(staging)
         actions: list[dict] = []
         written: list[str] = []
-        for fname in sorted(os.listdir(staging)):
-            if not fname.endswith(".parquet"):
-                continue
-            src = os.path.join(staging, fname)
-            dest_name = f"cdc-{uuid.uuid4().hex}.parquet"
-            dest = os.path.join(cd_dir, dest_name)
-            shutil.move(src, dest)
-            written.append(dest)
-            actions.append(
-                {
-                    "cdc": {
-                        "path": f"_change_data/{dest_name}",
-                        "partitionValues": {},
-                        "size": os.path.getsize(dest),
-                        "dataChange": False,
+        with staged_parquet(df, self.root) as staged:
+            for f in staged:
+                rel = f"_change_data/cdc-{uuid.uuid4().hex}.parquet"
+                dest = os.path.join(self.root, rel)
+                size = f.promote(dest)
+                written.append(dest)
+                actions.append(
+                    {
+                        "cdc": {
+                            "path": rel,
+                            "partitionValues": {},
+                            "size": size,
+                            "dataChange": False,
+                        }
                     }
-                }
-            )
-        shutil.rmtree(staging, ignore_errors=True)
+                )
         return actions, written
 
     # -- row-level DELETE (deletion vectors) -----------------------------
@@ -2559,13 +2582,14 @@ class DeltaStandardWriter:
         timestamp, and ``_change_data`` cdc files whose commit
         timestamp, is older than ``retention_ms``. Files no log action
         names (an aborted write's promoted parquet, a crashed delete's
-        DV ``.bin`` or cdc file, ``_staging-*`` leftovers) are aged by
-        mtime and must also be older than ``_UNTRACKED_MIN_AGE_MS``,
-        whatever the retention, since a writer lands each of them
-        before the commit that names it. As in Delta's VACUUM,
-        names starting with ``_`` or ``.`` (``_delta_log``, a streaming
-        checkpoint kept in the table root, ``.crc`` files) are never
-        touched, except ``_change_data``, ``_staging-*`` and partition
+        DV ``.bin`` or cdc file, a killed writer's staging directory)
+        are aged by mtime and must also be older than
+        ``_UNTRACKED_MIN_AGE_MS``, whatever the retention, since a
+        writer lands each of them before the commit that names it. As
+        in Delta's VACUUM, names starting with ``_`` or ``.``
+        (``_delta_log``, a streaming checkpoint kept in the table root,
+        ``.crc`` files) are never touched, except ``_change_data``,
+        staging directories (``STAGING_PREFIX``) and partition
         directories. Returns deleted relative paths. No commit —
         vacuum reclaims storage, it does not change state; time travel
         past the retention window stops working, exactly Delta's
@@ -2646,7 +2670,7 @@ class DeltaStandardWriter:
             return is_dir and (
                 name.startswith(part_dirs)
                 or top and (name == "_change_data"
-                            or name.startswith("_staging-"))
+                            or name.startswith(STAGING_PREFIX))
             )
 
         # an in-flight writer's staging dir is young (adding entries
@@ -2655,7 +2679,7 @@ class DeltaStandardWriter:
         stale_staging = [
             os.path.join(self.root, d)
             for d in os.listdir(self.root)
-            if d.startswith("_staging-")
+            if d.startswith(STAGING_PREFIX)
             and int(os.path.getmtime(os.path.join(self.root, d)) * 1000)
             <= untracked_cutoff
         ]
@@ -2663,7 +2687,7 @@ class DeltaStandardWriter:
             rel_dir = os.path.relpath(dirpath, self.root)
             # everything under a staging dir is Spark output no commit
             # names, its _SUCCESS and .crc files included
-            if not rel_dir.startswith("_staging-"):
+            if not rel_dir.startswith(STAGING_PREFIX):
                 top = dirpath == self.root
                 dirs[:] = [d for d in dirs if swept(d, True, top)]
                 files = [f for f in files if swept(f, False, top)]
@@ -2738,7 +2762,6 @@ class DeltaStandardWriter:
 
         Scale: each partition group is one Spark job over only the
         files being rewritten; the commit is metadata."""
-        import shutil
         import time
         import uuid
 
@@ -2829,9 +2852,6 @@ class DeltaStandardWriter:
                         self.root, urllib.parse.unquote(p)
                     ),
                 )
-            staging = os.path.join(
-                self.root, f"_staging-{uuid.uuid4().hex}"
-            )
             if zorder_by:
                 # range-split on the Morton key into ~target-sized
                 # files, each sorted within: every output file gets a
@@ -2844,41 +2864,18 @@ class DeltaStandardWriter:
                     .sortWithinPartitions("_kdi_zv")
                     .drop("_kdi_zv")
                 )
-                df.write.mode("overwrite").parquet(staging)
             else:
-                df.coalesce(1).write.mode("overwrite").parquet(staging)
-            rel_dir = os.path.dirname(rels[0])
-            for fname in sorted(os.listdir(staging)):
-                if not fname.endswith(".parquet"):
-                    continue
-                src = os.path.join(staging, fname)
-                stats = _parquet_stats(src)
-                if stats["numRecords"] == 0:
-                    continue
-                dest_dir = os.path.join(self.root, rel_dir)
-                os.makedirs(dest_dir, exist_ok=True)
-                new_name = f"part-opt-{uuid.uuid4().hex}.parquet"
-                shutil.move(src, os.path.join(dest_dir, new_name))
-                new_rel = (
-                    os.path.join(rel_dir, new_name).replace(os.sep, "/")
-                    if rel_dir
-                    else new_name
-                )
-                actions.append(
-                    {
-                        "add": {
-                            "path": new_rel,
-                            "partitionValues": dict(pv),
-                            "size": os.path.getsize(
-                                os.path.join(dest_dir, new_name)
-                            ),
-                            "modificationTime": now_ms,
-                            "dataChange": False,
-                            "stats": json.dumps(stats),
-                        }
-                    }
-                )
-            shutil.rmtree(staging, ignore_errors=True)
+                df = df.coalesce(1)
+            rel_dir = rels[0].rpartition("/")[0]
+            with staged_parquet(df, self.root) as staged:
+                for f in staged:
+                    name = f"part-opt-{uuid.uuid4().hex}.parquet"
+                    add = self._promote_add(
+                        f, f"{rel_dir}/{name}" if rel_dir else name,
+                        dict(pv), now_ms, data_change=False,
+                    )
+                    if add is not None:
+                        actions.append({"add": add})
             actions += [
                 {
                     "remove": {

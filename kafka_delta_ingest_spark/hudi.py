@@ -86,6 +86,7 @@ from kafka_delta_ingest_spark.sinks.base import (
     already_applied,
     decode_offsets,
     encode_offsets,
+    staged_parquet,
 )
 
 _INSTANT_RE = re.compile(r"^(\d{14,17})\.(\w+)$")
@@ -104,6 +105,45 @@ def _stats_bytes(stats_by_part: dict[str, list[dict]]) -> int:
     return sum(
         st["fileSizeInBytes"] for lst in stats_by_part.values() for st in lst
     )
+
+
+def _slice_paths(root: str, part: str, fid: str, instant: str):
+    """(absolute, table-relative) path of file group ``fid``'s base
+    file written at ``instant`` in partition ``part``."""
+    name = f"{fid}_0-1-0_{instant}.parquet"
+    rel = f"{part}/{name}" if part else name
+    return os.path.join(root, rel), rel
+
+
+def _write_stat(fid: str, rel: str, prev: str, num_writes: int,
+                size: int) -> dict:
+    """The ``partitionToWriteStats`` entry of a new base file."""
+    return {
+        "fileId": fid,
+        "path": rel,
+        "prevCommit": prev,
+        "numWrites": num_writes,
+        "fileSizeInBytes": size,
+    }
+
+
+def _one_file_per_group(staged) -> dict:
+    """fileId → its one staged file, for a staging write partitioned
+    by ``__kdi_fid`` (a slice is ONE base file)."""
+    import urllib.parse
+
+    by_fid: dict[str, list] = {}
+    for f in staged:
+        if f.rel_dir:
+            fid = urllib.parse.unquote(f.rel_dir.split("=", 1)[1])
+            by_fid.setdefault(fid, []).append(f)
+    for fid, files in by_fid.items():
+        if len(files) != 1:
+            raise RuntimeError(
+                f"file group {fid}: expected one slice file, "
+                f"got {len(files)}"
+            )
+    return {fid: files[0] for fid, files in by_fid.items()}
 
 
 def _hoodie_dir(table_path: str) -> str:
@@ -1525,11 +1565,6 @@ class HudiCowWriter:
         alone — Hudi itself requires a lock provider for true
         multi-writer; this destination's contract is single-writer
         plus replay, same as Hudi DeltaStreamer's default."""
-        import shutil
-        import uuid as _uuid
-
-        import pyarrow.parquet as pq
-
         from pyspark.sql import functions as F
 
         hoodie = os.path.join(self.path, ".hoodie")
@@ -1672,71 +1707,48 @@ class HudiCowWriter:
         output file) into their hive partition dirs; returns
         (partitionToWriteStats, n_files, n_records). Shared by the
         insert path and upsert's not-matched leg."""
-        import shutil
-        import urllib.parse as _up
-        import uuid as _uuid
-
-        import pyarrow.parquet as pq
+        import urllib.parse
 
         from pyspark.sql import functions as F
 
-        staging = os.path.join(self.path, f"_staging-{_uuid.uuid4().hex}")
+        pp_cols = None
         if self.parts:
             # Hudi stores EVERY column in the data files (partition
             # fields included) — so the staging job partitions by a
             # CLONE of the computed partition path, which Spark drops
             # from the data, keeping the real columns intact.
-            writer = (
-                meta_df.withColumn(
-                    "__kdi_pp", F.col("_hoodie_partition_path")
-                )
-                .write.mode("overwrite")
-                .partitionBy("__kdi_pp")
+            meta_df = meta_df.withColumn(
+                "__kdi_pp", F.col("_hoodie_partition_path")
             )
-        else:
-            writer = meta_df.write.mode("overwrite")
-        writer.parquet(staging)
-
+            pp_cols = ["__kdi_pp"]
         stats: dict[str, list[dict]] = {}
         n_files = n_records = 0
-        for dirpath, _dirs, files in os.walk(staging):
-            rel = os.path.relpath(dirpath, staging)
-            rel_dir = "" if rel == "." else rel
-            if rel_dir:
+        with staged_parquet(meta_df, self.path, pp_cols) as staged:
+            for f in staged:
+                if f.metadata.num_rows == 0:
+                    continue
                 # "__kdi_pp=<escaped hudi partition path>" → the real
                 # hive-style partition dir (Spark %-escapes '=')
-                rel_dir = _up.unquote(rel_dir.split("=", 1)[1])
-            for fname in sorted(files):
-                if not fname.endswith(".parquet"):
-                    continue
-                src = os.path.join(dirpath, fname)
-                md = pq.ParquetFile(src).metadata
-                if md.num_rows == 0:
-                    continue
-                fid = str(_uuid.uuid4())
-                new_name = f"{fid}_0-1-0_{instant}.parquet"
-                dest_dir = os.path.join(self.path, rel_dir)
-                os.makedirs(dest_dir, exist_ok=True)
-                shutil.move(src, os.path.join(dest_dir, new_name))
-                rel_path = (
-                    os.path.join(rel_dir, new_name) if rel_dir
-                    else new_name
-                ).replace(os.sep, "/")
-                stats.setdefault(rel_dir, []).append(
-                    {
-                        "fileId": fid,
-                        "path": rel_path,
-                        "prevCommit": "null",
-                        "numWrites": md.num_rows,
-                        "fileSizeInBytes": os.path.getsize(
-                            os.path.join(dest_dir, new_name)
-                        ),
-                    }
+                part = (
+                    urllib.parse.unquote(f.rel_dir.split("=", 1)[1])
+                    if f.rel_dir else ""
+                )
+                self._promote_slice(
+                    stats, f, part, str(uuid.uuid4()), instant
                 )
                 n_files += 1
-                n_records += md.num_rows
-        shutil.rmtree(staging, ignore_errors=True)
+                n_records += f.metadata.num_rows
         return stats, n_files, n_records
+
+    def _promote_slice(self, stats: dict, f, part: str, fid: str,
+                       instant: str, prev: str = "null") -> None:
+        """Move staged file ``f`` into file group ``fid``'s base slice
+        at ``instant`` and record its write stat in ``stats[part]``."""
+        dest, rel = _slice_paths(self.path, part, fid, instant)
+        size = f.promote(dest)
+        stats.setdefault(part, []).append(
+            _write_stat(fid, rel, prev, f.metadata.num_rows, size)
+        )
 
     def upsert_batch(self, df, precombine: str | None = None,
                      extra_metadata: dict | None = None):
@@ -1765,12 +1777,6 @@ class HudiCowWriter:
         DeltaStreamer UPSERT-mode parity surface (operationType
         UPSERT in the completed commit, replayed by
         plan_file_groups' later-base-wins slice rule)."""
-        import shutil
-        import urllib.parse as _up
-        import uuid as _uuid
-
-        import pyarrow.parquet as pq
-
         from pyspark.sql import functions as F
         from pyspark.sql.window import Window
 
@@ -1976,58 +1982,18 @@ class HudiCowWriter:
             merged = joined.select(
                 F.col("__fid").alias("__kdi_fid"), *out_cols
             )
-            staging = os.path.join(
-                self.path, f"_staging-{_uuid.uuid4().hex}"
-            )
-            # one task per fileId -> exactly one new base file
-            # per rewritten group (a slice is ONE base file)
-            merged.repartition("__kdi_fid").write.mode(
-                "overwrite"
-            ).partitionBy("__kdi_fid").parquet(staging)
             fid_meta = {
                 fid: (part, prev)
                 for _p, (part, fid, prev) in by_base.items()
             }
-            for dirpath, _dirs, files in os.walk(staging):
-                rel = os.path.relpath(dirpath, staging)
-                if rel == ".":
-                    continue
-                fid = _up.unquote(rel.split("=", 1)[1])
-                parquets = [
-                    f for f in sorted(files)
-                    if f.endswith(".parquet")
-                ]
-                if len(parquets) != 1:
-                    shutil.rmtree(staging, ignore_errors=True)
-                    raise RuntimeError(
-                        f"file group {fid}: expected one slice "
-                        f"file, got {len(parquets)}"
-                    )
-                part, prev = fid_meta[fid]
-                src_f = os.path.join(dirpath, parquets[0])
-                md = pq.ParquetFile(src_f).metadata
-                new_name = f"{fid}_0-1-0_{instant}.parquet"
-                dest_dir = os.path.join(self.path, part)
-                os.makedirs(dest_dir, exist_ok=True)
-                shutil.move(
-                    src_f, os.path.join(dest_dir, new_name)
-                )
-                rel_path = (
-                    os.path.join(part, new_name) if part
-                    else new_name
-                ).replace(os.sep, "/")
-                upd.setdefault(part, []).append(
-                    {
-                        "fileId": fid,
-                        "path": rel_path,
-                        "prevCommit": prev,
-                        "numWrites": md.num_rows,
-                        "fileSizeInBytes": os.path.getsize(
-                            os.path.join(dest_dir, new_name)
-                        ),
-                    }
-                )
-            shutil.rmtree(staging, ignore_errors=True)
+            # one task per fileId -> exactly one new base file
+            # per rewritten group (a slice is ONE base file)
+            with staged_parquet(
+                merged.repartition("__kdi_fid"), self.path, ["__kdi_fid"]
+            ) as staged:
+                for fid, f in _one_file_per_group(staged).items():
+                    part, prev = fid_meta[fid]
+                    self._promote_slice(upd, f, part, fid, instant, prev)
             return upd
 
         def _insert_leg() -> tuple[dict, int]:
@@ -2194,11 +2160,6 @@ class HudiCowWriter:
         group; the commit lists the replaced groups in
         ``partitionToReplaceFileIds``. Returns the instant (or None
         when nothing qualifies)."""
-        import shutil
-        import uuid as _uuid
-
-        import pyarrow.parquet as pq
-
         self._refuse_bootstrap("cluster")
         groups, _ = plan_file_groups(self.path)
         victims: dict[str, list[tuple[str, str]]] = {}
@@ -2229,37 +2190,13 @@ class HudiCowWriter:
             df = spark.read.option("mergeSchema", "true").parquet(
                 *paths
             )
-            staging = os.path.join(
-                self.path, f"_staging-{_uuid.uuid4().hex}"
-            )
-            df.coalesce(1).write.mode("overwrite").parquet(staging)
-            for fname in sorted(os.listdir(staging)):
-                if not fname.endswith(".parquet"):
-                    continue
-                src = os.path.join(staging, fname)
-                md = pq.ParquetFile(src).metadata
-                if md.num_rows == 0:
-                    continue
-                fid = str(_uuid.uuid4())
-                new_name = f"{fid}_0-1-0_{instant}.parquet"
-                dest_dir = os.path.join(self.path, part)
-                os.makedirs(dest_dir, exist_ok=True)
-                shutil.move(src, os.path.join(dest_dir, new_name))
-                rel_path = (
-                    os.path.join(part, new_name) if part else new_name
-                ).replace(os.sep, "/")
-                stats.setdefault(part, []).append(
-                    {
-                        "fileId": fid,
-                        "path": rel_path,
-                        "prevCommit": "null",
-                        "numWrites": md.num_rows,
-                        "fileSizeInBytes": os.path.getsize(
-                            os.path.join(dest_dir, new_name)
-                        ),
-                    }
-                )
-            shutil.rmtree(staging, ignore_errors=True)
+            with staged_parquet(df.coalesce(1), self.path) as staged:
+                for f in staged:
+                    if f.metadata.num_rows == 0:
+                        continue
+                    self._promote_slice(
+                        stats, f, part, str(uuid.uuid4()), instant
+                    )
             replaced[part] = [fid for fid, _b in pairs]
         meta = {
             "partitionToWriteStats": stats,
@@ -2763,11 +2700,6 @@ class HudiMorWriter(HudiCowWriter):
         latest-wins per (partition, key) via map-side max_by, one
         output file per group (repartition on fileId). Returns the
         instant (None when no group carries logs)."""
-        import shutil
-        import uuid as _uuid
-
-        import pyarrow.parquet as pq
-
         from pyspark.sql import functions as F
 
         groups, _ = plan_file_groups(self.path)
@@ -2877,52 +2809,13 @@ class HudiMorWriter(HudiCowWriter):
             .withColumn("_hoodie_commit_time", F.col("_kdi_instant"))
             .drop("_kdi_instant", "_kdi_pos", "_kdi_del")
         )
-        staging = os.path.join(
-            self.path, f"_staging-{_uuid.uuid4().hex}"
-        )
-        out.repartition("__kdi_fid").write.mode(
-            "overwrite"
-        ).partitionBy("__kdi_fid").parquet(staging)
         part_of = {fid: part for (part, fid) in victims}
         stats: dict[str, list[dict]] = {}
-        import urllib.parse as _up
-
-        for dirpath, _dirs, files in os.walk(staging):
-            rel = os.path.relpath(dirpath, staging)
-            if rel == ".":
-                continue
-            fid = _up.unquote(rel.split("=", 1)[1])
-            parquets = [
-                f for f in sorted(files) if f.endswith(".parquet")
-            ]
-            if len(parquets) != 1:
-                shutil.rmtree(staging, ignore_errors=True)
-                raise RuntimeError(
-                    f"file group {fid}: expected one compacted base, "
-                    f"got {len(parquets)}"
-                )
-            part = part_of[fid]
-            src_f = os.path.join(dirpath, parquets[0])
-            md = pq.ParquetFile(src_f).metadata
-            new_name = f"{fid}_0-1-0_{instant}.parquet"
-            dest_dir = os.path.join(self.path, part)
-            os.makedirs(dest_dir, exist_ok=True)
-            shutil.move(src_f, os.path.join(dest_dir, new_name))
-            rel_path = (
-                os.path.join(part, new_name) if part else new_name
-            ).replace(os.sep, "/")
-            stats.setdefault(part, []).append(
-                {
-                    "fileId": fid,
-                    "path": rel_path,
-                    "prevCommit": "null",
-                    "numWrites": md.num_rows,
-                    "fileSizeInBytes": os.path.getsize(
-                        os.path.join(dest_dir, new_name)
-                    ),
-                }
-            )
-        shutil.rmtree(staging, ignore_errors=True)
+        with staged_parquet(
+            out.repartition("__kdi_fid"), self.path, ["__kdi_fid"]
+        ) as staged:
+            for fid, f in _one_file_per_group(staged).items():
+                self._promote_slice(stats, f, part_of[fid], fid, instant)
         # A victim group whose rows were ALL tombstoned by delete
         # blocks yields ZERO merged rows — partitionBy writes no
         # directory for it, so without a new slice the group's log
@@ -2939,24 +2832,15 @@ class HudiMorWriter(HudiCowWriter):
             import pyarrow as pa
             import pyarrow.parquet as papq
 
-            empty_dir = os.path.join(
-                self.path, f"_staging-{_uuid.uuid4().hex}"
-            )
-            out.drop("__kdi_fid").limit(0).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(empty_dir)
-            src_empty = next(
-                os.path.join(empty_dir, f)
-                for f in sorted(os.listdir(empty_dir))
-                if f.endswith(".parquet")
-            )
-            schema_empty = papq.read_schema(src_empty)
+            # the probe is the one staged file a zero-row write leaves:
+            # it carries the merged schema
+            probe = out.drop("__kdi_fid").limit(0).coalesce(1)
+            with staged_parquet(probe, self.path) as staged:
+                schema_empty = papq.read_schema(staged[0].path)
             for fid in missing:
                 part = part_of[fid]
-                new_name = f"{fid}_0-1-0_{instant}.parquet"
-                dest_dir = os.path.join(self.path, part)
-                os.makedirs(dest_dir, exist_ok=True)
-                dest = os.path.join(dest_dir, new_name)
+                dest, rel = _slice_paths(self.path, part, fid, instant)
+                os.makedirs(os.path.dirname(dest), exist_ok=True)
                 papq.write_table(
                     pa.table(
                         {
@@ -2966,19 +2850,9 @@ class HudiMorWriter(HudiCowWriter):
                     ),
                     dest,
                 )
-                rel_path = (
-                    os.path.join(part, new_name) if part else new_name
-                ).replace(os.sep, "/")
                 stats.setdefault(part, []).append(
-                    {
-                        "fileId": fid,
-                        "path": rel_path,
-                        "prevCommit": "null",
-                        "numWrites": 0,
-                        "fileSizeInBytes": os.path.getsize(dest),
-                    }
+                    _write_stat(fid, rel, "null", 0, os.path.getsize(dest))
                 )
-            shutil.rmtree(empty_dir, ignore_errors=True)
         meta = {
             "partitionToWriteStats": stats,
             "operationType": "COMPACT",

@@ -56,6 +56,7 @@ from kafka_delta_ingest_spark.sinks.base import (
     already_applied,
     decode_offsets,
     encode_offsets,
+    staged_parquet,
 )
 
 
@@ -352,17 +353,14 @@ def _truncate_bounds_str(lo: str, hi: str):
     return lo_t, None
 
 
-def footer_bounds(path: str, fields: list[dict]):
+def footer_bounds(md, fields: list[dict]):
     """Per-column (null_value_counts, lower_bounds, upper_bounds) for
-    one parquet data file, from its FOOTER statistics only (no data
-    read) — the add-action-stats analog on the Iceberg leg, in the
-    manifest's key/value-record shape keyed by FIELD ID. Columns
-    without usable stats are simply absent (readers must treat
-    missing bounds as unbounded)."""
-    import pyarrow.parquet as pq
-
+    one parquet data file, from its footer ``md`` (a pyarrow
+    ``FileMetaData``; no data read) — the add-action-stats analog on
+    the Iceberg leg, in the manifest's key/value-record shape keyed by
+    FIELD ID. Columns without usable stats are simply absent (readers
+    must treat missing bounds as unbounded)."""
     info = {f["name"]: (f["id"], f["type"]) for f in fields}
-    md = pq.ParquetFile(path).metadata
     mins: dict[int, object] = {}
     maxs: dict[int, object] = {}
     nulls: dict[int, int] = {}
@@ -418,6 +416,30 @@ def footer_bounds(path: str, fields: list[dict]):
         if ub is not None:
             uppers.append({"key": fid, "value": ub})
     return nvc or None, lowers or None, uppers or None
+
+
+def data_file_entry(path: str, md, size: int, partition: dict,
+                    content: int = 0, equality_ids=None,
+                    fields: list[dict] | None = None) -> dict:
+    """One manifest ``data_file`` record for the parquet file at
+    ``path`` with footer ``md``: ``content`` 0 data, 1 position
+    deletes, 2 equality deletes. With ``fields``, the footer's column
+    metrics (:func:`footer_bounds`) ride along."""
+    nvc = lowers = uppers = None
+    if fields is not None:
+        nvc, lowers, uppers = footer_bounds(md, fields)
+    return {
+        "content": content,
+        "file_path": path,
+        "file_format": "PARQUET",
+        "partition": partition,
+        "record_count": md.num_rows,
+        "file_size_in_bytes": size,
+        "equality_ids": equality_ids,
+        "null_value_counts": nvc,
+        "lower_bounds": lowers,
+        "upper_bounds": uppers,
+    }
 
 
 _SKIP_OPS = {"<", "<=", ">", ">=", "="}
@@ -1563,10 +1585,7 @@ class IcebergWriter:
         keeping the real columns intact; the reader then needs no
         directory-derived reconstruction and non-identity external
         tables keep reading unchanged."""
-        import shutil
         import uuid
-
-        import pyarrow.parquet as pq
 
         from pyspark.sql import functions as F
 
@@ -1689,19 +1708,11 @@ class IcebergWriter:
                 return _bucket_str(F.col(src))
             raise ValueError(f"unsupported transform {tr!r}")
 
-        staging = os.path.join(self.root, f"_staging-{uuid.uuid4().hex}")
-        if spec:
-            staged = df
-            for e in spec:
-                staged = staged.withColumn(
-                    f"__kdi_pp_{e['name']}", _transform_col(e)
-                )
-            writer = staged.write.mode("overwrite").partitionBy(
-                *[f"__kdi_pp_{e['name']}" for e in spec]
+        staged_df = df
+        for e in spec:
+            staged_df = staged_df.withColumn(
+                f"__kdi_pp_{e['name']}", _transform_col(e)
             )
-        else:
-            writer = df.write.mode("overwrite")
-        writer.parquet(staging)
 
         def _ptype(name):
             # manifest value typing per partition FIELD
@@ -1719,49 +1730,27 @@ class IcebergWriter:
             return None
 
         out = []
-        for dirpath, _dirs, files in os.walk(staging):
-            rel = os.path.relpath(dirpath, staging)
-            raw_dir = "" if rel == "." else rel
-            # "__kdi_pp_<field>=<v>" segments → real "<field>=<v>" dirs
-            rel_dir = "/".join(
-                seg.replace("__kdi_pp_", "", 1)
-                for seg in raw_dir.replace(os.sep, "/").split("/")
-                if seg
-            )
-            pv_raw = _parse_partition_values(rel_dir)
-            pv = {
-                c: typed_partition_value(v, _ptype(c))
-                for c, v in pv_raw.items()
-            }
-            for fname in sorted(files):
-                if not fname.endswith(".parquet"):
+        pp_cols = [f"__kdi_pp_{e['name']}" for e in spec]
+        with staged_parquet(staged_df, self.root, pp_cols) as staged:
+            for f in staged:
+                if f.metadata.num_rows == 0:
                     continue
-                src = os.path.join(dirpath, fname)
-                md = pq.ParquetFile(src).metadata
-                if md.num_rows == 0:
-                    continue
-                dest_dir = os.path.join(self.data_dir, rel_dir)
-                os.makedirs(dest_dir, exist_ok=True)
+                # "__kdi_pp_<field>=<v>" segments → real "<field>=<v>"
+                rel_dir = "/".join(
+                    seg.replace("__kdi_pp_", "", 1)
+                    for seg in f.rel_dir.split("/") if seg
+                )
+                pv = {
+                    c: typed_partition_value(v, _ptype(c))
+                    for c, v in _parse_partition_values(rel_dir).items()
+                }
                 dest = os.path.join(
-                    dest_dir, f"{uuid.uuid4().hex}-{fname}"
+                    self.data_dir, rel_dir, f"{uuid.uuid4().hex}-{f.name}"
                 )
-                shutil.move(src, dest)
-                nvc, lowers, uppers = footer_bounds(dest, self.fields)
-                out.append(
-                    {
-                        "content": 0,
-                        "file_path": dest,
-                        "file_format": "PARQUET",
-                        "partition": pv,
-                        "record_count": md.num_rows,
-                        "file_size_in_bytes": os.path.getsize(dest),
-                        "equality_ids": None,
-                        "null_value_counts": nvc,
-                        "lower_bounds": lowers,
-                        "upper_bounds": uppers,
-                    }
-                )
-        shutil.rmtree(staging, ignore_errors=True)
+                size = f.promote(dest)
+                out.append(data_file_entry(
+                    dest, f.metadata, size, pv, fields=self.fields
+                ))
         return out
 
     def upsert(self, df, key_cols: list[str],
@@ -1772,11 +1761,8 @@ class IcebergWriter:
         scoping makes it exact: the equality delete applies only to
         STRICTLY older data files, so the same-commit inserts survive
         while every prior version of the keys is masked."""
-        import shutil
         import time
         import uuid
-
-        import pyarrow.parquet as pq
 
         if ts_ms is None:
             ts_ms = int(time.time() * 1000)
@@ -1797,43 +1783,21 @@ class IcebergWriter:
             # as delete_where below — driver memory stays O(1) in the
             # batch key count (previously toPandas() + a driver
             # pyarrow write, O(distinct keys) on the driver).
-            staging = os.path.join(
-                self.root, f"_staging-{uuid.uuid4().hex}"
-            )
-            (
-                df.select(*key_cols)
-                .dropDuplicates()
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(staging)
-            )
+            keys = df.select(*key_cols).dropDuplicates().coalesce(1)
             out = []
-            for fname in sorted(os.listdir(staging)):
-                if not fname.endswith(".parquet"):
-                    continue
-                src = os.path.join(staging, fname)
-                md = pq.ParquetFile(src).metadata
-                if md.num_rows == 0:
-                    continue
-                del_path = os.path.join(
-                    self.data_dir,
-                    f"eqdelete-{uuid.uuid4().hex}.parquet",
-                )
-                shutil.move(src, del_path)
-                out.append(
-                    {
-                        "content": 2,
-                        "file_path": del_path,
-                        "file_format": "PARQUET",
-                        "partition": {},
-                        "record_count": md.num_rows,
-                        "file_size_in_bytes": os.path.getsize(
-                            del_path
-                        ),
-                        "equality_ids": eq_ids,
-                    }
-                )
-            shutil.rmtree(staging, ignore_errors=True)
+            with staged_parquet(keys, self.root) as staged:
+                for f in staged:
+                    if f.metadata.num_rows == 0:
+                        continue
+                    dest = os.path.join(
+                        self.data_dir,
+                        f"eqdelete-{uuid.uuid4().hex}.parquet",
+                    )
+                    size = f.promote(dest)
+                    out.append(data_file_entry(
+                        dest, f.metadata, size, {},
+                        content=2, equality_ids=eq_ids,
+                    ))
             return out
 
         # r13 (guide §2.6): the key-file write and the data-file write
@@ -1966,8 +1930,6 @@ class IcebergWriter:
         import time
         import uuid
 
-        import pyarrow.parquet as pq
-
         from kafka_delta_ingest_spark.avro_python import (
             read_container,
             write_container,
@@ -2016,41 +1978,22 @@ class IcebergWriter:
             live = read_iceberg(
                 spark, self.root, _file_subset=set(paths)
             )
-            staging = os.path.join(
-                self.root, f"_staging-{uuid.uuid4().hex}"
-            )
-            live.coalesce(1).write.mode("overwrite").parquet(staging)
-            import shutil
-
             rel_dir = "/".join(
                 f"{c}={'__HIVE_DEFAULT_PARTITION__' if v is None else v}"
                 for c, v in key
             )
-            for fname in sorted(os.listdir(staging)):
-                if not fname.endswith(".parquet"):
-                    continue
-                src = os.path.join(staging, fname)
-                md = pq.ParquetFile(src).metadata
-                if md.num_rows == 0:
-                    continue
-                dest_dir = os.path.join(self.data_dir, rel_dir)
-                os.makedirs(dest_dir, exist_ok=True)
-                dest = os.path.join(
-                    dest_dir, f"opt-{uuid.uuid4().hex}.parquet"
-                )
-                shutil.move(src, dest)
-                new_files.append(
-                    {
-                        "content": 0,
-                        "file_path": dest,
-                        "file_format": "PARQUET",
-                        "partition": dict(key),
-                        "record_count": md.num_rows,
-                        "file_size_in_bytes": os.path.getsize(dest),
-                        "equality_ids": None,
-                    }
-                )
-            shutil.rmtree(staging, ignore_errors=True)
+            with staged_parquet(live.coalesce(1), self.root) as staged:
+                for f in staged:
+                    if f.metadata.num_rows == 0:
+                        continue
+                    dest = os.path.join(
+                        self.data_dir, rel_dir,
+                        f"opt-{uuid.uuid4().hex}.parquet",
+                    )
+                    size = f.promote(dest)
+                    new_files.append(data_file_entry(
+                        dest, f.metadata, size, dict(key)
+                    ))
         # base manifests: prior DATA manifests rewritten without the
         # compacted entries (EXISTING status, original seqs); delete
         # manifests carried forward untouched
@@ -2119,8 +2062,6 @@ class IcebergWriter:
         import time
         import uuid
 
-        import pyarrow.parquet as pq
-
         from pyspark.sql import functions as F
 
         if ts_ms is None:
@@ -2137,34 +2078,18 @@ class IcebergWriter:
             )
             .orderBy("file_path", "pos")  # spec: delete files sorted
         )
-        staging = os.path.join(self.root, f"_staging-{uuid.uuid4().hex}")
-        matches.coalesce(1).write.mode("overwrite").parquet(staging)
-        import shutil
-
         delete_files = []
-        for fname in sorted(os.listdir(staging)):
-            if not fname.endswith(".parquet"):
-                continue
-            src = os.path.join(staging, fname)
-            md = pq.ParquetFile(src).metadata
-            if md.num_rows == 0:
-                continue
-            dest = os.path.join(
-                self.data_dir, f"delete-{uuid.uuid4().hex}.parquet"
-            )
-            shutil.move(src, dest)
-            delete_files.append(
-                {
-                    "content": 1,
-                    "file_path": dest,
-                    "file_format": "PARQUET",
-                    "partition": {},
-                    "record_count": md.num_rows,
-                    "file_size_in_bytes": os.path.getsize(dest),
-                    "equality_ids": None,
-                }
-            )
-        shutil.rmtree(staging, ignore_errors=True)
+        with staged_parquet(matches.coalesce(1), self.root) as staged:
+            for f in staged:
+                if f.metadata.num_rows == 0:
+                    continue
+                dest = os.path.join(
+                    self.data_dir, f"delete-{uuid.uuid4().hex}.parquet"
+                )
+                size = f.promote(dest)
+                delete_files.append(
+                    data_file_entry(dest, f.metadata, size, {}, content=1)
+                )
         if not delete_files:
             _, meta = self._current()
             return (meta or {}).get("current-snapshot-id")  # no-op

@@ -441,7 +441,8 @@ class IngestJob:
         return self.table.commit_offsets(txn), False
 
     def process_batch(self, raw: DataFrame, batch_id: int = 0) -> BatchMetrics:
-        """foreachBatch body: split, append data + txn ledger, DLQ.
+        """foreachBatch body: split, then the DLQ and the data table
+        each append under the batch's txn ledger entries.
 
         A batch that arrives in fewer splits than the cluster has cores
         (a file-backed source, or a topic with few partitions) would run
@@ -457,7 +458,7 @@ class IngestJob:
         The planned frame is cached, and one grouped aggregate over it
         builds the cache and returns, per Kafka partition, the max
         offset and the good, deserialization-failed and coercion-failed
-        row counts. The data write and the DLQ write then read the
+        row counts. The DLQ write and the data write then read the
         cache; a batch with no dead letter runs no DLQ write."""
         import time as _time
 
@@ -489,6 +490,13 @@ class IngestJob:
             n_coerce = sum(r["coerce"] for r in counts)
             good, dead = self.split(planned)
 
+            if n_deser or n_coerce:
+                # The DLQ commits first, under the batch's own txn: a
+                # crash between the two commits replays the batch, the
+                # DLQ skips it and the data table takes it. One DLQ
+                # file per batch: the aggregate built the cache, so
+                # coalescing over it adds no exchange.
+                self.dlq.write(dead if width is None else dead.coalesce(1), txn)
             m = BatchMetrics(skipped=True)
             try:
                 if n_good:
@@ -514,10 +522,6 @@ class IngestJob:
             m.messages_deserialization_failed = n_deser
             m.messages_transform_failed = n_coerce
             m.messages_deserialized = m.delta_write_num_records + n_coerce
-            if n_deser or n_coerce:
-                # One DLQ file per batch: the aggregate built the cache,
-                # so coalescing over it adds no exchange.
-                self.dlq.write(dead if width is None else dead.coalesce(1))
             # Continuous file sizing (opt-in): after every
             # auto_optimize_interval ingest commits, bin-pack small
             # files toward min_bytes_per_file — the Spark-idiomatic

@@ -14,14 +14,13 @@ Formats (reference src/lib.rs:213-240 MessageFormat):
 * **JSON + Confluent Schema Registry** — strip the 5-byte wire-format
   header (magic 0x0 + 4-byte schema id), then ``from_json``
   (src/serialization.rs:317-346).
-* **Avro (container / schema file / registry)** — via
-  ``pyspark.sql.avro.functions.from_avro`` when the spark-avro package
-  is on the classpath; gated import (src/serialization.rs:142-154).
+* **Avro (container / schema file / registry)** — the pure-Python
+  codec (avro_python.py) inside one Arrow-batched UDF that emits JSON
+  text for ``from_json`` (src/serialization.rs:142-154, 212-241); no
+  spark-avro jar needed.
 * **Avro single-object encoding** — per-message schema routed by the
   8-byte Rabin fingerprint at bytes [2, 10)
-  (src/serialization.rs:161-210): fingerprint extraction is a pure
-  Column expression; each known fingerprint gets its own ``from_avro``
-  branch combined with ``when``/``otherwise``.
+  (src/serialization.rs:161-210), inside the same UDF.
 
 The "wire schema" trick: every leaf of the destination schema that is
 ``string`` or ``timestamp`` is parsed as **string**. Spark's JSON parser
@@ -92,30 +91,6 @@ def strip_confluent_header(col: Column) -> Column:
     """Drop the Confluent wire-format header: 1 magic byte + 4-byte
     schema id; payload starts at byte 6 (1-based substring)."""
     return F.expr(f"substring({_sql(col)}, 6, length({_sql(col)}) - 5)")
-
-
-def soe_fingerprint(col: Column) -> Column:
-    """Avro single-object-encoding fingerprint: little-endian i64 at
-    bytes [2, 10) (reference src/serialization.rs:188-195).
-
-    Assembled byte-by-byte in two's complement: the most-significant
-    (10th) byte contributes signed (−128..127)·2^56, the rest unsigned —
-    every intermediate stays inside long range, so the expression is
-    ANSI-overflow-safe for all 2^64 fingerprints.
-    """
-
-    def byte_at(pos: int) -> Column:
-        # 1-based position in the payload; one byte → 0..255.
-        return F.conv(F.hex(F.expr(f"substring({_sql(col)}, {pos}, 1)")), 16, 10).cast(
-            "long"
-        )
-
-    top = byte_at(10)
-    signed_top = F.when(top >= 128, top - 256).otherwise(top)
-    out = signed_top * F.lit(1 << 56).cast("long")
-    for i in range(7):  # bytes 3..9 = low 7 bytes (little-endian)
-        out = out + byte_at(3 + i) * F.lit(1 << (8 * i)).cast("long")
-    return out
 
 
 def _sql(col: Column) -> str:
@@ -210,69 +185,29 @@ def avro_to_spark_schema(avro_schema) -> DataType:
     return conv(s)
 
 
-def _jvm_avro_loaded() -> bool:
-    """True iff the spark-avro jar is actually on the session classpath
-    (the Python ``from_avro`` wrapper imports fine either way; absence
-    only surfaces as AVRO_NOT_LOADED at analysis time)."""
-    from pyspark.sql import SparkSession
-
-    s = SparkSession.getActiveSession()
-    if s is None:
-        return False
-    try:
-        s._jvm.java.lang.Class.forName("org.apache.spark.sql.avro.AvroDataToCatalyst")
-        return True
-    except Exception:
-        return False
-
-
-def _python_avro_json_udf(
-    single_schema: str | None = None,
-    schemas_by_fp: dict[int, str] | None = None,
-    skip_bytes: int = 0,
-):
-    """binary → JSON-text pandas UDF over the pure-Python Avro codec.
-
-    Exactly one of ``single_schema`` / ``schemas_by_fp`` is set; the
-    latter routes each message by its little-endian i64 fingerprint at
-    bytes [2, 10) (single-object encoding). Decode failures and unknown
-    fingerprints yield NULL (→ DLQ via the JSON corrupt path).
-    """
-    import base64
-
+def _avro_json_udf(decode):
+    """binary → JSON-text pandas UDF over the pure-Python Avro codec:
+    ``decode(raw bytes)`` returns the Avro datum; bytes values surface
+    as base64 strings. A NULL payload, and any decode failure (an
+    unknown schema, a truncated body), yields NULL (→ DLQ via the JSON
+    corrupt path)."""
     from pyspark.sql.functions import pandas_udf
-    from kafka_delta_ingest_spark import avro_python
-
-    parsed_one = avro_python.parse_schema(single_schema) if single_schema else None
-    parsed_fp = {
-        fp: avro_python.parse_schema(s) for fp, s in (schemas_by_fp or {}).items()
-    }
-
-    def jdefault(o):
-        if isinstance(o, (bytes, bytearray)):
-            return base64.b64encode(bytes(o)).decode("ascii")
-        raise TypeError(type(o).__name__)
 
     @pandas_udf("string")
     def _dec(series: pd.Series) -> pd.Series:
-        import json as _json
+        import base64
+        import json
 
-        from kafka_delta_ingest_spark import avro_python as ap
+        def jdefault(o):
+            if isinstance(o, (bytes, bytearray)):
+                return base64.b64encode(bytes(o)).decode("ascii")
+            raise TypeError(type(o).__name__)
 
         def one(b):
             if b is None:
                 return None
             try:
-                raw = bytes(b)
-                if parsed_one is not None:
-                    datum = ap.decode(raw[skip_bytes:], parsed_one)
-                else:
-                    fp = int.from_bytes(raw[2:10], "little", signed=True)
-                    sch = parsed_fp.get(fp)
-                    if sch is None:
-                        return None
-                    datum = ap.decode(raw[10:], sch)
-                return _json.dumps(datum, default=jdefault)
+                return json.dumps(decode(bytes(b)), default=jdefault)
             except Exception:
                 return None
 
@@ -300,40 +235,17 @@ def avro_registry_to_json(
     against the DESTINATION schema, so writer-schema evolution between
     messages needs no plan change at all.
     """
-    import base64
+    from kafka_delta_ingest_spark import avro_python as ap
+    from kafka_delta_ingest_spark.schema_registry import SchemaRegistryClient
 
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("string")
-    def _dec(series: pd.Series) -> pd.Series:
-        import json as _json
-
-        from kafka_delta_ingest_spark import avro_python as ap
-        from kafka_delta_ingest_spark.schema_registry import SchemaRegistryClient
-
+    def decode(raw: bytes):
+        if len(raw) < 6 or raw[0] != 0:
+            raise ValueError("not Confluent wire format")
+        schema_id = int.from_bytes(raw[1:5], "big", signed=False)
         client = SchemaRegistryClient(registry_url, fetcher)
+        return ap.decode(raw[5:], client.parsed_avro_by_id(schema_id))
 
-        def jdefault(o):
-            if isinstance(o, (bytes, bytearray)):
-                return base64.b64encode(bytes(o)).decode("ascii")
-            raise TypeError(type(o).__name__)
-
-        def one(b):
-            if b is None:
-                return None
-            try:
-                raw = bytes(b)
-                if len(raw) < 6 or raw[0] != 0:
-                    return None
-                schema_id = int.from_bytes(raw[1:5], "big", signed=False)
-                datum = ap.decode(raw[5:], client.parsed_avro_by_id(schema_id))
-                return _json.dumps(datum, default=jdefault)
-            except Exception:
-                return None
-
-        return series.map(one)
-
-    return _dec(value)
+    return _avro_json_udf(decode)(value)
 
 
 def avro_payload_to_json(
@@ -350,44 +262,29 @@ def avro_payload_to_json(
     ``json_text_to_struct`` path, so Avro messages get the identical
     destination-schema decode, coercion, and DLQ semantics as JSON ones.
     Decode failures yield NULL (→ error capture downstream)."""
+    from kafka_delta_ingest_spark import avro_python as ap
+
     if soe_schemas:
-        return _python_avro_json_udf(schemas_by_fp=soe_schemas)(value)
-    if avro_schema_json:
-        return _python_avro_json_udf(
-            single_schema=avro_schema_json,
-            skip_bytes=5 if confluent_wire_format else 0,
-        )(value)
+        # route by the little-endian i64 fingerprint at bytes [2, 10)
+        by_fp = {fp: ap.parse_schema(s) for fp, s in soe_schemas.items()}
 
-    # Container mode: each payload is a self-describing container file.
-    import base64
+        def decode(raw: bytes):
+            fp = int.from_bytes(raw[2:10], "little", signed=True)
+            return ap.decode(raw[10:], by_fp[fp])
 
-    from pyspark.sql.functions import pandas_udf
+    elif avro_schema_json:
+        parsed = ap.parse_schema(avro_schema_json)
+        skip = 5 if confluent_wire_format else 0
 
-    @pandas_udf("string")
-    def _dec(series: pd.Series) -> pd.Series:
-        import json as _json
+        def decode(raw: bytes):
+            return ap.decode(raw[skip:], parsed)
 
-        from kafka_delta_ingest_spark import avro_python as ap
+    else:
+        # container mode: each payload is a self-describing container
+        def decode(raw: bytes):
+            return ap.read_container(raw)[1][0]
 
-        def jdefault(o):
-            if isinstance(o, (bytes, bytearray)):
-                return base64.b64encode(bytes(o)).decode("ascii")
-            raise TypeError(type(o).__name__)
-
-        def one(b):
-            if b is None:
-                return None
-            try:
-                _schema, records = ap.read_container(bytes(b))
-                if not records:
-                    return None
-                return _json.dumps(records[0], default=jdefault)
-            except Exception:
-                return None
-
-        return series.map(one)
-
-    return _dec(value)
+    return _avro_json_udf(decode)(value)
 
 
 def avro_payload_to_struct(
@@ -395,23 +292,13 @@ def avro_payload_to_struct(
     avro_json_schema: str,
     confluent_wire_format: bool = False,
 ):
-    """binary payload → struct.
-
-    Uses the JVM ``from_avro`` when the spark-avro package is on the
-    classpath; otherwise falls back to the pure-Python Avro binary
-    decoder (avro_python.py) as an Arrow-batched UDF emitting JSON that
-    re-enters the native ``from_json`` path — same struct out, jar-free.
-    """
-    if _jvm_avro_loaded():
-        from pyspark.sql.avro.functions import from_avro
-
-        payload = strip_confluent_header(value) if confluent_wire_format else value
-        return from_avro(payload, avro_json_schema, {"mode": "PERMISSIVE"})
-    dec = _python_avro_json_udf(
-        single_schema=avro_json_schema,
-        skip_bytes=5 if confluent_wire_format else 0,
+    """binary payload → struct, through the pure-Python Avro decoder
+    (avro_python.py) as an Arrow-batched UDF emitting JSON that
+    re-enters the native ``from_json`` path — jar-free."""
+    text = avro_payload_to_json(
+        value, avro_json_schema, confluent_wire_format=confluent_wire_format
     )
-    return F.from_json(dec(value), avro_to_spark_schema(avro_json_schema))
+    return F.from_json(text, avro_to_spark_schema(avro_json_schema))
 
 
 def soe_routed_avro(value: Column, schemas_by_fingerprint: dict[int, str]):
@@ -419,12 +306,10 @@ def soe_routed_avro(value: Column, schemas_by_fingerprint: dict[int, str]):
     (reference src/serialization.rs:161-210).
 
     ``schemas_by_fingerprint`` maps the 8-byte Rabin fingerprint
-    (little-endian i64, as produced by ``soe_fingerprint`` /
-    ``avro_python.rabin_fingerprint``) to the Avro reader schema JSON.
-    Unknown fingerprints → NULL (route to DLQ). JVM ``from_avro``
-    branches when the jar is present; pure-Python decode otherwise.
-    The decoded struct is the field-union of all reader schemas (a
-    message leaves the other schemas' fields NULL).
+    (little-endian i64, as ``avro_python.schema_fingerprint`` returns
+    it) to the Avro reader schema JSON. Unknown fingerprints → NULL
+    (route to DLQ). The decoded struct is the field-union of all
+    reader schemas (a message leaves the other schemas' fields NULL).
     """
     merged = StructType()
     seen: set[str] = set()
@@ -434,19 +319,5 @@ def soe_routed_avro(value: Column, schemas_by_fingerprint: dict[int, str]):
             if field.name not in seen:
                 seen.add(field.name)
                 merged = merged.add(field)
-    if _jvm_avro_loaded():
-        from pyspark.sql.avro.functions import from_avro
-
-        fp = soe_fingerprint(value)
-        body = F.expr(f"substring({_sql(value)}, 11, length({_sql(value)}) - 10)")
-        out = None
-        for fingerprint, schema_json in schemas_by_fingerprint.items():
-            branch = F.to_json(from_avro(body, schema_json))
-            out = (
-                F.when(fp == F.lit(fingerprint), branch)
-                if out is None
-                else out.when(fp == F.lit(fingerprint), branch)
-            )
-        return F.from_json(out, merged)
-    dec = _python_avro_json_udf(schemas_by_fp=schemas_by_fingerprint)
-    return F.from_json(dec(value), merged)
+    text = avro_payload_to_json(value, soe_schemas=schemas_by_fingerprint)
+    return F.from_json(text, merged)

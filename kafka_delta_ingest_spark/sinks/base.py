@@ -20,7 +20,10 @@ from __future__ import annotations
 
 import os
 import shutil
+import uuid
+from contextlib import contextmanager
 from dataclasses import dataclass
+from functools import cached_property
 from typing import Protocol
 
 # Iceberg snapshot summaries and Hudi commit extraMetadata carry the
@@ -122,40 +125,62 @@ def decode_offsets(meta: dict) -> dict[str, int]:
     }
 
 
-def promote_staging(staging: str, root: str, now_ms: int) -> list[dict]:
-    """Move the parquet files Spark wrote under ``staging`` to the same
-    relative paths under ``root``, delete ``staging``, and return one
-    add action per file: path, partitionValues, size,
-    modificationTime and footer stats (a dict). Zero-row part files
-    are never promoted: a stats-less empty add would defeat every
-    later pruning pass."""
-    adds = []
-    for dirpath, _dirs, files in os.walk(staging):
-        rel = os.path.relpath(dirpath, staging)
-        rel_dir = "" if rel == "." else rel
-        for fname in files:
-            if not fname.endswith(".parquet"):
-                continue
-            src = os.path.join(dirpath, fname)
-            stats = _parquet_stats(src)
-            if stats["numRecords"] == 0:
-                continue
-            dest_dir = os.path.join(root, rel_dir)
-            os.makedirs(dest_dir, exist_ok=True)
-            dest = os.path.join(dest_dir, fname)
-            shutil.move(src, dest)
-            rel_path = os.path.join(rel_dir, fname) if rel_dir else fname
-            adds.append(
-                {
-                    "path": rel_path.replace(os.sep, "/"),
-                    "partitionValues": _parse_partition_values(rel_dir),
-                    "size": os.path.getsize(dest),
-                    "modificationTime": now_ms,
-                    "stats": stats,
-                }
-            )
-    shutil.rmtree(staging, ignore_errors=True)
-    return adds
+# Every writer stages Spark's parquet output in a directory of this
+# prefix under the table root; VACUUM sweeps an aged one.
+STAGING_PREFIX = "_staging-"
+
+
+@dataclass
+class StagedFile:
+    """One parquet file Spark wrote under a staging directory:
+    ``rel_dir`` is its directory relative to the staging root (``""``
+    at the top, ``/``-separated), ``name`` its file name."""
+
+    path: str
+    rel_dir: str
+    name: str
+
+    @cached_property
+    def metadata(self):
+        """The pyarrow ``FileMetaData`` of the footer, read once."""
+        import pyarrow.parquet as pq
+
+        return pq.ParquetFile(self.path).metadata
+
+    def promote(self, dest: str) -> int:
+        """Move the file to ``dest`` (its directory made as needed)
+        and return its size in bytes."""
+        os.makedirs(os.path.dirname(dest), exist_ok=True)
+        shutil.move(self.path, dest)
+        self.path = dest
+        return os.path.getsize(dest)
+
+
+@contextmanager
+def staged_parquet(df, root: str, partition_by=None):
+    """Write ``df`` as parquet (one Spark job, hive directories when
+    ``partition_by`` is given) into a fresh staging directory under
+    ``root`` and yield its files as :class:`StagedFile`, sorted by
+    directory and name. The caller promotes the ones it keeps; the
+    staging directory and whatever is left in it are removed on exit,
+    also when the write or the caller fails."""
+    staging = os.path.join(root, f"{STAGING_PREFIX}{uuid.uuid4().hex}")
+    try:
+        writer = df.write.mode("overwrite")
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(staging)
+        staged = []
+        for dirpath, _dirs, files in os.walk(staging):
+            rel = os.path.relpath(dirpath, staging)
+            rel_dir = "" if rel == "." else rel.replace(os.sep, "/")
+            staged += [
+                StagedFile(os.path.join(dirpath, f), rel_dir, f)
+                for f in files if f.endswith(".parquet")
+            ]
+        yield sorted(staged, key=lambda f: (f.rel_dir, f.name))
+    finally:
+        shutil.rmtree(staging, ignore_errors=True)
 
 
 def zorder_value(df, cols: list[str]):
@@ -226,7 +251,7 @@ def _parse_partition_values(rel_dir: str) -> dict[str, str | None]:
     from urllib.parse import unquote
 
     values: dict[str, str | None] = {}
-    for seg in rel_dir.split(os.sep):
+    for seg in rel_dir.split("/"):
         if "=" in seg:
             k, v = seg.split("=", 1)
             values[unquote(k)] = (

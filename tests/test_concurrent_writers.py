@@ -9,6 +9,7 @@ every batch must land exactly once at a distinct version, and the
 per-partition txn ledger must converge to the max offset per appId.
 """
 
+import time
 from concurrent.futures import ThreadPoolExecutor
 
 import pytest
@@ -587,3 +588,33 @@ def test_conform_frame_refuses_omitting_required_column(spark, tmp_path):
         )
     # omitting the NULLABLE column stays legal
     w.write(spark.createDataFrame([(7,)], "doc_id long"))
+
+
+def test_overlap_returns_results_in_argument_order():
+    from kafka_delta_ingest_spark.io import overlap
+
+    def slow():
+        time.sleep(0.05)
+        return "slow"
+
+    assert overlap(slow, lambda: "fast") == ["slow", "fast"]
+    assert overlap(lambda: 1) == [1]
+
+
+def test_overlap_waits_for_all_then_raises_first_error():
+    from kafka_delta_ingest_spark.io import overlap
+
+    state = {"b_done": False}
+
+    def a():
+        raise ValueError("leg a failed")
+
+    def b():
+        time.sleep(0.1)
+        state["b_done"] = True
+        return "b"
+
+    with pytest.raises(ValueError, match="leg a failed"):
+        overlap(a, b)
+    # the healthy leg ran to completion (no abandoned half-written leg)
+    assert state["b_done"]

@@ -267,3 +267,41 @@ def test_vacuum_age_gates_unreferenced_dv_bins(tmp_path):
     assert os.path.basename(old) in deleted
     assert os.path.basename(young) not in deleted
     assert os.path.exists(young) and not os.path.exists(old)
+
+
+def test_rbm_cardinality_matches_full_decode():
+    import random
+
+    from kafka_delta_ingest_spark.roaring import (
+        deserialize_rbm_array,
+        rbm_array_cardinality,
+        serialize_rbm_array,
+    )
+
+    random.seed(7)
+    cases = [
+        list(range(500_000)),  # dense runs: tiny bytes, huge cardinality
+        random.sample(range(10_000_000), 5000),  # array containers
+        list(range(0, 200_000, 2)),  # bitmap containers
+        [random.randrange(0, 2**40) for _ in range(3000)],  # many highs
+        [0],
+        [2**40 - 1],
+    ]
+    for vals in cases:
+        vals = sorted(set(vals))
+        buf = serialize_rbm_array(vals)
+        assert rbm_array_cardinality(buf) == len(deserialize_rbm_array(buf)) == len(vals)
+
+
+def test_run_encoded_dv_is_not_size_broadcastable():
+    """The ADVICE scenario: dense contiguous deletes run-encode far
+    below the old 256 KiB byte gate while expanding to 500k positions —
+    the cardinality gate must see the expansion."""
+    from kafka_delta_ingest_spark.roaring import (
+        rbm_array_cardinality,
+        serialize_rbm_array,
+    )
+
+    buf = serialize_rbm_array(list(range(500_000)))
+    assert len(buf) <= 256 * 1024  # old gate would have broadcast it
+    assert rbm_array_cardinality(buf) == 500_000  # new gate refuses

@@ -3,10 +3,12 @@
 version windows, and the DV-without-cdc guard."""
 
 import glob
+import json
 import os
 
 import pytest
 
+from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from kafka_delta_ingest_spark.delta_standard import (
@@ -203,3 +205,90 @@ def test_table_changes_seeds_from_checkpoint_not_v0(spark, tmp_path, monkeypatch
     assert [r.id for r in ch] == [100]
     # Seeded from checkpoint.10: versions 0..9 never opened.
     assert opened and min(opened) >= 11
+
+
+def _grp_docs(spark, n=12, lo=0):
+    """doc_id in [lo, lo + n), a three-valued string ``grp`` and
+    ``val`` = 10 · doc_id."""
+    return spark.range(lo, lo + n).select(
+        F.col("id").alias("doc_id"),
+        (F.col("id") % 3).cast("string").alias("grp"),
+        (F.col("id") * 10).alias("val"),
+    )
+
+
+def test_delete_where_conflict_cleans_cdc(spark, tmp_path, monkeypatch):
+    """A DV delete that loses its commit race removes the cdc parquet
+    it staged: every ``_change_data`` file left is named by a commit."""
+    import pytest
+
+    import kafka_delta_ingest_spark.roaring as roaring
+    from kafka_delta_ingest_spark.delta_standard import (
+        ConcurrentDeltaWriteError,
+        DeltaStandardWriter,
+    )
+
+    t = str(tmp_path / "cdcabort")
+    w = DeltaStandardWriter(t, enable_cdf=True)
+    w.write(_grp_docs(spark).coalesce(1))
+
+    real = roaring.write_dv_file
+    fired = {"done": False}
+
+    def wrapper(*a, **k):
+        if not fired["done"]:
+            fired["done"] = True
+            monkeypatch.undo()
+            # racer DV-deletes from the same file -> our commit conflicts
+            DeltaStandardWriter(t).delete_where(spark, "doc_id = 1")
+        return real(*a, **k)
+
+    monkeypatch.setattr(roaring, "write_dv_file", wrapper)
+    with pytest.raises(ConcurrentDeltaWriteError):
+        w.delete_where(spark, "doc_id = 2")
+    # every surviving _change_data file is referenced by a committed
+    # cdc action — the aborted delete left no orphan
+    referenced = set()
+    log = os.path.join(t, "_delta_log")
+    for fname in os.listdir(log):
+        if not fname.endswith(".json"):
+            continue
+        with open(os.path.join(log, fname)) as f:
+            for line in f:
+                act = json.loads(line)
+                if "cdc" in act:
+                    referenced.add(act["cdc"]["path"])
+    cd = os.path.join(t, "_change_data")
+    on_disk = {
+        f"_change_data/{f}" for f in os.listdir(cd)
+    } if os.path.isdir(cd) else set()
+    assert on_disk == referenced
+    assert referenced  # the racer's own CDF files did land
+
+
+def test_vacuum_reclaims_aged_change_data(spark, tmp_path):
+    """VACUUM ages ``_change_data`` files on the retention clock of
+    the commit that names them."""
+    from kafka_delta_ingest_spark.delta_standard import (
+        DeltaStandardWriter,
+        read_delta,
+    )
+
+    t = str(tmp_path / "cdcvac")
+    w = DeltaStandardWriter(t, enable_cdf=True)
+    w.write(_grp_docs(spark).coalesce(1))
+    w.delete_where(spark, "doc_id = 3")
+    cd = os.path.join(t, "_change_data")
+    assert os.listdir(cd)
+    # inside the retention window: kept
+    assert not any(
+        d.startswith("_change_data/") for d in w.vacuum()
+    )
+    assert os.listdir(cd)
+    # aged past retention: reclaimed (same clock as data tombstones)
+    future = int(os.path.getmtime(os.path.join(t, "_delta_log")) * 1000)
+    deleted = w.vacuum(retention_ms=0, now_ms=future + 10**10)
+    assert any(d.startswith("_change_data/") for d in deleted)
+    assert not os.listdir(cd)
+    # live rows unaffected
+    assert read_delta(spark, t).count() == 11

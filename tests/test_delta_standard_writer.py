@@ -609,3 +609,112 @@ def test_zorder_null_and_constant_columns(spark):
     df = spark.createDataFrame([(None, 7), (5, 7), (9, 7)], "a int, b int")
     out = df.withColumn("z", zorder_value(df, ["a", "b"])).orderBy("z").collect()
     assert [r.a for r in out] == [None, 5, 9]
+
+
+def _grp_docs(spark, n=12, lo=0):
+    """doc_id in [lo, lo + n), a three-valued string ``grp`` and
+    ``val`` = 10 · doc_id."""
+    return spark.range(lo, lo + n).select(
+        F.col("id").alias("doc_id"),
+        (F.col("id") % 3).cast("string").alias("grp"),
+        (F.col("id") * 10).alias("val"),
+    )
+
+
+def test_optimize_preserves_evolved_column(spark, tmp_path):
+    """OPTIMIZE reads its inputs under the table's schemaString: a
+    bare read after ``evolve_schema`` sampled one old footer and
+    dropped the evolved column from the rewritten files."""
+    from pyspark.sql.types import LongType, StructField
+
+    from kafka_delta_ingest_spark.delta_standard import (
+        DeltaStandardWriter,
+        read_delta,
+    )
+
+    t = str(tmp_path / "evopt")
+    w = DeltaStandardWriter(t)
+    # many old-schema files first: footer sampling is overwhelmingly
+    # likely to pick one of them
+    for i in range(4):
+        w.write(_grp_docs(spark, n=3, lo=i * 3).coalesce(1))
+    from pyspark.sql.types import StructType
+
+    stored = StructType.fromJson(
+        json.loads(w._py_replay()["meta"]["schemaString"])
+    )
+    evolved = StructType(
+        list(stored.fields) + [StructField("score", LongType())]
+    )
+    w.evolve_schema(evolved)
+    w.write(
+        _grp_docs(spark, n=5, lo=100)
+        .withColumn("score", F.col("doc_id") * 7)
+        .coalesce(1)
+    )
+    before = read_delta(spark, t)
+    assert before.filter("score IS NOT NULL").count() == 5
+    w.optimize(spark, target_file_bytes=1 << 20)
+    after = read_delta(spark, t)
+    assert "score" in after.columns
+    assert after.count() == 17
+    got = {
+        r.doc_id: r.score
+        for r in after.filter("score IS NOT NULL").collect()
+    }
+    assert got == {d: d * 7 for d in range(100, 105)}
+
+
+def test_optimize_zorder_preserves_evolved_column(spark, tmp_path):
+    """The z-order pass rewrites EVERY live file under the table's
+    schema, so the evolved column survives it too."""
+    from pyspark.sql.types import LongType, StructField
+
+    from kafka_delta_ingest_spark.delta_standard import (
+        DeltaStandardWriter,
+        read_delta,
+    )
+
+    t = str(tmp_path / "evz")
+    w = DeltaStandardWriter(t)
+    for i in range(4):
+        w.write(_grp_docs(spark, n=3, lo=i * 3).coalesce(1))
+    from pyspark.sql.types import StructType
+
+    stored = StructType.fromJson(
+        json.loads(w._py_replay()["meta"]["schemaString"])
+    )
+    evolved = StructType(
+        list(stored.fields) + [StructField("score", LongType())]
+    )
+    w.evolve_schema(evolved)
+    w.write(
+        _grp_docs(spark, n=5, lo=100)
+        .withColumn("score", F.col("doc_id") * 7)
+        .coalesce(1)
+    )
+    w.optimize(spark, target_file_bytes=1 << 20, zorder_by=["doc_id"])
+    after = read_delta(spark, t)
+    assert after.count() == 17
+    assert after.filter("score IS NOT NULL").count() == 5
+    assert after.agg(F.sum("score")).collect()[0][0] == sum(
+        d * 7 for d in range(100, 105)
+    )
+
+
+def test_optimize_keeps_an_escaped_partition_readable(spark, tmp_path):
+    """OPTIMIZE promotes into the partition directory Spark escaped
+    (``ts=00%3A00``), not into one named by the URI-encoded add path
+    (``ts=00%253A00``), so the compacted file is where readers look."""
+    t = str(tmp_path / "esc")
+    w = DeltaStandardWriter(t)
+    for lo in (0, 5):
+        w.write(
+            spark.createDataFrame(
+                [(i, "00:00") for i in range(lo, lo + 5)], "id long, ts string"
+            ).coalesce(1),
+            partition_by=["ts"],
+        )
+    w.optimize(spark, target_file_bytes=1 << 20)
+    assert sorted(os.listdir(t)) == ["_delta_log", "ts=00%3A00"]
+    assert sorted(r.id for r in read_delta(spark, t).collect()) == list(range(10))

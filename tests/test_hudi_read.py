@@ -7,6 +7,8 @@ import os
 
 import pytest
 
+from pyspark.sql import functions as F
+
 from kafka_delta_ingest_spark.hudi import (
     HudiFixtureWriter,
     META_COLS,
@@ -257,3 +259,72 @@ def test_clean_noop_inside_retention(spark, tmp_path):
     w.insert_batch(df.coalesce(1))
     assert w.clean(retain_last=5) == []
     assert read_hudi(spark, t).count() == 6
+
+
+def _grp_docs(spark, n=12, lo=0):
+    """doc_id in [lo, lo + n), a three-valued string ``grp`` and
+    ``val`` = 10 · doc_id."""
+    return spark.range(lo, lo + n).select(
+        F.col("id").alias("doc_id"),
+        (F.col("id") % 3).cast("string").alias("grp"),
+        (F.col("id") * 10).alias("val"),
+    )
+
+
+def test_hudi_cluster_merges_heterogeneous_schemas(spark, tmp_path):
+    """CoW clustering merges the footer schemas of the groups it
+    rewrites (the sink accepts per-batch drift), so a column only the
+    newer group carries survives the replacement group."""
+    from kafka_delta_ingest_spark.hudi import HudiCowWriter, read_hudi
+
+    t = str(tmp_path / "hcl")
+    w = HudiCowWriter(t)
+    w.insert_batch(_grp_docs(spark, n=4).coalesce(1))
+    w.insert_batch(
+        _grp_docs(spark, n=4, lo=10)
+        .withColumn("score", F.col("doc_id") * 3)
+        .coalesce(1)
+    )
+    assert read_hudi(spark, t).filter("score IS NOT NULL").count() == 4
+    instant = w.cluster(spark, target_file_bytes=1 << 20)
+    assert instant is not None
+    after = read_hudi(spark, t)
+    assert after.count() == 8
+    got = {
+        r.doc_id: r.score
+        for r in after.filter("score IS NOT NULL").collect()
+    }
+    assert got == {d: d * 3 for d in range(10, 14)}
+
+
+def test_incremental_snapshot_with_end_instant_filters(spark, tmp_path):
+    from pyspark.sql import functions as F
+
+    from kafka_delta_ingest_spark.hudi import (
+        HudiCowWriter,
+        read_hudi,
+        read_hudi_incremental,
+    )
+
+    t = str(tmp_path / "t")
+    w = HudiCowWriter(t, record_key="k")
+    df = spark.createDataFrame([(1, "a")], "k long, v string")
+    w.insert_batch(df)
+    i1 = w.latest_instant()
+    w.upsert_batch(
+        spark.createDataFrame([(2, "b")], "k long, v string")
+    )
+    i2 = w.latest_instant()
+    w.upsert_batch(
+        spark.createDataFrame([(3, "c")], "k long, v string")
+    )
+    snap = read_hudi(spark, t, keep_meta=True)
+    # snapshot supplied AND end_instant supplied: rows committed after
+    # end_instant (k=3) must NOT leak through (previously silently did)
+    got = {
+        r.k
+        for r in read_hudi_incremental(
+            spark, t, i1, end_instant=i2, snapshot=snap
+        ).collect()
+    }
+    assert got == {2}

@@ -318,3 +318,33 @@ def test_gram_index_append_invariant(spark):
     assert not any(
         6_000 <= r.doc_id < 7_000 for r in admitted2.collect()
     )
+
+
+def test_incremental_dedup_zero_shingle_docs_admitted(spark):
+    """Docs with no shingles have no gram rows (hence no derived size
+    row); they can never pair, so they are always admitted — same as
+    the old explicit size(word_shingles) lineage."""
+    from kafka_delta_ingest_spark.operators.dedup import (
+        incremental_ngram_dedup,
+    )
+
+    existing = spark.createDataFrame(
+        [(1, "alpha beta gamma delta epsilon zeta")],
+        "doc_id long, text string",
+    )
+    incoming = spark.createDataFrame(
+        [
+            (10, "alpha beta gamma delta epsilon zeta"),  # dup: rejected
+            (11, ""),  # zero shingles: admitted
+            (12, "zz"),  # < n tokens -> zero shingles: admitted
+            (13, "one two three four five six seven"),  # novel: admitted
+        ],
+        "doc_id long, text string",
+    )
+    got = {
+        r.doc_id
+        for r in incremental_ngram_dedup(
+            existing, incoming, "doc_id", "text", n=3, threshold=0.5
+        ).collect()
+    }
+    assert got == {11, 12, 13}

@@ -3,8 +3,9 @@ than the cluster is hash-spread before the message path and regrouped
 by the table's partition columns before the write; a wide one keeps
 the exchange-free plan. The message path is compiled once per schema,
 and a batch runs at most seven Spark jobs. Also the slimmed DLQ payload
-columns, the job-free width check and the ``delta.write.failed``
-counter."""
+columns, the job-free width check, the ``delta.write.failed``
+counter, and a DLQ that takes each batch exactly once across failures
+and replays."""
 
 import base64
 import datetime
@@ -23,6 +24,7 @@ from pyspark.sql.types import (
 
 from kafka_delta_ingest_spark import ingest
 from kafka_delta_ingest_spark.config import IngestOptions
+from kafka_delta_ingest_spark.dead_letters import DeadLetterQueue
 from kafka_delta_ingest_spark.delta_standard import (
     DeltaStandardSink,
     DeltaStandardWriter,
@@ -283,6 +285,51 @@ def test_failed_sink_write_counts_delta_write_failed(spark, tmp_path):
     assert totals[DELTA_WRITE_FAILED] == 1
     assert DELTA_WRITE_COMPLETED not in totals
     assert job.metrics_history == []
+
+
+def _dlq_rows(spark, job) -> int:
+    return read_delta(spark, job.opts.dlq_table_location).count()
+
+
+def test_dlq_write_failure_replays_exactly_once(spark, tmp_path, monkeypatch):
+    """The DLQ commits first: when it fails, the data table has not
+    taken the batch either, and a fresh job's replay lands both."""
+
+    def failing(self, dlq_df, txn=None):
+        raise OSError("dlq disk full")
+
+    monkeypatch.setattr(DeadLetterQueue, "write", failing)
+    with pytest.raises(OSError, match="dlq disk full"):
+        _job(tmp_path).run_batch(_raw(spark, 0))
+    monkeypatch.undo()
+    job = _job(tmp_path)
+    job.run_batch(_raw(spark, 0))
+    assert read_delta(spark, job.opts.table_uri).count() == 60
+    assert _dlq_rows(spark, job) == 2
+
+
+def test_data_write_failure_after_dlq_commit_replays_exactly_once(
+    spark, tmp_path
+):
+    """The DLQ committed the batch's txn, the data write failed: the
+    replay skips the DLQ and lands the data."""
+    job = _job(tmp_path, sink=FailingSink(str(tmp_path / "table")))
+    with pytest.raises(OSError, match="disk full"):
+        job.run_batch(_raw(spark, 0))
+    assert _dlq_rows(spark, job) == 2
+    job = _job(tmp_path)
+    job.run_batch(_raw(spark, 0))
+    assert read_delta(spark, job.opts.table_uri).count() == 60
+    assert _dlq_rows(spark, job) == 2
+
+
+def test_same_batch_twice_appends_dead_letters_once(spark, tmp_path):
+    job = _job(tmp_path)
+    job.run_batch(_raw(spark, 0))
+    m = job.run_batch(_raw(spark, 0))
+    assert m.skipped
+    assert read_delta(spark, job.opts.table_uri).count() == 60
+    assert _dlq_rows(spark, job) == 2
 
 
 def _jobs_of(spark, fn):

@@ -1,10 +1,10 @@
-"""Deserializer-family tests (SURVEY §2.1 S3/S4/S7/S8): gzip payloads,
-Confluent wire-format header strip, Avro single-object-encoding
-fingerprint extraction, empty-payload guard."""
+"""Deserializer-family tests (SURVEY §2.1 S3/S4/S8): gzip payloads,
+Confluent wire-format header strip, empty-payload guard. Avro
+single-object-encoding fingerprint routing is covered in
+``test_avro_python.py``."""
 
 import gzip
 import json
-import struct
 
 from pyspark.sql import Row, functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
@@ -12,7 +12,6 @@ from pyspark.sql.types import LongType, StringType, StructField, StructType
 from kafka_delta_ingest_spark.serialization import (
     gunzip,
     json_payload_to_struct,
-    soe_fingerprint,
     strip_confluent_header,
 )
 
@@ -57,18 +56,6 @@ def test_confluent_header_strip(spark):
     row = df.select(parsed.alias("p"), err.alias("e")).collect()[0]
     assert row["e"] is None
     assert row["p"]["id"] == 42 and row["p"]["name"] == "confluent"
-
-
-def test_soe_fingerprint_little_endian_i64(spark):
-    """S7: single-object-encoding fingerprint = little-endian i64 at
-    bytes [2, 10) (reference src/serialization.rs:188-195)."""
-    fingerprints = [0x1122334455667788, -1, 1, -(2**63)]
-    payloads = []
-    for fp in fingerprints:
-        payloads.append(b"\xc3\x01" + struct.pack("<q", fp) + b"avrobody")
-    df = _binary_df(spark, payloads)
-    got = [r["fp"] for r in df.select(soe_fingerprint(F.col("value")).alias("fp")).collect()]
-    assert got == fingerprints
 
 
 def test_strip_header_then_gunzip_compose(spark):

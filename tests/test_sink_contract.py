@@ -17,7 +17,7 @@ from kafka_delta_ingest_spark.offsets import (
     InconsistentStoredOffsets,
     write_offsets_to_table,
 )
-from kafka_delta_ingest_spark.sinks.base import open_sink
+from kafka_delta_ingest_spark.sinks.base import STAGING_PREFIX, open_sink
 
 FIXTURE = os.path.join(os.path.dirname(__file__), "fixtures", "sink_action_stream.json")
 
@@ -101,6 +101,33 @@ _OP_CATEGORY = {
     "DELETE": "delete",
     "MERGE": "merge",
 }
+
+
+@pytest.mark.parametrize("fmt", ["delta", "iceberg", "hudi"])
+def test_failed_write_leaves_no_staging(spark, fmt, tmp_path):
+    """A batch whose Spark job fails raises, leaves no staging
+    directory under the table root, and leaves the table readable at
+    its previous version."""
+    from pyspark.sql import functions as F
+
+    root = str(tmp_path / "t")
+    t = _sink(root, fmt)
+    t.write_batch(
+        _batch(spark, 0, 10, "2024-01-01"), partition_by=["date"], txn={"app-0": 5}
+    )
+    before = t.snapshot()
+    bad = _batch(spark, 10, 20, "2024-01-02").withColumn(
+        "user",
+        F.when(F.col("id") == 15, F.raise_error(F.lit("poisoned row")))
+        .otherwise(F.col("user")),
+    )
+    with pytest.raises(Exception, match="poisoned row"):
+        t.write_batch(bad, partition_by=["date"], txn={"app-0": 6})
+    assert not [n for n in os.listdir(root) if n.startswith(STAGING_PREFIX)]
+    after = t.snapshot()
+    assert after["version"] == before["version"]
+    assert after["txn"] == {"app-0": 5}
+    assert _ids(spark, t) == list(range(10))
 
 
 def normalize_log(table_path: str) -> list[dict]:
