@@ -364,13 +364,9 @@ def _bootstrap_delta_log(
     """Commit version 0 of a fresh ``_delta_log`` over external
     files: protocol + metaData + the adds, claimed through the
     writer's normal atomic-commit path (LogStore put-if-absent), so a
-    racing bootstrap loses cleanly."""
-    import uuid
-
-    from kafka_delta_ingest_spark.delta_standard import (
-        DeltaStandardWriter,
-        _nullable_schema_json,
-    )
+    racing bootstrap loses cleanly. The adds name the source table's
+    own files, so an aborted conversion removes nothing."""
+    from kafka_delta_ingest_spark.delta_standard import DeltaStandardWriter
 
     w = DeltaStandardWriter(delta_path)
     if w.latest_version() >= 0:
@@ -378,27 +374,15 @@ def _bootstrap_delta_log(
             f"{delta_path} already holds a Delta log; conversion "
             "only bootstraps fresh metadata"
         )
-    actions = [
-        {
-            "commitInfo": {
-                "operation": "CONVERT",
-                "operationParameters": {"source": source},
-                "timestamp": ts_ms,
-            }
-        },
-        {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
-        {
-            "metaData": {
-                "id": str(uuid.uuid4()),
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": _nullable_schema_json(schema),
-                "partitionColumns": [],
-                "configuration": {},
-                "createdTime": ts_ms,
-            }
-        },
-    ] + [{"add": a} for a in adds]
-    return w._atomic_commit(actions, read_version=None)
+    return w._atomic_commit(
+        w._new_table_actions(schema, [], ts_ms)
+        + [{"add": a} for a in adds],
+        # a racer's version 0 declares metadata too: a conflict
+        read_version=-1,
+        operation="CONVERT",
+        parameters={"source": source},
+        timestamp=ts_ms,
+    )
 
 
 def convert_hudi_to_delta(

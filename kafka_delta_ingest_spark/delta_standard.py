@@ -647,6 +647,24 @@ def _remove_quietly(paths) -> None:
             pass
 
 
+def _remove_action(add: dict, now_ms: int, data_change: bool = True) -> dict:
+    """The ``remove`` action tombstoning the live ``add``. It carries
+    the add's deletion-vector descriptor: the protocol keys
+    reconciliation on (path, dv uid), so a dv-less remove would fail to
+    tombstone a DV-carrying add."""
+    return {
+        "remove": {
+            "path": add["path"],
+            "deletionTimestamp": now_ms,
+            "dataChange": data_change,
+            **(
+                {"deletionVector": add["deletionVector"]}
+                if add.get("deletionVector") else {}
+            ),
+        }
+    }
+
+
 def _file_path_col():
     """The scanned row's data file as a plain local path.
     ``_metadata.file_path`` is a URI, so a partition directory that
@@ -1335,8 +1353,6 @@ class DeltaStandardWriter:
         files stay readable (missing new columns read as null) and no
         name can silently resurrect stale bytes. Returns the committed
         version (current version if the schema is already identical)."""
-        import time
-
         read_v = self.latest_version()
         state = self._py_replay(target=read_v if read_v >= 0 else None)
         if state["meta"] is None:
@@ -1385,27 +1401,13 @@ class DeltaStandardWriter:
             state["meta"]["schemaString"]
         ):
             return read_v
-        now_ms = int(time.time() * 1000)
-        new_meta = dict(state["meta"])
-        new_meta["schemaString"] = new_schema_str
-        version = self._atomic_commit(
-            [
-                {
-                    "commitInfo": {
-                        "operation": "ADD COLUMNS",
-                        "operationParameters": {},
-                        "timestamp": now_ms,
-                    }
-                },
-                {"metaData": new_meta},
-            ],
+        return self._atomic_commit(
+            [{"metaData": {**state["meta"], "schemaString": new_schema_str}}],
             # concurrent APPENDS are fine under add-only widening;
             # a concurrent metadata change raises (checked always)
             read_version=read_v,
+            operation="ADD COLUMNS",
         )
-        if version > 0 and version % self.checkpoint_every == 0:
-            self._write_checkpoint(version)
-        return version
 
     def txn_version(self, app_id: str) -> int | None:
         """Highest committed ``txn`` version for ``app_id`` — the
@@ -1416,20 +1418,72 @@ class DeltaStandardWriter:
 
     # -- commit primitive ----------------------------------------------
 
+    def _new_table_actions(self, schema, partition_by: list[str],
+                           now_ms: int) -> list[dict]:
+        """``protocol`` + ``metaData`` declaring a new table of Spark
+        ``schema`` (every column nullable), partitioned by
+        ``partition_by``, with CDF on when the writer enables it."""
+        import uuid
+
+        return [
+            {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
+            {
+                "metaData": {
+                    "id": str(uuid.uuid4()),
+                    "format": {"provider": "parquet", "options": {}},
+                    "schemaString": _nullable_schema_json(schema),
+                    "partitionColumns": list(partition_by),
+                    "configuration": (
+                        {"delta.enableChangeDataFeed": "true"}
+                        if self.enable_cdf else {}
+                    ),
+                    "createdTime": now_ms,
+                }
+            },
+        ]
+
     def _atomic_commit(
         self,
-        actions: list[dict],
-        attempts: int = 100,
+        actions,
         read_version: int | None = None,
+        *,
+        operation: str = "WRITE",
+        parameters: dict | None = None,
+        txn: dict[str, int] | None = None,
+        staged: list[str] | None = None,
         read_files: set[str] | None = None,
         conflict_on_any_change: bool = False,
-        txn: dict[str, int] | None = None,
+        timestamp: int | None = None,
+        attempts: int = 100,
     ) -> int | None:
-        """Claim the next version via O_CREAT|O_EXCL and write the
-        payload — with the reference's optimistic-concurrency CONFLICT
-        CHECK (src/lib.rs:948-1024): when the action set was derived
-        from a snapshot (``read_version``), every commit that landed
-        after that snapshot is inspected before claiming:
+        """Assemble and publish one commit; returns its version, or None
+        when nothing was committed. Every operation commits here.
+
+        ``staged`` lists the files the operation already wrote.
+        ``actions`` is the operation's own action list, or a function
+        ``stage(staged) -> actions`` that writes the rest of its files,
+        appends each path to ``staged`` before writing it, and returns
+        the action list (None: nothing to commit). ``staged`` holds
+        only files this operation wrote, never files its actions
+        merely name (a restore's re-adds, a conversion's source
+        files). This method adds the
+        ``commitInfo`` (``operation``, ``parameters``, ``timestamp``)
+        and one ``txn`` action per ``txn`` entry, and writes the
+        checkpoint every ``checkpoint_every`` versions.
+
+        Cleanup rule: when the commit is known not to have landed —
+        ``stage`` raised, the conflict check raised, a racer already
+        committed ``txn``, the claim attempts ran out — every staged
+        file is removed. When the claim call itself raises, the commit
+        may have landed (an object store's timeout after the object
+        landed), so the staged files stay and the error propagates;
+        VACUUM reclaims them after its untracked-file floor if the
+        commit did not land.
+
+        The claim carries the reference's optimistic-concurrency
+        CONFLICT CHECK (src/lib.rs:948-1024): when the action set was
+        derived from a snapshot (``read_version``), every commit that
+        landed after that snapshot is inspected before claiming:
 
         * ``conflict_on_any_change`` (overwrite/restore — ops whose
           read set is the whole table): ANY intervening data or
@@ -1452,32 +1506,59 @@ class DeltaStandardWriter:
         any reader) can never observe a claimed-but-empty commit file.
         (Local backend: hard-link-from-temp; object stores: one
         conditional PUT — see logstore.py.)"""
-        payload = (
-            "\n".join(json.dumps(a) for a in actions) + "\n"
-        ).encode()
-        checked_through = read_version
-        for _ in range(attempts):
-            version = self.latest_version() + 1
-            if (
-                checked_through is not None
-                and version > checked_through + 1
-            ):
-                if txn and already_applied(
-                    self._py_replay(target=version - 1)["txn"], txn
+        import time
+
+        staged = [] if staged is None else staged
+        landed = claiming = False
+        try:
+            if callable(actions):
+                actions = actions(staged)
+            if actions is None:
+                return None
+            now_ms = int(time.time() * 1000) if timestamp is None else timestamp
+            commit_info = {
+                "operation": operation,
+                "operationParameters": parameters or {},
+                "timestamp": now_ms,
+            }
+            lines = [{"commitInfo": commit_info}, *actions] + [
+                {"txn": {"appId": app, "version": v, "lastUpdated": now_ms}}
+                for app, v in sorted((txn or {}).items())
+            ]
+            payload = "".join(json.dumps(a) + "\n" for a in lines).encode()
+            checked_through = read_version
+            for _ in range(attempts):
+                version = self.latest_version() + 1
+                if (
+                    checked_through is not None
+                    and version > checked_through + 1
                 ):
-                    return None  # replay — a racer committed this txn
-                self._raise_on_conflict(
-                    checked_through + 1, version - 1,
-                    read_files, conflict_on_any_change,
+                    if txn and already_applied(
+                        self._py_replay(target=version - 1)["txn"], txn
+                    ):
+                        return None  # replay — a racer committed this txn
+                    self._raise_on_conflict(
+                        checked_through + 1, version - 1,
+                        read_files, conflict_on_any_change,
+                    )
+                    checked_through = version - 1
+                claiming = True
+                landed = self.store.put_if_absent(
+                    os.path.join(self.log, f"{version:020d}.json"),
+                    payload,
                 )
-                checked_through = version - 1
-            if self.store.put_if_absent(
-                os.path.join(self.log, f"{version:020d}.json"),
-                payload,
-            ):
-                return version
-            # another writer claimed this version — retry
-        raise RuntimeError("exhausted commit attempts (version race)")
+                claiming = False
+                if landed:
+                    break
+                # another writer claimed this version — retry
+            else:
+                raise RuntimeError("exhausted commit attempts (version race)")
+        finally:
+            if not (landed or claiming):
+                _remove_quietly(staged)
+        if version > 0 and version % self.checkpoint_every == 0:
+            self._write_checkpoint(version)
+        return version
 
     def _raise_on_conflict(
         self,
@@ -1550,7 +1631,6 @@ class DeltaStandardWriter:
         reference's exactly-once mechanism (src/offsets.rs:36-102,
         src/lib.rs:1087-1100) on the standard log layout."""
         import time
-        import uuid
 
         if mode not in ("append", "overwrite"):
             raise ValueError(f"unsupported mode {mode!r}")
@@ -1575,97 +1655,53 @@ class DeltaStandardWriter:
         partition_by = list(partition_by or [])
 
         now_ms = int(time.time() * 1000)
-        adds = self._stage_adds(df, partition_by, now_ms)
-        if not adds and mode == "append":
-            return self.latest_version(), []  # empty appends never commit
+        adds: list[dict] = []
 
-        actions: list[dict] = [
-            {
-                "commitInfo": {
-                    "operation": (
-                        "WRITE" if mode == "append" else "OVERWRITE"
-                    ),
-                    "operationParameters": {
-                        "mode": mode.capitalize(),
-                        "partitionBy": json.dumps(partition_by),
-                    },
-                    "timestamp": now_ms,
-                }
-            }
-        ]
-        if state["meta"] is None:
-            actions.append(
-                {
-                    "protocol": {
-                        "minReaderVersion": 1,
-                        "minWriterVersion": 2,
-                    }
-                }
+        def stage(staged):
+            adds.extend(self._stage_adds(df, partition_by, now_ms, staged))
+            if not adds and mode == "append":
+                return None  # empty appends never commit
+            actions = (
+                [] if state["meta"] is not None
+                else self._new_table_actions(df.schema, partition_by, now_ms)
             )
-            actions.append(
-                {
-                    "metaData": {
-                        "id": str(uuid.uuid4()),
-                        "format": {"provider": "parquet", "options": {}},
-                        "schemaString": _nullable_schema_json(
-                            df.schema
-                        ),
-                        "partitionColumns": partition_by,
-                        "configuration": (
-                            {"delta.enableChangeDataFeed": "true"}
-                            if self.enable_cdf else {}
-                        ),
-                        "createdTime": now_ms,
-                    }
-                }
-            )
-        if mode == "overwrite":
-            # removes carry the superseded add's DV descriptor — the
-            # protocol keys reconciliation on (path, dv uid), so a
-            # dv-less remove would fail to tombstone a DV-carrying add
-            actions += [
-                {
-                    "remove": {
-                        "path": p,
-                        "deletionTimestamp": now_ms,
-                        "dataChange": True,
-                        **(
-                            {"deletionVector": a["deletionVector"]}
-                            if a.get("deletionVector") else {}
-                        ),
-                    }
-                }
-                for p, a in state["adds"].items()
-            ]
-        actions += [
-            {"txn": {"appId": a, "version": v, "lastUpdated": now_ms}}
-            for a, v in sorted(txn.items())
-        ]
-        actions += [{"add": a} for a in adds]
+            if mode == "overwrite":
+                actions += [
+                    _remove_action(a, now_ms) for a in state["adds"].values()
+                ]
+            return actions + [{"add": a} for a in adds]
+
         version = self._atomic_commit(
-            actions,
+            stage,
             read_version=read_v,
+            operation="WRITE" if mode == "append" else "OVERWRITE",
+            parameters={
+                "mode": mode.capitalize(),
+                "partitionBy": json.dumps(partition_by),
+            },
+            txn=txn,
             conflict_on_any_change=(mode == "overwrite"),
-            txn=txn or None,
+            timestamp=now_ms,
         )
         if version is None:
             return self.latest_version(), []
-        if version > 0 and version % self.checkpoint_every == 0:
-            self._write_checkpoint(version)
         return version, adds
 
     def _stage_adds(
-        self, df, partition_by: list[str] | None, now_ms: int
+        self, df, partition_by: list[str] | None, now_ms: int,
+        staged: list[str] | None = None,
     ) -> list[dict]:
         """Write ``df`` executor-parallel through
         :func:`staged_parquet`, promote each non-empty file to the same
         relative path under the table root (hive layout when
         partitioned), and return the add-action dicts with
-        footer-derived stats. Zero-row files are never promoted: a
-        stats-less empty add would defeat every later pruning pass.
-        Shared by write / update_where / merge — the data path is
-        always one Spark job; only metadata is driver-side."""
-        with staged_parquet(df, self.root, partition_by) as staged:
+        footer-derived stats. Each promoted path is appended to
+        ``staged``. Zero-row files are never promoted: a stats-less
+        empty add would defeat every later pruning pass. Shared by
+        write / update_where / merge — the data path is always one
+        Spark job; only metadata is driver-side."""
+        staged = [] if staged is None else staged
+        with staged_parquet(df, self.root, partition_by) as files:
             adds = [
                 self._promote_add(
                     f,
@@ -1680,58 +1716,60 @@ class DeltaStandardWriter:
                     _parse_partition_values(f.rel_dir),
                     now_ms,
                     data_change=True,
+                    staged=staged,
                 )
-                for f in staged
+                for f in files
             ]
         return [a for a in adds if a is not None]
 
     def _promote_add(self, f, path: str, partition_values: dict,
-                     now_ms: int, data_change: bool) -> dict | None:
+                     now_ms: int, data_change: bool,
+                     staged: list[str]) -> dict | None:
         """The add action of staged file ``f`` promoted to the URI
-        ``path`` under the table root, with its footer stats; None
-        (and ``f`` left to the staging cleanup) when it has no rows."""
+        ``path`` under the table root (appended to ``staged``), with
+        its footer stats; None (and ``f`` left to the staging cleanup)
+        when it has no rows."""
         # looked up on the module: tests hook it as the point after the
         # snapshot read and before the commit
         stats = sink_base._parquet_stats(f.path)
         if stats["numRecords"] == 0:
             return None
-        size = f.promote(os.path.join(self.root, urllib.parse.unquote(path)))
+        dest = os.path.join(self.root, urllib.parse.unquote(path))
+        staged.append(dest)
         return {
             "path": path,
             "partitionValues": partition_values,
-            "size": size,
+            "size": f.promote(dest),
             "modificationTime": now_ms,
             "dataChange": data_change,
             "stats": json.dumps(stats),
         }
 
-    def _stage_cdc(self, df) -> tuple[list[dict], list[str]]:
+    def _stage_cdc(self, df, staged: list[str]) -> list[dict]:
         """Write CDF change rows (must carry ``_change_type``) as
-        ``_change_data/`` cdc parquet via staging. Returns (cdc
-        actions, absolute written paths — for cleanup if the commit
-        aborts). Zero-row files are kept: an empty cdc file is how a
-        commit with no row diff says "no row changed"."""
+        ``_change_data/`` cdc parquet via staging, appending each
+        promoted path to ``staged``; returns the cdc actions. Zero-row
+        files are kept: an empty cdc file is how a commit with no row
+        diff says "no row changed"."""
         import uuid
 
         actions: list[dict] = []
-        written: list[str] = []
-        with staged_parquet(df, self.root) as staged:
-            for f in staged:
+        with staged_parquet(df, self.root) as files:
+            for f in files:
                 rel = f"_change_data/cdc-{uuid.uuid4().hex}.parquet"
                 dest = os.path.join(self.root, rel)
-                size = f.promote(dest)
-                written.append(dest)
+                staged.append(dest)
                 actions.append(
                     {
                         "cdc": {
                             "path": rel,
                             "partitionValues": {},
-                            "size": size,
+                            "size": f.promote(dest),
                             "dataChange": False,
                         }
                     }
                 )
-        return actions, written
+        return actions
 
     # -- row-level DELETE (deletion vectors) -----------------------------
 
@@ -1777,63 +1815,43 @@ class DeltaStandardWriter:
             return self.latest_version()  # no-op
         by_abs = {r["_fp"]: sorted(r["_positions"]) for r in matches}
         # map absolute matched paths back to the log's relative adds
+        touched = self._resolve_touched(state, set(by_abs))
         now_ms = int(time.time() * 1000)
-        actions: list[dict] = [
-            {
-                "commitInfo": {
-                    "operation": "DELETE",
-                    "operationParameters": {"predicate": predicate},
-                    "timestamp": now_ms,
-                }
-            }
-        ]
-        cdc_written: list[str] = []  # cleaned up if the commit aborts
+        staged: list[str] = []
+        actions = self._dv_delete_actions(
+            state, sorted(touched), by_abs, now_ms, staged
+        )
+        cdc = None
         if self._cdf_enabled(state["meta"]):
             # CDF: the deleted rows land as _change_data/ cdc parquet
             # (one executor-parallel job over only the matching rows)
             # + cdc actions — delta-spark's DELETE-with-CDF shape, the
             # only way a DV delete's change set is servable later
             # (table_changes raises without it).
-            cdc_actions, cdc_written = self._stage_cdc(
-                live.filter(predicate).withColumn(
-                    "_change_type", F.lit("delete")
-                )
+            cdc = live.filter(predicate).withColumn(
+                "_change_type", F.lit("delete")
             )
-            actions.extend(cdc_actions)
-        try:
-            n_hit, actions = self._dv_delete_actions(
-                state, by_abs, actions, now_ms
-            )
-            if n_hit != len(by_abs):
-                raise RuntimeError(
-                    "matched files missing from the log snapshot "
-                    f"({len(by_abs)} matched, {n_hit} resolved)"
-                )
-            version = self._atomic_commit(
-                actions,
-                read_version=read_v,
-                # conflict = someone touched a file we re-add with a
-                # DV; blind appends of new files rebase safely
-                read_files={
-                    a["remove"]["path"] for a in actions
-                    if "remove" in a
-                },
-            )
-        except BaseException:
-            # an abort anywhere after cdc staging (a failed DV write,
-            # the conflict check, a refused claim) must not orphan
-            # the cdc parquet — nothing references these paths, and
-            # vacuum's log scan would otherwise never reclaim them
-            _remove_quietly(cdc_written)
-            raise
-        if version > 0 and version % self.checkpoint_every == 0:
-            self._write_checkpoint(version)
-        return version
+        return self._atomic_commit(
+            lambda staged: (
+                self._stage_cdc(cdc, staged) if cdc is not None else []
+            ) + actions,
+            read_version=read_v,
+            operation="DELETE",
+            parameters={"predicate": predicate},
+            staged=staged,
+            # conflict = someone touched a file we re-add with a DV;
+            # blind appends of new files rebase safely
+            read_files=touched,
+            timestamp=now_ms,
+        )
 
-    def _dv_delete_actions(self, state, by_abs, actions, now_ms):
-        """Per touched file: union the new positions with the file's
-        existing DV, write the roaring bitmap sidecar, and append the
-        (remove, re-add-with-descriptor) action pair."""
+    def _dv_delete_actions(self, state, touched, by_abs, now_ms, staged):
+        """Write the commit's one deletion-vector file (delta-spark's
+        layout: one bitmap per ``touched`` file, each at its own
+        offset), appending its path to ``staged``, and return the
+        (remove, re-add-with-descriptor) action pair of each touched
+        file. A file's bitmap is the union of its matched positions
+        (``by_abs``, keyed by absolute path) and its existing DV."""
         import uuid as _uuid
 
         from kafka_delta_ingest_spark.roaring import (
@@ -1843,55 +1861,32 @@ class DeltaStandardWriter:
             z85_encode,
         )
 
-        n_hit = 0
-        for rel, a in state["adds"].items():
-            ap = rel
-            ap = urllib.parse.unquote(ap)
-            if not os.path.isabs(ap):
-                ap = os.path.join(self.root, ap)
-            pos = by_abs.get(ap)
-            if pos is None:
-                continue
-            n_hit += 1
-            all_pos = set(pos)
+        positions = []
+        for rel in touched:
+            a = state["adds"][rel]
+            pos = set(by_abs[self._abs(rel)])
             if a.get("deletionVector"):
-                all_pos |= set(
+                pos |= set(
                     deserialize_rbm_array(
-                        dv_descriptor_bytes(
-                            self.root, a["deletionVector"]
-                        )
+                        dv_descriptor_bytes(self.root, a["deletionVector"])
                     )
                 )
-            u = _uuid.uuid4()
-            metas = write_dv_file(
-                os.path.join(self.root, f"deletion_vector_{u}.bin"),
-                [sorted(all_pos)],
-            )
-            new_add = dict(a)
-            new_add["deletionVector"] = {
-                "storageType": "u",
-                "pathOrInlineDv": z85_encode(u.bytes),
-                "offset": metas[0]["offset"],
-                "sizeInBytes": metas[0]["sizeInBytes"],
-                "cardinality": metas[0]["cardinality"],
-            }
-            new_add["dataChange"] = False
+            positions.append(sorted(pos))
+        u = _uuid.uuid4()
+        bin_path = os.path.join(self.root, f"deletion_vector_{u}.bin")
+        staged.append(bin_path)
+        metas = write_dv_file(bin_path, positions)
+        actions: list[dict] = []
+        for rel, m in zip(touched, metas):
+            a = state["adds"][rel]
+            # tombstone the (path, old dv uid) entry only
+            actions.append(_remove_action(a, now_ms, data_change=False))
+            dv = {"storageType": "u", "pathOrInlineDv": z85_encode(u.bytes)}
             actions.append(
-                {
-                    "remove": {
-                        "path": rel,
-                        "deletionTimestamp": now_ms,
-                        "dataChange": False,
-                        # tombstone the (path, old dv uid) entry only
-                        **(
-                            {"deletionVector": a["deletionVector"]}
-                            if a.get("deletionVector") else {}
-                        ),
-                    }
-                }
+                {"add": {**a, "dataChange": False,
+                         "deletionVector": {**dv, **m}}}
             )
-            actions.append({"add": new_add})
-        return n_hit, actions
+        return actions
 
     # -- CHECK constraints (ALTER TABLE ADD CONSTRAINT parity) ------------
 
@@ -1979,25 +1974,16 @@ class DeltaStandardWriter:
         """One metadata-only commit of ``meta`` with its configuration
         updated (and an optional protocol bump). Its read set is the
         whole table, so any commit after ``read_v`` conflicts."""
-        import time
-
         cfg = dict(meta.get("configuration") or {})
         cfg.update(set_keys or {})
         for k in unset_keys:
             del cfg[k]
-        actions: list[dict] = [
-            {
-                "commitInfo": {
-                    "operation": operation,
-                    "timestamp": int(time.time() * 1000),
-                }
-            }
-        ]
-        if protocol:
-            actions.append({"protocol": protocol})
-        actions.append({"metaData": {**meta, "configuration": cfg}})
         return self._atomic_commit(
-            actions, read_version=read_v, conflict_on_any_change=True
+            ([{"protocol": protocol}] if protocol else [])
+            + [{"metaData": {**meta, "configuration": cfg}}],
+            read_version=read_v,
+            operation=operation,
+            conflict_on_any_change=True,
         )
 
     def _enforce_constraints(self, df, meta: dict) -> None:
@@ -2107,16 +2093,7 @@ class DeltaStandardWriter:
             state["meta"],
         )
         self._enforce_constraints(updated, state["meta"])
-        actions: list[dict] = [
-            {
-                "commitInfo": {
-                    "operation": "UPDATE",
-                    "operationParameters": {"predicate": predicate},
-                    "timestamp": now_ms,
-                }
-            }
-        ]
-        cdc_written: list[str] = []
+        cdc = None
         if self._cdf_enabled(state["meta"]):
             pre = rows.filter(cond).drop("__fp").withColumn(
                 "_change_type", F.lit("update_preimage")
@@ -2133,47 +2110,38 @@ class DeltaStandardWriter:
                 ),
                 state["meta"],
             ).withColumn("_change_type", F.lit("update_postimage"))
-            cdc_actions, cdc_written = self._stage_cdc(
-                pre.unionByName(post)
-            )
-            actions.extend(cdc_actions)
-        # everything from data staging through the commit claim is
-        # all-or-nothing: a failed staging job or a refused claim must
-        # not orphan the already-written cdc parquet or promoted adds
-        adds: list[dict] = []
-        try:
-            adds = self._stage_adds(updated, part_cols, now_ms)
-            for rel in sorted(touched_rel):
-                a = state["adds"][rel]
-                actions.append(
-                    {
-                        "remove": {
-                            "path": rel,
-                            "deletionTimestamp": now_ms,
-                            "dataChange": True,
-                            **(
-                                {"deletionVector": a["deletionVector"]}
-                                if a.get("deletionVector") else {}
-                            ),
-                        }
-                    }
-                )
-            actions += [{"add": a} for a in adds]
-            version = self._atomic_commit(
-                actions,
-                read_version=read_v,
-                read_files=touched_rel,
-            )
-        except BaseException:
-            _remove_quietly(cdc_written)
-            _remove_quietly(
-                os.path.join(self.root, urllib.parse.unquote(a["path"]))
-                for a in adds
-            )
-            raise
-        if version > 0 and version % self.checkpoint_every == 0:
-            self._write_checkpoint(version)
-        return version
+            cdc = pre.unionByName(post)
+        return self._atomic_commit(
+            lambda staged: self._rewrite_actions(
+                state, touched_rel, updated, cdc, now_ms, staged
+            ),
+            read_version=read_v,
+            operation="UPDATE",
+            parameters={"predicate": predicate},
+            read_files=touched_rel,
+            timestamp=now_ms,
+        )
+
+    def _rewrite_actions(self, state, touched_rel, out, cdc, now_ms,
+                         staged) -> list[dict]:
+        """The actions of a copy-on-write rewrite (UPDATE, MERGE):
+        ``cdc`` rows (when CDF is on) as cdc files, then a remove of
+        each touched file and an add of each file ``out`` is written
+        to. Every file written is appended to ``staged``."""
+        actions = [] if cdc is None else self._stage_cdc(cdc, staged)
+        adds = self._stage_adds(
+            out, state["meta"].get("partitionColumns") or [], now_ms, staged
+        )
+        return actions + [
+            _remove_action(state["adds"][rel], now_ms)
+            for rel in sorted(touched_rel)
+        ] + [{"add": a} for a in adds]
+
+    def _abs(self, rel: str) -> str:
+        """The local path of the (URI-encoded, possibly absolute) file
+        path ``rel`` of an add action."""
+        ap = urllib.parse.unquote(rel)
+        return ap if os.path.isabs(ap) else os.path.join(self.root, ap)
 
     def _resolve_touched(
         self, state: dict, touched_abs: set[str]
@@ -2184,9 +2152,7 @@ class DeltaStandardWriter:
         touched_rel: set[str] = set()
         remaining = set(touched_abs)
         for rel in state["adds"]:
-            ap = urllib.parse.unquote(rel)
-            if not os.path.isabs(ap):
-                ap = os.path.join(self.root, ap)
+            ap = self._abs(rel)
             if ap in remaining:
                 touched_rel.add(rel)
                 remaining.discard(ap)
@@ -2263,7 +2229,6 @@ class DeltaStandardWriter:
             f["name"]
             for f in json.loads(state["meta"]["schemaString"])["fields"]
         ]
-        part_cols = state["meta"].get("partitionColumns") or []
         live = read_delta(spark, self.root, version=read_v)
         if state["adds"]:
             file_cols = [
@@ -2400,65 +2365,24 @@ class DeltaStandardWriter:
         for p in pieces[1:]:
             out = out.unionByName(p)
         self._enforce_constraints(out, state["meta"])
-
-        actions: list[dict] = [
-            {
-                "commitInfo": {
-                    "operation": "MERGE",
-                    "operationParameters": {"predicate": on},
-                    "timestamp": now_ms,
-                }
-            }
-        ]
-        cdc_written: list[str] = []
+        cdc = None
         if cdc_pieces:
             cdc = cdc_pieces[0]
             for p in cdc_pieces[1:]:
                 cdc = cdc.unionByName(p)
-            cdc_actions, cdc_written = self._stage_cdc(cdc)
-            actions.extend(cdc_actions)
-        # staging-through-claim is all-or-nothing (see update_where)
-        adds: list[dict] = []
-        try:
-            adds = self._stage_adds(out, part_cols, now_ms)
-            for rel in sorted(touched_rel):
-                a = state["adds"][rel]
-                actions.append(
-                    {
-                        "remove": {
-                            "path": rel,
-                            "deletionTimestamp": now_ms,
-                            "dataChange": True,
-                            **(
-                                {"deletionVector": a["deletionVector"]}
-                                if a.get("deletionVector") else {}
-                            ),
-                        }
-                    }
-                )
-            actions += [
-                {"txn": {"appId": a, "version": v,
-                         "lastUpdated": now_ms}}
-                for a, v in sorted(txn.items())
-            ]
-            actions += [{"add": a} for a in adds]
-            version = self._atomic_commit(
-                actions,
-                read_version=read_v,
-                conflict_on_any_change=True,
-                txn=txn or None,
-            )
-        except BaseException:
-            _remove_quietly(cdc_written)
-            _remove_quietly(
-                os.path.join(self.root, urllib.parse.unquote(a["path"]))
-                for a in adds
-            )
-            raise
+        version = self._atomic_commit(
+            lambda staged: self._rewrite_actions(
+                state, touched_rel, out, cdc, now_ms, staged
+            ),
+            read_version=read_v,
+            operation="MERGE",
+            parameters={"predicate": on},
+            txn=txn,
+            conflict_on_any_change=True,
+            timestamp=now_ms,
+        )
         if version is None:
             return self.latest_version()  # a racer merged this txn
-        if version > 0 and version % self.checkpoint_every == 0:
-            self._write_checkpoint(version)
         return version
 
     # -- RESTORE / VACUUM -------------------------------------------------
@@ -2494,66 +2418,40 @@ class DeltaStandardWriter:
             return (d.get("pathOrInlineDv"), d.get("offset"))
 
         now_ms = int(time.time() * 1000)
-        actions: list[dict] = [
-            {
-                "commitInfo": {
-                    "operation": "RESTORE",
-                    "operationParameters": {"version": str(version)},
-                    "timestamp": now_ms,
-                }
-            }
-        ]
+        actions: list[dict] = []
         if tgt["meta"] != cur["meta"] and tgt["meta"] is not None:
             actions.append({"metaData": tgt["meta"]})
-        for rel, a in cur["adds"].items():
-            t = tgt["adds"].get(rel)
-            if t is None or dv_key(t) != dv_key(a):
-                actions.append(
-                    {
-                        "remove": {
-                            "path": rel,
-                            "deletionTimestamp": now_ms,
-                            "dataChange": True,
-                            # key the tombstone to the CURRENT add's dv
-                            **(
-                                {"deletionVector": a["deletionVector"]}
-                                if a.get("deletionVector") else {}
-                            ),
-                        }
-                    }
-                )
+        # key each tombstone to the CURRENT add's dv
+        actions += [
+            _remove_action(a, now_ms)
+            for rel, a in cur["adds"].items()
+            if rel not in tgt["adds"] or dv_key(tgt["adds"][rel]) != dv_key(a)
+        ]
         for rel, t in tgt["adds"].items():
             c = cur["adds"].get(rel)
             if c is None or dv_key(c) != dv_key(t):
-                ap = urllib.parse.unquote(rel)
-                if not os.path.isabs(ap):
-                    ap = os.path.join(self.root, ap)
-                if not os.path.exists(ap):
+                if not os.path.exists(self._abs(rel)):
                     raise ValueError(
                         f"cannot restore to {version}: {rel} was "
                         "already vacuumed"
                     )
                 actions.append({"add": {**t, "dataChange": True}})
-        cdc_written: list[str] = []
-        if self._cdf_enabled(cur["meta"]) and len(actions) > 1:
-            cdc_actions, cdc_written = self._stage_cdc(
-                self._restore_row_diff(spark, cur_v, version)
-            )
-            actions.extend(cdc_actions)
-        try:
-            version_out = self._atomic_commit(
-                actions,
-                # restore's read set is the WHOLE table diff — any
-                # concurrent data change invalidates it
-                read_version=cur_v,
-                conflict_on_any_change=True,
-            )
-        except BaseException:
-            _remove_quietly(cdc_written)
-            raise
-        if version_out > 0 and version_out % self.checkpoint_every == 0:
-            self._write_checkpoint(version_out)
-        return version_out
+        cdc = None
+        if self._cdf_enabled(cur["meta"]) and actions:
+            cdc = self._restore_row_diff(spark, cur_v, version)
+        # the re-adds name files live at ``version``, never staged ones
+        return self._atomic_commit(
+            lambda staged: actions + (
+                self._stage_cdc(cdc, staged) if cdc is not None else []
+            ),
+            # restore's read set is the WHOLE table diff — any
+            # concurrent data change invalidates it
+            read_version=cur_v,
+            operation="RESTORE",
+            parameters={"version": str(version)},
+            conflict_on_any_change=True,
+            timestamp=now_ms,
+        )
 
     def _restore_row_diff(self, spark, cur_v: int, target: int):
         """The cdc rows of restoring ``cur_v`` to ``target``, projected
@@ -2794,21 +2692,6 @@ class DeltaStandardWriter:
         if not groups:
             return self.latest_version()
         now_ms = int(time.time() * 1000)
-        actions: list[dict] = [
-            {
-                "commitInfo": {
-                    "operation": "OPTIMIZE",
-                    "operationParameters": {
-                        "targetSize": str(target_file_bytes),
-                        **(
-                            {"zOrderBy": json.dumps(zorder_by)}
-                            if zorder_by else {}
-                        ),
-                    },
-                    "timestamp": now_ms,
-                }
-            }
-        ]
         # Compaction inputs MUST read under the table's current
         # metaData.schemaString, not a sampled footer: after
         # evolve_schema() a group can mix old- and new-schema files,
@@ -2832,14 +2715,12 @@ class DeltaStandardWriter:
                 ],
             }
         )
+        rewrites = []
         for pv, files in sorted(groups.items()):
-            rels = [rel for rel, _ in files]
             dv_in = [a for _, a in files if a.get("deletionVector")]
-            paths = [
-                os.path.join(self.root, urllib.parse.unquote(r))
-                for r in rels
-            ]
-            df = spark.read.schema(read_schema).parquet(*paths)
+            df = spark.read.schema(read_schema).parquet(
+                *[self._abs(rel) for rel, _ in files]
+            )
             if dv_in:
                 df = df.select(
                     "*",
@@ -2847,10 +2728,7 @@ class DeltaStandardWriter:
                     F.col("_metadata.row_index").alias("_kdi_pos"),
                 )
                 df = _apply_deletion_vectors(
-                    spark, self.root, df, dv_in,
-                    lambda p: os.path.join(
-                        self.root, urllib.parse.unquote(p)
-                    ),
+                    spark, self.root, df, dv_in, self._abs
                 )
             if zorder_by:
                 # range-split on the Morton key into ~target-sized
@@ -2866,44 +2744,43 @@ class DeltaStandardWriter:
                 )
             else:
                 df = df.coalesce(1)
-            rel_dir = rels[0].rpartition("/")[0]
-            with staged_parquet(df, self.root) as staged:
-                for f in staged:
-                    name = f"part-opt-{uuid.uuid4().hex}.parquet"
-                    add = self._promote_add(
-                        f, f"{rel_dir}/{name}" if rel_dir else name,
-                        dict(pv), now_ms, data_change=False,
-                    )
-                    if add is not None:
-                        actions.append({"add": add})
-            actions += [
-                {
-                    "remove": {
-                        "path": rel,
-                        "deletionTimestamp": now_ms,
-                        "dataChange": False,
-                        # compacted inputs may carry DVs — key the
-                        # tombstone to the input add's descriptor
-                        **(
-                            {"deletionVector": a["deletionVector"]}
-                            if a.get("deletionVector") else {}
-                        ),
-                    }
-                }
-                for rel, a in files
+            rewrites.append((pv, files, df))
+
+        def stage(staged):
+            # compacted inputs may carry DVs — each tombstone is keyed
+            # to the input add's descriptor
+            actions = [
+                _remove_action(a, now_ms, data_change=False)
+                for _, files, _ in rewrites
+                for _, a in files
             ]
-        version = self._atomic_commit(
-            actions,
+            for pv, files, df in rewrites:
+                rel_dir = files[0][0].rpartition("/")[0]
+                with staged_parquet(df, self.root) as written:
+                    for f in written:
+                        name = f"part-opt-{uuid.uuid4().hex}.parquet"
+                        add = self._promote_add(
+                            f, f"{rel_dir}/{name}" if rel_dir else name,
+                            dict(pv), now_ms, data_change=False,
+                            staged=staged,
+                        )
+                        if add is not None:
+                            actions.append({"add": add})
+            return actions
+
+        return self._atomic_commit(
+            stage,
             read_version=read_v,
+            operation="OPTIMIZE",
+            parameters={
+                "targetSize": str(target_file_bytes),
+                **({"zOrderBy": json.dumps(zorder_by)} if zorder_by else {}),
+            },
             # conflict = someone touched a compaction input; appends
             # of new files rebase safely (they were not compacted)
-            read_files={
-                a["remove"]["path"] for a in actions if "remove" in a
-            },
+            read_files={rel for files in groups.values() for rel, _ in files},
+            timestamp=now_ms,
         )
-        if version > 0 and version % self.checkpoint_every == 0:
-            self._write_checkpoint(version)
-        return version
 
     # -- checkpoint ------------------------------------------------------
 
@@ -2918,32 +2795,22 @@ class DeltaStandardWriter:
         import pyarrow.parquet as pq
 
         state = self._py_replay(target=version)
+        # one action per row; the columns a row omits are null
         rows = [
             {
                 "protocol": state["protocol"]
                 or {"minReaderVersion": 1, "minWriterVersion": 2},
                 "metaData": state["meta"],
-                "add": None,
-                "remove": None,
-                "txn": None,
             }
         ]
+        # the app-transaction ledger MUST survive checkpointing or
+        # exactly-once replay breaks after 10 commits
         rows += [
-            {
-                "protocol": None,
-                "metaData": None,
-                "add": None,
-                "remove": None,
-                # the app-transaction ledger MUST survive checkpointing
-                # or exactly-once replay breaks after 10 commits
-                "txn": {"appId": a, "version": v},
-            }
+            {"txn": {"appId": a, "version": v}}
             for a, v in sorted(state["txn"].items())
         ]
         rows += [
             {
-                "protocol": None,
-                "metaData": None,
                 "add": {
                     "path": a["path"],
                     "partitionValues": a.get("partitionValues") or {},
@@ -2955,8 +2822,6 @@ class DeltaStandardWriter:
                     # deleted rows resurrect after log truncation
                     "deletionVector": a.get("deletionVector"),
                 },
-                "remove": None,
-                "txn": None,
             }
             for a in state["adds"].values()
         ]
@@ -3072,16 +2937,7 @@ class DeltaStandardSink:
     def commit_offsets(self, txn: dict[str, int]) -> int:
         """Ledger entries alone, as ``txn`` actions (the reference's
         ``write_offsets_to_delta``, src/offsets.rs:52-101)."""
-        import time
-
-        now_ms = int(time.time() * 1000)
-        return self.w._atomic_commit(
-            [{"commitInfo": {"operation": "SET TRANSACTION",
-                             "operationParameters": {},
-                             "timestamp": now_ms}}]
-            + [{"txn": {"appId": a, "version": v, "lastUpdated": now_ms}}
-               for a, v in sorted(txn.items())]
-        )
+        return self.w._atomic_commit([], operation="SET TRANSACTION", txn=txn)
 
     def read(self, spark, as_of=None):
         return read_delta(spark, self.path, version=as_of)

@@ -1556,12 +1556,13 @@ class IcebergWriter:
 
     def append(self, df, ts_ms: int | None = None,
                attempts: int = 100,
-               summary: dict[str, str] | None = None) -> int:
+               summary: dict[str, str] | None = None) -> int | None:
         """Append ``df`` as one Iceberg snapshot; returns snapshot id.
         ``summary`` entries are merged into the snapshot's summary map
         — the channel engines use for exactly-once bookkeeping (the
         Flink connector stores its max committed checkpoint id there;
-        the ingest adapter stores per-Kafka-partition offsets)."""
+        the ingest adapter stores per-Kafka-partition offsets). None
+        when those offsets are already stored (a replay)."""
         import time
 
         if ts_ms is None:
@@ -1569,8 +1570,20 @@ class IcebergWriter:
         new_files = self._write_data_files(df)
         if not new_files:
             raise ValueError("append with zero non-empty data files")
-        return self._commit_snapshot([(new_files, 0)], "append", ts_ms,
-                                     attempts, summary=summary)
+        return self._commit_append(new_files, ts_ms, attempts, summary)
+
+    def _commit_append(self, new_files: list[dict], ts_ms: int,
+                       attempts: int,
+                       summary: dict[str, str] | None) -> int | None:
+        """Commit the promoted ``new_files`` as one append snapshot.
+        None when a racer already committed ``summary``'s offsets;
+        the files are then removed, since no snapshot names them."""
+        snap_id = self._commit_snapshot([(new_files, 0)], "append", ts_ms,
+                                        attempts, summary=summary)
+        if snap_id is None:
+            for f in new_files:
+                os.remove(_norm_path(f["file_path"]))
+        return snap_id
 
     def _write_data_files(self, df) -> list[dict]:
         """Spark-write ``df`` to staging and promote under ``data/``
@@ -2198,7 +2211,8 @@ class IcebergWriter:
                          operation: str, ts_ms: int,
                          attempts: int,
                          summary: dict[str, str] | None = None,
-                         base_manifests: list[dict] | None = None) -> int:
+                         base_manifests: list[dict] | None = None
+                         ) -> int | None:
         """Optimistic snapshot commit: one new manifest per
         ``(files, content)`` pair (entries carry explicit sequence
         numbers), prior manifests carried forward in the manifest
@@ -2207,13 +2221,21 @@ class IcebergWriter:
         version race. ``base_manifests`` REPLACES the carry-forward
         set (compaction's rewritten manifest list) — such commits do
         not survive a version race and raise instead of silently
-        rebasing onto state they did not rewrite."""
+        rebasing onto state they did not rewrite.
+
+        When ``summary`` carries offsets (``kdi.offsets.*``) that the
+        table already stores, checked at every attempt, nothing is
+        committed and None is returned: a racer committed the same
+        batch, and committing again would append it twice."""
         import uuid
 
         from kafka_delta_ingest_spark.avro_python import write_container
 
+        offsets = decode_offsets(summary or {})
         for _ in range(attempts):
             cur_v, meta = self._current()
+            if already_applied(stored_txn(meta), offsets):
+                return None
             parent_id = (meta or {}).get("current-snapshot-id")
             last_seq = (meta or {}).get("last-sequence-number", 0)
             snaps = list((meta or {}).get("snapshots", []))
@@ -2380,11 +2402,10 @@ class IcebergWriter:
             if not self.store.put_if_absent(
                 target, json.dumps(new_meta).encode()
             ):
-                # another writer claimed v<N+1>: clean our manifest
+                # another writer claimed v<N+1>: withdraw our manifest
                 # files and recompute from the fresh state
-                for p in written:
-                    os.unlink(p)
-                os.unlink(mlist_path)
+                for p in [*written, mlist_path]:
+                    self.store.remove(p)
                 if base_manifests is not None:
                     raise RuntimeError(
                         "concurrent commit raced a compaction whose "
@@ -2472,6 +2493,19 @@ def _iceberg_type_to_spark(t):
     return simple.get(t) if isinstance(t, str) else None
 
 
+def stored_txn(meta: dict | None) -> dict[str, int]:
+    """The offset ledger of Iceberg table metadata ``meta``: the
+    ``kdi.offsets.*`` entries of its snapshot summaries, the newest
+    snapshot's value winning."""
+    out = {}
+    for s in sorted(
+        (meta or {}).get("snapshots", []),
+        key=lambda s: s["timestamp-ms"],
+    ):
+        out.update(decode_offsets(s.get("summary") or {}))
+    return out
+
+
 class IcebergSink:
     """The :class:`~kafka_delta_ingest_spark.sinks.base.Sink` over
     :class:`IcebergWriter`, so ``IngestJob`` can stream INTO an Apache
@@ -2549,20 +2583,10 @@ class IcebergSink:
 
     # -- surface the ingest loop touches --------------------------------
 
-    def _stored_txn(self) -> dict[str, int]:
-        out = {}
-        _, meta = self.w._current()
-        for s in sorted(
-            (meta or {}).get("snapshots", []),
-            key=lambda s: s["timestamp-ms"],
-        ):
-            out.update(decode_offsets(s.get("summary") or {}))
-        return out
-
     def snapshot(self) -> dict:
         _, meta = self.w._current()
         return {
-            "txn": self._stored_txn(),
+            "txn": stored_txn(meta),
             "version": (meta or {}).get("current-snapshot-id", -1),
             "metaData": meta,
         }
@@ -2615,7 +2639,7 @@ class IcebergSink:
                 )
         self.w.partition_by = partition_by
         txn = dict(txn or {})
-        if already_applied(self._stored_txn(), txn):
+        if already_applied(self.snapshot()["txn"], txn):
             return CommitResult(
                 self.snapshot()["version"], 0, 0, skipped=True
             )
@@ -2629,10 +2653,13 @@ class IcebergSink:
             )
         import time
 
-        snap_id = self.w._commit_snapshot(
-            [(new_files, 0)], "append", int(time.time() * 1000), 100,
-            summary=encode_offsets(txn),
+        snap_id = self.w._commit_append(
+            new_files, int(time.time() * 1000), 100, encode_offsets(txn)
         )
+        if snap_id is None:  # a racer committed this batch first
+            return CommitResult(
+                self.snapshot()["version"], 0, 0, skipped=True
+            )
         return CommitResult(
             snap_id,
             len(new_files),
@@ -2645,10 +2672,11 @@ class IcebergSink:
         carries the offsets."""
         import time
 
-        return self.w._commit_snapshot(
+        snap_id = self.w._commit_snapshot(
             [], "set-offsets", int(time.time() * 1000), 100,
             summary=encode_offsets(txn),
         )
+        return self.snapshot()["version"] if snap_id is None else snap_id
 
     def read(self, spark, as_of=None):
         return read_iceberg(spark, self.path, snapshot_id=as_of)

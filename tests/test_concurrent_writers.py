@@ -524,6 +524,46 @@ def test_standard_first_commit_same_txn_race_skips(spark, tmp_path):
     assert read_delta(spark, t).count() == 4  # no duplicates
 
 
+@pytest.mark.parametrize(
+    "case", ["same_txn_skip", "overwrite_conflict", "optimize_conflict"]
+)
+def test_aborted_commit_leaves_no_untracked_parquet(
+    spark, tmp_path, monkeypatch, case
+):
+    """A write whose commit is known not to land (a racer committed
+    the same txn, or a racer's commit conflicts with it) removes the
+    parquet it promoted into the table root, instead of leaving it to
+    VACUUM's one-day floor."""
+    from tests.conftest import untracked_parquet
+
+    t = DeltaStandardWriter(str(tmp_path / "t"))
+    t.write(_std_docs(spark, n=4))
+    t.write(_std_docs(spark, n=4, lo=10))
+    racer = DeltaStandardWriter(t.root)
+    if case == "same_txn_skip":
+        _race_before_commit(
+            monkeypatch,
+            lambda: racer.write(_std_docs(spark, n=3, lo=100), txn={"app-0": 7}),
+        )
+        t.write(_std_docs(spark, n=3, lo=100).repartition(3), txn={"app-0": 7})
+        assert read_delta(spark, t.root).count() == 11
+    elif case == "overwrite_conflict":
+        _race_before_commit(
+            monkeypatch, lambda: racer.write(_std_docs(spark, n=1, lo=500))
+        )
+        with pytest.raises(ConcurrentDeltaWriteError):
+            t.write(_std_docs(spark, n=3).repartition(3), mode="overwrite")
+        assert read_delta(spark, t.root).count() == 9
+    else:
+        _race_before_commit(
+            monkeypatch, lambda: racer.delete_where(spark, "doc_id = 0")
+        )
+        with pytest.raises(ConcurrentDeltaWriteError):
+            t.optimize(spark)
+        assert read_delta(spark, t.root).count() == 7
+    assert untracked_parquet(t.root) == []
+
+
 def test_standard_checkpoint_pinned_to_version(spark, tmp_path):
     # r8 review: a checkpoint named for version N must hold N's state,
     # never a later concurrent commit's.

@@ -718,3 +718,30 @@ def test_optimize_keeps_an_escaped_partition_readable(spark, tmp_path):
     w.optimize(spark, target_file_bytes=1 << 20)
     assert sorted(os.listdir(t)) == ["_delta_log", "ts=00%3A00"]
     assert sorted(r.id for r in read_delta(spark, t).collect()) == list(range(10))
+
+
+@pytest.mark.parametrize("kind", ["ledger", "configuration"])
+def test_metadata_only_commits_keep_the_checkpoint_cadence(
+    spark, tmp_path, kind
+):
+    """Commits without data files (the ingest ledger's SET TRANSACTION,
+    a constraint change) count toward the checkpoint cadence too."""
+    from kafka_delta_ingest_spark.delta_standard import DeltaStandardSink
+
+    t = str(tmp_path / "t")
+    if kind == "ledger":
+        sink = DeltaStandardSink(t)
+        for i in range(11):
+            sink.commit_offsets({"app-0": i})
+        assert sink.snapshot()["txn"] == {"app-0": 10}
+    else:
+        w = DeltaStandardWriter(t)
+        w.write(_docs(spark, 4))
+        for i in range(5):
+            w.add_constraint(spark, "pos", "doc_id >= 0")
+            w.drop_constraint("pos")
+        assert w.latest_version() == 10
+    log = os.path.join(t, "_delta_log")
+    assert os.path.exists(os.path.join(log, f"{10:020d}.checkpoint.parquet"))
+    with open(os.path.join(log, "_last_checkpoint")) as f:
+        assert json.load(f)["version"] == 10

@@ -5,12 +5,13 @@ the exchange-free plan. The message path is compiled once per schema,
 and a batch runs at most seven Spark jobs. Also the slimmed DLQ payload
 columns, the job-free width check, the ``delta.write.failed``
 counter, and a DLQ that takes each batch exactly once across failures
-and replays."""
+and replays, with a crash at each log-store write call of a batch."""
 
 import base64
 import datetime
 import json
 import os
+import shutil
 import uuid
 
 import pytest
@@ -22,7 +23,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from kafka_delta_ingest_spark import ingest
+from kafka_delta_ingest_spark import delta_standard, ingest
 from kafka_delta_ingest_spark.config import IngestOptions
 from kafka_delta_ingest_spark.dead_letters import DeadLetterQueue
 from kafka_delta_ingest_spark.delta_standard import (
@@ -38,6 +39,7 @@ from kafka_delta_ingest_spark.ingest import (
     IngestJob,
     narrow_width,
 )
+from kafka_delta_ingest_spark.logstore import LocalLogStore
 from kafka_delta_ingest_spark.metrics import DELTA_WRITE_COMPLETED, DELTA_WRITE_FAILED
 from kafka_delta_ingest_spark.transforms import Transformer
 
@@ -330,6 +332,112 @@ def test_same_batch_twice_appends_dead_letters_once(spark, tmp_path):
     assert m.skipped
     assert read_delta(spark, job.opts.table_uri).count() == 60
     assert _dlq_rows(spark, job) == 2
+
+
+class FaultyLogStore(LocalLogStore):
+    """A local ``LogStore`` that numbers its write calls
+    (``put_if_absent``, ``put_atomic``, ``remove``) in ``plan``, which
+    every store of one run shares, and fails call ``plan["at"]``:
+    before the write (``"before"``) or after it landed (``"after"``)."""
+
+    def __init__(self, plan):
+        self.plan = plan
+
+    def _write(self, name, write):
+        plan = self.plan
+        plan["calls"].append(name)
+        hit = len(plan["calls"]) == plan["at"]
+        if hit and plan["mode"] == "before":
+            raise OSError(f"injected fault before {name}")
+        out = write()
+        if hit:
+            raise OSError(f"injected fault after {name}")
+        return out
+
+    def put_if_absent(self, path, data):
+        return self._write(
+            "put_if_absent", lambda: LocalLogStore.put_if_absent(self, path, data)
+        )
+
+    def put_atomic(self, path, data):
+        return self._write(
+            "put_atomic", lambda: LocalLogStore.put_atomic(self, path, data)
+        )
+
+    def remove(self, path):
+        return self._write("remove", lambda: LocalLogStore.remove(self, path))
+
+
+# The write calls of a dirty batch landing at version 10 of both
+# tables: the DLQ commit and its checkpoint (parquet, then the
+# _last_checkpoint pointer), then the data commit and its checkpoint.
+BATCH_WRITES = ["put_if_absent", "put_atomic", "put_atomic"] * 2
+
+
+@pytest.fixture(scope="module")
+def crash_base(spark, tmp_path_factory):
+    """Data table and DLQ after batch 0, each at version 9: nine
+    ledger-only commits of another app follow the batch, so batch 1
+    lands at version 10 and checkpoints."""
+    base = tmp_path_factory.mktemp("crash")
+    job = _job(base, sink=DeltaStandardSink(str(base / "table")))
+    job.run_batch(_raw(spark, 0))
+    for table in (job.opts.table_uri, job.opts.dlq_table_location):
+        sink = DeltaStandardSink(table)
+        for i in range(9):
+            sink.commit_offsets({"filler-0": i})
+    return base
+
+
+@pytest.mark.parametrize(
+    "at, mode",
+    [(None, None)]
+    + [(i, "before") for i in range(1, len(BATCH_WRITES) + 1)]
+    + [(1, "after"), (4, "after")],
+)
+def test_crash_at_each_write_call_replays_exactly_once(
+    spark, tmp_path, monkeypatch, crash_base, at, mode
+):
+    """Crash points of one dirty batch into a Delta table and its DLQ:
+    the log store fails at each write call of the batch, and a fresh
+    job replays it. Both tables then hold each row once, both ledgers
+    hold the batch's offsets, and unless the fault hit a claim (whose
+    commit may have landed) no untracked parquet is left behind."""
+    from tests.conftest import untracked_parquet
+
+    base = tmp_path / "t"
+    shutil.copytree(crash_base, base)
+    plan = {"at": at, "mode": mode, "calls": []}
+    monkeypatch.setattr(
+        delta_standard, "get_log_store", lambda uri: FaultyLogStore(plan)
+    )
+    job = _job(base, sink=DeltaStandardSink(str(base / "table")))
+    if at is None:
+        job.run_batch(_raw(spark, 1))
+        assert plan["calls"] == BATCH_WRITES
+    else:
+        with pytest.raises(OSError, match="injected fault"):
+            job.run_batch(_raw(spark, 1))
+        assert plan["calls"] == BATCH_WRITES[:at]
+    monkeypatch.undo()
+    _job(base, sink=DeltaStandardSink(str(base / "table"))).run_batch(
+        _raw(spark, 1)
+    )
+
+    table, dlq = job.opts.table_uri, job.opts.dlq_table_location
+    ids = sorted(r.id for r in read_delta(spark, table).select("id").collect())
+    assert ids == list(range(60)) + list(range(1000, 1060))
+    assert _dlq_rows(spark, job) == 4
+    offsets = {}
+    for i, _ in _messages(1):
+        key = f"{job.opts.app_id}-{i % 4}"
+        offsets[key] = max(offsets.get(key, i), i)
+    model = {**offsets, "filler-0": 8}
+    assert DeltaStandardSink(table).snapshot()["txn"] == model
+    assert DeltaStandardSink(dlq).snapshot()["txn"] == model
+    if mode is None or BATCH_WRITES[at - 1] != "put_if_absent":
+        assert untracked_parquet(table) == []
+        assert untracked_parquet(dlq) == []
 
 
 def _jobs_of(spark, fn):

@@ -888,3 +888,54 @@ def test_hudi_raced_same_batch_skips(spark, tmp_path, monkeypatch):
     assert len(completed_commits(table)) == 1
     snap = HudiSink(table).snapshot()
     assert snap["txn"] == {"wr-0": 6, "wr-1": 7}
+
+
+def test_iceberg_raced_same_batch_skips(spark, tmp_path, monkeypatch):
+    """A sibling worker committing the SAME batch between our ledger
+    check and our snapshot commit makes our commit a SKIP: the
+    snapshot commit re-checks the summary ledger at every attempt,
+    and the skipped write removes the data files it promoted."""
+    from kafka_delta_ingest_spark.iceberg import (
+        IcebergSink,
+        IcebergWriter,
+        read_iceberg,
+        snapshots,
+    )
+
+    table = str(tmp_path / "ice_race")
+    opts = IngestOptions(
+        topic="web_requests", table_uri=table, app_id="wr",
+        transforms=WEB_REQUESTS_TRANSFORMS, log_format="iceberg",
+    )
+    raw = _raw_df(spark, [_msg(i, i % 2) for i in range(8)])
+    job = IngestJob(opts, WEB_REQUESTS_SCHEMA)
+
+    real_commit = IcebergWriter._commit_snapshot
+    fired = {"done": False}
+
+    def commit_wrapper(self, *args, **kwargs):
+        if not fired["done"]:
+            fired["done"] = True
+            # the sibling lands the SAME batch first
+            IngestJob(opts, WEB_REQUESTS_SCHEMA).run_batch(raw)
+        return real_commit(self, *args, **kwargs)
+
+    monkeypatch.setattr(IcebergWriter, "_commit_snapshot", commit_wrapper)
+    m = job.run_batch(raw)
+    assert m.skipped
+    back = read_iceberg(spark, table)
+    assert back.count() == 8  # once, not twice
+    assert len(snapshots(table)) == 1
+    assert IcebergSink(table, WEB_REQUESTS_SCHEMA).snapshot()["txn"] == {
+        "wr-0": 6, "wr-1": 7,
+    }
+    on_disk = {
+        os.path.join(d, f)
+        for d, _dirs, files in os.walk(os.path.join(table, "data"))
+        for f in files
+        if f.endswith(".parquet")
+    }
+    assert on_disk == {
+        f.removeprefix("file://").removeprefix("file:")
+        for f in back.inputFiles()
+    }

@@ -174,6 +174,51 @@ def test_delta_ambiguous_claim_failure_leaves_complete_commit(
     assert read_delta(spark, t).count() == 8
 
 
+@pytest.mark.parametrize("op", ["update", "merge", "delete", "restore"])
+def test_delta_ambiguous_claim_keeps_the_landed_commits_files(
+    spark, tmp_path, op
+):
+    # the claim raises after its commit landed: every file the commit
+    # names (new parquet, cdc files) must stay, so the table and its
+    # change feed still read
+    from kafka_delta_ingest_spark.delta_standard import (
+        DeltaStandardWriter,
+        read_delta,
+        table_changes,
+    )
+
+    t = str(tmp_path / op)
+    DeltaStandardWriter(t, enable_cdf=True).write(_docs(spark).coalesce(1))
+    want = {i: i * 10 for i in range(8)}
+    if op == "restore":
+        DeltaStandardWriter(t).delete_where(spark, "doc_id < 3")
+    w = DeltaStandardWriter(t, store=FakeRemoteLogStore(ambiguous_at={1}))
+    with pytest.raises(TimeoutError):
+        if op == "update":
+            w.update_where(spark, "doc_id < 3", {"val": "-1"})
+        elif op == "merge":
+            w.merge(
+                spark,
+                spark.createDataFrame([(1, 100), (9, 90)], "doc_id long, val long"),
+                "source.doc_id = target.doc_id",
+                when_matched_update={"val": "source.val"},
+            )
+        elif op == "delete":
+            w.delete_where(spark, "doc_id < 3")
+        else:
+            w.restore(0, spark)
+    if op == "update":
+        want.update({0: -1, 1: -1, 2: -1})
+    elif op == "merge":
+        want.update({1: 100, 9: 90})
+    elif op == "delete":
+        want = {i: v for i, v in want.items() if i >= 3}
+    got = {r.doc_id: r.val for r in read_delta(spark, t).collect()}
+    assert got == want
+    changes = table_changes(spark, t, w.latest_version()).collect()
+    assert len(changes) == {"update": 6, "merge": 3, "delete": 3, "restore": 3}[op]
+
+
 def test_iceberg_commit_retries_through_lost_claims(spark, tmp_path):
     from kafka_delta_ingest_spark.iceberg import (
         IcebergWriter,
