@@ -1023,16 +1023,6 @@ def _bootstrap_to_hudi(
         + f"hoodie.bootstrap.base.path={source_base}\n".encode(),
     )
     instant = BOOTSTRAP_INSTANT
-    hoodie = os.path.join(hudi_path, ".hoodie")
-    if not w.store.put_if_absent(
-        os.path.join(hoodie, f"{instant}.commit.requested"), b""
-    ):
-        raise ValueError(
-            f"{hudi_path} already claims the bootstrap instant"
-        )
-    w.store.put_atomic(
-        os.path.join(hoodie, f"{instant}.commit.inflight"), b""
-    )
 
     import uuid as _uuid
 
@@ -1120,63 +1110,62 @@ def _bootstrap_to_hudi(
                 )
             yield pd.DataFrame({"j": rows})
 
-    import base64
-    import pickle
+    def stage(_instant, written):
+        import base64
+        import pickle
 
-    stats = [
-        pickle.loads(base64.b64decode(r.j))
-        for r in flist
-        .mapInPandas(_skeletons, "j string")
-        .collect()
-    ]
-    if not stats:
-        raise ValueError(
-            f"{source_base} has no live rows to bootstrap"
+        # the executors cannot report a skeleton before writing it
+        written.extend(
+            os.path.join(table_root, part, f"{fid}_0-0-0_{instant}.parquet")
+            for _src, fid, part in items
         )
-    idx_path = os.path.join(hudi_path, BOOTSTRAP_INDEX_REL)
-    os.makedirs(os.path.dirname(idx_path), exist_ok=True)
-    idx = {
-        "instant": instant,
-        "sourceBasePath": source_base,
-        "mapping": [
-            {
-                "fileId": s["fileId"],
-                "partition": s["partition"],
-                "skeleton": s["path"],
-                "source": s["source"],
-                **(
-                    {
-                        "partitionValues": pv_by_src[s["source"]][1]
-                    }
-                    if pv_by_src
-                    else {}
-                ),
-            }
-            for s in stats
-        ],
-    }
-    if partition_ddl:
-        # typed partition schema for readers' value reconstruction
-        # (hudi.bootstrap_partition_info / _bootstrap_pv_frame)
-        idx["partitionSchema"] = partition_ddl
-    w.store.put_atomic(idx_path, json.dumps(idx).encode())
-    stats_by_part: dict[str, list[dict]] = {}
-    for s in stats:
-        stats_by_part.setdefault(s["partition"], []).append(
-            {
-                "fileId": s["fileId"],
-                "path": s["path"],
-                "numWrites": s["numWrites"],
-            }
-        )
-    w.store.put_atomic(
-        os.path.join(hoodie, f"{instant}.commit"),
-        json.dumps(
-            {
-                "partitionToWriteStats": stats_by_part,
-                "operationType": "BOOTSTRAP",
-                "extraMetadata": {},
-            }
-        ).encode(),
-    )
-    return instant
+        stats = [
+            pickle.loads(base64.b64decode(r.j))
+            for r in flist
+            .mapInPandas(_skeletons, "j string")
+            .collect()
+        ]
+        if not stats:
+            raise ValueError(
+                f"{source_base} has no live rows to bootstrap"
+            )
+        idx_path = os.path.join(hudi_path, BOOTSTRAP_INDEX_REL)
+        os.makedirs(os.path.dirname(idx_path), exist_ok=True)
+        idx = {
+            "instant": instant,
+            "sourceBasePath": source_base,
+            "mapping": [
+                {
+                    "fileId": s["fileId"],
+                    "partition": s["partition"],
+                    "skeleton": s["path"],
+                    "source": s["source"],
+                    **(
+                        {
+                            "partitionValues": pv_by_src[s["source"]][1]
+                        }
+                        if pv_by_src
+                        else {}
+                    ),
+                }
+                for s in stats
+            ],
+        }
+        if partition_ddl:
+            # typed partition schema for readers' value reconstruction
+            # (hudi.bootstrap_partition_info / _bootstrap_pv_frame)
+            idx["partitionSchema"] = partition_ddl
+        written.append(idx_path)
+        w.store.put_atomic(idx_path, json.dumps(idx).encode())
+        stats_by_part: dict[str, list[dict]] = {}
+        for s in stats:
+            stats_by_part.setdefault(s["partition"], []).append(
+                {
+                    "fileId": s["fileId"],
+                    "path": s["path"],
+                    "numWrites": s["numWrites"],
+                }
+            )
+        return {"partitionToWriteStats": stats_by_part}
+
+    return w._commit("commit", "BOOTSTRAP", None, stage, instant=instant)

@@ -55,6 +55,7 @@ from kafka_delta_ingest_spark.sinks.base import (
     CommitResult,
     ConstraintViolation,
     _parse_partition_values,
+    _remove_quietly,
     already_applied,
     staged_parquet,
     zorder_value,
@@ -635,16 +636,6 @@ def read_delta(spark, table_path: str, version=None, timestamp_ms=None):
             ]
         )
     return df.select(*[f.name for f in logical.fields])
-
-
-def _remove_quietly(paths) -> None:
-    """Best-effort cleanup of files an aborted commit staged: nothing
-    references them, and a failure here must not mask the abort."""
-    for p in paths:
-        try:
-            os.remove(p)
-        except OSError:
-            pass
 
 
 def _remove_action(add: dict, now_ms: int, data_change: bool = True) -> dict:

@@ -112,6 +112,16 @@ def already_applied(stored: dict, txn: dict) -> bool:
     )
 
 
+def _remove_quietly(paths) -> None:
+    """Best-effort cleanup of files an aborted commit staged: nothing
+    references them, and a failure here must not mask the abort."""
+    for p in paths:
+        try:
+            os.remove(p)
+        except OSError:
+            pass
+
+
 def encode_offsets(txn: dict[str, int]) -> dict[str, str]:
     """Ledger → ``kdi.offsets.<appId>`` string map."""
     return {f"{OFFSETS_PREFIX}{app}": str(v) for app, v in txn.items()}

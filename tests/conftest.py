@@ -42,3 +42,33 @@ def untracked_parquet(root: str) -> list[str]:
         if f.endswith(".parquet")
     }
     return sorted(found - named)
+
+
+def untracked_hudi_files(root: str) -> list[str]:
+    """What an aborted write can leave in a Hudi table: data files
+    under the root (``.hoodie`` aside) that no completed instant's
+    write stats name, and the ``.requested``/``.inflight`` markers of
+    instants that never completed."""
+    import json
+    import re
+
+    hoodie = os.path.join(root, ".hoodie")
+    names = set(os.listdir(hoodie))
+    named = set()
+    pending = []
+    for name in sorted(names):
+        if re.match(r"^\d{14,17}\.\w+$", name):
+            with open(os.path.join(hoodie, name)) as f:
+                meta = json.load(f)
+            for stats in (meta.get("partitionToWriteStats") or {}).values():
+                named.update(st["path"] for st in stats)
+        m = re.match(r"^(\d{14,17}\.\w+)\.(requested|inflight)$", name)
+        if m and m.group(1) not in names:
+            pending.append(os.path.join(".hoodie", name))
+    found = {
+        os.path.relpath(os.path.join(d, f), root)
+        for d, _dirs, files in os.walk(root)
+        if not os.path.relpath(d, root).startswith(".hoodie")
+        for f in files
+    }
+    return sorted(found - named) + pending

@@ -1,12 +1,19 @@
-"""The standard Delta writer has one commit path:
-``DeltaStandardWriter._atomic_commit`` assembles and publishes every
-commit (its ``commitInfo``, the checkpoint cadence, the cleanup of an
-aborted operation's files), and two builders make the ``remove``
+"""Each table format's writer has one commit path, checked with
+``ast`` (no Spark session is needed).
+
+Delta: ``DeltaStandardWriter._atomic_commit`` assembles and publishes
+every commit (its ``commitInfo``, the checkpoint cadence, the cleanup
+of an aborted operation's files), and two builders make the ``remove``
 action and a new table's ``protocol`` + ``metaData``. No other code of
 ``delta_standard.py`` (the independent ``DeltaFixtureWriter`` aside)
 or ``convert.py`` may build those actions, compute the cadence, remove
-staged files or claim a log version. Parsed with ``ast``, so no Spark
-session is needed."""
+staged files or claim a log version.
+
+Hudi: ``HudiCowWriter._commit`` claims (through ``_claim_instant``),
+stages and publishes every instant. No other code of ``hudi.py`` (the
+independent fixture writers aside) may claim or publish a timeline
+file or build a commit's ``operationType``; ``convert.py``'s bootstrap
+commits through it too."""
 
 import ast
 import os
@@ -17,18 +24,24 @@ PKG = os.path.join(os.path.dirname(__file__), os.pardir, "kafka_delta_ingest_spa
 COMMIT_PATH = {"_atomic_commit", "_remove_action", "_new_table_actions"}
 
 
-def _scopes(tree):
+def _tree(module):
+    with open(os.path.join(PKG, module)) as f:
+        return ast.parse(f.read(), filename=module)
+
+
+def _scopes(tree, skip=("DeltaFixtureWriter",), named=COMMIT_PATH):
     """(name of the enclosing function or class, node) for every node
-    outside ``DeltaFixtureWriter``."""
+    outside the classes in ``skip``: the top-level function or class,
+    or the innermost enclosing method named in ``named``."""
 
     def walk(node, scope):
         for child in ast.iter_child_nodes(node):
-            if isinstance(child, ast.ClassDef) and child.name == "DeltaFixtureWriter":
+            if isinstance(child, ast.ClassDef) and child.name in skip:
                 continue
             inner = scope
             if isinstance(child, (ast.FunctionDef, ast.ClassDef)) and scope is None:
                 inner = child.name
-            elif isinstance(child, ast.FunctionDef) and child.name in COMMIT_PATH:
+            elif isinstance(child, ast.FunctionDef) and child.name in named:
                 inner = child.name
             yield inner, child
             yield from walk(child, inner)
@@ -63,16 +76,49 @@ def _violation(node, calls):
     "module, calls",
     [
         ("delta_standard.py", {"_remove_quietly", "put_if_absent"}),
-        # convert's Hudi bootstrap claims a Hudi instant of its own
-        ("convert.py", {"_remove_quietly"}),
+        ("convert.py", {"_remove_quietly", "put_if_absent"}),
     ],
 )
 def test_one_delta_commit_path(module, calls):
-    with open(os.path.join(PKG, module)) as f:
-        tree = ast.parse(f.read(), filename=module)
     bad = [
         f"line {node.lineno}: {what}"
-        for scope, node in _scopes(tree)
+        for scope, node in _scopes(_tree(module))
         if scope not in COMMIT_PATH and (what := _violation(node, calls))
     ]
     assert not bad, f"{module} outside the commit path: {bad}"
+
+
+HUDI_COMMIT_PATH = {"_claim_instant", "_commit"}
+
+
+def _hudi_violation(node, scope):
+    if isinstance(node, ast.Dict) and any(
+        isinstance(k, ast.Constant) and k.value == "operationType"
+        for k in node.keys
+    ):
+        return "an 'operationType' dict literal"
+    if isinstance(node, ast.Call) and _call_name(node) == "put_if_absent":
+        return "a put_if_absent call"
+    # the one other timeline write: a new table's hoodie.properties
+    if (
+        isinstance(node, ast.Call)
+        and _call_name(node) == "put_atomic"
+        and not (scope == "__init__" and ast.unparse(node.args[0]) == "props")
+    ):
+        return "a put_atomic call"
+    return None
+
+
+def test_one_hudi_commit_path():
+    tree = _tree("hudi.py")
+    bad = [
+        f"line {node.lineno}: {what}"
+        for scope, node in _scopes(
+            tree,
+            skip=("HudiFixtureWriter", "HudiMorFixtureWriter"),
+            named=HUDI_COMMIT_PATH | {"__init__"},
+        )
+        if scope not in HUDI_COMMIT_PATH
+        and (what := _hudi_violation(node, scope))
+    ]
+    assert not bad, f"hudi.py outside the commit path: {bad}"

@@ -5,7 +5,8 @@ the exchange-free plan. The message path is compiled once per schema,
 and a batch runs at most seven Spark jobs. Also the slimmed DLQ payload
 columns, the job-free width check, the ``delta.write.failed``
 counter, and a DLQ that takes each batch exactly once across failures
-and replays, with a crash at each log-store write call of a batch."""
+and replays, with a crash at each log-store write call of a batch into
+a Delta or a Hudi (CoW, MoR) data table."""
 
 import base64
 import datetime
@@ -23,7 +24,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from kafka_delta_ingest_spark import delta_standard, ingest
+from kafka_delta_ingest_spark import delta_standard, ingest, logstore
 from kafka_delta_ingest_spark.config import IngestOptions
 from kafka_delta_ingest_spark.dead_letters import DeadLetterQueue
 from kafka_delta_ingest_spark.delta_standard import (
@@ -31,6 +32,7 @@ from kafka_delta_ingest_spark.delta_standard import (
     DeltaStandardWriter,
     read_delta,
 )
+from kafka_delta_ingest_spark.hudi import HudiSink
 from kafka_delta_ingest_spark.ingest import (
     CONFORM_COL,
     ERROR_COL,
@@ -438,6 +440,83 @@ def test_crash_at_each_write_call_replays_exactly_once(
     if mode is None or BATCH_WRITES[at - 1] != "put_if_absent":
         assert untracked_parquet(table) == []
         assert untracked_parquet(dlq) == []
+
+
+# The write calls of a dirty batch into a Hudi table: the DLQ's Delta
+# claim (faulted by the Delta slice above), then the instant claim, the
+# .inflight marker, the rollback list it is rewritten with, and the
+# completed-instant publish.
+HUDI_BATCH_WRITES = ["put_if_absent", "put_if_absent"] + ["put_atomic"] * 3
+
+
+def _hudi_sink(base, fmt):
+    """The data table of the Hudi harness: a CoW append table, or a
+    MoR table taking each batch as an upsert by ``id``."""
+    mor = fmt == "hudi_mor"
+    return HudiSink(
+        str(base / "table"), mor=mor, record_key="id" if mor else None
+    )
+
+
+@pytest.fixture(scope="module")
+def hudi_crash_base(spark, tmp_path_factory):
+    """Per format, a Hudi data table and its Delta DLQ after batch 0."""
+    bases = {}
+    for fmt in ("hudi", "hudi_mor"):
+        base = tmp_path_factory.mktemp(fmt)
+        _job(base, sink=_hudi_sink(base, fmt)).run_batch(_raw(spark, 0))
+        bases[fmt] = base
+    return bases
+
+
+@pytest.mark.parametrize(
+    "at, mode",
+    [(i, "before") for i in range(2, len(HUDI_BATCH_WRITES) + 1)]
+    + [(len(HUDI_BATCH_WRITES), "after")],
+)
+@pytest.mark.parametrize("fmt", ["hudi", "hudi_mor"])
+def test_crash_at_each_hudi_write_call_replays_exactly_once(
+    spark, tmp_path, monkeypatch, hudi_crash_base, fmt, at, mode
+):
+    """The harness's Hudi slice: one dirty batch into a Hudi table and
+    its Delta DLQ, with the log store failing at each write call of
+    the Hudi commit, before the write and, for the publish, after it;
+    a fresh job replays the batch. Both tables then hold each row
+    once, both ledgers hold the batch's offsets, and neither an
+    untracked file nor a pending instant is left: an aborted write
+    cleans up at once, and a failed publish is rolled back by the
+    replay."""
+    from tests.conftest import untracked_hudi_files, untracked_parquet
+
+    base = tmp_path / "t"
+    shutil.copytree(hudi_crash_base[fmt], base)
+    plan = {"at": at, "mode": mode, "calls": []}
+    for module in (delta_standard, logstore):
+        monkeypatch.setattr(
+            module, "get_log_store", lambda uri: FaultyLogStore(plan)
+        )
+    job = _job(base, sink=_hudi_sink(base, fmt))
+    with pytest.raises(OSError, match="injected fault"):
+        job.run_batch(_raw(spark, 1))
+    # an abort's withdrawals follow the fault
+    assert plan["calls"][:at] == HUDI_BATCH_WRITES[:at]
+    assert set(plan["calls"][at:]) <= {"remove"}
+    monkeypatch.undo()
+    _job(base, sink=_hudi_sink(base, fmt)).run_batch(_raw(spark, 1))
+
+    table, dlq = job.opts.table_uri, job.opts.dlq_table_location
+    sink = _hudi_sink(base, fmt)
+    ids = sorted(r.id for r in sink.read(spark).select("id").collect())
+    assert ids == list(range(60)) + list(range(1000, 1060))
+    assert _dlq_rows(spark, job) == 4
+    offsets = {}
+    for i, _ in _messages(1):
+        key = f"{job.opts.app_id}-{i % 4}"
+        offsets[key] = max(offsets.get(key, i), i)
+    assert sink.snapshot()["txn"] == offsets
+    assert DeltaStandardSink(dlq).snapshot()["txn"] == offsets
+    assert untracked_hudi_files(table) == []
+    assert untracked_parquet(dlq) == []
 
 
 def _jobs_of(spark, fn):
