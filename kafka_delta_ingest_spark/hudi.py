@@ -78,10 +78,10 @@ claim ``<instant>.<action>.requested``, re-check the exactly-once
 ledger when the batch carries offsets, write ``.inflight``, stage the
 operation's files, then publish ``<instant>.<action>`` with
 ``operationType`` and ``extraMetadata``. A write that does not commit
-removes the files it wrote and withdraws its markers; only a publish
-call that itself raised leaves them, since that commit may have
-landed, and the next commit rolls that instant back when it never
-completed.
+removes the files it wrote and withdraws its markers. A publish call
+that itself raised does the same when the store does not show the
+completed instant, and otherwise leaves them, since that commit may
+have landed.
 """
 
 from __future__ import annotations
@@ -1501,10 +1501,9 @@ class HudiCowWriter:
     offsets ride — ``kdi.offsets.<appId>`` keys, the slot Hudi's own
     DeltaStreamer uses for its checkpoint; :meth:`stored_txn` reads
     them back). An operation that does not commit removes the files
-    it wrote and withdraws its ``.requested``/``.inflight`` markers,
-    unless the publish call itself raised (the commit may have
-    landed); the next commit rolls such an instant back when it never
-    completed.
+    it wrote and withdraws its ``.requested``/``.inflight`` markers;
+    when the publish call itself raised, it does so only if the store
+    does not show the completed instant.
 
     Hudi meta columns are computed IN SPARK (commit time, seqno from
     (instant, partition id, row position), record key = seqno unless a
@@ -1630,19 +1629,17 @@ class HudiCowWriter:
         multi-writer; this destination's contract is single-writer
         plus replay, same as Hudi DeltaStreamer's default.
 
-        Cleanup rule: if the publish call itself raises, ``written``
-        and the markers stay and the error propagates, because the
-        commit may have landed (an object store's timeout after the
-        object landed). Every other abort — a ledger skip, an empty
-        body, ``stage`` raising — removes every file in ``written``
-        and withdraws the ``.requested`` and ``.inflight`` markers
-        through the store. Executor-written log blocks are listed by
-        each target group's next-version log name (:meth:`_group_plan`),
-        since an executor cannot report a file before writing it.
-        Before publishing, ``.inflight`` is rewritten with the
-        table-relative paths of the files written, so when the publish
-        never lands the next commit rolls the instant back
-        (:meth:`_roll_back_failed`)."""
+        Cleanup rule: an abort — a ledger skip, an empty body,
+        ``stage`` raising — removes every file in ``written`` and
+        withdraws the ``.requested`` and ``.inflight`` markers through
+        the store. When the publish call itself raises, the commit may
+        have landed (an object store's timeout after the object
+        landed): if the store shows ``<instant>.<action>``, the files
+        and markers stay; if not, the write is cleaned up as any other
+        abort. Either way the error propagates. Executor-written log
+        blocks are listed by each target group's next-version log name
+        (:meth:`_group_plan`), since an executor cannot report a file
+        before writing it."""
         hoodie = os.path.join(self.path, ".hoodie")
         if instant is None:
             instant = self._claim_instant(action)
@@ -1653,9 +1650,8 @@ class HudiCowWriter:
         completed = os.path.join(hoodie, f"{instant}.{action}")
         markers = [f"{completed}.requested"]
         written: list[str] = []
-        publishing = False
+        landed = False
         try:
-            self._roll_back_failed(instant)
             if txn and already_applied(self.stored_txn(), txn):
                 return None
             markers.append(f"{completed}.inflight")
@@ -1663,19 +1659,18 @@ class HudiCowWriter:
             body = stage(instant, written)
             if not body:
                 return None
-            self.store.put_atomic(markers[-1], json.dumps([
-                os.path.relpath(p, self.path)
-                for p in written if os.path.exists(p)
-            ]).encode())
             meta = {
                 **body,
                 "operationType": operation,
                 "extraMetadata": encode_offsets(txn or {}),
             }
-            publishing = True
+            landed = None  # unknown while the publish is in flight
             self.store.put_atomic(completed, json.dumps(meta).encode())
+            landed = True
         finally:
-            if not publishing:
+            if landed is None:
+                landed = self.store.exists(completed)
+            if not landed:
                 _remove_quietly(written)
                 for m in reversed(markers):
                     try:
@@ -1686,30 +1681,6 @@ class HudiCowWriter:
             body.get("partitionToWriteStats", {})
         )
         return instant
-
-    def _roll_back_failed(self, below: str) -> None:
-        """Roll back every instant before ``below`` that reached its
-        publish and never completed: remove the files its
-        ``.inflight`` lists and withdraw its markers (Hudi's eager
-        failed-writes policy). An instant whose ``.inflight`` holds no
-        file list is left alone: its writer may still be staging."""
-        hoodie = os.path.join(self.path, ".hoodie")
-        names = set(self.store.list_dir(hoodie))
-        for name in sorted(names):
-            m = re.match(r"^((\d{14,17})\.\w+)\.inflight$", name)
-            if not m or m.group(2) >= below or m.group(1) in names:
-                continue
-            listed = self.store.read_bytes(os.path.join(hoodie, name))
-            if not listed.startswith(b"["):
-                continue  # still staging, or not this writer's list
-            _remove_quietly(
-                os.path.join(self.path, rel) for rel in json.loads(listed)
-            )
-            self.store.remove(os.path.join(hoodie, name))
-            if f"{m.group(1)}.requested" in names:
-                self.store.remove(
-                    os.path.join(hoodie, f"{m.group(1)}.requested")
-                )
 
     def stored_txn(self) -> dict[str, int]:
         """The exactly-once ledger: the ``kdi.offsets.*`` entries of
@@ -1868,15 +1839,16 @@ class HudiCowWriter:
             _write_stat(fid, rel, prev, f.metadata.num_rows, size)
         )
 
-    def _group_plan(self) -> dict[str, tuple[str, str, str, int]]:
-        """fileId → (partition, abs base path, base instant, next log
-        version) of every live file group with a base file — the
-        driver-side metadata match discovery, the rewrites and the
-        executor log writers need."""
+    def _group_plan(self) -> tuple[dict[str, tuple[str, str, str, int]],
+                                   bool]:
+        """(fileId → (partition, abs base path, base instant, next log
+        version) of every live file group with a base file, whether any
+        live group carries log files) — the driver-side metadata match
+        discovery, the rewrites and the executor log writers need."""
         try:
             groups, _ = plan_file_groups(self.path)
         except ValueError:
-            return {}
+            return {}, False
         return {
             fid: (
                 part,
@@ -1887,61 +1859,54 @@ class HudiCowWriter:
             )
             for (part, fid), g in groups.items()
             if g["base"]
-        }
+        }, any(g["logs"] for g in groups.values())
 
-    def _split_matched(self, df, precombine):
+    def _split_matched(self, df, precombine, groups):
         """(matched rows tagged __fid/__pp/__rk, unmatched rows,
-        :meth:`_group_plan`, materialized source) — the match
-        discovery both upserts share: a column-pruned key scan over
-        live base files (the bloom-index analog), left-joined by the
-        distinct source keys. Duplicate source keys raise unless
-        ``precombine`` names the field whose highest value wins."""
+        deduplicated source), or None when the source is empty — the
+        match discovery both upserts share: a column-pruned key scan
+        over the base files of ``groups`` (:meth:`_group_plan`; the
+        bloom-index analog) inner-joined with the distinct source keys,
+        so only the matched keys are materialized. Duplicate source
+        keys raise unless ``precombine`` names the field whose highest
+        value wins."""
         from pyspark.sql import functions as F
         from pyspark.sql.window import Window
 
         spark = df.sparkSession
+        keys = ["__pp", "__rk"]
+        # r12: one eager materialization of the source batch — its
+        # lineage was re-executed by the empty check, the duplicate
+        # probe, the key match AND both write legs.
+        src = df.withColumn("__pp", self._part_path_col()).withColumn(
+            "__rk", F.col(self.record_key).cast("string")
+        ).localCheckpoint()
+        if src.isEmpty():
+            return None
 
-        # r13 (guide §2.6): the source materialization (+ duplicate
-        # probe) and the live-base key scan are INDEPENDENT — the one
-        # reads the incoming batch's lineage, the other the table's
-        # base files — so they run from two driver threads; previously
-        # they were three sequential driver-blocking jobs. overlap()
-        # waits for both legs, so a duplicate-key ValueError from the
-        # source leg surfaces only after the key-scan leg's
-        # materialization finishes: a delayed error on the failure
-        # path, the price of the overlap on the success path.
-        def _src_leg():
-            # r12: one eager materialization of the source batch — its
-            # lineage was re-executed by the empty check, the duplicate
-            # probe, the matched join AND the unmatched anti-join.
-            s = df.withColumn("__pp", self._part_path_col()).withColumn(
-                "__rk", F.col(self.record_key).cast("string")
-            ).localCheckpoint()
+        def _dedup():
             if precombine is not None:
-                w = Window.partitionBy("__pp", "__rk").orderBy(
+                w = Window.partitionBy(*keys).orderBy(
                     F.col(precombine).desc()
                 )
-                s = (
-                    s.withColumn("__rn", F.row_number().over(w))
+                return (
+                    src.withColumn("__rn", F.row_number().over(w))
                     .filter("__rn = 1").drop("__rn")
                 )
-            else:
-                dup = (
-                    s.groupBy("__pp", "__rk")
-                    .agg(F.count(F.lit(1)).alias("n"))
-                    .filter("n > 1").limit(1).collect()
+            dup = (
+                src.groupBy(*keys).agg(F.count(F.lit(1)).alias("n"))
+                .filter("n > 1").limit(1).collect()
+            )
+            if dup:
+                raise ValueError(
+                    "duplicate record keys in source and no "
+                    "precombine field given"
                 )
-                if dup:
-                    raise ValueError(
-                        "duplicate record keys in source and no "
-                        "precombine field given"
-                    )
-            return s
+            return src
 
-        def _keyed_leg():
-            groups = self._group_plan()
+        def _match():
             if not groups:
-                return None, groups
+                return None
             bases = sorted((g[1], fid) for fid, g in groups.items())
             live_keys = (
                 spark.read.option("mergeSchema", "true")
@@ -1955,25 +1920,29 @@ class HudiCowWriter:
                 )
             )
             fid_map = metadata_df(spark, bases, "__fp string, __fid string")
-            k = live_keys.join(F.broadcast(fid_map), "__fp").select(
-                "__pp", "__rk", "__fid"
+            return live_keys.join(
+                src.select(*keys).distinct(), keys
+            ).join(F.broadcast(fid_map), "__fp").select(
+                *keys, "__fid"
             ).localCheckpoint()
-            return k, groups
 
-        src, (keyed, groups) = overlap(_src_leg, _keyed_leg)
+        # r13 (guide §2.6): the duplicate probe and the key scan are
+        # independent reads of the materialized source, so they run
+        # from two driver threads. overlap() waits for both legs, so a
+        # duplicate-key ValueError surfaces only after the key-scan
+        # leg finishes: a delayed error on the failure path, the price
+        # of the overlap on the success path.
+        dedup, keyed = overlap(_dedup, _match)
         if keyed is None:
-            return None, src, groups, src
-        # r12: ONE left join, materialized once, then split by __fid
-        # nullability — the previous inner + anti pair executed the
-        # live-keys base scan and the join twice (once per consumer).
-        # Equivalent because a live (__pp, __rk) owns exactly one file
-        # group (the upsert invariant this writer maintains).
-        joined = src.join(
-            keyed, ["__pp", "__rk"], "left"
-        ).localCheckpoint()
-        matched = joined.filter(F.col("__fid").isNotNull())
-        unmatched = joined.filter(F.col("__fid").isNull()).drop("__fid")
-        return matched, unmatched, groups, src
+            return None, dedup, dedup
+        # a live (__pp, __rk) owns exactly one file group (the upsert
+        # invariant this writer maintains), so the inner join tags each
+        # matched row once
+        return (
+            dedup.join(keyed, keys),
+            dedup.join(keyed, keys, "left_anti"),
+            dedup,
+        )
 
     def upsert_batch(self, df, precombine: str | None = None):
         """Hudi's signature operation — CoW UPSERT of a DataFrame:
@@ -1990,8 +1959,9 @@ class HudiCowWriter:
 
         Scale contract: match discovery (:meth:`_split_matched`) is a
         column-pruned scan of the key + partition-path columns only
-        over live base files, joined against the materialized source
-        — the Spark-native analog of Hudi's bloom-index lookup; the
+        over live base files, equi-joined against the distinct keys of
+        the materialized source — the Spark-native analog of Hudi's
+        bloom-index lookup, materializing only the matched keys; the
         rewrite then reads ONLY the matched file groups. Cost is
         O(touched groups + source), never O(table). One slice per
         group: the rewrite repartitions on fileId so each group lands
@@ -2009,13 +1979,13 @@ class HudiCowWriter:
                 "(HudiCowWriter(record_key=...))"
             )
         spark = df.sparkSession
-        matched, unmatched, groups, src = self._split_matched(
-            df, precombine
-        )
-        if any(g[3] > 1 for g in groups.values()):
+        groups, logged = self._group_plan()
+        if logged:
             raise ValueError("CoW upsert on a table with MoR logs")
-        if src.isEmpty():
+        split = self._split_matched(df, precombine, groups)
+        if split is None:
             return None, 0, 0
+        matched, unmatched, src = split
         touched = sorted(
             r["__fid"]
             for r in matched.select("__fid").distinct().collect()
@@ -2428,13 +2398,11 @@ class HudiMorWriter(HudiCowWriter):
         avro_schema = self._avro_schema_of(df)
         data_cols = list(df.columns)
         ts_cols, date_cols = self._temporal_cols(df.schema)
-        matched, unmatched, groups, src = self._split_matched(
-            df, precombine
-        )
-        # empty check on the MATERIALIZED source (r12): df.isEmpty()
-        # re-ran the whole batch lineage just to probe one row.
-        if src.isEmpty():
+        groups, _ = self._group_plan()
+        split = self._split_matched(df, precombine, groups)
+        if split is None:
             return None, 0, 0, 0
+        matched, unmatched, _src = split
         key_col = self.record_key
 
         def _records(pdf: pd.DataFrame) -> list[dict]:
@@ -2522,11 +2490,11 @@ class HudiMorWriter(HudiCowWriter):
             raise ValueError(
                 "delete_log_batch requires the writer's record_key"
             )
-        matched, _unmatched, groups, src = self._split_matched(
-            df.dropDuplicates(), None
-        )
-        if matched is None or src.isEmpty():
+        groups, _ = self._group_plan()
+        split = self._split_matched(df.dropDuplicates(), None, groups)
+        if split is None or split[0] is None:
             return None, 0
+        matched = split[0]
         stats: dict[str, list[dict]] = {}
 
         def stage(instant, written):
@@ -2810,13 +2778,15 @@ class HudiSink:
             instant, n_files, n_records, num_bytes=w.last_commit_bytes
         )
 
-    def commit_offsets(self, txn: dict[str, int]) -> str | None:
+    def commit_offsets(self, txn: dict[str, int]) -> str | int:
         """--seek_offsets bootstrap: an empty commit whose
-        extraMetadata carries the offsets."""
-        return self._writer()._commit(
+        extraMetadata carries the offsets; the latest instant when the
+        ledger already holds them."""
+        instant = self._writer()._commit(
             "commit", "SET_OFFSETS", txn,
             lambda _instant, _written: {"partitionToWriteStats": {}},
         )
+        return self.snapshot()["version"] if instant is None else instant
 
     def read(self, spark, as_of=None):
         return read_hudi(spark, self.path, as_of_instant=as_of)

@@ -1,6 +1,6 @@
 """Aborted Hudi writes. A write that fails while staging removes the
-files it wrote and withdraws its instant; a write whose publish
-failed is rolled back by the next commit, so a replay leaves the table
+files it wrote and withdraws its instant, and so does one whose
+publish raised before the instant landed, so a replay leaves the table
 as if the first attempt never ran. A publish that landed and then
 raised keeps its commit, and a replay skips it."""
 
@@ -89,6 +89,8 @@ def _sink_publish_fails(spark, root, monkeypatch, mor):
             batch, partition_by=["p"], txn={"app-0": 15}
         )
     monkeypatch.undo()
+    # cleaned up before the error propagates, not by a later commit
+    assert untracked_hudi_files(root) == []
     replay = HudiSink(root, mor=mor, record_key=key)
     assert not replay.write_batch(
         batch, partition_by=["p"], txn={"app-0": 15}
@@ -174,4 +176,47 @@ def test_publish_that_lands_then_raises_keeps_its_commit(
     replay = HudiSink(root, mor=mor, record_key=key)
     assert replay.write_batch(batch, partition_by=["p"], txn={"a-0": 2}).skipped
     assert len(completed_commits(root)) == 2
+    assert untracked_hudi_files(root) == []
+
+
+def test_a_commit_landing_before_another_publish_keeps_its_files(
+    spark, tmp_path, monkeypatch
+):
+    """A sibling writer that commits a later instant while another
+    writer is about to publish leaves the other writer's staged files
+    alone: both commits read back in full."""
+    root = str(tmp_path / "t")
+    HudiCowWriter(root, partition_by=["p"]).insert_batch(_rows(spark, range(10)))
+    real = LocalLogStore.put_atomic
+    fired = []
+
+    def sibling_commits_first(self, path, data):
+        if _publish(self, path) and not fired:
+            fired.append(True)
+            HudiCowWriter(root, partition_by=["p"]).insert_batch(
+                _rows(spark, range(20, 24))
+            )
+        return real(self, path, data)
+
+    monkeypatch.setattr(LocalLogStore, "put_atomic", sibling_commits_first)
+    HudiCowWriter(root, partition_by=["p"]).insert_batch(
+        _rows(spark, range(10, 14))
+    )
+    monkeypatch.undo()
+    assert fired
+    assert sorted(_table(spark, root)) == [*range(14), *range(20, 24)]
+    assert untracked_hudi_files(root) == []
+
+
+def test_ledger_only_commit_already_stored_returns_the_latest_instant(
+    tmp_path,
+):
+    """``HudiSink.commit_offsets`` of offsets the ledger already holds
+    withdraws its claimed instant and reports the latest instant, as
+    the other sinks report their current version."""
+    root = str(tmp_path / "t")
+    first = HudiSink(root).commit_offsets({"a-0": 3})
+    again = HudiSink(root).commit_offsets({"a-0": 3})
+    assert again == first
+    assert len(completed_commits(root)) == 1
     assert untracked_hudi_files(root) == []

@@ -160,3 +160,28 @@ def test_upsert_commit_stats_carry_prev_slice(spark, tmp_path):
     stats = meta["partitionToWriteStats"][""]
     upd = [s for s in stats if s["prevCommit"] != "null"]
     assert len(upd) == 1 and upd[0]["prevCommit"] == first
+
+
+@pytest.mark.parametrize("with_base", [True, False], ids=["base", "log_only"])
+def test_upsert_refuses_a_table_with_mor_logs(spark, tmp_path, with_base):
+    """A CoW upsert refuses a table whose live file groups carry log
+    files, also when a group is made of log files only (no base)."""
+    t = str(tmp_path / "t")
+    w = HudiCowWriter(t, record_key="id")
+    w.insert_batch(_df(spark, [(i, f"old{i}", i) for i in range(4)]).coalesce(1))
+    if with_base:
+        fid = next(f for f in os.listdir(t) if f.endswith(".parquet"))
+        fid, base_instant = fid.split("_")[0], w.latest_instant()
+    else:
+        fid, base_instant = "log-only-group", "20000101000000000"
+    log = f".{fid}_{base_instant}.log.1_0-1-0"
+    stat = {"fileId": fid, "path": log, "prevCommit": base_instant,
+            "numWrites": 1, "fileSizeInBytes": 0}
+    with open(os.path.join(t, log), "wb"):
+        pass
+    with open(os.path.join(t, ".hoodie", "29990101000000000.deltacommit"),
+              "w") as f:
+        json.dump({"partitionToWriteStats": {"": [stat]},
+                   "operationType": "UPSERT"}, f)
+    with pytest.raises(ValueError, match="CoW upsert on a table with MoR logs"):
+        w.upsert_batch(_df(spark, [(1, "new", 1)]))

@@ -444,9 +444,8 @@ def test_crash_at_each_write_call_replays_exactly_once(
 
 # The write calls of a dirty batch into a Hudi table: the DLQ's Delta
 # claim (faulted by the Delta slice above), then the instant claim, the
-# .inflight marker, the rollback list it is rewritten with, and the
-# completed-instant publish.
-HUDI_BATCH_WRITES = ["put_if_absent", "put_if_absent"] + ["put_atomic"] * 3
+# .inflight marker and the completed-instant publish.
+HUDI_BATCH_WRITES = ["put_if_absent", "put_if_absent"] + ["put_atomic"] * 2
 
 
 def _hudi_sink(base, fmt):
@@ -484,8 +483,8 @@ def test_crash_at_each_hudi_write_call_replays_exactly_once(
     a fresh job replays the batch. Both tables then hold each row
     once, both ledgers hold the batch's offsets, and neither an
     untracked file nor a pending instant is left: an aborted write
-    cleans up at once, and a failed publish is rolled back by the
-    replay."""
+    cleans up at once, and so does a publish that raised before it
+    landed."""
     from tests.conftest import untracked_hudi_files, untracked_parquet
 
     base = tmp_path / "t"
@@ -502,9 +501,11 @@ def test_crash_at_each_hudi_write_call_replays_exactly_once(
     assert plan["calls"][:at] == HUDI_BATCH_WRITES[:at]
     assert set(plan["calls"][at:]) <= {"remove"}
     monkeypatch.undo()
+    table, dlq = job.opts.table_uri, job.opts.dlq_table_location
+    if mode == "before":
+        assert untracked_hudi_files(table) == []
     _job(base, sink=_hudi_sink(base, fmt)).run_batch(_raw(spark, 1))
 
-    table, dlq = job.opts.table_uri, job.opts.dlq_table_location
     sink = _hudi_sink(base, fmt)
     ids = sorted(r.id for r in sink.read(spark).select("id").collect())
     assert ids == list(range(60)) + list(range(1000, 1060))
