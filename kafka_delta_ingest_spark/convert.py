@@ -67,8 +67,6 @@ def convert_delta_to_iceberg(
     footer-derived column metrics ``IcebergWriter`` stamps on its own
     writes, so data skipping works identically on the converted
     table."""
-    import time
-
     from kafka_delta_ingest_spark.delta_standard import (
         _log_path,
         _replay,
@@ -82,8 +80,6 @@ def convert_delta_to_iceberg(
         typed_partition_value,
     )
 
-    if ts_ms is None:
-        ts_ms = int(time.time() * 1000)
     log = _log_path(delta_path)
     store = get_log_store(delta_path)
     state = _replay(log, _resolve_version(log, store, version), store)
@@ -157,7 +153,7 @@ def convert_delta_to_iceberg(
     if not data_files:
         raise ValueError(f"{delta_path} has no live rows to convert")
 
-    # the property survives every later commit (_commit_snapshot
+    # the property survives every later commit (IcebergWriter._commit
     # carries properties forward), so native appends to the converted
     # table keep the reader's per-file identity-column coalesce active
     # (mixed converted + column-carrying files read correctly).
@@ -165,15 +161,8 @@ def convert_delta_to_iceberg(
         iceberg_root, fields, partition_by=list(part_cols),
         properties={"kdi.files-may-omit-identity-columns": "true"},
     )
-    cur_v, cur_meta = w._current()
-    if cur_meta is not None:
-        raise ValueError(
-            f"{iceberg_root} already holds an Iceberg table; "
-            "conversion only bootstraps fresh metadata"
-        )
-    return w._commit_snapshot(
-        [(data_files, 0)], "append", ts_ms, attempts=100
-    )
+    return w._commit("append", stage=lambda _written: [(data_files, 0)],
+                     ts_ms=ts_ms, new_table=True)
 
 
 def _executor_iceberg_entries(
@@ -490,8 +479,6 @@ def convert_hudi_to_iceberg(
     unpartitioned Iceberg metadata (this repo's Hudi writer clones
     partition columns into the pages, so rows are identical; manifest
     bounds keep file-level skipping)."""
-    import time
-
     from kafka_delta_ingest_spark.hudi import (
         META_COLS,
         _is_bootstrap_slice,
@@ -502,8 +489,6 @@ def convert_hudi_to_iceberg(
         _spark_type_to_iceberg,
     )
 
-    if ts_ms is None:
-        ts_ms = int(time.time() * 1000)
     groups, _instant = plan_file_groups(hudi_path, as_of_instant, None)
     # Refuse only when the plan AT THE REQUESTED INSTANT actually
     # serves a METADATA_ONLY skeleton slice (same per-slice test as
@@ -556,15 +541,9 @@ def convert_hudi_to_iceberg(
     data_files = _executor_iceberg_entries(spark, entries, fields)
     if not data_files:
         raise ValueError(f"{hudi_path} has no live rows to convert")
-    w = IcebergWriter(iceberg_root, fields)
-    cur_v, cur_meta = w._current()
-    if cur_meta is not None:
-        raise ValueError(
-            f"{iceberg_root} already holds an Iceberg table; "
-            "conversion only bootstraps fresh metadata"
-        )
-    return w._commit_snapshot(
-        [(data_files, 0)], "append", ts_ms, attempts=100
+    return IcebergWriter(iceberg_root, fields)._commit(
+        "append", stage=lambda _written: [(data_files, 0)], ts_ms=ts_ms,
+        new_table=True,
     )
 
 

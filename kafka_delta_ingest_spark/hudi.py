@@ -1537,8 +1537,8 @@ class HudiCowWriter:
         # seam: instant claims, inflight markers, completed-commit
         # publishes, and ledger reads. Data parquet is Spark-side.
         self.store = store or get_log_store(table_path)
-        # (latest completed instant, ledger at it): stored_txn's cache
-        self._ledger: tuple[str | None, dict[str, int]] | None = None
+        # (completed instants folded, ledger at them): stored_txn's cache
+        self._ledger: tuple[list, dict[str, int]] = ([], {})
         hoodie = os.path.join(table_path, ".hoodie")
         self.store.makedirs(hoodie)
         props = os.path.join(hoodie, "hoodie.properties")
@@ -1685,22 +1685,25 @@ class HudiCowWriter:
     def stored_txn(self) -> dict[str, int]:
         """The exactly-once ledger: the ``kdi.offsets.*`` entries of
         every completed commit's extraMetadata, newest winning per
-        appId. Cached by the latest completed instant, so a re-check
-        with no commit landed since the last one parses no commit."""
+        appId. Cached with the completed instants it folded: when they
+        are a prefix of today's, only the newer commits are parsed, so
+        a stream's every batch reads at most the commits landed since
+        its last check. Otherwise (an instant completed out of order,
+        or older instants left the timeline) it is rebuilt."""
         commits = completed_commits(self.path)
-        latest = commits[-1][0] if commits else None
-        if self._ledger is None or self._ledger[0] != latest:
-            hoodie = _hoodie_dir(self.path)
-            out: dict[str, int] = {}
-            for instant, action in commits:
-                meta = json.loads(
-                    self.store.read_bytes(
-                        os.path.join(hoodie, f"{instant}.{action}")
-                    )
+        seen, out = self._ledger[0], dict(self._ledger[1])
+        if commits[:len(seen)] != seen:
+            seen, out = [], {}
+        hoodie = _hoodie_dir(self.path)
+        for instant, action in commits[len(seen):]:
+            meta = json.loads(
+                self.store.read_bytes(
+                    os.path.join(hoodie, f"{instant}.{action}")
                 )
-                out.update(decode_offsets(meta.get("extraMetadata") or {}))
-            self._ledger = (latest, out)
-        return dict(self._ledger[1])
+            )
+            out.update(decode_offsets(meta.get("extraMetadata") or {}))
+        self._ledger = (commits, out)
+        return dict(out)
 
     # -- write ------------------------------------------------------------
 

@@ -44,15 +44,19 @@ second major open table format, read-side.
 
 from __future__ import annotations
 
-import glob
 import json
 import os
+import re
+import time
+import uuid
 from typing import Callable
 
-from kafka_delta_ingest_spark.avro_python import read_container
+from kafka_delta_ingest_spark import logstore
+from kafka_delta_ingest_spark.avro_python import read_container, write_container
 from kafka_delta_ingest_spark.sinks.base import (
     CommitResult,
     _parse_partition_values,
+    _remove_quietly,
     already_applied,
     decode_offsets,
     encode_offsets,
@@ -67,30 +71,53 @@ def _norm_path(p: str) -> str:
     return p
 
 
+_VERSION_RE = re.compile(r"v(\d+)\.metadata\.json")
+
+
+def current_metadata(store, meta_dir: str) -> tuple[int, dict | None]:
+    """(current version, parsed ``v<N>.metadata.json``), or (0, None)
+    when ``meta_dir`` holds no metadata: the one resolver of the reader
+    and the writer. It starts at the version ``version-hint.text``
+    names and probes ``v<N+1>``, ``v<N+2>``, … through ``store``, as
+    Iceberg's Hadoop table operations do, so a claim that landed
+    without its hint swap is current for everyone. The directory is
+    listed only when the hint is missing or names no version file."""
+
+    def read(v):
+        try:
+            return store.read_bytes(
+                os.path.join(meta_dir, f"v{v}.metadata.json")
+            )
+        except FileNotFoundError:
+            return None
+
+    try:
+        v = int(store.read_bytes(os.path.join(meta_dir, "version-hint.text")))
+        body = read(v)
+    except (FileNotFoundError, ValueError):
+        body = None
+    if body is None:
+        listed = [
+            int(m.group(1))
+            for m in map(_VERSION_RE.fullmatch, store.list_dir(meta_dir))
+            if m
+        ]
+        if not listed:
+            return 0, None
+        v = max(listed)
+        body = read(v)
+    while (newer := read(v + 1)) is not None:
+        v, body = v + 1, newer
+    return v, json.loads(body)
+
+
 def load_metadata(table_path: str) -> dict:
     """Resolve and parse the current ``v<N>.metadata.json``."""
     mdir = os.path.join(table_path, "metadata")
-    hint = os.path.join(mdir, "version-hint.text")
-    path = None
-    if os.path.exists(hint):
-        with open(hint) as f:
-            n = f.read().strip()
-        cand = os.path.join(mdir, f"v{n}.metadata.json")
-        if os.path.exists(cand):
-            path = cand
-    if path is None:
-        versions = []
-        for p in glob.glob(os.path.join(mdir, "v*.metadata.json")):
-            base = os.path.basename(p)
-            try:
-                versions.append((int(base[1:].split(".")[0]), p))
-            except ValueError:
-                continue
-        if not versions:
-            raise ValueError(f"no Iceberg metadata found under {mdir}")
-        path = max(versions)[1]
-    with open(path) as f:
-        return json.load(f)
+    _, meta = current_metadata(logstore.get_log_store(table_path), mdir)
+    if meta is None:
+        raise ValueError(f"no Iceberg metadata found under {mdir}")
+    return meta
 
 
 def snapshots(table_path: str) -> list[dict]:
@@ -129,6 +156,26 @@ def _current_schema(meta: dict) -> dict | None:
         if s.get("schema-id") == cur:
             return s
     return meta.get("schema") or (schemas[0] if schemas else None)
+
+
+def _current_snapshot(meta: dict) -> dict | None:
+    """The snapshot ``current-snapshot-id`` names, or None."""
+    cur = meta.get("current-snapshot-id")
+    return next(
+        (s for s in meta.get("snapshots", []) if s["snapshot-id"] == cur),
+        None,
+    )
+
+
+def _default_spec(meta: dict) -> dict | None:
+    """The ``default-spec-id`` partition spec (the first one for
+    foreign metadata without a matching id)."""
+    specs = meta.get("partition-specs") or []
+    sid = meta.get("default-spec-id", 0)
+    return next(
+        (s for s in specs if s.get("spec-id") == sid),
+        specs[0] if specs else None,
+    )
 
 
 def _schema_field_names(meta: dict) -> dict[int, str]:
@@ -581,15 +628,9 @@ def _declared_spec_grammar(meta: dict) -> list[str]:
     day(col)) — used to adopt/validate an existing table's spec."""
     import re as _re
 
-    specs = meta.get("partition-specs") or []
-    sid = meta.get("default-spec-id", 0)
-    spec = next(
-        (s for s in specs if s.get("spec-id") == sid),
-        specs[0] if specs else None,
-    )
     names = _schema_field_names(meta)
     out = []
-    for pf in (spec or {}).get("fields") or []:
+    for pf in (_default_spec(meta) or {}).get("fields") or []:
         src = names.get(pf["source-id"], pf["name"])
         tr = pf.get("transform", "identity")
         if tr == "identity":
@@ -718,27 +759,6 @@ def _murmur3_32_utf8(byte_values):
     return out
 
 
-def _identity_partition_fields(meta: dict) -> list[str]:
-    """Names of the default spec's identity partition fields; raises
-    on non-identity transforms (hidden partitioning is a reader seam
-    this repo does not claim)."""
-    specs = meta.get("partition-specs") or []
-    sid = meta.get("default-spec-id", 0)
-    spec = next(
-        (s for s in specs if s.get("spec-id") == sid),
-        specs[0] if specs else None,
-    )
-    out = []
-    for pf in (spec or {}).get("fields") or []:
-        if pf.get("transform") != "identity":
-            raise ValueError(
-                f"unsupported partition transform "
-                f"{pf.get('transform')!r} (identity only)"
-            )
-        out.append(pf["name"])
-    return out
-
-
 def _reattach_identity_partitions(spark, frame, meta, data_files,
                                   fp_col=None):
     """Iceberg-spec reader fallback: IDENTITY-transform partition
@@ -759,7 +779,7 @@ def _reattach_identity_partitions(spark, frame, meta, data_files,
     MIXED tables (converted files later joined by column-carrying
     native appends under the same identity spec, the r10 seam): when
     the table carries the ``kdi.files-may-omit-identity-columns``
-    property — convert.py stamps it at bootstrap and _commit_snapshot
+    property — convert.py stamps it at bootstrap and IcebergWriter._commit
     preserves properties forever after — identity columns PRESENT in
     the merged scan schema are reconciled per-file as
     ``coalesce(file value, manifest value)``. That is exact for
@@ -1294,8 +1314,6 @@ class IcebergFixtureWriter:
         return path, os.path.getsize(path)
 
     def _commit(self, new_entries: list[dict], ts_ms: int):
-        from kafka_delta_ingest_spark.avro_python import write_container
-
         self._seq += 1
         self._live.extend((self._seq, f) for f in new_entries)
         snap_id = 1000 + len(self.snaps) + 1
@@ -1473,11 +1491,14 @@ class IcebergWriter:
     tests simple). Data files are written by one executor-parallel
     Spark job into a staging dir, then promoted under ``data/``.
 
-    Commit protocol: optimistic — the new ``v<N+1>.metadata.json`` is
-    claimed with O_CREAT|O_EXCL (put-if-absent on the version file,
-    the same primitive HadoopTableOperations uses), then
-    ``version-hint.text`` is swapped via atomic rename. On a version
-    race the writer re-reads the table state and retries.
+    Commit protocol: every operation commits through :meth:`_commit`.
+    It reads the current metadata (:func:`current_metadata`), re-checks
+    the ``kdi.offsets.*`` ledger, writes the new manifests and the
+    manifest list, claims ``v<N+1>.metadata.json`` with put-if-absent
+    (the primitive HadoopTableOperations uses) and then swaps
+    ``version-hint.text``. A lost claim retries from the fresh state.
+    A commit known not to land removes every file it wrote; a claim
+    call that raised keeps them only if the store shows our version.
 
     Partitioning: IDENTITY transforms (``partition_by`` columns, the
     reference's Hive-partitioned output shape, src/writer.rs:390-427)
@@ -1499,16 +1520,14 @@ class IcebergWriter:
     def __init__(self, table_path: str, schema_fields: list[dict],
                  partition_by: list[str] | None = None, store=None,
                  properties: dict[str, str] | None = None):
-        from kafka_delta_ingest_spark.logstore import get_log_store
-
         self.root = table_path
         self.data_dir = os.path.join(table_path, "data")
         self.meta_dir = os.path.join(table_path, "metadata")
-        # commit-protocol IO (metadata claim, version hint, current-
-        # state reads) routes through the LogStore seam; the parquet
-        # data files and Avro manifests are content-addressed (uuid
-        # names, no races) and still write locally here.
-        self.store = store or get_log_store(table_path)
+        # commit-protocol IO (metadata claim, version hint, manifests,
+        # current-state reads) routes through the LogStore seam; the
+        # parquet data files (uuid names, no races) are promoted
+        # locally.
+        self.store = store or logstore.get_log_store(table_path)
         os.makedirs(self.data_dir, exist_ok=True)
         self.store.makedirs(self.meta_dir)
         self.fields = schema_fields
@@ -1535,59 +1554,31 @@ class IcebergWriter:
 
     def _current(self) -> tuple[int, dict | None]:
         """(current metadata version, metadata dict or None)."""
-        versions = []
-        for base in self.store.list_dir(self.meta_dir):
-            if not (base.startswith("v")
-                    and base.endswith(".metadata.json")):
-                continue
-            try:
-                versions.append(
-                    (int(base[1:].split(".")[0]),
-                     os.path.join(self.meta_dir, base))
-                )
-            except ValueError:
-                continue
-        if not versions:
-            return 0, None
-        v, path = max(versions)
-        return v, json.loads(self.store.read_bytes(path))
+        return current_metadata(self.store, self.meta_dir)
+
+    def _read_avro(self, path: str) -> list[dict]:
+        """The records of a manifest or manifest list."""
+        return read_container(self.store.read_bytes(_norm_path(path)))[1]
 
     # -- append ------------------------------------------------------------
 
     def append(self, df, ts_ms: int | None = None,
-               attempts: int = 100,
-               summary: dict[str, str] | None = None) -> int | None:
-        """Append ``df`` as one Iceberg snapshot; returns snapshot id.
-        ``summary`` entries are merged into the snapshot's summary map
-        — the channel engines use for exactly-once bookkeeping (the
-        Flink connector stores its max committed checkpoint id there;
-        the ingest adapter stores per-Kafka-partition offsets). None
-        when those offsets are already stored (a replay)."""
-        import time
+               attempts: int = 100) -> int:
+        """Append ``df`` as one Iceberg snapshot; returns snapshot id."""
 
-        if ts_ms is None:
-            ts_ms = int(time.time() * 1000)
-        new_files = self._write_data_files(df)
-        if not new_files:
-            raise ValueError("append with zero non-empty data files")
-        return self._commit_append(new_files, ts_ms, attempts, summary)
+        def stage(written):
+            files = self._write_data_files(df, written)
+            if not files:
+                raise ValueError("append with zero non-empty data files")
+            return [(files, 0)]
 
-    def _commit_append(self, new_files: list[dict], ts_ms: int,
-                       attempts: int,
-                       summary: dict[str, str] | None) -> int | None:
-        """Commit the promoted ``new_files`` as one append snapshot.
-        None when a racer already committed ``summary``'s offsets;
-        the files are then removed, since no snapshot names them."""
-        snap_id = self._commit_snapshot([(new_files, 0)], "append", ts_ms,
-                                        attempts, summary=summary)
-        if snap_id is None:
-            for f in new_files:
-                os.remove(_norm_path(f["file_path"]))
-        return snap_id
+        return self._commit("append", stage=stage, ts_ms=ts_ms,
+                            attempts=attempts)
 
-    def _write_data_files(self, df) -> list[dict]:
+    def _write_data_files(self, df, written: list[str]) -> list[dict]:
         """Spark-write ``df`` to staging and promote under ``data/``
-        (hive directory layout when partitioned); returns content=0
+        (hive directory layout when partitioned), adding each
+        destination to ``written`` before the move; returns content=0
         data_file dicts whose ``partition`` map carries the TYPED
         identity values (long for long/int source columns, string
         otherwise, null for the hive default partition).
@@ -1598,8 +1589,6 @@ class IcebergWriter:
         keeping the real columns intact; the reader then needs no
         directory-derived reconstruction and non-identity external
         tables keep reading unchanged."""
-        import uuid
-
         from pyspark.sql import functions as F
 
         _, cur_meta = self._current()
@@ -1760,6 +1749,7 @@ class IcebergWriter:
                 dest = os.path.join(
                     self.data_dir, rel_dir, f"{uuid.uuid4().hex}-{f.name}"
                 )
+                written.append(dest)
                 size = f.promote(dest)
                 out.append(data_file_entry(
                     dest, f.metadata, size, pv, fields=self.fields
@@ -1774,11 +1764,6 @@ class IcebergWriter:
         scoping makes it exact: the equality delete applies only to
         STRICTLY older data files, so the same-commit inserts survive
         while every prior version of the keys is masked."""
-        import time
-        import uuid
-
-        if ts_ms is None:
-            ts_ms = int(time.time() * 1000)
         ids_by_name = {f["name"]: f["id"] for f in self.fields}
         missing = [c for c in key_cols if c not in ids_by_name]
         if missing:
@@ -1790,45 +1775,59 @@ class IcebergWriter:
         df = df.localCheckpoint()
         eq_ids = [ids_by_name[c] for c in key_cols]
 
-        def _eq_delete_leg() -> list[dict]:
-            # equality-delete file: the DISTINCT incoming key tuples,
-            # written EXECUTOR-side via the same staging-promote shape
-            # as delete_where below — driver memory stays O(1) in the
-            # batch key count (previously toPandas() + a driver
-            # pyarrow write, O(distinct keys) on the driver).
-            keys = df.select(*key_cols).dropDuplicates().coalesce(1)
-            out = []
-            with staged_parquet(keys, self.root) as staged:
-                for f in staged:
-                    if f.metadata.num_rows == 0:
-                        continue
-                    dest = os.path.join(
-                        self.data_dir,
-                        f"eqdelete-{uuid.uuid4().hex}.parquet",
-                    )
-                    size = f.promote(dest)
-                    out.append(data_file_entry(
-                        dest, f.metadata, size, {},
-                        content=2, equality_ids=eq_ids,
-                    ))
-            return out
+        def stage(written):
+            def eq_delete_leg() -> list[dict]:
+                # equality-delete file: the DISTINCT incoming key
+                # tuples, written EXECUTOR-side via the same
+                # staging-promote shape as delete_where below — driver
+                # memory stays O(1) in the batch key count.
+                keys = df.select(*key_cols).dropDuplicates().coalesce(1)
+                return self._promote(
+                    keys, "eqdelete", written, content=2,
+                    equality_ids=eq_ids,
+                )
 
-        # r13 (guide §2.6): the key-file write and the data-file write
-        # both scan only the checkpointed batch and stage into
-        # distinct uuid dirs — two driver threads overlap the
-        # single-task key coalesce with the data write's fan-out (and
-        # each leg's footer reads/moves with the other's tasks).
-        from kafka_delta_ingest_spark.io import overlap
+            # r13 (guide §2.6): the key-file write and the data-file
+            # write both scan only the checkpointed batch and stage
+            # into distinct uuid dirs — two driver threads overlap the
+            # single-task key coalesce with the data write's fan-out
+            # (and each leg's footer reads/moves with the other's
+            # tasks).
+            from kafka_delta_ingest_spark.io import overlap
 
-        delete_files, data_files = overlap(
-            _eq_delete_leg, lambda: self._write_data_files(df)
-        )
-        if not data_files:
-            raise ValueError("upsert with zero non-empty data files")
-        legs = [(data_files, 0)]
-        if delete_files:
-            legs.insert(0, (delete_files, 1))
-        return self._commit_snapshot(legs, "overwrite", ts_ms, attempts)
+            delete_files, data_files = overlap(
+                eq_delete_leg, lambda: self._write_data_files(df, written)
+            )
+            if not data_files:
+                raise ValueError("upsert with zero non-empty data files")
+            return [(delete_files, 1), (data_files, 0)]
+
+        return self._commit("overwrite", stage=stage, ts_ms=ts_ms,
+                            attempts=attempts)
+
+    def _promote(self, df, prefix: str, written: list[str],
+                 rel_dir: str = "", partition: dict | None = None,
+                 **entry) -> list[dict]:
+        """Stage ``df`` (already coalesced to the files wanted) and
+        promote each non-empty file as ``data/<rel_dir>/<prefix>-<uuid>
+        .parquet``, adding it to ``written`` before the move; returns
+        their manifest ``data_file`` entries (``entry`` sets content
+        and equality ids)."""
+        out = []
+        with staged_parquet(df, self.root) as staged:
+            for f in staged:
+                if f.metadata.num_rows == 0:
+                    continue
+                dest = os.path.join(
+                    self.data_dir, rel_dir,
+                    f"{prefix}-{uuid.uuid4().hex}.parquet",
+                )
+                written.append(dest)
+                size = f.promote(dest)
+                out.append(data_file_entry(
+                    dest, f.metadata, size, dict(partition or {}), **entry
+                ))
+        return out
 
     def evolve_schema(self, schema, attempts: int = 100) -> int:
         """ALTER TABLE ADD COLUMNS analog — commit a NEW schema
@@ -1847,20 +1846,18 @@ class IcebergWriter:
 
         if not isinstance(schema, T.StructType):
             raise TypeError("evolve_schema takes a Spark StructType")
-        for _ in range(attempts):
-            cur_v, meta = self._current()
+        merged: list[dict] = []
+
+        def update(meta):
             if meta is None:
                 raise ValueError(
                     "evolve_schema on an empty table — the first "
                     "append declares the schema"
                 )
-            cur_schema = _current_schema(meta) or {"fields": []}
-            old_fields = cur_schema.get("fields", [])
+            old_fields = (_current_schema(meta) or {}).get("fields", [])
             old_by_name = {f["name"]: f for f in old_fields}
             new_names = {f.name for f in schema.fields}
-            missing = sorted(
-                n for n in old_by_name if n not in new_names
-            )
+            missing = sorted(n for n in old_by_name if n not in new_names)
             if missing:
                 raise ValueError(
                     f"evolved schema omits existing column(s) "
@@ -1869,8 +1866,7 @@ class IcebergWriter:
             last_col = meta.get("last-column-id") or max(
                 (f["id"] for f in old_fields), default=0
             )
-            merged = list(old_fields)
-            changed = False
+            merged[:] = old_fields
             for f in schema.fields:
                 old = old_by_name.get(f.name)
                 ice_t = _spark_type_to_iceberg(f.dataType)
@@ -1892,33 +1888,24 @@ class IcebergWriter:
                     {"id": last_col, "name": f.name, "type": ice_t,
                      "required": False}
                 )
-                changed = True
-            if not changed:
-                return cur_v  # already identical
+            if len(merged) == len(old_fields):
+                return None  # already identical
             schemas = list(meta.get("schemas") or [])
             new_id = max(
                 (s.get("schema-id", 0) for s in schemas), default=-1
             ) + 1
             schemas.append(
-                {"schema-id": new_id, "type": "struct",
-                 "fields": merged}
+                {"schema-id": new_id, "type": "struct", "fields": merged}
             )
-            new_meta = dict(meta)
-            new_meta["schemas"] = schemas
-            new_meta["current-schema-id"] = new_id
-            new_meta["last-column-id"] = last_col
-            target = os.path.join(
-                self.meta_dir, f"v{cur_v + 1}.metadata.json"
-            )
-            if not self.store.put_if_absent(
-                target, json.dumps(new_meta).encode()
-            ):
-                continue  # version race: recompute from fresh state
-            hint = os.path.join(self.meta_dir, "version-hint.text")
-            self.store.put_atomic(hint, str(cur_v + 1).encode())
-            self.fields = merged
-            return cur_v + 1
-        raise RuntimeError("exhausted Iceberg commit attempts")
+            return {**meta, "schemas": schemas, "current-schema-id": new_id,
+                    "last-column-id": last_col}
+
+        version = self._commit("evolve-schema", update=update,
+                               attempts=attempts)
+        if version is None:
+            return self._current()[0]
+        self.fields = list(merged)
+        return version
 
     def optimize(self, spark, target_file_bytes: int = 134_217_728,
                  ts_ms: int | None = None, attempts: int = 100) -> int:
@@ -1927,54 +1914,33 @@ class IcebergWriter:
         ``target_file_bytes`` is read THROUGH the delete-applying path
         (position/equality deletes materialize here) and rewritten
         into coalesced files. The commit rewrites each prior DATA
-        manifest without the compacted entries (surviving entries kept
-        as EXISTING with their ORIGINAL data sequence numbers, so
-        older equality deletes still scope over them), keeps delete
-        manifests as-is, and adds one manifest with the compacted
-        outputs at the NEW sequence number — which existing deletes
-        therefore never re-mask (their rows were just materialized).
-        Returns the new snapshot id, or the current one when nothing
-        qualifies.
+        manifest that names a compacted file without it (surviving
+        entries kept as EXISTING with their ORIGINAL data sequence
+        numbers, so older equality deletes still scope over them),
+        keeps the other manifests as-is, and adds one manifest with
+        the compacted outputs at the NEW sequence number — which
+        existing deletes therefore never re-mask (their rows were just
+        materialized). Returns the new snapshot id, or the current one
+        when nothing qualifies. Raises when another commit lands while
+        the files are rewritten; the rewrite is then removed.
 
         Scale: each partition group is one coalesced Spark job over
         only the files being compacted; manifest rewrites are
         O(manifest entries) metadata — the same work a real Iceberg
         RewriteDataFiles action does."""
-        import time
-        import uuid
-
-        from kafka_delta_ingest_spark.avro_python import (
-            read_container,
-            write_container,
-        )
-
-        if ts_ms is None:
-            ts_ms = int(time.time() * 1000)
         _, meta = self._current()
         if meta is None:
             raise ValueError("optimize on an empty table")
         cur_id = meta.get("current-snapshot-id")
-        snap = next(
-            s for s in meta["snapshots"] if s["snapshot-id"] == cur_id
-        )
-        _, manifests = read_container(
-            self.store.read_bytes(_norm_path(snap["manifest-list"]))
-        )
         # collect live small data files per partition tuple
         groups: dict[tuple, list[str]] = {}
-        for m in manifests:
+        for m in self._read_avro(_current_snapshot(meta)["manifest-list"]):
             if m.get("content", 0) != 0:
                 continue
-            _, entries = read_container(
-                self.store.read_bytes(_norm_path(m["manifest_path"]))
-            )
-            for e in entries:
-                if e.get("status") == 2:
-                    continue
+            for e in self._read_avro(m["manifest_path"]):
                 df_ = e["data_file"]
-                if df_.get("content", 0) != 0:
-                    continue
-                if df_["file_size_in_bytes"] >= target_file_bytes:
+                if (e.get("status") == 2 or df_.get("content", 0) != 0
+                        or df_["file_size_in_bytes"] >= target_file_bytes):
                     continue
                 key = tuple(sorted((df_.get("partition") or {}).items()))
                 groups.setdefault(key, []).append(
@@ -1983,81 +1949,26 @@ class IcebergWriter:
         groups = {k: v for k, v in groups.items() if len(v) > 1}
         if not groups:
             return cur_id
-        compacted = {p for paths in groups.values() for p in paths}
-        # rewrite each compaction group through the DELETE-APPLYING
-        # read path (live view of exactly those files)
-        new_files = []
-        for key, paths in sorted(groups.items()):
-            live = read_iceberg(
-                spark, self.root, _file_subset=set(paths)
-            )
-            rel_dir = "/".join(
-                f"{c}={'__HIVE_DEFAULT_PARTITION__' if v is None else v}"
-                for c, v in key
-            )
-            with staged_parquet(live.coalesce(1), self.root) as staged:
-                for f in staged:
-                    if f.metadata.num_rows == 0:
-                        continue
-                    dest = os.path.join(
-                        self.data_dir, rel_dir,
-                        f"opt-{uuid.uuid4().hex}.parquet",
-                    )
-                    size = f.promote(dest)
-                    new_files.append(data_file_entry(
-                        dest, f.metadata, size, dict(key)
-                    ))
-        # base manifests: prior DATA manifests rewritten without the
-        # compacted entries (EXISTING status, original seqs); delete
-        # manifests carried forward untouched
-        base = []
-        for m in manifests:
-            if m.get("content", 0) != 0:
-                base.append(m)
-                continue
-            man_seq = m.get("sequence_number") or 0
-            _, entries = read_container(
-                self.store.read_bytes(_norm_path(m["manifest_path"]))
-            )
-            kept = []
-            for e in entries:
-                if e.get("status") == 2:
-                    continue
-                df_ = e["data_file"]
-                if _norm_path(df_["file_path"]) in compacted:
-                    continue
-                seq = e.get("sequence_number")
-                kept.append(
-                    {
-                        "status": 0,  # EXISTING
-                        "snapshot_id": e.get("snapshot_id"),
-                        "sequence_number": (
-                            seq if seq is not None else man_seq
-                        ),
-                        "data_file": df_,
-                    }
+
+        def stage(written):
+            # rewrite each compaction group through the DELETE-APPLYING
+            # read path (live view of exactly those files)
+            new_files = []
+            for key, paths in sorted(groups.items()):
+                live = read_iceberg(spark, self.root, _file_subset=set(paths))
+                rel_dir = "/".join(
+                    f"{c}={'__HIVE_DEFAULT_PARTITION__' if v is None else v}"
+                    for c, v in key
                 )
-            if not kept:
-                continue
-            man_path = os.path.join(
-                self.meta_dir, f"manifest-{uuid.uuid4().hex}.avro"
-            )
-            blob = write_container(kept, _MANIFEST_ENTRY_SCHEMA)
-            self.store.put_atomic(man_path, blob)
-            base.append(
-                {
-                    "manifest_path": man_path,
-                    "manifest_length": len(blob),
-                    "partition_spec_id": 0,
-                    "content": 0,
-                    "sequence_number": m.get("sequence_number"),
-                    "min_sequence_number": m.get("min_sequence_number"),
-                    "added_snapshot_id": m.get("added_snapshot_id"),
-                }
-            )
-        return self._commit_snapshot(
-            [(new_files, 0)], "replace", ts_ms, attempts,
-            base_manifests=base,
+                new_files += self._promote(
+                    live.coalesce(1), "opt", written, rel_dir, dict(key)
+                )
+            return [(new_files, 0)]
+
+        return self._commit(
+            "replace", stage=stage, ts_ms=ts_ms, attempts=attempts,
+            derived_from=cur_id,
+            removes={p for paths in groups.values() for p in paths},
         )
 
     def delete_where(self, spark, predicate: str,
@@ -2072,13 +1983,8 @@ class IcebergWriter:
 
         Matching runs against the live view (existing deletes
         applied), so repeated deletes never re-tombstone rows."""
-        import time
-        import uuid
-
         from pyspark.sql import functions as F
 
-        if ts_ms is None:
-            ts_ms = int(time.time() * 1000)
         # _keep_lineage carries (file, pos) through the delete-applying
         # merge — plain _metadata would not survive those joins, so a
         # second delete on an already-deleting table needs this path
@@ -2091,23 +1997,18 @@ class IcebergWriter:
             )
             .orderBy("file_path", "pos")  # spec: delete files sorted
         )
-        delete_files = []
-        with staged_parquet(matches.coalesce(1), self.root) as staged:
-            for f in staged:
-                if f.metadata.num_rows == 0:
-                    continue
-                dest = os.path.join(
-                    self.data_dir, f"delete-{uuid.uuid4().hex}.parquet"
-                )
-                size = f.promote(dest)
-                delete_files.append(
-                    data_file_entry(dest, f.metadata, size, {}, content=1)
-                )
-        if not delete_files:
-            _, meta = self._current()
-            return (meta or {}).get("current-snapshot-id")  # no-op
-        return self._commit_snapshot([(delete_files, 1)], "delete",
-                                     ts_ms, attempts)
+
+        def stage(written):
+            files = self._promote(
+                matches.coalesce(1), "delete", written, content=1
+            )
+            return [(files, 1)] if files else None
+
+        snap_id = self._commit("delete", stage=stage, ts_ms=ts_ms,
+                               attempts=attempts)
+        if snap_id is None:  # no row matched
+            return (self._current()[1] or {}).get("current-snapshot-id")
+        return snap_id
 
     def expire_snapshots(self, older_than_ms: int | None = None,
                          retain_last: int = 1) -> list[str]:
@@ -2127,296 +2028,290 @@ class IcebergWriter:
         Time travel to an expired snapshot stops working, exactly
         Iceberg's contract.  Metadata-only driver work: O(kept +
         expired manifest entries), no data scan."""
-        from kafka_delta_ingest_spark.avro_python import read_container
+        doomed: set[str] = set()
 
-        cur_v, meta = self._current()
-        if meta is None:
-            return []
-        snaps = list(meta.get("snapshots", []))
-        order = sorted(
-            snaps,
-            key=lambda s: (s.get("sequence-number", 0),
-                           s["timestamp-ms"]),
-        )
-        keep_ids = {
-            s["snapshot-id"]
-            for s in order[max(0, len(order) - max(1, retain_last)):]
-        }
-        keep_ids.add(meta.get("current-snapshot-id"))
-        if older_than_ms is not None:
-            keep_ids |= {
-                s["snapshot-id"] for s in snaps
-                if s["timestamp-ms"] > older_than_ms
-            }
-        expired = [s for s in snaps if s["snapshot-id"] not in keep_ids]
-        if not expired:
-            return []
-        kept = [s for s in snaps if s["snapshot-id"] in keep_ids]
+        def walk(snaps) -> set[str]:
+            out = set()
+            for s in snaps:
+                out.add(_norm_path(s["manifest-list"]))
+                for m in self._read_avro(s["manifest-list"]):
+                    out.add(_norm_path(m["manifest_path"]))
+                    out |= {
+                        _norm_path(e["data_file"]["file_path"])
+                        for e in self._read_avro(m["manifest_path"])
+                        if e.get("status") != 2
+                    }
+            return out
 
-        def walk(s):
-            mlist = _norm_path(s["manifest-list"])
-            _, manifests = read_container(self.store.read_bytes(mlist))
-            mpaths, dpaths = set(), set()
-            for m in manifests:
-                mp = _norm_path(m["manifest_path"])
-                mpaths.add(mp)
-                _, entries = read_container(self.store.read_bytes(mp))
-                for e in entries:
-                    if e.get("status") == 2:
-                        continue
-                    dpaths.add(_norm_path(e["data_file"]["file_path"]))
-            return mlist, mpaths, dpaths
-
-        ref_ml, ref_m, ref_d = set(), set(), set()
-        for s in kept:
-            ml, mp, dp = walk(s)
-            ref_ml.add(ml)
-            ref_m |= mp
-            ref_d |= dp
-        cand_ml, cand_m, cand_d = set(), set(), set()
-        for s in expired:
-            ml, mp, dp = walk(s)
-            cand_ml.add(ml)
-            cand_m |= mp
-            cand_d |= dp
-        # publish the shrunk metadata FIRST (readers pinned on the
-        # old version lose expired history, Iceberg's contract), then
-        # reclaim storage
-        new_meta = dict(meta)
-        new_meta["snapshots"] = kept
-        target = os.path.join(
-            self.meta_dir, f"v{cur_v + 1}.metadata.json"
-        )
-        if not self.store.put_if_absent(
-            target, json.dumps(new_meta).encode()
-        ):
-            raise RuntimeError(
-                "expire_snapshots raced a concurrent commit — rerun "
-                "on fresh state"
+        def update(meta):
+            if meta is None:
+                return None
+            snaps = list(meta.get("snapshots", []))
+            order = sorted(
+                snaps,
+                key=lambda s: (s.get("sequence-number", 0),
+                               s["timestamp-ms"]),
             )
-        self.store.put_atomic(
-            os.path.join(self.meta_dir, "version-hint.text"),
-            str(cur_v + 1).encode(),
-        )
-        deleted = []
-        for p in sorted(
-            (cand_ml - ref_ml) | (cand_m - ref_m) | (cand_d - ref_d)
-        ):
-            if os.path.exists(p):
-                os.remove(p)
-                deleted.append(p)
+            keep_ids = {
+                s["snapshot-id"]
+                for s in order[max(0, len(order) - max(1, retain_last)):]
+            }
+            keep_ids.add(meta.get("current-snapshot-id"))
+            if older_than_ms is not None:
+                keep_ids |= {
+                    s["snapshot-id"] for s in snaps
+                    if s["timestamp-ms"] > older_than_ms
+                }
+            kept = [s for s in snaps if s["snapshot-id"] in keep_ids]
+            if len(kept) == len(snaps):
+                return None
+            expired = [s for s in snaps if s["snapshot-id"] not in keep_ids]
+            doomed.clear()
+            doomed.update(walk(expired) - walk(kept))
+            return {**meta, "snapshots": kept}
+
+        # publish the shrunk metadata FIRST (readers pinned on the old
+        # version lose expired history, Iceberg's contract), then
+        # reclaim storage
+        if self._commit("expire-snapshots", update=update) is None:
+            return []
+        deleted = [p for p in sorted(doomed) if os.path.exists(p)]
+        _remove_quietly(deleted)
         return deleted
 
-    def _commit_snapshot(self, manifests: list[tuple[list[dict], int]],
-                         operation: str, ts_ms: int,
-                         attempts: int,
-                         summary: dict[str, str] | None = None,
-                         base_manifests: list[dict] | None = None
-                         ) -> int | None:
-        """Optimistic snapshot commit: one new manifest per
-        ``(files, content)`` pair (entries carry explicit sequence
-        numbers), prior manifests carried forward in the manifest
-        list, v<N+1>.metadata.json claimed with O_CREAT|O_EXCL,
-        version-hint swapped atomically. Retries from fresh state on a
-        version race. ``base_manifests`` REPLACES the carry-forward
-        set (compaction's rewritten manifest list) — such commits do
-        not survive a version race and raise instead of silently
-        rebasing onto state they did not rewrite.
+    def _commit(self, operation: str, *, txn: dict[str, int] | None = None,
+                stage: Callable | None = None,
+                update: Callable | None = None,
+                ts_ms: int | None = None, attempts: int = 100,
+                derived_from: int | None = None,
+                removes: set[str] = frozenset(),
+                new_table: bool = False) -> int | None:
+        """Claim and publish one metadata version; returns the new
+        snapshot id (the new metadata version for an ``update``), or
+        None when nothing was committed. Every operation commits here.
 
-        When ``summary`` carries offsets (``kdi.offsets.*``) that the
-        table already stores, checked at every attempt, nothing is
-        committed and None is returned: a racer committed the same
-        batch, and committing again would append it twice."""
-        import uuid
+        Each attempt reads the current metadata, returns None when
+        ``txn`` is given and the ledger (the ``kdi.offsets.*`` entries
+        of the snapshot summaries) already holds it — a racer
+        committed the same batch — builds the next version, claims
+        ``v<N+1>.metadata.json`` with put-if-absent and swaps
+        ``version-hint.text``. A lost claim retries from fresh state.
 
-        from kafka_delta_ingest_spark.avro_python import write_container
+        The next version is ``update(meta)`` for a metadata-only
+        change (None: nothing to change), else a snapshot:
+        ``stage(written)`` runs once, writes the operation's data or
+        delete files, adds each path to ``written`` before it writes
+        it, and returns the ``(files, content)`` legs, or None when
+        there is nothing to commit (no ``stage``: a ledger-only
+        snapshot). Each leg becomes one manifest at the new sequence
+        number; the current snapshot's manifests carry forward, those
+        naming a path in ``removes`` rewritten without it, and
+        ``txn`` lands in the snapshot summary. ``derived_from`` is the
+        snapshot a rewrite read (compaction): when another snapshot is
+        current the commit raises rather than drop the racer's files.
+        ``new_table`` raises when the table already has metadata.
 
-        offsets = decode_offsets(summary or {})
-        for _ in range(attempts):
-            cur_v, meta = self._current()
-            if already_applied(stored_txn(meta), offsets):
-                return None
-            parent_id = (meta or {}).get("current-snapshot-id")
-            last_seq = (meta or {}).get("last-sequence-number", 0)
-            snaps = list((meta or {}).get("snapshots", []))
-            seq = last_seq + 1
-            snap_id = 1000 + len(snaps) + 1
-            new_rows = []
-            written = []
-            for new_files, content in manifests:
-                entries = [
-                    {
-                        "status": 1,
-                        "snapshot_id": snap_id,
-                        "sequence_number": seq,
-                        "data_file": f,
-                    }
-                    for f in new_files
-                ]
-                man_path = os.path.join(
-                    self.meta_dir, f"manifest-{uuid.uuid4().hex}.avro"
-                )
-                blob = write_container(entries, _MANIFEST_ENTRY_SCHEMA)
-                self.store.put_atomic(man_path, blob)
-                written.append(man_path)
-                new_rows.append(
-                    {
-                        "manifest_path": man_path,
-                        "manifest_length": len(blob),
-                        "partition_spec_id": 0,
-                        "content": content,
-                        "sequence_number": seq,
-                        "min_sequence_number": seq,
-                        "added_snapshot_id": snap_id,
-                    }
-                )
-            # manifest list: prior snapshot's manifests carried forward
-            # + the new ones — O(new files) commit work. Compaction
-            # passes its own rewritten base set instead.
-            if base_manifests is not None:
-                prior_manifests = list(base_manifests)
-            else:
-                prior_manifests = []
-                if snaps:
-                    cur_snap = None
-                    cur_id = (meta or {}).get("current-snapshot-id")
-                    for s in snaps:
-                        if s["snapshot-id"] == cur_id:
-                            cur_snap = s
-                    if cur_snap is not None:
-                        _, prior_manifests = read_container(
-                            self.store.read_bytes(
-                                _norm_path(cur_snap["manifest-list"])
-                            )
-                        )
-            mlist_rows = list(prior_manifests) + new_rows
-            mlist_path = os.path.join(
-                self.meta_dir, f"snap-{snap_id}-{uuid.uuid4().hex}.avro"
-            )
-            self.store.put_atomic(
-                mlist_path,
-                write_container(mlist_rows, _MANIFEST_LIST_SCHEMA),
-            )
-            snaps.append(
-                {
-                    "snapshot-id": snap_id,
-                    "timestamp-ms": ts_ms,
-                    "sequence-number": seq,
-                    "manifest-list": mlist_path,
-                    "summary": {"operation": operation,
-                                **(summary or {})},
-                    **(
-                        {"parent-snapshot-id": parent_id}
-                        if parent_id is not None else {}
-                    ),
-                }
-            )
-            if meta is not None:
-                # NEVER rebuild an existing table's partition spec
-                # from this writer instance's (possibly-default-empty)
-                # partition_by — a spec-less bootstrap/maintenance
-                # commit would silently wipe a partitioned table's
-                # identity spec and brick subsequent writes. Fallback
-                # to specs[0] mirrors _identity_partition_fields for
-                # foreign metadata without a matching spec-id.
-                specs = meta.get("partition-specs") or []
-                spec = next(
-                    (
-                        s
-                        for s in specs
-                        if s.get("spec-id")
-                        == meta.get("default-spec-id", 0)
-                    ),
-                    specs[0] if specs else None,
-                )
-                spec_fields = (spec or {}).get("fields") or []
-                # same preservation rule for the SCHEMA: an existing
-                # table's schemas/current-schema-id carry forward
-                # verbatim — a stale writer instance must never roll
-                # back an evolve_schema() someone else committed.
-                schemas = meta.get("schemas") or [
-                    {"schema-id": 0, "type": "struct",
-                     "fields": self.fields}
-                ]
-                cur_schema_id = meta.get("current-schema-id", 0)
-                last_col = meta.get("last-column-id") or max(
-                    (f["id"] for s in schemas
-                     for f in s.get("fields", [])),
-                    default=0,
-                )
-            else:
-                ids_by_name = {f["name"]: f["id"] for f in self.fields}
-                spec_fields = [
-                    {
-                        "name": e["name"],
-                        "transform": e["transform"],
-                        "source-id": ids_by_name[e["source"]],
-                        "field-id": 1000 + i,
-                    }
-                    for i, e in enumerate(
-                        parse_partition_spec_entry(x)
-                        for x in self.partition_by
+        Cleanup rule: when the commit is known not to land — ``stage``
+        raised, a ledger skip, a conflict, attempts ran out — every
+        file in ``written`` and every manifest and manifest list this
+        commit wrote is removed; a lost claim's manifests at once.
+        When the claim call itself raised, the files stay only if the
+        store shows our ``v<N+1>``. Errors propagate."""
+        ts_ms = int(time.time() * 1000) if ts_ms is None else ts_ms
+        written: list[str] = []
+        manifests: list[str] = []
+        staged = landed = False
+        try:
+            for _ in range(attempts):
+                v, meta = self._current()
+                if txn and already_applied(stored_txn(meta), txn):
+                    return None
+                if new_table and meta is not None:
+                    raise ValueError(
+                        f"{self.root} already holds an Iceberg table; "
+                        "conversion only bootstraps fresh metadata"
                     )
-                ]
-                schemas = [
-                    {"schema-id": 0, "type": "struct",
-                     "fields": self.fields}
-                ]
-                cur_schema_id = 0
-                last_col = max(
-                    (f["id"] for f in self.fields), default=0
-                )
-            # properties: existing table properties persist across
-            # every commit (so a converted table keeps its
-            # files-may-omit marker through later native appends);
-            # writer-supplied properties merge on top.
-            props = dict((meta or {}).get("properties") or {})
-            props.update(self.properties)
-            new_meta = {
-                "format-version": 2,
-                "table-uuid": (meta or {}).get(
-                    "table-uuid", str(uuid.uuid4())
-                ),
-                "properties": props,
-                "last-sequence-number": seq,
-                "location": self.root,
-                "current-schema-id": cur_schema_id,
-                "schemas": schemas,
-                "last-column-id": last_col,
-                "partition-specs": [
-                    {"spec-id": 0, "fields": spec_fields}
-                ],
-                "default-spec-id": 0,
-                "last-partition-id": 999 + len(spec_fields),
-                "current-snapshot-id": snap_id,
-                "snapshots": snaps,
-            }
-            target = os.path.join(
-                self.meta_dir, f"v{cur_v + 1}.metadata.json"
-            )
-            # content-complete put-if-absent (LogStore): the claim
-            # and the full metadata body land as ONE atomic publish —
-            # a racer (or reader) can never observe a claimed-but-
-            # empty metadata file, which the previous create-then-
-            # write O_EXCL sequence briefly allowed.
-            if not self.store.put_if_absent(
-                target, json.dumps(new_meta).encode()
-            ):
-                # another writer claimed v<N+1>: withdraw our manifest
-                # files and recompute from the fresh state
-                for p in [*written, mlist_path]:
-                    self.store.remove(p)
-                if base_manifests is not None:
+                if derived_from is not None and (
+                    (meta or {}).get("current-snapshot-id") != derived_from
+                ):
                     raise RuntimeError(
                         "concurrent commit raced a compaction whose "
                         "manifest rewrite derives from the old "
                         "snapshot — rerun optimize() on fresh state"
                     )
-                continue
-            hint = os.path.join(self.meta_dir, "version-hint.text")
-            self.store.put_atomic(hint, str(cur_v + 1).encode())
-            return snap_id
-        raise RuntimeError("exhausted Iceberg commit attempts")
+                if update is not None:
+                    new_meta, result = update(meta), v + 1
+                    if new_meta is None:
+                        return None
+                else:
+                    if not staged:
+                        legs, staged = (stage(written) if stage else []), True
+                    if legs is None:
+                        return None
+                    new_meta = self._next_snapshot(
+                        meta or {}, operation, legs, txn or {}, ts_ms,
+                        removes, manifests,
+                    )
+                    result = new_meta["current-snapshot-id"]
+                target = os.path.join(self.meta_dir, f"v{v + 1}.metadata.json")
+                body = json.dumps(new_meta).encode()
+                landed = None  # unknown while the claim is in flight
+                if self.store.put_if_absent(target, body):
+                    landed = True
+                    self.store.put_atomic(
+                        os.path.join(self.meta_dir, "version-hint.text"),
+                        str(v + 1).encode(),
+                    )
+                    return result
+                landed = False
+                self._withdraw(manifests)
+            raise RuntimeError(
+                f"{operation}: exhausted Iceberg commit attempts"
+            )
+        finally:
+            if landed is None:
+                try:
+                    landed = self.store.read_bytes(target) == body
+                except FileNotFoundError:
+                    landed = False
+            if not landed:
+                _remove_quietly(written)
+                self._withdraw(manifests)
+
+    def _withdraw(self, paths: list[str]) -> None:
+        """Remove (through the store) and forget the manifests and
+        manifest lists of a commit that did not land."""
+        for p in paths:
+            try:
+                self.store.remove(p)
+            except OSError:
+                pass
+        paths.clear()
+
+    def _next_snapshot(self, meta: dict, operation: str, legs, txn: dict,
+                       ts_ms: int, removes: set[str],
+                       manifests: list[str]) -> dict:
+        """The next metadata version of :meth:`_commit`'s snapshot
+        commits: writes the new manifests, the rewritten ones and the
+        manifest list, each path added to ``manifests`` first."""
+        snaps = list(meta.get("snapshots", []))
+        seq = meta.get("last-sequence-number", 0) + 1
+        snap_id = max((s["snapshot-id"] for s in snaps), default=1000) + 1
+
+        def write_manifest(entries, **row):
+            path = os.path.join(
+                self.meta_dir, f"manifest-{uuid.uuid4().hex}.avro"
+            )
+            blob = write_container(entries, _MANIFEST_ENTRY_SCHEMA)
+            manifests.append(path)
+            self.store.put_atomic(path, blob)
+            return {"manifest_path": path, "manifest_length": len(blob),
+                    "partition_spec_id": 0, **row}
+
+        rows = []
+        cur = _current_snapshot(meta)
+        # the current snapshot's manifests carry forward — an
+        # O(new files) commit; one naming a removed file is rewritten
+        # without it, survivors EXISTING at their original sequence
+        for m in self._read_avro(cur["manifest-list"]) if cur else []:
+            if removes and m.get("content", 0) == 0:
+                live = [e for e in self._read_avro(m["manifest_path"])
+                        if e.get("status") != 2]
+                kept = [e for e in live if _norm_path(
+                    e["data_file"]["file_path"]) not in removes]
+                if len(kept) < len(live):
+                    if not kept:
+                        continue
+                    man_seq = m.get("sequence_number") or 0
+                    m = write_manifest(
+                        [{"status": 0, "snapshot_id": e.get("snapshot_id"),
+                          "sequence_number": (
+                              man_seq if e.get("sequence_number") is None
+                              else e["sequence_number"]),
+                          "data_file": e["data_file"]} for e in kept],
+                        **{k: m.get(k) for k in (
+                            "content", "sequence_number",
+                            "min_sequence_number", "added_snapshot_id")},
+                    )
+            rows.append(m)
+        for files, content in legs:
+            if files:
+                rows.append(write_manifest(
+                    [{"status": 1, "snapshot_id": snap_id,
+                      "sequence_number": seq, "data_file": f}
+                     for f in files],
+                    content=content, sequence_number=seq,
+                    min_sequence_number=seq, added_snapshot_id=snap_id,
+                ))
+        mlist = os.path.join(
+            self.meta_dir, f"snap-{snap_id}-{uuid.uuid4().hex}.avro"
+        )
+        manifests.append(mlist)
+        self.store.put_atomic(
+            mlist, write_container(rows, _MANIFEST_LIST_SCHEMA)
+        )
+        parent = meta.get("current-snapshot-id")
+        snaps.append({
+            "snapshot-id": snap_id,
+            "timestamp-ms": ts_ms,
+            "sequence-number": seq,
+            "manifest-list": mlist,
+            "summary": {"operation": operation, **encode_offsets(txn)},
+            **({"parent-snapshot-id": parent} if parent is not None else {}),
+        })
+        return {
+            **self._table_fields(meta),
+            "last-sequence-number": seq,
+            "current-snapshot-id": snap_id,
+            "snapshots": snaps,
+        }
+
+    def _table_fields(self, meta: dict) -> dict:
+        """The table-level fields of a snapshot's metadata. An
+        existing table's schemas, partition spec and properties carry
+        forward verbatim: a stale writer instance must never roll back
+        an evolve_schema() someone else committed, and a spec-less
+        bootstrap or maintenance writer must never wipe a partitioned
+        table's spec. This writer's ``properties`` merge on top (a
+        converted table keeps its files-may-omit marker). A new table
+        declares this writer's schema and ``partition_by``."""
+        if meta:
+            spec_fields = (_default_spec(meta) or {}).get("fields") or []
+            schemas = meta.get("schemas") or [
+                {"schema-id": 0, "type": "struct", "fields": self.fields}
+            ]
+            schema_id = meta.get("current-schema-id", 0)
+            last_col = meta.get("last-column-id") or max(
+                (f["id"] for s in schemas for f in s.get("fields", [])),
+                default=0,
+            )
+        else:
+            ids = {f["name"]: f["id"] for f in self.fields}
+            spec_fields = [
+                {"name": e["name"], "transform": e["transform"],
+                 "source-id": ids[e["source"]], "field-id": 1000 + i}
+                for i, e in enumerate(
+                    map(parse_partition_spec_entry, self.partition_by)
+                )
+            ]
+            schemas = [
+                {"schema-id": 0, "type": "struct", "fields": self.fields}
+            ]
+            schema_id = 0
+            last_col = max((f["id"] for f in self.fields), default=0)
+        return {
+            "format-version": 2,
+            "table-uuid": meta.get("table-uuid") or str(uuid.uuid4()),
+            "properties": {**(meta.get("properties") or {}),
+                           **self.properties},
+            "location": self.root,
+            "current-schema-id": schema_id,
+            "schemas": schemas,
+            "last-column-id": last_col,
+            "partition-specs": [{"spec-id": 0, "fields": spec_fields}],
+            "default-spec-id": 0,
+            "last-partition-id": 999 + len(spec_fields),
+        }
 
 
 def _spark_type_to_iceberg(dt) -> object:
@@ -2620,62 +2515,34 @@ class IcebergSink:
         return self.w.evolve_schema(schema)
 
     def write_batch(self, df, partition_by=None, txn=None) -> CommitResult:
-        partition_by = list(partition_by or [])
-        _, cur_meta = self.w._current()
-        if cur_meta is not None:
-            declared = _identity_partition_fields(cur_meta)
-            if partition_by and partition_by != declared:
-                raise ValueError(
-                    f"partition_by {partition_by} != table's declared "
-                    f"identity spec {declared}"
-                )
-            partition_by = declared or partition_by
-        if partition_by:
-            names = {f["name"] for f in self.w.fields}
-            bad = [c for c in partition_by if c not in names]
-            if bad:
-                raise ValueError(
-                    f"partition columns {bad} not in schema"
-                )
-        self.w.partition_by = partition_by
-        txn = dict(txn or {})
-        if already_applied(self.snapshot()["txn"], txn):
-            return CommitResult(
-                self.snapshot()["version"], 0, 0, skipped=True
-            )
-        # emptiness is detected from the written files (no extra pass
-        # over the batch): zero non-empty data files = skip, per the
-        # empty-flush suppression contract (B5)
-        new_files = self.w._write_data_files(df)
-        if not new_files:
-            return CommitResult(
-                self.snapshot()["version"], 0, 0, skipped=True
-            )
-        import time
+        # an existing table's spec is adopted or checked against
+        # partition_by by the data-file write
+        self.w.partition_by = list(partition_by or [])
+        files: list[dict] = []
 
-        snap_id = self.w._commit_append(
-            new_files, int(time.time() * 1000), 100, encode_offsets(txn)
-        )
-        if snap_id is None:  # a racer committed this batch first
+        def stage(written):
+            # emptiness is detected from the written files (no extra
+            # pass over the batch): zero non-empty data files = skip,
+            # per the empty-flush suppression contract (B5)
+            files.extend(self.w._write_data_files(df, written))
+            return [(files, 0)] if files else None
+
+        snap_id = self.w._commit("append", txn=dict(txn or {}), stage=stage)
+        if snap_id is None:  # a replay, a racer's commit of it, or empty
             return CommitResult(
                 self.snapshot()["version"], 0, 0, skipped=True
             )
         return CommitResult(
             snap_id,
-            len(new_files),
-            sum(f["record_count"] for f in new_files),
-            num_bytes=sum(f["file_size_in_bytes"] for f in new_files),
+            len(files),
+            sum(f["record_count"] for f in files),
+            num_bytes=sum(f["file_size_in_bytes"] for f in files),
         )
 
     def commit_offsets(self, txn: dict[str, int]) -> int:
         """--seek_offsets bootstrap: an empty snapshot whose summary
         carries the offsets."""
-        import time
-
-        snap_id = self.w._commit_snapshot(
-            [], "set-offsets", int(time.time() * 1000), 100,
-            summary=encode_offsets(txn),
-        )
+        snap_id = self.w._commit("set-offsets", txn=txn)
         return self.snapshot()["version"] if snap_id is None else snap_id
 
     def read(self, spark, as_of=None):

@@ -72,3 +72,48 @@ def untracked_hudi_files(root: str) -> list[str]:
         for f in files
     }
     return sorted(found - named) + pending
+
+
+def untracked_iceberg_files(root: str) -> list[str]:
+    """What an aborted write can leave in an Iceberg table: files
+    under ``data/``, and manifests and manifest lists under
+    ``metadata/``, that no snapshot of the newest metadata version
+    names. The version is found by listing, independently of the
+    package's resolver."""
+    import json
+    import re
+
+    from kafka_delta_ingest_spark.avro_python import read_container
+
+    def avro(path):
+        with open(path.removeprefix("file:"), "rb") as f:
+            return read_container(f.read())[1]
+
+    mdir = os.path.join(root, "metadata")
+    versions = [
+        int(m.group(1))
+        for m in map(re.compile(r"v(\d+)\.metadata\.json").fullmatch, os.listdir(mdir))
+        if m
+    ]
+    named = set()
+    if versions:
+        with open(os.path.join(mdir, f"v{max(versions)}.metadata.json")) as f:
+            meta = json.load(f)
+        for snap in meta.get("snapshots", []):
+            named.add(snap["manifest-list"])
+            for m in avro(snap["manifest-list"]):
+                named.add(m["manifest_path"])
+                named.update(
+                    e["data_file"]["file_path"]
+                    for e in avro(m["manifest_path"])
+                    if e["status"] != 2
+                )
+    named = {os.path.relpath(p.removeprefix("file:"), root) for p in named}
+    found = {
+        os.path.relpath(os.path.join(d, f), root)
+        for d, _dirs, files in os.walk(os.path.join(root, "data"))
+        for f in files
+    } | {
+        os.path.join("metadata", f) for f in os.listdir(mdir) if f.endswith(".avro")
+    }
+    return sorted(found - named)

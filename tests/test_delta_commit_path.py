@@ -13,7 +13,13 @@ Hudi: ``HudiCowWriter._commit`` claims (through ``_claim_instant``),
 stages and publishes every instant. No other code of ``hudi.py`` (the
 independent fixture writers aside) may claim or publish a timeline
 file or build a commit's ``operationType``; ``convert.py``'s bootstrap
-commits through it too."""
+commits through it too.
+
+Iceberg: ``IcebergWriter._commit`` claims every ``v<N+1>.metadata.json``
+and swaps ``version-hint.text``, and ``current_metadata`` is the one
+resolver that reads the hint. No other code of ``iceberg.py`` (the
+independent ``IcebergFixtureWriter`` aside) or ``convert.py`` may call
+``put_if_absent`` or name the hint file."""
 
 import ast
 import os
@@ -122,3 +128,26 @@ def test_one_hudi_commit_path():
         and (what := _hudi_violation(node, scope))
     ]
     assert not bad, f"hudi.py outside the commit path: {bad}"
+
+
+ICEBERG_COMMIT_PATH = {"_commit", "current_metadata"}
+
+
+def _iceberg_violation(node):
+    if isinstance(node, ast.Call) and _call_name(node) == "put_if_absent":
+        return "a put_if_absent call"
+    if isinstance(node, ast.Constant) and node.value == "version-hint.text":
+        return "a version-hint.text path"
+    return None
+
+
+def test_one_iceberg_commit_path():
+    bad = [
+        f"{module} line {node.lineno}: {what}"
+        for module in ("iceberg.py", "convert.py")
+        for scope, node in _scopes(
+            _tree(module), skip=("IcebergFixtureWriter",), named=ICEBERG_COMMIT_PATH
+        )
+        if scope not in ICEBERG_COMMIT_PATH and (what := _iceberg_violation(node))
+    ]
+    assert not bad, f"outside the Iceberg commit path: {bad}"

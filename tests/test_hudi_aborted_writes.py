@@ -220,3 +220,27 @@ def test_ledger_only_commit_already_stored_returns_the_latest_instant(
     assert again == first
     assert len(completed_commits(root)) == 1
     assert untracked_hudi_files(root) == []
+
+
+def test_ledger_recheck_reads_only_new_commits(tmp_path, monkeypatch):
+    """A stream checks its ledger before every batch; each check
+    parses only the commits landed since the last one, not the whole
+    timeline again."""
+    root = str(tmp_path / "t")
+    sink = HudiSink(root)
+    reads = []
+    real = LocalLogStore.read_bytes
+
+    def read_bytes(self, path):
+        if COMPLETED.match(os.path.basename(path)):
+            reads.append(path)
+        return real(self, path)
+
+    monkeypatch.setattr(LocalLogStore, "read_bytes", read_bytes)
+    per_round = []
+    for k in range(20):
+        before = len(reads)
+        assert sink.snapshot()["txn"] == ({"a-0": k - 1} if k else {})
+        sink.commit_offsets({"a-0": k})
+        per_round.append(len(reads) - before)
+    assert max(per_round) <= 1, per_round

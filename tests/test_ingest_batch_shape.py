@@ -6,7 +6,7 @@ and a batch runs at most seven Spark jobs. Also the slimmed DLQ payload
 columns, the job-free width check, the ``delta.write.failed``
 counter, and a DLQ that takes each batch exactly once across failures
 and replays, with a crash at each log-store write call of a batch into
-a Delta or a Hudi (CoW, MoR) data table."""
+a Delta, a Hudi (CoW, MoR) or an Iceberg data table."""
 
 import base64
 import datetime
@@ -33,6 +33,7 @@ from kafka_delta_ingest_spark.delta_standard import (
     read_delta,
 )
 from kafka_delta_ingest_spark.hudi import HudiSink
+from kafka_delta_ingest_spark.iceberg import IcebergSink, read_iceberg
 from kafka_delta_ingest_spark.ingest import (
     CONFORM_COL,
     ERROR_COL,
@@ -518,6 +519,67 @@ def test_crash_at_each_hudi_write_call_replays_exactly_once(
     assert DeltaStandardSink(dlq).snapshot()["txn"] == offsets
     assert untracked_hudi_files(table) == []
     assert untracked_parquet(dlq) == []
+
+
+# The write calls of a dirty batch into an Iceberg table: the DLQ's
+# Delta claim, then the manifest, the manifest list, the metadata
+# claim and the version-hint swap.
+ICEBERG_BATCH_WRITES = ["put_if_absent", "put_atomic", "put_atomic",
+                        "put_if_absent", "put_atomic"]
+
+
+@pytest.mark.parametrize(
+    "at, mode",
+    [(i, "before") for i in range(1, len(ICEBERG_BATCH_WRITES) + 1)]
+    + [(4, "after"), (5, "after")],
+)
+def test_crash_at_each_iceberg_write_call_replays_exactly_once(
+    spark, tmp_path, monkeypatch, at, mode
+):
+    """The harness's Iceberg slice: one dirty batch into an Iceberg
+    table and its Delta DLQ, with the log store failing at each write
+    call of the batch, before the write and, for the metadata claim
+    and the hint swap, after it; a fresh job replays the batch. Both
+    tables then hold each row once, both ledgers hold the batch's
+    offsets, and the Iceberg table has no untracked file: a commit
+    that did not land cleans up before the error propagates. Iceberg manifests name
+    absolute paths, so each case writes its own batch 0 rather than
+    copying a shared table."""
+    from tests.conftest import untracked_iceberg_files, untracked_parquet
+
+    base = tmp_path / "t"
+    _job(base, sink=IcebergSink(str(base / "table"), SCHEMA)).run_batch(
+        _raw(spark, 0)
+    )
+    plan = {"at": at, "mode": mode, "calls": []}
+    for module in (delta_standard, logstore):
+        monkeypatch.setattr(
+            module, "get_log_store", lambda uri: FaultyLogStore(plan)
+        )
+    job = _job(base, sink=IcebergSink(str(base / "table"), SCHEMA))
+    with pytest.raises(OSError, match="injected fault"):
+        job.run_batch(_raw(spark, 1))
+    # an abort's withdrawals follow the fault
+    assert plan["calls"][:at] == ICEBERG_BATCH_WRITES[:at]
+    assert set(plan["calls"][at:]) <= {"remove"}
+    monkeypatch.undo()
+    table, dlq = job.opts.table_uri, job.opts.dlq_table_location
+    if at > 1:
+        assert untracked_iceberg_files(table) == []
+    _job(base, sink=IcebergSink(table, SCHEMA)).run_batch(_raw(spark, 1))
+
+    ids = sorted(r.id for r in read_iceberg(spark, table).select("id").collect())
+    assert ids == list(range(60)) + list(range(1000, 1060))
+    assert _dlq_rows(spark, job) == 4
+    offsets = {}
+    for i, _ in _messages(1):
+        key = f"{job.opts.app_id}-{i % 4}"
+        offsets[key] = max(offsets.get(key, i), i)
+    assert IcebergSink(table, SCHEMA).snapshot()["txn"] == offsets
+    assert DeltaStandardSink(dlq).snapshot()["txn"] == offsets
+    assert untracked_iceberg_files(table) == []
+    if at != 1:  # a Delta claim that raised keeps its files (Delta slice)
+        assert untracked_parquet(dlq) == []
 
 
 def _jobs_of(spark, fn):

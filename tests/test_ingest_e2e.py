@@ -910,7 +910,7 @@ def test_iceberg_raced_same_batch_skips(spark, tmp_path, monkeypatch):
     raw = _raw_df(spark, [_msg(i, i % 2) for i in range(8)])
     job = IngestJob(opts, WEB_REQUESTS_SCHEMA)
 
-    real_commit = IcebergWriter._commit_snapshot
+    real_commit = IcebergWriter._commit
     fired = {"done": False}
 
     def commit_wrapper(self, *args, **kwargs):
@@ -920,7 +920,7 @@ def test_iceberg_raced_same_batch_skips(spark, tmp_path, monkeypatch):
             IngestJob(opts, WEB_REQUESTS_SCHEMA).run_batch(raw)
         return real_commit(self, *args, **kwargs)
 
-    monkeypatch.setattr(IcebergWriter, "_commit_snapshot", commit_wrapper)
+    monkeypatch.setattr(IcebergWriter, "_commit", commit_wrapper)
     m = job.run_batch(raw)
     assert m.skipped
     back = read_iceberg(spark, table)
