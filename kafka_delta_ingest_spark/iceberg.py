@@ -1541,20 +1541,23 @@ class IcebergWriter:
         # adds/overrides). Used by convert.py to stamp
         # "kdi.files-may-omit-identity-columns" on bridged tables.
         self.properties = dict(properties or {})
-        names = {f["name"] for f in schema_fields}
-        bad = [
-            e["source"]
-            for e in map(parse_partition_spec_entry, self.partition_by)
-            if e["source"] not in names
-        ]
-        if bad:
-            raise ValueError(f"partition columns {bad} not in schema")
+        self._spec()
 
     # -- state -----------------------------------------------------------
 
     def _current(self) -> tuple[int, dict | None]:
         """(current metadata version, metadata dict or None)."""
         return current_metadata(self.store, self.meta_dir)
+
+    def _spec(self) -> list[dict]:
+        """``partition_by`` parsed; raises when an entry's source
+        column is not in ``fields``."""
+        spec = [parse_partition_spec_entry(e) for e in self.partition_by]
+        names = {f["name"] for f in self.fields}
+        bad = [e["source"] for e in spec if e["source"] not in names]
+        if bad:
+            raise ValueError(f"partition columns {bad} not in schema")
+        return spec
 
     def _read_avro(self, path: str) -> list[dict]:
         """The records of a manifest or manifest list."""
@@ -1626,9 +1629,7 @@ class IcebergWriter:
                     f"partition_by {self.partition_by} != table's "
                     f"declared identity spec {declared}"
                 )
-        spec = [
-            parse_partition_spec_entry(e) for e in self.partition_by
-        ]
+        spec = self._spec()
         types_by_name = {f["name"]: f["type"] for f in self.fields}
 
         def _transform_col(e):
@@ -2075,8 +2076,11 @@ class IcebergWriter:
         # reclaim storage
         if self._commit("expire-snapshots", update=update) is None:
             return []
-        deleted = [p for p in sorted(doomed) if os.path.exists(p)]
-        _remove_quietly(deleted)
+        deleted = []
+        for p in sorted(doomed):
+            if os.path.exists(p):
+                os.remove(p)
+                deleted.append(p)
         return deleted
 
     def _commit(self, operation: str, *, txn: dict[str, int] | None = None,
@@ -2290,9 +2294,7 @@ class IcebergWriter:
             spec_fields = [
                 {"name": e["name"], "transform": e["transform"],
                  "source-id": ids[e["source"]], "field-id": 1000 + i}
-                for i, e in enumerate(
-                    map(parse_partition_spec_entry, self.partition_by)
-                )
+                for i, e in enumerate(self._spec())
             ]
             schemas = [
                 {"schema-id": 0, "type": "struct", "fields": self.fields}
@@ -2413,9 +2415,11 @@ class IcebergSink:
 
     Partitioning: IDENTITY transforms via ``partition_by`` (the
     reference's Hive-partitioned output, src/writer.rs:390-427) — the
-    first write pins the spec; later batches must match it. Hidden
-    partitioning (bucket/truncate/day) is available on the direct
-    IcebergWriter API; the streaming sink keeps identity specs.
+    first write pins the spec; later batches must match it, and a
+    batch without ``partition_by`` adopts the table's spec. Hidden
+    partitioning (bucket/truncate/day/...) is declared through the
+    direct IcebergWriter API; the sink then writes by the table's
+    transforms.
     ``optimize`` runs bin-packing compaction as a ``replace``
     snapshot (r8; ``--auto_optimize_interval`` parity with the Delta
     destinations)."""
@@ -2515,8 +2519,9 @@ class IcebergSink:
         return self.w.evolve_schema(schema)
 
     def write_batch(self, df, partition_by=None, txn=None) -> CommitResult:
-        # an existing table's spec is adopted or checked against
-        # partition_by by the data-file write
+        # the data-file write checks partition_by against the schema
+        # and an existing table's spec (adopted when partition_by is
+        # empty) before any Spark work
         self.w.partition_by = list(partition_by or [])
         files: list[dict] = []
 

@@ -5,6 +5,8 @@ rewrite a racer overtook raises instead of dropping the racer's files,
 and a claim that landed without its ``version-hint.text`` swap is
 current for the reader and the writer alike."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
@@ -155,3 +157,61 @@ def test_append_after_expiry_gets_a_fresh_snapshot_id(spark, tmp_path):
     ids = [s["snapshot-id"] for s in snapshots(root)]
     assert len(set(ids)) == len(ids) == 3
     assert _ids(spark, root) == list(range(9)) + [100, 101]
+
+
+def test_expiry_that_loses_its_claim_retries_on_fresh_state(spark, tmp_path):
+    """An append lands between the expiry's plan and its claim: the
+    expiry retries from the racer's metadata, keeps the racer's
+    snapshot and files, and reclaims only what no kept snapshot
+    names."""
+    root = _table(spark, tmp_path)
+    IcebergWriter(root, FIELDS).optimize(spark)
+    racer = IcebergWriter(root, FIELDS)
+    store = RacedClaim(lambda: racer.append(_rows(spark, 100, 2)))
+    before = {s["snapshot-id"] for s in snapshots(root)}
+    deleted = IcebergWriter(root, FIELDS, store=store).expire_snapshots(
+        retain_last=1
+    )
+    assert store.racer is None  # the racer ran and won the first claim
+    kept = [s["snapshot-id"] for s in snapshots(root)]
+    assert len(kept) == 1 and kept[0] not in before
+    assert sum(p.endswith(".parquet") for p in deleted) == 2
+    assert not any(map(os.path.exists, deleted))
+    assert _ids(spark, root) == list(range(6)) + [100, 101]
+    assert untracked_iceberg_files(root) == []
+
+
+def test_sink_refuses_a_partition_column_not_in_the_schema(spark, tmp_path):
+    """On a new table the sink's ``partition_by`` is checked against
+    the schema before any Spark work or file write."""
+    root = str(tmp_path / "t")
+    sink = IcebergSink(root, SCHEMA)
+    with pytest.raises(ValueError, match=r"\['nope'\] not in schema"):
+        sink.write_batch(_rows(spark, 0, 3), partition_by=["nope"],
+                         txn={"app-0": 2})
+    assert sink.snapshot()["version"] == -1
+    assert untracked_iceberg_files(root) == []
+
+
+def test_sink_writes_into_a_hidden_partitioned_table(spark, tmp_path):
+    """A batch without ``partition_by`` adopts the table's spec, hidden
+    transforms included: the sink's files land under the bucket
+    directories and every row reads back once."""
+    root = str(tmp_path / "t")
+    IcebergWriter(root, FIELDS, partition_by=["bucket(4, doc_id)"]).append(
+        _rows(spark, 0, 6)
+    )
+    res = IcebergSink(root, SCHEMA).write_batch(
+        _rows(spark, 100, 4), txn={"app-0": 3}
+    )
+    assert not res.skipped and res.num_records == 4
+    assert _ids(spark, root) == list(range(6)) + list(range(100, 104))
+    data = os.path.join(root, "data")
+    assert sorted(os.listdir(data)) == sorted(
+        f"doc_id_bucket={b}" for b in {
+            iceberg.iceberg_bucket(i, 4)
+            for i in list(range(6)) + list(range(100, 104))
+        }
+    )
+    assert IcebergSink(root, SCHEMA).snapshot()["txn"] == {"app-0": 3}
+    assert untracked_iceberg_files(root) == []

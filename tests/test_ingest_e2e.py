@@ -894,13 +894,17 @@ def test_iceberg_raced_same_batch_skips(spark, tmp_path, monkeypatch):
     """A sibling worker committing the SAME batch between our ledger
     check and our snapshot commit makes our commit a SKIP: the
     snapshot commit re-checks the summary ledger at every attempt,
-    and the skipped write removes the data files it promoted."""
+    and the skipped write removes the data files it promoted and the
+    manifests and manifest list it wrote. The sibling lands after our
+    data files are promoted, so our claim is lost and the retry's
+    ledger check skips."""
     from kafka_delta_ingest_spark.iceberg import (
         IcebergSink,
         IcebergWriter,
         read_iceberg,
         snapshots,
     )
+    from tests.conftest import untracked_iceberg_files
 
     table = str(tmp_path / "ice_race")
     opts = IngestOptions(
@@ -910,19 +914,24 @@ def test_iceberg_raced_same_batch_skips(spark, tmp_path, monkeypatch):
     raw = _raw_df(spark, [_msg(i, i % 2) for i in range(8)])
     job = IngestJob(opts, WEB_REQUESTS_SCHEMA)
 
-    real_commit = IcebergWriter._commit
+    real_next = IcebergWriter._next_snapshot
     fired = {"done": False}
+    ours: list[str] = []
 
-    def commit_wrapper(self, *args, **kwargs):
+    def next_wrapper(self, meta, operation, legs, *args, **kwargs):
         if not fired["done"]:
             fired["done"] = True
-            # the sibling lands the SAME batch first
+            # our data files are promoted; the sibling lands the SAME
+            # batch before our manifests and claim
+            ours.extend(f["file_path"] for files, _ in legs for f in files)
             IngestJob(opts, WEB_REQUESTS_SCHEMA).run_batch(raw)
-        return real_commit(self, *args, **kwargs)
+        return real_next(self, meta, operation, legs, *args, **kwargs)
 
-    monkeypatch.setattr(IcebergWriter, "_commit", commit_wrapper)
+    monkeypatch.setattr(IcebergWriter, "_next_snapshot", next_wrapper)
     m = job.run_batch(raw)
     assert m.skipped
+    assert ours and not any(os.path.exists(p) for p in ours)
+    assert untracked_iceberg_files(table) == []
     back = read_iceberg(spark, table)
     assert back.count() == 8  # once, not twice
     assert len(snapshots(table)) == 1
